@@ -19,10 +19,11 @@ import org.apache.spark.sql.types._
   *
   *  - '''DEPENDENT''' — anything else (equality on a subset of G, order /
   *    inequality membership, references to other variables' aggregates) →
-  *    one `join + filter + groupBy(G) + left-join-back` pass per variable,
-  *    in dependency-DAG order. Equality conditions are written as join
-  *    keys so Catalyst plans a shuffled hash / broadcast join (never the
-  *    reference's nested loop unless the condition set is truly θ-only).
+  *    one `left join + groupBy(G)` pass per variable, in dependency-DAG
+  *    order. Equality conditions are written as join keys so Catalyst
+  *    plans a shuffled hash / broadcast join (never the reference's
+  *    nested loop unless the condition set is truly θ-only, which takes
+  *    an inner join and a join-back instead; see [[dependentPass]]).
   *
   * At 100 TB the scan-0 aggregation shuffles on G once; each dependent
   * pass shuffles the fact table on its equality key subset — the same
@@ -30,10 +31,13 @@ import org.apache.spark.sql.types._
   * would need. The MF frame (one row per group) is small relative to the
   * fact table and broadcast-joins back for free under AQE.
   *
-  * With dependent variables the MF frame's subtree feeds both the
-  * dependent pass and the final join-back; the planner persists the
-  * frame (MEMORY_AND_DISK, one row per group) so scan-0 computes once
-  * regardless of AQE staging.
+  * An equality-keyed dependent pass reads the MF frame once. Only a
+  * θ-only pass reads it twice (join input and join-back); whether that
+  * frame is materialized follows the one persistence policy,
+  * [[graft.PlanShare.shared]]: below `spark.graft.share.minBytes` of
+  * leaf input AQE's exchange reuse serves both consumers from one scan-0
+  * (a persist there only adds a barrier job); above it the frame is
+  * persisted and registered for [[unpersistAll]].
   *
   * '''Null contract.''' Groups follow SQL GROUP BY: a null grouping
   * value IS a group. Membership conditions of the form
@@ -92,24 +96,12 @@ object EmfPlanner {
     for (v <- winVars) mf = windowedPass(v, mf, q)
     mf = mf.drop(mf.columns.filter(_.startsWith("__p_")): _*)
 
-    // ---- dependent variables, in dependency order. The MF frame feeds
-    // both each dependent pass and the final join-back; persist it so
-    // scan-0 computes once (one row per group — executor storage cost is
-    // negligible, and Spark drops it under pressure).
-    if (depVars.exists(v => complementInfo(v, q).isEmpty)) {
-      mf = mf.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      persistedFrames.add(mf)
-    }
-    for (v <- topoSort(depVars, aggNames)) complementInfo(v, q) match {
+    // ---- dependent variables, in dependency order
+    for (v <- topoSort(depVars, aggNames)) complementShape(v, q) match {
       case Some((eqAttrs, antiAttr)) =>
         mf = complementPass(v, mf, base, q, schema, eqAttrs, antiAttr)
       case None =>
-        val varAgg = dependentPass(v, mf, base, q, schema)
-        // null-safe join-back: a null grouping value is a group (SQL
-        // GROUP BY), and a plain USING join would drop its aggregate
-        mf = joinNullSafe(mf, varAgg, q.groupAttrs)
-        if (v.agg.func == "count")
-          mf = mf.withColumn(v.agg.name, coalesce(col(v.agg.name), lit(0L)))
+        mf = dependentPass(v, mf, base, q, schema)
     }
 
     // ---- HAVING, then project the select list in order
@@ -154,10 +146,17 @@ object EmfPlanner {
     * grouping attr plus EXACTLY ONE same-attr `<>`/`!=` on a grouping
     * attr, no EMF dependencies — the membership
     * `{x: x.E = g.E ∧ x.c ≠ g.c}` for ANY aggregate function. Returns
-    * (equality attrs E, anti attr c). The incremental streaming lowering
-    * ([[EmfStreaming.planCrossGroup]]) keys its state by E on this shape
-    * alone: its emission combines all-but-self over the key's per-group
-    * partials, which needs no subtraction, so min/max qualify there. */
+    * (equality attrs E, anti attr c).
+    *
+    * Both lowerings of this shape stay linear in the fact table, where
+    * the dependent pass's groups × tuples θ-join on `≠` is quadratic in
+    * the anti attr's popularity (9·10⁹ joined rows for a keyless min at
+    * sf0.1's 15k custs × 600k rows):
+    *  - batch: sum/count/avg by [[complementPass]]'s subtraction
+    *    `f(E-slice) ⊖ f(own slice)`, min/max by [[complementMinMaxPass]]'s
+    *    best / runner-up slice per E;
+    *  - streaming ([[EmfStreaming.planCrossGroup]]) keys its state by E
+    *    and combines all-but-self over the key's per-group partials. */
   private[emf] def complementShape(v: GroupingVar, q: EmfQuery)
       : Option[(Seq[String], String)] = {
     if (v.dependsOn(q.aggNames).nonEmpty) return None
@@ -176,23 +175,7 @@ object EmfPlanner {
     else None
   }
 
-  /** [[complementShape]] for ANY aggregate — the gate for the BATCH
-    * complement lowerings. sum/count/avg use [[complementPass]]'s
-    * subtraction identity
-    * `f({x: x.E = g.E ∧ x.c ≠ g.c}) = f({x: x.E = g.E}) ⊖
-    *  f({x: x.E = g.E ∧ x.c = g.c})`;
-    * min/max have no inverse and use [[complementMinMaxPass]]'s value-
-    * HISTOGRAM identity instead (the same structure the streaming
-    * lowering's state holds). Before round 17 min/max fell through to
-    * the dependent pass, whose groups × tuples θ-join on `≠` is
-    * quadratic in the anti attr's popularity — 9·10⁹ joined rows for a
-    * keyless min at sf0.1's 15k custs × 600k rows, ~10¹⁴ at sf10:
-    * measured as a 40×+ StreamVolume stall before the histogram form. */
-  private[emf] def complementInfo(v: GroupingVar, q: EmfQuery)
-      : Option[(Seq[String], String)] =
-    complementShape(v, q)
-
-  /** Lower a complement-decomposable variable ([[complementInfo]]) as two
+  /** Lower a complement-shaped variable ([[complementShape]]) as two
     * LINEAR aggregations of the (tuple-filtered) fact table — totals per
     * equality attrs E, own contribution per E ∪ {c} — joined back to the
     * MF frame, instead of the dependent pass's group×tuple join whose
@@ -241,64 +224,59 @@ object EmfPlanner {
       .drop("__t_sum", "__t_cnt", "__o_sum", "__o_cnt")
   }
 
-  /** Complement min/max via the VALUE-HISTOGRAM identity — min/max have
-    * no subtraction inverse, but over per-value counts the complement
-    * extremum is exact and LINEAR in histogram size:
+  /** Complement min/max by BEST and RUNNER-UP slice. min/max have no
+    * subtraction inverse, but the complement of group g is the union of
+    * the OTHER c-slices under g.E, so its extremum is the extremum over
+    * those slices' own extrema `own(E, c) = ext(x.q)`:
     *
-    *   min{x.q : x.E = g.E ∧ x.c ≠ g.c} = least(
-    *     min{v : own(g, v) ∧ global(g.E, v) > own(g, v)},   (shared vals)
-    *     min{v : global(g.E, v) > 0 ∧ ¬own(g, v)})          (others-only)
+    *   ext{x.q : x.E = g.E ∧ x.c ≠ g.c} =
+    *     runnerUp(g.E)  if g.c <=> bestSlice(g.E)
+    *     best(g.E)      otherwise
     *
-    * where global/own are per-value row counts. Everything is bounded by
-    * groups × value-domain — the same bound the streaming lowering's
-    * state documents — instead of the dependent pass's groups × TUPLES
-    * θ-join (quadratic in anti-attr popularity; see [[complementInfo]]).
-    * Null measure values are filtered up front (min/max skip nulls); an
-    * empty complement yields NULL from both branches (least/greatest
-    * skip nulls), matching the reference's never-updated aggregate. */
+    * Per E only the top two slices matter: one ranking window over the
+    * per-slice aggregate (keyless E: a global top-2, exactly one row,
+    * cross-joined by broadcast), then one join back on E. Every frame is
+    * bounded by the number of slices, never groups × value domain. A tie
+    * on the best value leaves runnerUp = best, so either tied slice reads
+    * the right value; a group whose own slice has no qualifying tuple is
+    * not the best slice and reads best; null measures never form a
+    * slice, and an empty complement (no other slice) reads NULL, matching
+    * the reference's never-updated aggregate. */
   private def complementMinMaxPass(v: GroupingVar, mf: DataFrame,
       base: DataFrame, q: EmfQuery, schema: StructType,
       eqAttrs: Seq[String], antiAttr: String): DataFrame = {
-    val t0 = v.tupleConds.foldLeft(base)((df, c) => df.filter(tupleCond(c, schema, None)))
+    import org.apache.spark.sql.expressions.Window
+    val t = v.tupleConds.foldLeft(base)((df, c) => df.filter(tupleCond(c, schema, None)))
     val n = v.agg.name
-    val vc = s"__v_$n"
+    val (own, top, second) = (s"__o_$n", s"__b_$n", s"__r_$n")
+    val isMin = v.agg.func == "min"
+    val (ext, opp): (Column => Column, Column => Column) =
+      if (isMin) (min, max) else (max, min)
     val ownKeys = (eqAttrs :+ antiAttr).distinct
-    val tv = t0.filter(col(v.agg.column).isNotNull)
-      .select(ownKeys.map(col) :+ col(v.agg.column).as(vc): _*)
-    val ext: Column => Column = if (v.agg.func == "min") min else max
-    val g = tv.groupBy(eqAttrs.map(col) :+ col(vc): _*)
-      .agg(count(lit(1)).as(s"__g_cnt_$n"))
-    val o = tv.groupBy(ownKeys.map(col) :+ col(vc): _*)
-      .agg(count(lit(1)).as(s"__o_cnt_$n"))
-    def nullSafeOn(l: DataFrame, r: DataFrame, keys: Seq[String]): Column =
-      keys.map(k => l(k) <=> r(k)).reduce(_ && _)
-    // shared values: the group's own values that OTHER groups also hold
-    val oa = o.alias("o"); val ga = g.alias("g")
-    val m1 = oa.join(ga, nullSafeOn(oa, ga, eqAttrs :+ vc))
-      .filter(col(s"__g_cnt_$n") > col(s"__o_cnt_$n"))
-      .groupBy(ownKeys.map(c => oa(c)): _*)
-      .agg(ext(oa(vc)).as(s"__m1_$n"))
-      .toDF(ownKeys :+ s"__m1_$n": _*)
-    // others-only values: global values under the group's E that the
-    // group holds none of — candidate frame is groups × per-E domain
-    // (keyless E: a cross join against the |domain|-row histogram)
-    val grps = mf.select(ownKeys.map(col): _*).distinct()
-    val gaa = g.alias("gc")
-    val cand =
-      if (eqAttrs.nonEmpty) {
-        val ca = grps.alias("gr")
-        ca.join(gaa, nullSafeOn(ca, gaa, eqAttrs))
-          .select(ownKeys.map(c => ca(c)) :+ gaa(vc): _*)
-      } else grps.crossJoin(g.select(col(vc)))
-    val canda = cand.alias("cd")
-    val m2 = canda.join(oa, nullSafeOn(canda, oa, ownKeys :+ vc), "left_anti")
+    val slices = t.filter(col(v.agg.column).isNotNull)
       .groupBy(ownKeys.map(col): _*)
-      .agg(ext(col(vc)).as(s"__m2_$n"))
-    val joined = joinNullSafe(joinNullSafe(mf, m1, ownKeys), m2, ownKeys)
-    val value =
-      if (v.agg.func == "min") least(col(s"__m1_$n"), col(s"__m2_$n"))
-      else greatest(col(s"__m1_$n"), col(s"__m2_$n"))
-    joined.withColumn(n, value).drop(s"__m1_$n", s"__m2_$n")
+      .agg(ext(col(v.agg.column)).as(own))
+    // best first; the anti attr breaks ties so the ranking is deterministic
+    val order = Seq(if (isMin) col(own).asc else col(own).desc, col(antiAttr).asc)
+    val top2 =
+      if (eqAttrs.nonEmpty)
+        slices.withColumn("__rn", row_number().over(
+          Window.partitionBy(eqAttrs.map(col): _*).orderBy(order: _*)))
+          .filter(col("__rn") <= 2).drop("__rn")
+      else slices.orderBy(order: _*).limit(2)
+    // ≤ 2 rows per E collapse to (best slice, runner-up value); struct
+    // order compares the value first, so the extremum struct is the best
+    val slice = struct(col(own).as("v"), col(antiAttr).as("c"))
+    val best = top2.groupBy(eqAttrs.map(col): _*).agg(
+      ext(slice).as(top),
+      when(count(lit(1)) === 2, opp(col(own))).as(second))
+    val joined =
+      if (eqAttrs.nonEmpty) joinNullSafe(mf, best, eqAttrs)
+      else mf.crossJoin(broadcast(best))
+    joined.withColumn(n,
+      when(col(antiAttr) <=> col(s"$top.c"), col(second))
+        .otherwise(col(s"$top.v")))
+      .drop(top, second)
   }
 
   /** Rows-per-equality-key ceiling above which [[dependentPass]] salts
@@ -346,12 +324,34 @@ object EmfPlanner {
       key.stripPrefix("spark.graft.").replace('.', '_').toUpperCase
     df.sparkSession.conf.getOption(key)
       .orElse(sys.env.get(env))
-      .map(_.trim.toLong).getOrElse(dflt)
+      .map { raw =>
+        // name the key and value, not a bare NumberFormatException
+        // mid-planning (PlanShare.minBytes' contract)
+        try raw.trim.toLong catch { case _: NumberFormatException =>
+          throw new IllegalArgumentException(
+            s"$key / $env must be an integer, got '$raw'")
+        }
+      }
+      .getOrElse(dflt)
   }
 
-  /** One dependent-variable pass: join MF frame with the fact table on the
-    * variable's defining predicates, aggregate per group, return
-    * G + the variable's aggregate column.
+  /** One dependent-variable pass: join the MF frame with the fact table
+    * on the variable's defining predicates, aggregate per group, and
+    * return the MF frame with the variable's aggregate column added.
+    *
+    * '''Join form.''' When the membership pins some fact attr by
+    * equality against the MF frame, the pass is ONE left join
+    * `mf ⟕ t` regrouped on G, the MF frame's other columns carried
+    * through `first` (each group is one MF row, so the carry is exact).
+    * The MF frame then has a single consumer: no join-back and no shared
+    * scan-0, one join and its stages fewer per pass. A θ-only membership
+    * has no equi key, and Spark runs such a left join only by
+    * broadcasting the FACT side; there the MF frame stays the build side
+    * of an inner join and the aggregate joins back null-safely. That form
+    * reads the frame twice, so the frame goes through
+    * [[graft.PlanShare.shared]], the one persistence policy: pinned above
+    * `spark.graft.share.minBytes` of leaf input, served by AQE exchange
+    * reuse below it.
     *
     * '''Skew fallback (r18, guide §2.5).''' The join's output for one
     * equality-key value is |tuples with it| × |groups with it| — all in
@@ -365,8 +365,9 @@ object EmfPlanner {
     * explodes ×k, and the join keys on (equality attrs, salt), splitting
     * the hot key across ≤ k tasks. The joined multiset is IDENTICAL (each
     * (group, tuple) pair still matches exactly once — the tuple has one
-    * salt value and the group carries all k), so every aggregate is
-    * unchanged; floating sums are exact DECIMAL either way
+    * salt value and the group carries all k; a copy that matches nothing
+    * adds only a null fact side, which every aggregate skips), so every
+    * aggregate is unchanged; floating sums are exact DECIMAL either way
     * ([[aggColumn]]), hence bit-reproducible under the re-partitioning.
     * EmfPropertySpec's forced-salt fuzz pins brute-force agreement and
     * form equality on a hot-key fixture; EmfPlannerSpec pins the plan
@@ -379,18 +380,16 @@ object EmfPlanner {
     val t = t0.alias("t")
     // Conditions with NO fact-side (TupleCol) operand — MF-vs-MF, e.g.
     // corpus q6's `MF.avg_1 > MF.avg_2`, MF-vs-literal, or the degenerate
-    // `MF.a = MF.a` — are group-side predicates: apply them as a FILTER on
-    // the MF frame BEFORE the join. Semantically identical (the left
-    // join-back NULLs the aggregate for filtered-out groups exactly as an
-    // empty join would), cheaper (the fact table never joins against
-    // groups that can't match), and — load-bearing — keeps them out of
-    // Dataset.join's condition, whose ambiguous-self-join rewrite
-    // mis-resolves a condition referencing only one side (found by
-    // EmfPropertySpec fuzz; the MF-vs-Lit class is one-sided the same way,
-    // round-13 advice).
+    // `MF.a = MF.a` — are group-side predicates, evaluated on the MF frame
+    // alone (a filter before the inner join, a precomputed column the
+    // left join tests): a group failing them gets an empty set. Keeping
+    // their expressions out of Dataset.join's condition is load-bearing —
+    // its ambiguous-self-join rewrite mis-resolves a condition
+    // referencing only one side (found by EmfPropertySpec fuzz; the
+    // MF-vs-Lit class is one-sided the same way, round-13 advice).
     val (mfOnly, joinSide) = v.mfConds.partition(c =>
       !c.lhs.isInstanceOf[TupleCol] && !c.rhs.isInstanceOf[TupleCol])
-    val mFiltered = mfOnly.foldLeft(mf)((d, c) => d.filter(mfOnlyCond(c, mf.schema)))
+    val groupSide = mfOnly.map(mfOnlyCond(_, mf.schema)).reduceOption(_ && _)
     val joinCond = joinSide.map(mfCond(_, schema, q.groupAttrs))
       .reduceOption(_ && _).getOrElse(lit(true))
     // fact-side attrs pinned by an equality against the MF frame — the
@@ -400,6 +399,20 @@ object EmfPlanner {
       case Cond(TupleCol(a), "=" | "==", MfField(_)) => a
       case Cond(MfField(_), "=" | "==", TupleCol(a)) => a
     }.distinct
+    val gCols = q.groupAttrs.map(g => col(s"mf.$g").as(g))
+    val agg = aggColumn(v.agg.func, col(s"t.${v.agg.column}"), v.agg.column, schema)
+      .as(v.agg.name)
+    if (eqFactAttrs.isEmpty) {
+      val m = graft.PlanShare.shared(mf)
+      val varAgg = groupSide.fold(m)(p => m.filter(p)).alias("mf")
+        .join(t, joinCond, "inner")
+        .groupBy(gCols: _*).agg(agg)
+      // null-safe join-back: a null grouping value is a group (SQL
+      // GROUP BY), and a plain USING join would drop its aggregate
+      val back = joinNullSafe(m, varAgg, q.groupAttrs)
+      return if (v.agg.func != "count") back
+        else back.withColumn(v.agg.name, coalesce(col(v.agg.name), lit(0L)))
+    }
     val maxPerKey = confLong(t0, "spark.graft.emf.salt.maxPerKey", SaltMaxPerKey)
     val statMin = confLong(t0, "spark.graft.emf.salt.statMinBytes", SaltStatMinBytes)
     // size floor probes analyzed-plan LEAF bytes (PlanShare's probe:
@@ -407,16 +420,22 @@ object EmfPlanner {
     // a cached multi-way join whose un-materialized InMemoryRelation
     // reports the join ESTIMATE, which inflates past any floor even on
     // MB-sized inputs and would fire a spurious sampling job per pass)
-    val skewed = eqFactAttrs.nonEmpty && (maxPerKey <= 0L ||
+    val skewed = maxPerKey <= 0L ||
       (maxPerKey != Long.MaxValue &&
         graft.PlanShare.leafInputBytes(t0) > BigInt(statMin) &&
-        estMaxRowsPerKey(t0, eqFactAttrs) > maxPerKey))
-    val gCols = q.groupAttrs.map(g => col(s"mf.$g").as(g))
+        estMaxRowsPerKey(t0, eqFactAttrs) > maxPerKey)
+    val m = groupSide.fold(mf)(mf.withColumn("__mf_ok", _))
+    val cond = groupSide.fold(joinCond)(_ => joinCond && col("mf.__mf_ok"))
     val joined =
-      if (!skewed) mFiltered.alias("mf").join(t, joinCond, "inner")
+      if (!skewed) m.alias("mf").join(t, cond, "left")
       else {
-        val k = confLong(t0, "spark.graft.emf.salt.buckets",
-          math.max(4L * t0.sparkSession.sparkContext.defaultParallelism, 64L)).toInt
+        val kRaw = confLong(t0, "spark.graft.emf.salt.buckets",
+          math.max(4L * t0.sparkSession.sparkContext.defaultParallelism, 64L))
+        // fail at planning, not as pmod(…, 0)'s unnamed divide-by-zero
+        if (kRaw <= 0L || kRaw > Int.MaxValue)
+          throw new IllegalArgumentException(
+            s"spark.graft.emf.salt.buckets must be in 1..${Int.MaxValue}, got '$kRaw'")
+        val k = kRaw.toInt
         // deterministic per-row salt: xxhash64 over every hashable fact
         // column (maps are not hashable; everything else is), so re-run
         // tasks reproduce the same assignment
@@ -425,13 +444,13 @@ object EmfPlanner {
           .map(f => col(f.name)).toSeq
         val tS = t0.withColumn("__gsalt",
           pmod(xxhash64(hashCols: _*), lit(k.toLong)).cast("int")).alias("t")
-        val mS = mFiltered.withColumn("__gsalt",
+        val mS = m.withColumn("__gsalt",
           explode(sequence(lit(0), lit(k - 1)))).alias("mf")
-        mS.join(tS, joinCond && col("mf.__gsalt") === col("t.__gsalt"), "inner")
+        mS.join(tS, cond && col("mf.__gsalt") === col("t.__gsalt"), "left")
       }
-    joined.groupBy(gCols: _*)
-      .agg(aggColumn(v.agg.func, col(s"t.${v.agg.column}"), v.agg.column, schema)
-        .as(v.agg.name))
+    val carry = mf.columns.filterNot(q.groupAttrs.contains)
+      .map(c => first(col(s"mf.$c")).as(c))
+    joined.groupBy(gCols: _*).agg(agg, carry: _*)
   }
 
   /** WINDOWED ⇔ no EMF dependencies and every MF condition is either an
@@ -549,21 +568,22 @@ object EmfPlanner {
 
   // ---- persisted-frame lifecycle ------------------------------------------
 
-  /** MF frames persisted by [[plan]]; a long-lived session should call
+  /** Frames pinned through [[registerPersisted]] — [[graft.PlanShare]]'s
+    * shared frames (the planner's θ-only MF frames among them) and the
+    * operators' own pins; a long-lived session should call
     * [[unpersistAll]] once the plans' final actions have run, or cached
     * blocks accumulate without bound. */
   private val persistedFrames =
     java.util.concurrent.ConcurrentHashMap.newKeySet[DataFrame]()
 
-  /** Register an externally persisted frame for [[unpersistAll]] cleanup
-    * — used by [[GoldenQueries.runBatch]]'s shared fact cache so batch
-    * callers inherit the same lifecycle as planner-internal MF frames. */
+  /** Register a persisted frame for [[unpersistAll]] cleanup, so every
+    * pinned frame shares the entrypoints' per-query lifecycle. */
   private[graft] def registerPersisted(df: DataFrame): Unit =
     persistedFrames.add(df)
 
-  /** Unpersist every MF frame [[plan]] has persisted since the last call.
-    * Safe to call any time after the dependent plans' actions complete
-    * (re-running such a plan afterwards recomputes scan-0 per pass). */
+  /** Unpersist every frame registered since the last call. Safe to call
+    * any time after the plans' actions complete (re-running such a plan
+    * afterwards recomputes what the frame held). */
   def unpersistAll(): Unit = {
     val it = persistedFrames.iterator()
     while (it.hasNext) { it.next().unpersist(blocking = false); it.remove() }

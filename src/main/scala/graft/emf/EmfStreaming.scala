@@ -674,8 +674,8 @@ object EmfStreaming {
     * re-scan. For sum/count/avg this is exactly the batch planner's
     * `total ⊖ own` subtraction; min/max have no inverse, and the
     * all-but-self combine is what makes them streamable here (the batch
-    * planner routes them through the dependent-pass join instead —
-    * [[EmfPlanner.complementInfo]] stays subtractable-only). Each
+    * planner reads them off the best / runner-up slice per key —
+    * [[EmfPlanner.complementShape]]). Each
     * micro-batch touching a key re-emits ALL the key's groups: one new
     * (c₃, p) tuple moves the complement of every (cᵢ, p) group, and
     * those groups' revisions must reach the sink without any cᵢ row

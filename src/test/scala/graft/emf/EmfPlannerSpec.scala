@@ -116,6 +116,14 @@ class EmfPlannerSpec extends SparkSpec {
     val one = Seq(("X", 5)).toDF("cust", "quant")
     val out = EmfPlanner.plan(q, one).collect()
     assert(out.head == Row("X", 5.0, 0L))
+    // θ-only membership (inner join + join-back) coalesces the same way
+    val qt = EmfParser.parseOne(
+      """cust,avg_quant,count_quant_big
+        |1
+        |cust
+        |count_quant_big
+        |{MF.avg_quant.count_quant_big}[<]{quant}""".stripMargin, cols)
+    assert(EmfPlanner.plan(qt, one).collect().head == Row("X", 5.0, 0L))
   }
 
   test("dependent pass equals equivalent SQL join formulation") {
@@ -178,6 +186,171 @@ class EmfPlannerSpec extends SparkSpec {
     val one = Seq(("X", 5), ("X", 7)).toDF("cust", "quant")
     val out = EmfPlanner.plan(q, one).collect()
     assert(out.head == Row("X", 0L, null))
+  }
+
+  private val cqCols = Set("cust", "prod", "quant")
+
+  /** Plan `spec` over (cust, prod, quant) rows — every column nullable —
+    * and assert row-for-row agreement with the brute-force interpreter. */
+  private def agreesWithBrute(spec: String,
+      rows: Seq[(String, String, Option[Int])]): Map[Seq[Any], Any] = {
+    val q = EmfParser.parseOne(spec, cqCols)
+    val got = EmfPlanner.plan(q, rows.toDF("cust", "prod", "quant"))
+      .collect().map(_.toSeq).toSeq
+    val want = BruteEmf.run(q, rows.map { case (c, p, x) =>
+      Map[String, Any]("cust" -> c, "prod" -> p, "quant" -> x.map(Int.box).orNull)
+    })
+    def render(rs: Seq[Seq[Any]]) = rs.map(_.mkString("|")).sorted
+    assert(render(got) == render(want), spec)
+    val k = q.groupAttrs.size
+    got.map(r => r.take(k) -> r(k)).toMap
+  }
+
+  private val minMaxRows = Seq[(String, String, Option[Int])](
+    ("a", "P", Some(10)), ("b", "P", Some(10)),  // tie on the best max
+    ("c", "P", Some(3)), ("e", "P", Some(3)),    // tie on the best min
+    ("d", "P", None),                            // own slice: no measure
+    (null, "Q", Some(7)), ("a", "Q", Some(5)),   // null anti slice
+    ("a", "R", Some(4)),                         // single slice under R
+    ("a", "S", None), ("b", "S", None))          // all-null measure
+
+  test("complement min/max: best / runner-up slice agrees with BruteEmf on edges") {
+    for (f <- Seq("min", "max")) {
+      val keyed = agreesWithBrute(
+        s"""cust,prod,${f}_quant_oth
+           |1
+           |cust,prod
+           |${f}_quant_oth
+           |{MF.prod.${f}_quant_oth}[=]{prod}:{MF.cust.${f}_quant_oth}[<>]{cust}""".stripMargin,
+        minMaxRows)
+      val tie = if (f == "max") 10 else 3
+      // a tied best slice reads the other tied slice's equal value
+      Seq("a", "b", "c", "e").foreach(c => assert(keyed(Seq(c, "P")) == tie, s"$f $c"))
+      assert(keyed(Seq("d", "P")) == tie) // not the best slice → best
+      assert(keyed(Seq(null, "Q")) == 5 && keyed(Seq("a", "Q")) == 7)
+      assert(keyed(Seq("a", "R")) == null) // single slice → empty complement
+      assert(keyed(Seq("a", "S")) == null && keyed(Seq("b", "S")) == null)
+      // a tuple condition that empties some slices: c/e keep no tuples
+      // under quant > 4 and read the best of the rest
+      val filtered = agreesWithBrute(
+        s"""cust,prod,${f}_quant_oth
+           |1
+           |cust,prod
+           |${f}_quant_oth
+           |{MF.prod.${f}_quant_oth}[=]{prod}:{MF.cust.${f}_quant_oth}[<>]{cust}:{quant}[>]{4}""".stripMargin,
+        minMaxRows)
+      assert(filtered(Seq("c", "P")) == 10 && filtered(Seq("a", "P")) == 10)
+      // keyless E: the complement spans every other cust
+      val keyless =
+        s"""cust,${f}_quant_oth
+           |1
+           |cust
+           |${f}_quant_oth
+           |{MF.cust.${f}_quant_oth}[<>]{cust}""".stripMargin
+      val all = agreesWithBrute(keyless, minMaxRows)
+      assert(all(Seq("d")) == (if (f == "max") 10 else 3))
+      assert(agreesWithBrute(keyless, Seq(("a", "P", Some(1)), ("a", "Q", Some(2))))
+        == Map(Seq("a") -> null)) // one slice
+      assert(agreesWithBrute(keyless, Seq(("a", "P", None), ("b", "P", None)))
+        .values.forall(_ == null)) // all-null measure
+    }
+  }
+
+  test("complement min/max plan: no anti join, no groups × domain cross join") {
+    import org.apache.spark.sql.catalyst.plans.{Cross, Inner, LeftAnti}
+    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Join}
+    val df = minMaxRows.toDF("cust", "prod", "quant")
+    def joins(spec: String): Seq[Join] =
+      EmfPlanner.plan(EmfParser.parseOne(spec, cqCols), df)
+        .queryExecution.optimizedPlan.collect { case j: Join => j }
+    def unkeyed(j: Join) = (j.joinType == Inner || j.joinType == Cross) &&
+      j.condition.isEmpty
+    val keyed = joins(
+      """cust,prod,max_quant_oth
+        |1
+        |cust,prod
+        |max_quant_oth
+        |{MF.prod.max_quant_oth}[=]{prod}:{MF.cust.max_quant_oth}[<>]{cust}""".stripMargin)
+    assert(keyed.nonEmpty && !keyed.exists(_.joinType == LeftAnti), keyed)
+    assert(!keyed.exists(unkeyed), keyed)
+    // keyless: the only cross join is against a one-row global aggregate
+    val keyless = joins(
+      """cust,min_quant_oth
+        |1
+        |cust
+        |min_quant_oth
+        |{MF.cust.min_quant_oth}[<>]{cust}""".stripMargin)
+    assert(!keyless.exists(_.joinType == LeftAnti), keyless)
+    val cross = keyless.filter(unkeyed)
+    assert(cross.size == 1, keyless)
+    assert(cross.head.right.collectFirst { case a: Aggregate => a }
+      .exists(_.groupingExpressions.isEmpty), cross.head)
+  }
+
+  test("MF frame persistence follows PlanShare's size gate") {
+    val fact = graft.Tables.salesView(spark, sf0001)
+    // θ-only membership (no equi key): the MF frame feeds both the
+    // inner join and the join-back
+    val theta = EmfParser.parseOne(
+      """cust,avg_quant,count_quant_big
+        |1
+        |cust
+        |count_quant_big
+        |{MF.avg_quant.count_quant_big}[<]{quant}""".stripMargin, fact.columns.toSet)
+    // golden q8: equality-keyed, so its one left join reads the frame once
+    val keyed = GoldenQueries.parsed(7)
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    def rows(q: EmfQuery) =
+      EmfPlanner.plan(q, fact).collect().map(_.mkString("|")).sorted.toSeq
+    // fixture size is far below the 2 GiB gate: nothing is pinned
+    val gated = rows(theta)
+    assert(sc.getPersistentRDDs.keySet == before)
+    spark.conf.set("spark.graft.share.minBytes", "0")
+    try {
+      val forced = rows(theta)
+      assert((sc.getPersistentRDDs.keySet -- before).nonEmpty,
+        "an open gate must persist the MF frame")
+      EmfPlanner.unpersistAll()
+      assert(sc.getPersistentRDDs.keySet == before,
+        "unpersistAll must release the MF frame")
+      assert(forced == gated)
+      rows(keyed)
+      assert(sc.getPersistentRDDs.keySet == before,
+        "a single-consumer MF frame is never pinned")
+    } finally {
+      spark.conf.unset("spark.graft.share.minBytes")
+      EmfPlanner.unpersistAll()
+    }
+  }
+
+  test("malformed salt confs fail at planning, naming key and value") {
+    // eq on cust + an aggregate threshold: a dependent pass that reads
+    // every salt conf once the gate is forced
+    val q = EmfParser.parseOne(
+      """cust,avg_quant_a,count_quant_b
+        |2
+        |cust
+        |avg_quant_a,count_quant_b
+        |{MF.cust.avg_quant_a}[=]{cust},{MF.cust.count_quant_b}[=]{cust}:{MF.avg_quant_a.count_quant_b}[>]{quant}""".stripMargin, cols)
+    def rejects(confs: (String, String)*)(key: String, value: String): Unit = {
+      confs.foreach { case (k, v) => spark.conf.set(k, v) }
+      try {
+        val e = intercept[IllegalArgumentException](EmfPlanner.plan(q, sales))
+        assert(e.getMessage.contains(key) && e.getMessage.contains(s"'$value'"),
+          e.getMessage)
+      } finally confs.foreach { case (k, _) => spark.conf.unset(k) }
+    }
+    val maxPerKey = "spark.graft.emf.salt.maxPerKey"
+    val buckets = "spark.graft.emf.salt.buckets"
+    rejects(maxPerKey -> "lots")(maxPerKey, "lots")
+    rejects("spark.graft.emf.salt.statMinBytes" -> "1GiB")(
+      "spark.graft.emf.salt.statMinBytes", "1GiB")
+    rejects(maxPerKey -> "0", buckets -> "four")(buckets, "four")
+    rejects(maxPerKey -> "0", buckets -> "0")(buckets, "0")
+    rejects(maxPerKey -> "0", buckets -> "-3")(buckets, "-3")
+    val tooMany = (Int.MaxValue.toLong + 1).toString
+    rejects(maxPerKey -> "0", buckets -> tooMany)(buckets, tooMany)
   }
 
   test("windowed lowering: subset-equality and order variables use Window, not join") {
@@ -305,10 +478,9 @@ class EmfPlannerSpec extends SparkSpec {
     val nAgg5 = p5.collect { case a: org.apache.spark.sql.catalyst.plans.logical.Aggregate => a }.size
     assert(nAgg5 == 1, s"expected 1 Aggregate, got $nAgg5:\n$p5")
 
-    // q6-shape (1 simple + 1 dependent): three logical Aggregates — the
-    // scan-0 frame appears twice (final join-back + dependent pass input;
-    // physical exchange reuse dedupes it) plus the dependent re-agg.
-    // Guard against growth beyond that.
+    // q6-shape (1 simple + 1 dependent): two logical Aggregates and one
+    // Join — scan-0, then the dependent pass's left join regrouped on G;
+    // the scan-0 frame appears once (no join-back). Guard against growth.
     val q6 = EmfParser.parseOne(
       """cust,avg_quant_a,count_quant_b
         |2
@@ -317,7 +489,9 @@ class EmfPlannerSpec extends SparkSpec {
         |{MF.cust.avg_quant_a}[=]{cust},{MF.cust.count_quant_b}[=]{cust}:{MF.avg_quant_a.count_quant_b}[>]{quant}""".stripMargin, cols)
     val p6 = EmfPlanner.plan(q6, sales).queryExecution.optimizedPlan
     val nAgg6 = p6.collect { case a: org.apache.spark.sql.catalyst.plans.logical.Aggregate => a }.size
-    assert(nAgg6 <= 3, s"Aggregate count grew: $nAgg6:\n$p6")
+    assert(nAgg6 <= 2, s"Aggregate count grew: $nAgg6:\n$p6")
+    val nJoin6 = p6.collect { case j: org.apache.spark.sql.catalyst.plans.logical.Join => j }.size
+    assert(nJoin6 == 1, s"expected 1 Join, got $nJoin6:\n$p6")
   }
 
   test("WHERE combines with windowed and dependent variables") {
@@ -361,7 +535,8 @@ class EmfPlannerSpec extends SparkSpec {
         |g
         |sum_x_oth,count_x_oth
         |{MF.g.sum_x_oth}[!=]{g},{MF.g.count_x_oth}[!=]{g}""".stripMargin, cols)
-    // general dependent path: min is NOT subtractable → dependentPass
+    // min has no inverse → complementMinMaxPass (keyless E: global
+    // best / runner-up slice), whose null anti slice must match too
     val qd = EmfParser.parseOne(
       """g,min_x_oth
         |1
