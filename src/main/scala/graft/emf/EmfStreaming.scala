@@ -57,7 +57,6 @@ import org.apache.spark.sql.Row
   *    subtraction for sum/count/avg, and the only formulation that
   *    works for min/max, which have no inverse) and re-emits every
   *    group of a touched key (the revision other groups' arrivals
-  *    force).
   *    force). Since round 14 this includes the KEYLESS complement
   *    (E = ∅ — "each group vs every other group"): the statistic is
   *    global by nature, so the structure rides one constant state key
@@ -72,6 +71,21 @@ import org.apache.spark.sql.Row
   *    per-value partial decomposition exists, and the only exact
   *    incremental state is the fact history itself (state ∝ stream) —
   *    the impossibility argument is written out in PLANS.md.
+  *
+  * Checkpoint write path. Every trigger commits the MF structure through
+  * Spark's checkpoint files: the state store writes a delta (and a
+  * checksum) file per stateful partition, and the offset and commit
+  * logs one file each, all as create-temp-then-rename through Hadoop's
+  * `FileContext`. On a `file:` checkpoint without `libhadoop.so`,
+  * Hadoop's local filesystem forks `chmod` on each create and
+  * `readlink` on each rename check, and those forks, not the EMF work,
+  * set a small trigger's latency. Each public lowering therefore first
+  * calls [[graft.io.LocalFs.install]], which points the session's
+  * `file:` `FileContext` at the fork-free [[graft.io.LocalFs]] (same
+  * `.crc` files and checkpoint layout, so a checkpoint written under one
+  * filesystem restarts under the other). A user-set
+  * `fs.AbstractFileSystem.file.impl` wins; HDFS and S3 checkpoints are
+  * untouched.
   */
 object EmfStreaming {
 
@@ -82,6 +96,11 @@ object EmfStreaming {
     * otherwise the frame is a plain streaming aggregation whose
     * complete-mode sink IS the result (HAVING already applied). */
   final case class StreamingPlan(df: DataFrame, usesSnapshot: Boolean)
+
+  /** Entry of every public lowering: the stream's session commits its
+    * checkpoints through [[graft.io.LocalFs]] (see the object doc). */
+  private def installLocalFs(stream: DataFrame): Unit =
+    graft.io.LocalFs.install(stream.sparkSession)
 
   /** Route a query to its cheapest incremental lowering — the same
     * classification the batch planner uses, so callers never pick a
@@ -114,6 +133,7 @@ object EmfStreaming {
   /** Incremental lowering for all-SIMPLE queries. The returned streaming
     * DataFrame must be started in complete (or update) output mode. */
   def plan(q: EmfQuery, stream: DataFrame): DataFrame = {
+    installLocalFs(stream)
     require(q.vars.forall(EmfPlanner.isSimplePublic(_, q)),
       "streaming EMF supports SIMPLE variables only (equality on the full " +
         "grouping set); use microBatch(...) for windowed/dependent queries")
@@ -129,10 +149,12 @@ object EmfStreaming {
   /** Full-expressiveness fallback: run the batch planner on each
     * micro-batch and hand the result to `sink`. */
   def microBatch(q: EmfQuery, stream: DataFrame)(
-      sink: (DataFrame, Long) => Unit): DataStreamWriter[Row] =
+      sink: (DataFrame, Long) => Unit): DataStreamWriter[Row] = {
+    installLocalFs(stream)
     stream.writeStream.foreachBatch { (batch: DataFrame, id: Long) =>
       sink(EmfPlanner.plan(q, batch), id)
     }
+  }
 
   // ---- incremental WINDOWED lowering --------------------------------------
 
@@ -218,6 +240,7 @@ object EmfStreaming {
     * batch MF frame has; at scale, bound the order-attr domain (e.g.
     * months, not timestamps) exactly as the paper's MF state does. */
   def planWindowed(q: EmfQuery, stream: DataFrame): DataFrame = {
+    installLocalFs(stream)
     val spark = stream.sparkSession
     import spark.implicits._
     val schema = stream.schema
@@ -452,6 +475,7 @@ object EmfStreaming {
     * [[snapshot]] reconstruction, HAVING on the snapshot) is identical
     * to [[planWindowed]]. */
   def planDependent(q: EmfQuery, stream: DataFrame): DataFrame = {
+    installLocalFs(stream)
     val spark = stream.sparkSession
     import spark.implicits._
     val schema = stream.schema
@@ -692,6 +716,7 @@ object EmfStreaming {
     * key|) — the MF frame's own cardinality for that key — guarded by
     * the same fail-fast the windowed/dependent paths use. */
   def planCrossGroup(q: EmfQuery, stream: DataFrame): DataFrame = {
+    installLocalFs(stream)
     val spark = stream.sparkSession
     import spark.implicits._
     val schema = stream.schema
@@ -854,6 +879,7 @@ object EmfStreaming {
     * row count, strictly increasing per emission) as the snapshot's
     * latest-version marker. */
   def planCrossGroupShardedKeyless(q: EmfQuery, stream: DataFrame): DataFrame = {
+    installLocalFs(stream)
     val schema = stream.schema
     val (simpleVars, winVars, depVars) = EmfPlanner.classifyVars(q, schema)
     require(winVars.isEmpty, "sharded keyless lowering: no WINDOWED mix")
@@ -1068,6 +1094,7 @@ object EmfStreaming {
     * Emission/output contract (UPDATE mode, `__ver`, [[snapshot]],
     * HAVING on the snapshot) is identical to [[planWindowed]]. */
   def planChained(q: EmfQuery, stream: DataFrame): DataFrame = {
+    installLocalFs(stream)
     val spark = stream.sparkSession
     import spark.implicits._
     val schema = stream.schema

@@ -144,11 +144,13 @@ object MinHashIndex {
     * bookkeeping is signature-agnostic. */
   def start(docs: DataFrame, indexDir: String, pairsDir: String,
       checkpointDir: String,
-      banding: DataFrame => DataFrame = postings(_)): StreamingQuery =
+      banding: DataFrame => DataFrame = postings(_)): StreamingQuery = {
+    graft.io.LocalFs.install(docs.sparkSession)
     docs.writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         processBatch(batch, batchId, indexDir, pairsDir, banding)
       }
       .start()
+  }
 }

@@ -12,7 +12,8 @@ import graft.emf.{EmfPlanner, EmfStreaming, GoldenQueries}
   * rows, and reports throughput plus the state-store footprint the
   * domain-bound guards promise stays bounded (state rows ≤ groups ×
   * value-domain, independent of stream length — the claim this run
-  * certifies on real volume). Usage:
+  * certifies on real volume), next to the checkpoint write path's median
+  * per-trigger state-store commit and WAL commit ms. Usage:
   *   runMain graft.tools.StreamVolume <sfDir> [nChunks]
   */
 object StreamVolume {
@@ -161,6 +162,16 @@ object StreamVolume {
         val prog = sq.lastProgress
         val stateRows = prog.stateOperators.map(_.numRowsTotal).sum
         val stateBytes = prog.stateOperators.map(_.memoryUsedBytes).sum
+        // the checkpoint write path per trigger: state-store commit (summed
+        // over stateful tasks) and the offset log's WAL commit, medians
+        val triggers = sq.recentProgress.filter(_.numInputRows > 0)
+        def median(xs: Seq[Double]): Double = {
+          val s = xs.sorted
+          if (s.isEmpty) Double.NaN else (s((s.size - 1) / 2) + s(s.size / 2)) / 2
+        }
+        val commitMs = median(triggers.toSeq.map(_.stateOperators.map(_.commitTimeMs).sum.toDouble))
+        val walMs = median(triggers.toSeq.flatMap(p =>
+          Option(p.durationMs.get("walCommit")).map(_.doubleValue)))
         // snapshot() keeps the latest __ver per key over the appended
         // emissions; the equality check is a DISTRIBUTED order-
         // independent digest — (count, sum of per-row xxhash64 over
@@ -189,6 +200,7 @@ object StreamVolume {
         println(f"[streamvol] $name%-14s rows=$nRows%d " +
           f"wall=$secs%.1fs thru=${nRows / secs}%.0f rows/s " +
           f"stateRows=$stateRows%d stateMB=${stateBytes / 1048576.0}%.1f " +
+          f"commitMs=$commitMs%.0f walMs=$walMs%.0f " +
           f"outGroups=$nSnap%d snapshot==batch: $eq%s")
         require(eq, s"$name: streaming snapshot diverged from batch planner " +
           s"($nSnap rows/$hSnap vs $nBatch rows/$hBatch)")

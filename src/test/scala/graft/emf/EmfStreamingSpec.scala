@@ -1,8 +1,15 @@
 package graft.emf
 
+import scala.collection.mutable.ListBuffer
+import scala.jdk.CollectionConverters._
+
 import graft.SparkSpec
+import graft.io.LocalFs
+import org.apache.commons.io.FileUtils
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.OutputMode
+import org.apache.spark.sql.types.StructType
 
 case class SalesRow(cust: String, prod: String, month: Int, state: String, quant: Int)
 case class FSalesRow(cust: String, prod: String, month: Int, state: String, quant: Double)
@@ -786,5 +793,116 @@ class EmfStreamingSpec extends SparkSpec {
     } finally q.stop()
     val batch = EmfPlanner.plan(emfQ, rows.toDF()).orderBy("prod").collect().toSeq
     assert(last == batch)
+  }
+
+  // ---- checkpoint write path (graft.io.LocalFs) ---------------------------
+
+  private val stockFs = classOf[org.apache.hadoop.fs.local.LocalFs].getName
+
+  private def windowedBatch(in: Seq[SalesRow]): Seq[Row] =
+    EmfPlanner.plan(windowedQ, in.toDF()).orderBy("cust", "month").collect().toSeq
+
+  private def frames(e: jdk.jfr.consumer.RecordedEvent): Seq[String] =
+    e.getStackTrace.getFrames.asScala.toSeq
+      .map(f => s"${f.getMethod.getType.getName}.${f.getMethod.getName}")
+
+  /** The `jdk.ProcessStart` events JFR records in this JVM while `body`
+    * runs, less those a GC `Cleaner` thread starts meanwhile (e.g. the
+    * `rm -rf` of a collected session's artifact dir, unrelated to `body`). */
+  private def processStarts(body: => Unit): Seq[jdk.jfr.consumer.RecordedEvent] = {
+    val rec = new jdk.jfr.Recording()
+    rec.enable("jdk.ProcessStart").withStackTrace()
+    val file = java.nio.file.Files.createTempFile("graft-forks", ".jfr")
+    try {
+      rec.start()
+      try body finally rec.stop()
+      rec.dump(file)
+      jdk.jfr.consumer.RecordingFile.readAllEvents(file).asScala.toSeq
+        .filter(e => e.getEventType.getName == "jdk.ProcessStart" &&
+          !frames(e).exists(_.startsWith("jdk.internal.ref.CleanerImpl")))
+    } finally { rec.close(); java.nio.file.Files.deleteIfExists(file); () }
+  }
+
+  private def forkReport(starts: Seq[jdk.jfr.consumer.RecordedEvent]): String =
+    starts.take(3).map { e =>
+      e.getString("command") + " <- " + frames(e).take(12).mkString(" < ")
+    }.mkString(s"${starts.size} process starts, e.g.:\n", "\n", "")
+
+  /** `windowedQ` through `planAuto` on `session`: three triggers into a
+    * memory sink on the default temporary checkpoint; the snapshot. */
+  private def threeTriggers(session: SparkSession, name: String): Seq[Row] = {
+    val stream = MemoryStream[SalesRow](session)
+    val sp = EmfStreaming.planAuto(windowedQ, stream.toDF())
+    val sq = sp.df.writeStream.format("memory").queryName(name)
+      .outputMode(OutputMode.Update).start()
+    try rows.grouped(2).foreach { c => stream.addData(c); sq.processAllAvailable() }
+    finally sq.stop()
+    EmfStreaming.snapshot(session.table(name), windowedQ)
+      .orderBy("cust", "month").collect().toSeq
+  }
+
+  test("streaming EMF commits state and WAL without forking a process") {
+    val batch = windowedBatch(rows)
+    val graftSession = spark.newSession()
+    // unrecorded: JVM one-offs (Hadoop's Shell class init probes setsid)
+    assert(threeTriggers(graftSession, "emf_fork_warm") == batch)
+    assert(graftSession.conf.get(LocalFs.ImplKey) == classOf[LocalFs].getName)
+    val graftStarts = processStarts {
+      assert(threeTriggers(graftSession, "emf_fork_graft") == batch)
+    }
+    assert(graftStarts.isEmpty, forkReport(graftStarts))
+    // the same query on Hadoop's own LocalFs forks: the guard above is not
+    // vacuous, and a user's setting is respected
+    val stockSession = spark.newSession()
+    stockSession.conf.set(LocalFs.ImplKey, stockFs)
+    val stockStarts = processStarts {
+      assert(threeTriggers(stockSession, "emf_fork_stock") == batch)
+    }
+    assert(stockSession.conf.get(LocalFs.ImplKey) == stockFs)
+    assert(stockStarts.exists(frames(_).contains("org.apache.hadoop.util.Shell.runCommand")),
+      forkReport(stockStarts))
+  }
+
+  /** `windowedQ` for two triggers with `first` as the session's `file:`
+    * filesystem, stopped, then restarted on the same checkpoint under
+    * `second` for one more trigger (None: the key is unset, so `planAuto`
+    * installs graft's). Asserts snapshot == batch over all rows; returns
+    * the checkpoint's file listing. */
+  private def restartAcross(first: Option[String], second: Option[String]): Seq[String] = {
+    val session = spark.newSession()
+    val stream = MemoryStream[SalesRow](session)
+    val checkpoint = java.nio.file.Files.createTempDirectory("graft-ckpt").toFile
+    val emitted = ListBuffer[Row]()
+    var schema: StructType = null
+    def run(impl: Option[String], chunks: Seq[Seq[SalesRow]]): Unit = {
+      impl.fold(session.conf.unset(LocalFs.ImplKey))(session.conf.set(LocalFs.ImplKey, _))
+      val sp = EmfStreaming.planAuto(windowedQ, stream.toDF())
+      assert(session.conf.get(LocalFs.ImplKey) == impl.getOrElse(classOf[LocalFs].getName))
+      schema = sp.df.schema
+      val sq = sp.df.writeStream.option("checkpointLocation", checkpoint.toString)
+        .foreachBatch { (df: DataFrame, _: Long) => emitted ++= df.collect(); () }
+        .outputMode(OutputMode.Update).start()
+      try chunks.foreach { c => stream.addData(c); sq.processAllAvailable() }
+      finally sq.stop()
+    }
+    try {
+      run(first, Seq(rows.take(2), rows.slice(2, 4)))
+      run(second, Seq(rows.drop(4)))
+      val snap = EmfStreaming.snapshot(
+        session.createDataFrame(emitted.asJava, schema), windowedQ)
+        .orderBy("cust", "month").collect().toSeq
+      assert(snap == windowedBatch(rows))
+      val root = checkpoint.toPath
+      FileUtils.listFiles(checkpoint, null, true).asScala.toSeq
+        .map(f => root.relativize(f.toPath).toString).sorted
+    } finally FileUtils.deleteQuietly(checkpoint)
+  }
+
+  test("a checkpoint restarts across graft's and Hadoop's local filesystems") {
+    val graftThenStock = restartAcross(None, Some(stockFs))
+    val stockThenGraft = restartAcross(Some(stockFs), None)
+    assert(graftThenStock == stockThenGraft) // one checkpoint layout
+    assert(graftThenStock.exists(_.matches("state/0/\\d+/\\.1\\.delta\\.crc")),
+      graftThenStock)
   }
 }
