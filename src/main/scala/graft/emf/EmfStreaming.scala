@@ -1,6 +1,8 @@
 package graft.emf
 
-import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode}
@@ -16,36 +18,26 @@ import org.apache.spark.sql.Row
   *    `groupBy(G).agg(f(when(...)))` — [[plan]]. The MF structure lives
   *    in the state store, updated incrementally per micro-batch; HAVING
   *    applies per emitted result (complete/update mode).
-  *  - SIMPLE + WINDOWED mixes (the corpus query-2/3 shape: equality on a
-  *    key subset plus one order comparison) lower to
-  *    `flatMapGroupsWithState` keyed by the window's equality attrs —
-  *    [[planWindowed]]. The state IS the MF structure for that key (one
-  *    accumulator row per group), updated incrementally; the window
-  *    combine is a prefix/suffix pass over the key's order values at
-  *    emit time. No re-scan of history, no batch-planner fallback.
-  *  - DEPENDENT variables whose membership pins the FULL grouping set
-  *    (the corpus query-6 shape: `quant > MF.avg_quant_1` within the
-  *    group) lower to `flatMapGroupsWithState` keyed by G —
-  *    [[planDependent]]. A moving threshold re-classifies EVERY
-  *    historical tuple of the group, so the state must carry more than
-  *    per-group partials; the MINIMAL sufficient statistic is two-level:
-  *    group → comparison value → aggregate partials (a histogram). Each
-  *    micro-batch folds its rows in (O(batch)); emission recomputes the
-  *    threshold from the referenced aggregate's exact partials and folds
-  *    the qualifying histogram range — no history re-scan, state bounded
-  *    by the comparison column's value DOMAIN per group (the exact
-  *    analogue of the windowed path's order-domain bound).
-  *  - DEPENDENT variables chained onto a WINDOWED aggregate (corpus q8:
-  *    `count_quant_2` over `quant > MF.avg_quant_1` where avg_quant_1
-  *    itself windows over earlier months) run incrementally via
-  *    [[planChained]]: the cross-group reference is PINNED inside the
-  *    windowed variable's equality key (cust), so keying the state by
-  *    that key makes the whole chain key-local again — the state is the
-  *    key's ordered MF structure (per order value: windowed-source
-  *    partials PLUS the dependent histograms), emission recombines
-  *    window frames over partials and re-classifies each group's
-  *    histogram against ITS frame-derived threshold. Three-level
-  *    sufficient statistic: key → order value → comparison value.
+  *  - WINDOWED variables and DEPENDENT variables that pin the full
+  *    grouping set (corpus q2/q3 windows, q6's `quant > MF.avg_quant_1`
+  *    within the group, q8's dependent-on-windowed chain) lower to
+  *    `flatMapGroupsWithState` over ONE keyed, ordered state model —
+  *    [[planKeyed]]: key → order value → (slot partials, comparison-value
+  *    histograms). The key is the windowed variables' shared equality
+  *    attrs E, the order value their shared order attr o (G = E ∪ {o});
+  *    a query without windowed variables is keyed by G with one constant
+  *    slice. Per order value the state holds the exact partials of every
+  *    variable-0/SIMPLE/WINDOWED aggregate and, per dependent variable, a
+  *    histogram from comparison value to the aggregate partials of the
+  *    tuples holding it — the minimal sufficient statistic, because a
+  *    moving threshold re-classifies EVERY historical tuple. A
+  *    micro-batch folds its rows in (O(batch), no history re-scan);
+  *    emission recombines window frames by a prefix/suffix pass over the
+  *    key's sorted order values and folds each group's histogram range
+  *    that passes the threshold its referenced aggregate takes AT THAT
+  *    GROUP. State is bounded by the order domain × the comparison-value
+  *    domain per key: a windowed query keeps no histograms, a dependent
+  *    one a single slice.
   *  - DEPENDENT variables with cross-group COMPLEMENT membership
   *    (corpus q4: equality on a grouping subset E plus one same-attr
   *    `!=`, ANY of the five aggregates) run incrementally via
@@ -94,8 +86,10 @@ object EmfStreaming {
     * emissions and the current MF structure is reconstructed with
     * [[snapshot]] from an update-mode sink (HAVING applies there);
     * otherwise the frame is a plain streaming aggregation whose
-    * complete-mode sink IS the result (HAVING already applied). */
-  final case class StreamingPlan(df: DataFrame, usesSnapshot: Boolean)
+    * complete-mode sink IS the result (HAVING already applied).
+    * `lowering` names the class the query was routed as: "simple",
+    * "windowed", "dependent", "chained" or "cross-group". */
+  final case class StreamingPlan(df: DataFrame, usesSnapshot: Boolean, lowering: String)
 
   /** Entry of every public lowering: the stream's session commits its
     * checkpoints through [[graft.io.LocalFs]] (see the object doc). */
@@ -107,10 +101,9 @@ object EmfStreaming {
     * lowering by hand:
     *
     *  - all SIMPLE → [[plan]] (plain stateful aggregation)
-    *  - SIMPLE + WINDOWED → [[planWindowed]]
-    *  - + DEPENDENT, all complement-decomposable → [[planCrossGroup]]
-    *  - + DEPENDENT referencing own-group aggregates → [[planDependent]]
-    *  - DEPENDENT chained onto WINDOWED → [[planChained]]
+    *  - + DEPENDENT, all complement-decomposable, no WINDOWED →
+    *    [[planCrossGroup]]
+    *  - any other WINDOWED / DEPENDENT mix → [[planKeyed]]
     *
     * Shapes outside every incremental class (genuinely unpinned
     * cross-group membership, non-subtractable complements, fractional
@@ -119,16 +112,16 @@ object EmfStreaming {
   def planAuto(q: EmfQuery, stream: DataFrame): StreamingPlan = {
     val (_, winVars, depVars) = EmfPlanner.classifyVars(q, stream.schema)
     if (winVars.isEmpty && depVars.isEmpty)
-      StreamingPlan(plan(q, stream), usesSnapshot = false)
-    else if (depVars.isEmpty)
-      StreamingPlan(planWindowed(q, stream), usesSnapshot = true)
-    else if (winVars.nonEmpty)
-      StreamingPlan(planChained(q, stream), usesSnapshot = true)
-    else if (depVars.forall(v => EmfPlanner.complementShape(v, q).isDefined))
-      StreamingPlan(planCrossGroup(q, stream), usesSnapshot = true)
+      StreamingPlan(plan(q, stream), usesSnapshot = false, "simple")
+    else if (winVars.isEmpty && depVars.forall(EmfPlanner.complementShape(_, q).isDefined))
+      StreamingPlan(planCrossGroup(q, stream), usesSnapshot = true, "cross-group")
     else
-      StreamingPlan(planDependent(q, stream), usesSnapshot = true)
+      StreamingPlan(planKeyed(q, stream), usesSnapshot = true, keyedClass(winVars, depVars))
   }
+
+  /** The class a [[planKeyed]] query belongs to, as its rejections name it. */
+  private def keyedClass(winVars: Seq[GroupingVar], depVars: Seq[GroupingVar]): String =
+    if (depVars.isEmpty) "windowed" else if (winVars.isEmpty) "dependent" else "chained"
 
   /** Incremental lowering for all-SIMPLE queries. The returned streaming
     * DataFrame must be started in complete (or update) output mode. */
@@ -156,12 +149,12 @@ object EmfStreaming {
     }
   }
 
-  // ---- incremental WINDOWED lowering --------------------------------------
+  // ---- state pieces shared by the incremental lowerings -------------------
 
-  /** Per-slot accumulator: exact sum at scale 6 (BigInt micro-units),
-    * non-null count, raw double min/max (floating slots) and exact
-    * micro-unit min/max (integral slots — a double would round longs
-    * above 2⁵³). One per (group, aggregate slot). */
+  /** Exact partials of one aggregate slot: sum at scale 6 (BigInt
+    * micro-units), non-null count, raw double min/max (floating slots)
+    * and exact micro-unit min/max (integral slots — a double would round
+    * longs above 2⁵³). Both a state cell and a combine over cells. */
   final class SlotAcc extends Serializable {
     var sumMicro: BigInt = BigInt(0)
     var cnt: Long = 0L
@@ -169,6 +162,14 @@ object EmfStreaming {
     var mx: Double = Double.NegativeInfinity
     var mnMic: Long = Long.MaxValue
     var mxMic: Long = Long.MinValue
+    def add(a: SlotAcc): Unit = {
+      sumMicro += a.sumMicro; cnt += a.cnt
+      if (a.mn < mn) mn = a.mn
+      if (a.mx > mx) mx = a.mx
+      if (a.mnMic < mnMic) mnMic = a.mnMic
+      if (a.mxMic > mxMic) mxMic = a.mxMic
+    }
+    def copy: SlotAcc = { val c = new SlotAcc; c.add(this); c }
   }
 
   /** Fold one exact (micro, raw) value into an accumulator. A defined
@@ -192,474 +193,485 @@ object EmfStreaming {
       case _ => ()
     }
 
-  /** State for one window key (the equality attrs): the MF structure
-    * restricted to that key — one accumulator row per order value —
-    * plus an emission version counter. */
-  final class WinState extends Serializable {
-    var ver: Long = 0L
-    val groups = new java.util.HashMap[java.lang.Long, Array[SlotAcc]]()
+  /** Strict-prefix and strict-suffix combines of slot `j` over `cells` in
+    * their order: `pre(i) = ⊕ cells(0 until i)(j)` and
+    * `suf(i) = ⊕ cells(i+1 until n)(j)`. One O(n) pass each serves every
+    * window frame of a windowed slot and the all-but-self complement. */
+  private def strictPrefixSuffix(cells: Array[Array[SlotAcc]], j: Int)
+      : (Array[SlotAcc], Array[SlotAcc]) = {
+    val n = cells.length
+    val pre = new Array[SlotAcc](n)
+    val suf = new Array[SlotAcc](n)
+    var run = new SlotAcc
+    var i = 0
+    while (i < n) { pre(i) = run.copy; run.add(cells(i)(j)); i += 1 }
+    run = new SlotAcc
+    i = n - 1
+    while (i >= 0) { suf(i) = run.copy; run.add(cells(i)(j)); i -= 1 }
+    (pre, suf)
   }
 
+  /** Hard cap on the entries of any one map in streaming EMF state:
+    * distinct order values per key, distinct comparison values per
+    * (slice, dependent slot), distinct anti values per complement key.
+    * Each is bounded by a column's value DOMAIN (months, `quant`-like
+    * columns — the corpus shapes), but nothing about the query form
+    * itself enforces that. A near-unique column (a timestamp, an id)
+    * would grow state without bound and surface as an executor OOM
+    * hours in; failing fast at a width no domain-bounded column reaches
+    * turns that into an immediate, named error (the broadcast-guard
+    * convention, [[graft.ann.VectorKernels]]). Test-tunable so the
+    * fail-fast is exercisable without 65k-row fixtures
+    * (EmfStreamingSpec). */
+  @volatile private[emf] var MaxHistBuckets = 65536
+
+  /** The one state bound: fail fast with `msg`, which names the
+    * unbounded domain, once a state map holds more than
+    * [[MaxHistBuckets]] entries. */
+  private def boundDomain(size: Int, msg: => String): Unit =
+    if (size > MaxHistBuckets) throw new IllegalStateException(msg)
+
   /** One aggregate slot's metadata, closed over by the state function.
-    * kind: 0 = varZero/SIMPLE (own-group value), 1 = WINDOWED.
-    * frameOp: the order comparison for windowed slots ("<", "<=", ">",
-    * ">=", or "" for whole-partition frames). */
+    * kind: 0 = varZero/SIMPLE (own-group value), 1 = WINDOWED,
+    * 2 = DEPENDENT or complement. frameOp: the order comparison for
+    * windowed slots ("<", "<=", ">", ">=", or "" for whole-partition
+    * frames). */
   final case class SlotSpec(name: String, func: String,
       floating: Boolean, integral: Boolean, kind: Int, frameOp: String)
 
-  final case class WinRow(k: String, o: Long,
-      micro: Seq[Option[Long]], raw: Seq[Option[Double]])
+  /** A slot's spec plus the column it folds, guarded by its variable's
+    * tuple conditions (driver side only). */
+  private final case class SlotDef(spec: SlotSpec, src: String, cond: Option[Column]) {
+    def guarded(c: String): Column = cond.fold(col(c))(when(_, col(c)))
+    def value: Column = guarded(src)
+  }
 
-  /** Incremental lowering for SIMPLE + WINDOWED queries whose grouping
-    * set is exactly {equality attrs} ∪ {order attr} — the corpus
-    * query-2/3 shape ("months before/after this one", paper §"complex
-    * aggregates over data streams").
+  /** Schema lookups and slot building of one lowering. A rejection names
+    * the lowering's class (`cls`) and what it needs numeric (`what`). */
+  private final class SlotCols(schema: StructType, cls: String, what: String) {
+    def tpe(n: String): DataType =
+      schema.find(_.name == n).map(_.dataType).getOrElse(
+        throw new IllegalArgumentException(s"unknown column $n"))
+    def numeric(n: String): Unit = tpe(n) match {
+      case ByteType | ShortType | IntegerType | LongType | FloatType |
+           DoubleType => ()
+      case other => throw new IllegalArgumentException(
+        s"$cls streaming needs numeric $what; $n: $other")
+    }
+    def slot(a: AggSpec, cond: Option[Column], kind: Int = 0,
+        frameOp: String = ""): SlotDef = {
+      numeric(a.column)
+      val t = tpe(a.column)
+      SlotDef(SlotSpec(a.name, a.func, isFloat(t), isIntegral(t), kind, frameOp),
+        a.column, cond)
+    }
+    /** The variable-0 and SIMPLE slots (kind 0), in query order. */
+    def base(q: EmfQuery, simpleVars: Seq[GroupingVar]): Seq[SlotDef] =
+      q.varZero.map(slot(_, None)) ++
+        simpleVars.map(v => slot(v.agg, condOf(v, schema)))
+    def field(n: String): StructField = StructField(n, tpe(n), nullable = true)
+    def outField(s: SlotDef): StructField =
+      StructField(s.spec.name, outType(s.spec, tpe(s.src)), nullable = true)
+  }
+
+  /** A value in exact decimal-6 micro-units (null outside that domain). */
+  private def microOf(c: Column): Column =
+    (c.cast("decimal(27,6)") * lit(1000000L)).cast("long")
+
+  /** `cs` as one `array<t>` column, typed even when `cs` is empty. */
+  private def arr(cs: Seq[Column], t: String): Column =
+    array(cs.map(_.cast(t)): _*).cast(s"array<$t>")
+
+  /** Typed rows from an emitter's `(json, ver)` stream: parse the JSON
+    * with the output schema (stateless past the stateful op, allowed in
+    * update mode). */
+  private def fromJson(emitted: Dataset[(String, Long)],
+      fields: Seq[StructField]): DataFrame =
+    emitted.toDF("__json", "__ver")
+      .select(from_json(col("__json"), StructType(fields)).as("r"), col("__ver"))
+      .select(col("r.*"), col("__ver"))
+
+  // ---- incremental KEYED lowering (windowed, dependent, chained) ---------
+
+  final case class KeyedRow(k: String, o: Long,
+      micro: Seq[Option[Long]], raw: Seq[Option[Double]],
+      cmpM: Seq[Option[Long]], cmpR: Seq[Option[Double]],
+      aggM: Seq[Option[Long]], aggR: Seq[Option[Double]])
+
+  /** One histogram bucket: the comparison value's raw double (for
+    * double-typed predicates) plus the aggregate partials of the tuples
+    * holding that value. */
+  final class HistCell(val raw: Double) extends Serializable {
+    val acc = new SlotAcc
+  }
+
+  /** One order value's slice of a key's MF structure: the partials of
+    * every variable-0/SIMPLE/WINDOWED slot, plus per dependent slot the
+    * comparison-value histogram (keyed by exact micro-units). */
+  final class Slice(val accs: Array[SlotAcc],
+      val hists: Array[java.util.HashMap[java.lang.Long, HistCell]])
+      extends Serializable
+
+  /** State for one key: its slices by order value (a single constant
+    * slice when the query has no windowed variable), plus an emission
+    * version counter. */
+  final class KeyedState extends Serializable {
+    var ver: Long = 0L
+    val slices = new java.util.HashMap[java.lang.Long, Slice]()
+  }
+
+  /** Metadata of one dependent slot: the comparison `tuple.cmp OP ref`,
+    * which slot the threshold reads, and whether the comparison runs in
+    * IEEE-double space (matching Spark's numeric promotion) or
+    * exact-integer micro-unit space. */
+  final case class DepMeta(op: String, refIdx: Int, cmpDouble: Boolean,
+      refFunc: String, refFloating: Boolean)
+
+  /** A dependent slot with its guarded comparison value (driver side). */
+  private final case class DepDef(slot: SlotDef, cmp: Column, meta: DepMeta)
+
+  private def eqAttrsOf(v: GroupingVar): Seq[String] = v.mfConds.collect {
+    case Cond(TupleCol(a), "=" | "==", MfField(b)) if a == b => a
+  }.distinct
+
+  /** (order attr, op) of a windowed variable's order comparison. */
+  private def orderOf(v: GroupingVar): Option[(String, String)] =
+    v.mfConds.collectFirst {
+      case Cond(TupleCol(a), op @ ("<" | "<=" | ">" | ">="), MfField(_)) => (a, op)
+    }
+
+  private def flip(op: String): String = op match {
+    case "<" => ">"; case "<=" => ">="; case ">" => "<"; case ">=" => "<="
+    case other => other
+  }
+
+  /** Incremental lowering for WINDOWED variables and DEPENDENT variables
+    * that pin the full grouping set, over the keyed, ordered state model
+    * of the object doc. Three classes share it, named by
+    * [[EmfPlanner.classifyVars]]' partition:
     *
-    * The stream is keyed by the windowed variables' shared equality
-    * attrs; the state store holds the MF structure for the key (one
-    * accumulator row per order value, each carrying exact decimal-6 sums
-    * + counts + raw min/max for every aggregate slot). Each micro-batch
-    * folds its rows into the state — O(batch) work, no history re-scan —
-    * and re-emits the key's groups with windowed aggregates recombined by
-    * one ascending/descending pass over the key's sorted order values
-    * (the RANGE frames of the batch lowering, evaluated over partials).
+    *  - windowed (SIMPLE + WINDOWED; corpus q2/q3 — "months before/after
+    *    this one"): the windowed variables share equality attrs E and
+    *    order attr o with G = E ∪ {o}. The key is E; its slices hold no
+    *    histograms.
+    *  - dependent (varZero/SIMPLE + DEPENDENT; corpus q6 —
+    *    `count_quant_2` counts the group's tuples with
+    *    `quant > MF.avg_quant_1`): the key is G, with one constant slice
+    *    and no order field in the rows.
+    *  - chained (both; corpus q8 — `quant > MF.avg_quant_1` where
+    *    avg_quant_1 itself windows over earlier months): keyed as
+    *    windowed. The cross-group dependence travels only through the
+    *    window frames, which are E-key-local.
     *
-    * Aggregation arithmetic matches [[EmfPlanner]]'s batch semantics
-    * bit-for-bit for inputs with ≤ 6 decimal digits (the planner's
-    * decimal-exact contract): sums/averages accumulate exactly and
-    * surface as double/long exactly like the batch plan's decimal path.
+    * Each dependent variable compares one tuple column against ONE
+    * earlier aggregate — variable-0/SIMPLE (its own group) or WINDOWED
+    * (the chain). A micro-batch folds its rows into the key's slices
+    * (O(batch)); emission re-emits every group of the key with window
+    * frames recombined by one ascending/descending pass over the key's
+    * sorted order values (the RANGE frames of the batch lowering,
+    * evaluated over partials) and each dependent slot re-classified
+    * against the threshold its referenced slot takes at that group — a
+    * moved threshold flips historical tuples' membership with no history
+    * re-scan. State per key is O(|order domain| × |comparison-value
+    * domain|), each guarded by [[MaxHistBuckets]].
+    *
+    * Arithmetic matches [[EmfPlanner]]'s batch semantics bit-for-bit for
+    * inputs with ≤ 6 decimal digits (the planner's decimal-exact
+    * contract): sums/averages accumulate exactly and surface as
+    * double/long exactly like the batch plan's decimal path. A comparison
+    * runs in IEEE double if either side surfaces as double (avg;
+    * sum/min/max of floating input; floating comparison column), as
+    * Spark's numeric promotion does, and in exact integer micro-units
+    * otherwise.
     *
     * Output: one row per (group, emission) in UPDATE mode with a
     * monotonically increasing `__ver` per key — a sink holding all
     * emissions reconstructs the current MF structure with [[snapshot]]
     * (latest `__ver` per group, then HAVING + SELECT). HAVING cannot be
     * applied pre-sink in update mode: a group leaving the HAVING set
-    * emits no retraction, so the filter belongs on the snapshot.
-    *
-    * State is one accumulator row per group — the same cardinality the
-    * batch MF frame has; at scale, bound the order-attr domain (e.g.
-    * months, not timestamps) exactly as the paper's MF state does. */
-  def planWindowed(q: EmfQuery, stream: DataFrame): DataFrame = {
+    * emits no retraction, so the filter belongs on the snapshot. */
+  def planKeyed(q: EmfQuery, stream: DataFrame): DataFrame = {
     installLocalFs(stream)
     val spark = stream.sparkSession
     import spark.implicits._
     val schema = stream.schema
 
     val (simpleVars, winVars, depVars) = EmfPlanner.classifyVars(q, schema)
-    require(depVars.isEmpty,
-      "incremental windowed streaming supports SIMPLE + WINDOWED variables " +
-        "only; use microBatch(...) for dependent queries")
-    require(winVars.nonEmpty,
-      "no WINDOWED variable; use plan(...) for all-SIMPLE queries")
+    require(winVars.nonEmpty || depVars.nonEmpty,
+      "no WINDOWED or DEPENDENT variable; use plan(...) for all-SIMPLE queries")
+    val cls = keyedClass(winVars, depVars)
+    val cols = new SlotCols(schema, cls,
+      if (depVars.isEmpty) "aggregate columns" else "columns")
 
-    // every windowed variable must share one equality-attr set E and one
-    // order attr o, with G = E ∪ {o}
-    def eqAttrsOf(v: GroupingVar): Seq[String] = v.mfConds.collect {
-      case Cond(TupleCol(a), "=" | "==", MfField(b)) if a == b => a
-    }
-    def orderCondOf(v: GroupingVar): Option[Cond] = v.mfConds.collectFirst {
-      case c @ Cond(TupleCol(_), "<" | "<=" | ">" | ">=", MfField(_)) => c
-    }
-    val eqAttrs = eqAttrsOf(winVars.head).distinct
-    val orderAttr = winVars.flatMap(orderCondOf).headOption match {
-      case Some(Cond(TupleCol(a), _, _)) => a
-      case _ => throw new IllegalArgumentException(
-        "windowed streaming needs at least one order comparison")
-    }
-    winVars.foreach { v =>
-      require(eqAttrsOf(v).distinct == eqAttrs &&
-        orderCondOf(v).forall { case Cond(TupleCol(a), _, _) => a == orderAttr },
-        s"windowed variable ${v.agg.name} must share equality attrs " +
-          s"$eqAttrs and order attr $orderAttr")
-    }
-    require(eqAttrs.nonEmpty, "windowed streaming needs ≥ 1 equality attr")
-    // the state keys order groups by cast-to-long: a fractional order
-    // attribute would silently TRUNCATE (merging e.g. 1.4 and 1.5) where
-    // the batch planner keeps them distinct — require integral, loudly
-    schema.find(_.name == orderAttr).map(_.dataType).foreach {
-      case ByteType | ShortType | IntegerType | LongType => ()
-      case other => throw new IllegalArgumentException(
-        s"windowed streaming order attribute '$orderAttr' must be an " +
-          s"integral type, got $other — fractional order values would be " +
-          "truncated by the state key; use microBatch(...) instead")
-    }
-    require(q.groupAttrs.toSet == (eqAttrs :+ orderAttr).toSet &&
-      !eqAttrs.contains(orderAttr),
-      s"grouping set ${q.groupAttrs} must be exactly equality attrs " +
-        s"$eqAttrs plus order attr $orderAttr")
-
-    // ---- aggregate slots: varZero + SIMPLE (kind 0), WINDOWED (kind 1)
-    def colType(n: String): DataType =
-      schema.find(_.name == n).map(_.dataType).getOrElse(
-        throw new IllegalArgumentException(s"unknown column $n"))
-    def numeric(n: String): Unit = colType(n) match {
-      case ByteType | ShortType | IntegerType | LongType | FloatType |
-           DoubleType => ()
-      case other => throw new IllegalArgumentException(
-        s"windowed streaming needs numeric aggregate columns; $n: $other")
-    }
-    final case class SlotDef(spec: SlotSpec, srcCol: String, cond: Option[Column])
-    val slots: Seq[SlotDef] =
-      q.varZero.map { a =>
-        numeric(a.column)
-        SlotDef(SlotSpec(a.name, a.func, isFloat(colType(a.column)),
-          isIntegral(colType(a.column)), 0, ""), a.column, None)
-      } ++
-      simpleVars.map { v =>
-        numeric(v.agg.column)
-        SlotDef(SlotSpec(v.agg.name, v.agg.func, isFloat(colType(v.agg.column)),
-          isIntegral(colType(v.agg.column)), 0, ""), v.agg.column,
-          condOf(v, schema))
-      } ++
-      winVars.map { v =>
-        numeric(v.agg.column)
-        val op = orderCondOf(v).map(_.op).getOrElse("")
-        SlotDef(SlotSpec(v.agg.name, v.agg.func, isFloat(colType(v.agg.column)),
-          isIntegral(colType(v.agg.column)), 1, op), v.agg.column,
-          condOf(v, schema))
+    // ---- key: the windowed variables' shared equality attrs E, whose
+    // shared order attr o completes G = E ∪ {o}; without windowed
+    // variables, G itself
+    val (keyAttrs, orderAttr) =
+      if (winVars.isEmpty) (q.groupAttrs, None)
+      else {
+        val eqAttrs = eqAttrsOf(winVars.head)
+        val o = winVars.flatMap(orderOf).headOption.map(_._1).getOrElse(
+          throw new IllegalArgumentException(
+            s"$cls streaming needs at least one order comparison"))
+        winVars.foreach { v =>
+          require(eqAttrsOf(v) == eqAttrs && orderOf(v).forall(_._1 == o),
+            s"windowed variable ${v.agg.name} must share equality attrs " +
+              s"$eqAttrs and order attr $o")
+        }
+        require(eqAttrs.nonEmpty, s"$cls streaming needs ≥ 1 equality attr")
+        // the state keys order values as longs: a fractional order attr
+        // would merge values (1.4 and 1.5) the batch planner keeps apart
+        require(isIntegral(cols.tpe(o)),
+          s"$cls streaming order attribute '$o' must be an integral type, " +
+            s"got ${cols.tpe(o)} — fractional order values would be " +
+            "truncated by the state key; use microBatch(...) instead")
+        require(q.groupAttrs.toSet == (eqAttrs :+ o).toSet && !eqAttrs.contains(o),
+          s"grouping set ${q.groupAttrs} must be exactly equality attrs " +
+            s"$eqAttrs plus order attr $o")
+        (eqAttrs, Some(o))
       }
-    require(slots.nonEmpty, "query has no aggregates")
-    val specs = slots.map(_.spec).toArray
 
-    // ---- input projection: key JSON, order value, per-slot exact values
-    val base = stream.filter(EmfPlanner.whereColumn(q.where, schema))
-    val microCols = slots.map { s =>
-      val v = s.cond.map(c => when(c, col(s.srcCol))).getOrElse(col(s.srcCol))
-      (v.cast("decimal(27,6)") * lit(1000000L)).cast("long")
+    // ---- slots: varZero + SIMPLE (kind 0), WINDOWED (kind 1); only a
+    // query without windowed variables can have none
+    val slots = cols.base(q, simpleVars) ++ winVars.map(v =>
+      cols.slot(v.agg, condOf(v, schema), 1, orderOf(v).fold("")(_._2)))
+    require(slots.nonEmpty,
+      "dependent streaming needs at least one variable-0/SIMPLE aggregate " +
+        "(the threshold source); shapes without one need microBatch(...)")
+    val specs = slots.map(_.spec).toArray
+    val slotIdx = specs.map(_.name).zipWithIndex.toMap
+
+    // ---- dependent slots (kind 2)
+    val deps = depVars.map { v =>
+      val slot = cols.slot(v.agg, condOf(v, schema), 2)
+      val pins = eqAttrsOf(v)
+      require(pins.toSet == q.groupAttrs.toSet,
+        s"dependent variable ${v.agg.name} must pin the full grouping " +
+          s"set ${q.groupAttrs} (got $pins); " +
+          (if (winVars.isEmpty) "" else "unpinned ") +
+          "cross-group membership needs microBatch(...)")
+      val depConds = v.mfConds.filterNot {
+        case Cond(TupleCol(a), "=" | "==", MfField(b)) => a == b
+        case _ => false
+      }
+      require(depConds.size == 1,
+        s"dependent variable ${v.agg.name} needs exactly one aggregate " +
+          s"comparison, got ${depConds.size}")
+      val (cmpCol, op, refName) = depConds.head match {
+        case Cond(TupleCol(c), o, MfField(a)) if q.aggNames.contains(a) =>
+          (c, o, a)
+        case Cond(MfField(a), o, TupleCol(c)) if q.aggNames.contains(a) =>
+          (c, flip(o), a)
+        case other => throw new IllegalArgumentException(
+          s"dependent variable ${v.agg.name}: unsupported membership " +
+            s"condition $other")
+      }
+      val refIdx = slotIdx.getOrElse(refName,
+        throw new IllegalArgumentException(
+          s"dependent variable ${v.agg.name} references '$refName', " +
+            (if (winVars.isEmpty)
+              "which is not a variable-0/SIMPLE aggregate — chains onto " +
+                "windowed aggregates run via planKeyed(...); deeper " +
+                "chains need microBatch(...)"
+            else
+              "which is not a variable-0/SIMPLE/WINDOWED aggregate — " +
+                "chains onto other dependent aggregates need microBatch(...)")))
+      cols.numeric(cmpCol)
+      val ref = specs(refIdx)
+      val refOutDouble = ref.func == "avg" ||
+        (ref.floating && Set("sum", "min", "max").contains(ref.func))
+      val cmpDouble = refOutDouble || isFloat(cols.tpe(cmpCol))
+      DepDef(slot, slot.guarded(cmpCol), DepMeta(op, refIdx, cmpDouble, ref.func, ref.floating))
     }
-    val rawCols = slots.map { s =>
-      val v = s.cond.map(c => when(c, col(s.srcCol))).getOrElse(col(s.srcCol))
-      v.cast("double")
+
+    // ---- input projection: key JSON, order value, slot values, per
+    // dependent slot its comparison and aggregate values. A null order
+    // value cannot key the state (batch treats it as a normal group): the
+    // incremental path rejects it rather than dropping the row
+    val order = orderAttr.fold(lit(0L)) { o =>
+      coalesce(col(o).cast("long"),
+        raise_error(lit(s"$cls streaming EMF: null $o — null order groups " +
+          "need the batch planner (microBatch)")).cast("long"))
     }
-    // a null order value cannot key the state (batch treats it as a
-    // normal group; the incremental path rejects it explicitly rather
-    // than dropping the row or crashing in the encoder)
-    val orderOrFail = coalesce(col(orderAttr).cast("long"),
-      raise_error(lit(s"windowed streaming EMF: null $orderAttr — null " +
-        "order groups need the batch planner (microBatch)")).cast("long"))
-    val projected = base.select(
-      to_json(struct(eqAttrs.map(col): _*)).as("k"),
-      orderOrFail.as("o"),
-      array(microCols: _*).as("micro"),
-      array(rawCols: _*).as("raw"))
-      .as[WinRow]
+    val projected = stream.filter(EmfPlanner.whereColumn(q.where, schema)).select(
+      to_json(struct(keyAttrs.map(col): _*)).as("k"),
+      order.as("o"),
+      arr(slots.map(s => microOf(s.value)), "bigint").as("micro"),
+      arr(slots.map(_.value), "double").as("raw"),
+      arr(deps.map(d => microOf(d.cmp)), "bigint").as("cmpM"),
+      arr(deps.map(_.cmp), "double").as("cmpR"),
+      arr(deps.map(d => microOf(d.slot.value)), "bigint").as("aggM"),
+      arr(deps.map(_.slot.value), "double").as("aggR"))
+      .as[KeyedRow]
 
     // ---- the stateful combine
-    implicit val stateEnc: Encoder[WinState] = Encoders.kryo[WinState]
+    val depSpecs = deps.map(_.slot.spec).toArray
+    val depMeta = deps.map(_.meta).toArray
+    implicit val stateEnc: Encoder[KeyedState] = Encoders.kryo[KeyedState]
     val emitted = projected
       .groupByKey(_.k)
-      .flatMapGroupsWithState[WinState, (String, Long)](
+      .flatMapGroupsWithState[KeyedState, (String, Long)](
         OutputMode.Update, GroupStateTimeout.NoTimeout) {
-        (key: String, rows: Iterator[WinRow], state: GroupState[WinState]) =>
-          val st = state.getOption.getOrElse(new WinState)
+        (key: String, rows: Iterator[KeyedRow], state: GroupState[KeyedState]) =>
+          val st = state.getOption.getOrElse(new KeyedState)
           rows.foreach { r =>
-            var cells = st.groups.get(r.o)
-            if (cells == null) {
-              cells = Array.fill(specs.length)(new SlotAcc)
-              st.groups.put(r.o, cells)
-              boundOrderDomain(st.groups.size, "windowed")
+            var slice = st.slices.get(r.o)
+            if (slice == null) {
+              slice = new Slice(Array.fill(specs.length)(new SlotAcc),
+                Array.fill(depSpecs.length)(
+                  new java.util.HashMap[java.lang.Long, HistCell]()))
+              st.slices.put(r.o, slice)
+              boundDomain(st.slices.size,
+                s"$cls streaming EMF: more than $MaxHistBuckets distinct order " +
+                  "values in one group's state — the order attribute is not " +
+                  "domain-bounded; state would grow with the stream. Use a batch " +
+                  "EMF pass or bucket the order column.")
             }
             var i = 0
             while (i < specs.length) {
-              fold(cells(i), r.micro(i), r.raw(i), specs(i).name)
-              i += 1
-            }
-          }
-          st.ver += 1
-          state.update(st)
-          emitKey(key, st, specs, orderAttr)
-      }
-
-    // ---- typed reconstruction: parse the emitted JSON with the output
-    // schema (stateless past the stateful op, allowed in update mode)
-    val aggFields = slots.map { s =>
-      StructField(s.spec.name, outType(s.spec, colType(s.srcCol)), nullable = true)
-    }
-    val outSchema = StructType(
-      eqAttrs.map(n => StructField(n, colType(n), nullable = true)) ++
-        Seq(StructField(orderAttr, colType(orderAttr), nullable = true)) ++
-        aggFields)
-    emitted.toDF("__json", "__ver")
-      .select(from_json(col("__json"), outSchema).as("r"), col("__ver"))
-      .select(col("r.*"), col("__ver"))
-  }
-
-  // ---- incremental DEPENDENT lowering -------------------------------------
-
-  final case class DepRow(k: String,
-      micro: Seq[Option[Long]], raw: Seq[Option[Double]],
-      cmpM: Seq[Option[Long]], cmpR: Seq[Option[Double]],
-      aggM: Seq[Option[Long]], aggR: Seq[Option[Double]])
-
-  /** One histogram bucket of the two-level state: the comparison value's
-    * raw double (for double-typed predicates) plus the aggregate
-    * partials of the tuples holding that value. */
-  final class HistCell(val raw: Double) extends Serializable {
-    val acc = new SlotAcc
-  }
-
-  /** Hard cap on distinct comparison values PER (group, dependent slot).
-    * Dependent/chained streaming EMF keeps one [[HistCell]] per distinct
-    * comparison value seen in a group — bounded by the column's value
-    * DOMAIN (fine for `quant`-like columns, the corpus shapes), but
-    * nothing about the query form itself enforces that. A near-unique
-    * comparison column (a timestamp, an id) would grow state without
-    * bound and surface as an executor OOM hours in; failing fast at a
-    * width no domain-bounded column reaches turns that into an immediate,
-    * named error (the broadcast-guard convention,
-    * [[graft.ann.VectorKernels]]). Test-tunable so the fail-fast is
-    * exercisable without 65k-row fixtures (EmfStreamingSpec). */
-  @volatile private[emf] var MaxHistBuckets = 65536
-
-  /** Same contract for the ORDER-attribute domain: windowed/chained
-    * state keys one slot array per distinct order value (months in the
-    * corpus — calendar-bounded), which the query form itself does not
-    * enforce either. */
-  private def boundOrderDomain(n: Int, mode: String): Unit =
-    if (n > MaxHistBuckets)
-      throw new IllegalStateException(
-        s"$mode streaming EMF: more than $MaxHistBuckets distinct order " +
-          "values in one group's state — the order attribute is not " +
-          "domain-bounded; state would grow with the stream. Use a batch " +
-          "EMF pass or bucket the order column.")
-
-  private def boundHist(h: java.util.HashMap[java.lang.Long, HistCell],
-      slot: String, mode: String): Unit =
-    if (h.size > MaxHistBuckets)
-      throw new IllegalStateException(
-        s"$mode streaming EMF: comparison-value histogram of slot $slot " +
-          s"exceeds $MaxHistBuckets distinct values — the comparison " +
-          "column is not domain-bounded; state would grow with the " +
-          "stream. Use a batch EMF pass or bucket the comparison column.")
-
-  /** State for one group: its own-aggregate accumulators (the threshold
-    * sources) plus, per dependent slot, the comparison-value histogram. */
-  final class DepState extends Serializable {
-    var ver: Long = 0L
-    var base: Array[SlotAcc] = _
-    var hists: Array[java.util.HashMap[java.lang.Long, HistCell]] = _
-  }
-
-  /** Metadata of one dependent slot: the comparison `tuple.cmp OP ref`,
-    * which base slot the threshold reads, and whether the comparison
-    * runs in IEEE-double space (matching Spark's numeric promotion) or
-    * exact-integer micro-unit space. */
-  final case class DepMeta(op: String, refIdx: Int, cmpDouble: Boolean,
-      refFunc: String, refFloating: Boolean)
-
-  /** Incremental lowering for varZero/SIMPLE + DEPENDENT queries whose
-    * dependent variables pin the FULL grouping set and compare one tuple
-    * column against one own-group aggregate — the corpus query-6 shape
-    * (`count_quant_2` counts the group's tuples with
-    * `quant > MF.avg_quant_1`).
-    *
-    * The stream is keyed by G. The state is the two-level structure
-    * described in the object scaladoc: per group (1) the exact SlotAcc
-    * partials of every variable-0/SIMPLE aggregate — the threshold
-    * sources — and (2) per dependent slot a histogram mapping each seen
-    * comparison value (exact micro-units) to the aggregate partials of
-    * the tuples carrying that value. A micro-batch folds its rows in
-    * (O(batch)); emission recomputes each threshold from the referenced
-    * aggregate's CURRENT partials and combines the qualifying histogram
-    * buckets — re-classifying all history without re-scanning it. State
-    * per group is O(|distinct comparison values|): bound the comparison
-    * column's domain at scale (quantities, ratings, bucketed amounts)
-    * exactly as the windowed path bounds its order domain.
-    *
-    * Comparison semantics replay the batch planner's Spark comparison
-    * bit-for-bit within the decimal-6 exactness contract: if either side
-    * surfaces as double (avg; sum/min/max of floating input; floating
-    * comparison column) both sides convert to IEEE double exactly as
-    * Spark's numeric promotion does; otherwise the comparison is exact
-    * integer micro-units. Output/emission contract (UPDATE mode, `__ver`,
-    * [[snapshot]] reconstruction, HAVING on the snapshot) is identical
-    * to [[planWindowed]]. */
-  def planDependent(q: EmfQuery, stream: DataFrame): DataFrame = {
-    installLocalFs(stream)
-    val spark = stream.sparkSession
-    import spark.implicits._
-    val schema = stream.schema
-
-    val (simpleVars, winVars, depVars) = EmfPlanner.classifyVars(q, schema)
-    require(winVars.isEmpty,
-      "incremental dependent streaming supports variable-0/SIMPLE + " +
-        "DEPENDENT variables only; use planChained(...) for " +
-        "dependent-on-windowed mixes or microBatch(...) beyond that")
-    require(depVars.nonEmpty,
-      "no DEPENDENT variable; use plan(...) for all-SIMPLE queries")
-
-    def colType(n: String): DataType =
-      schema.find(_.name == n).map(_.dataType).getOrElse(
-        throw new IllegalArgumentException(s"unknown column $n"))
-    def numeric(n: String): Unit = colType(n) match {
-      case ByteType | ShortType | IntegerType | LongType | FloatType |
-           DoubleType => ()
-      case other => throw new IllegalArgumentException(
-        s"dependent streaming needs numeric columns; $n: $other")
-    }
-
-    // ---- base slots: varZero + SIMPLE (the threshold sources)
-    val baseSlots: Seq[(SlotSpec, String, Option[Column])] =
-      q.varZero.map { a =>
-        numeric(a.column)
-        (SlotSpec(a.name, a.func, isFloat(colType(a.column)),
-          isIntegral(colType(a.column)), 0, ""), a.column, None)
-      } ++
-      simpleVars.map { v =>
-        numeric(v.agg.column)
-        (SlotSpec(v.agg.name, v.agg.func, isFloat(colType(v.agg.column)),
-          isIntegral(colType(v.agg.column)), 0, ""), v.agg.column,
-          condOf(v, schema))
-      }
-    require(baseSlots.nonEmpty,
-      "dependent streaming needs at least one variable-0/SIMPLE aggregate " +
-        "(the threshold source); shapes without one need microBatch(...)")
-    val baseIdx = baseSlots.map(_._1.name).zipWithIndex.toMap
-
-    // ---- dependent slots
-    def flip(op: String): String = op match {
-      case "<" => ">"; case "<=" => ">="; case ">" => "<"; case ">=" => "<="
-      case other => other
-    }
-    val deps: Seq[(SlotSpec, String, String, Option[Column], DepMeta)] =
-      depVars.map { v =>
-        numeric(v.agg.column)
-        val eqAttrs = v.mfConds.collect {
-          case Cond(TupleCol(a), "=" | "==", MfField(b)) if a == b => a
-        }.distinct
-        require(eqAttrs.toSet == q.groupAttrs.toSet,
-          s"dependent variable ${v.agg.name} must pin the full grouping " +
-            s"set ${q.groupAttrs} (got $eqAttrs); cross-group membership " +
-            "needs microBatch(...)")
-        val depConds = v.mfConds.filterNot {
-          case Cond(TupleCol(a), "=" | "==", MfField(b)) => a == b
-          case _ => false
-        }
-        require(depConds.size == 1,
-          s"dependent variable ${v.agg.name} needs exactly one aggregate " +
-            s"comparison, got ${depConds.size}")
-        val (cmpCol, op, refName) = depConds.head match {
-          case Cond(TupleCol(c), o, MfField(a)) if q.aggNames.contains(a) =>
-            (c, o, a)
-          case Cond(MfField(a), o, TupleCol(c)) if q.aggNames.contains(a) =>
-            (c, flip(o), a)
-          case other => throw new IllegalArgumentException(
-            s"dependent variable ${v.agg.name}: unsupported membership " +
-              s"condition $other")
-        }
-        val refIdx = baseIdx.getOrElse(refName,
-          throw new IllegalArgumentException(
-            s"dependent variable ${v.agg.name} references '$refName', " +
-              "which is not a variable-0/SIMPLE aggregate — chains onto " +
-              "windowed aggregates run via planChained(...); deeper " +
-              "chains need microBatch(...)"))
-        numeric(cmpCol)
-        val refSpec = baseSlots(refIdx)._1
-        val refOutDouble = refSpec.func == "avg" ||
-          (refSpec.floating && Set("sum", "min", "max").contains(refSpec.func))
-        val cmpDouble = refOutDouble || isFloat(colType(cmpCol))
-        (SlotSpec(v.agg.name, v.agg.func, isFloat(colType(v.agg.column)),
-          isIntegral(colType(v.agg.column)), 2, ""),
-          v.agg.column, cmpCol, condOf(v, schema),
-          DepMeta(op, refIdx, cmpDouble, refSpec.func, refSpec.floating))
-      }
-
-    // ---- input projection
-    val base = stream.filter(EmfPlanner.whereColumn(q.where, schema))
-    def guarded(src: String, cond: Option[Column]): Column =
-      cond.map(c => when(c, col(src))).getOrElse(col(src))
-    def microOf(c: Column): Column =
-      (c.cast("decimal(27,6)") * lit(1000000L)).cast("long")
-    val projected = base.select(
-      to_json(struct(q.groupAttrs.map(col): _*)).as("k"),
-      array(baseSlots.map { case (_, src, c) => microOf(guarded(src, c)) }: _*).as("micro"),
-      array(baseSlots.map { case (_, src, c) => guarded(src, c).cast("double") }: _*).as("raw"),
-      array(deps.map { case (_, _, cmp, c, _) => microOf(guarded(cmp, c)) }: _*).as("cmpM"),
-      array(deps.map { case (_, _, cmp, c, _) => guarded(cmp, c).cast("double") }: _*).as("cmpR"),
-      array(deps.map { case (_, src, _, c, _) => microOf(guarded(src, c)) }: _*).as("aggM"),
-      array(deps.map { case (_, src, _, c, _) => guarded(src, c).cast("double") }: _*).as("aggR"))
-      .as[DepRow]
-
-    // ---- the stateful combine
-    val baseSpecs = baseSlots.map(_._1).toArray
-    val depSpecs = deps.map(_._1).toArray
-    val depMeta = deps.map(_._5).toArray
-    implicit val stateEnc: Encoder[DepState] = Encoders.kryo[DepState]
-    val emitted = projected
-      .groupByKey(_.k)
-      .flatMapGroupsWithState[DepState, (String, Long)](
-        OutputMode.Update, GroupStateTimeout.NoTimeout) {
-        (key: String, rows: Iterator[DepRow], state: GroupState[DepState]) =>
-          val st = state.getOption.getOrElse {
-            val s = new DepState
-            s.base = Array.fill(baseSpecs.length)(new SlotAcc)
-            s.hists = Array.fill(depSpecs.length)(
-              new java.util.HashMap[java.lang.Long, HistCell]())
-            s
-          }
-          rows.foreach { r =>
-            var i = 0
-            while (i < baseSpecs.length) {
-              fold(st.base(i), r.micro(i), r.raw(i), baseSpecs(i).name)
+              fold(slice.accs(i), r.micro(i), r.raw(i), specs(i).name)
               i += 1
             }
             var j = 0
             while (j < depSpecs.length) {
-              (r.cmpM(j), r.aggM(j)) match {
-                case (Some(cm), Some(am)) =>
-                  var cell = st.hists(j).get(cm)
-                  if (cell == null) {
-                    cell = new HistCell(r.cmpR(j).get)
-                    st.hists(j).put(cm, cell)
-                    boundHist(st.hists(j), depSpecs(j).name, "dependent")
-                  } else if (cell.raw != r.cmpR(j).get &&
-                      !(java.lang.Double.isNaN(cell.raw) &&
-                        java.lang.Double.isNaN(r.cmpR(j).get)))
-                    // a second double below decimal-6 resolution would
-                    // silently classify by the first-seen representative;
-                    // fail loud instead (the domain-guard convention).
-                    // The both-NaN escape matters: x != x is true for
-                    // every NaN, so bare != would report two identical
-                    // NaNs as "distinct" values; IEEE == (not
-                    // Double.compare) keeps -0.0 == 0.0 passing as the
-                    // pre-guard code did
-                    throw new IllegalStateException(
-                      s"dependent streaming EMF: comparison values " +
-                        s"${cell.raw} and ${r.cmpR(j).get} of slot " +
-                        s"${depSpecs(j).name} are distinct below the " +
-                        "decimal-6 bucket resolution")
-                  fold(cell.acc, Some(am), r.aggR(j), depSpecs(j).name)
-                case (None, _) if r.cmpR(j).isDefined =>
-                  throw new IllegalStateException(
-                    s"dependent streaming EMF: comparison value " +
-                      s"${r.cmpR(j).get} of slot ${depSpecs(j).name} exceeds " +
-                      "the exact decimal-6 domain (finite, |v| <= 9.2e12)")
-                case (Some(_), None) if r.aggR(j).isDefined =>
-                  throw new IllegalStateException(
-                    s"dependent streaming EMF: value ${r.aggR(j).get} of " +
-                      s"slot ${depSpecs(j).name} exceeds the exact decimal-6 " +
-                      "domain (finite, |v| <= 9.2e12)")
-                case _ => () // tuple conds failed / null value: no contribution
-              }
+              foldHist(slice.hists(j), r, j, depSpecs(j).name, cls)
               j += 1
             }
           }
           st.ver += 1
           state.update(st)
-          emitDepKey(key, st, baseSpecs, depSpecs, depMeta)
+          emitKeyed(key, st, specs, depSpecs, depMeta, orderAttr)
       }
 
-    // ---- typed reconstruction (same shape as planWindowed)
-    val outSchema = StructType(
-      q.groupAttrs.map(n => StructField(n, colType(n), nullable = true)) ++
-        baseSlots.map { case (s, src, _) =>
-          StructField(s.name, outType(s, colType(src)), nullable = true) } ++
-        deps.map { case (s, src, _, _, _) =>
-          StructField(s.name, outType(s, colType(src)), nullable = true) })
-    emitted.toDF("__json", "__ver")
-      .select(from_json(col("__json"), outSchema).as("r"), col("__ver"))
-      .select(col("r.*"), col("__ver"))
+    fromJson(emitted, keyAttrs.map(cols.field) ++ orderAttr.map(cols.field) ++
+      (slots ++ deps.map(_.slot)).map(cols.outField))
   }
+
+  /** Fold dependent slot `j` of row `r` into that slot's
+    * comparison-value histogram. */
+  private def foldHist(hist: java.util.HashMap[java.lang.Long, HistCell],
+      r: KeyedRow, j: Int, slot: String, cls: String): Unit =
+    (r.cmpM(j), r.aggM(j)) match {
+      case (Some(cm), Some(am)) =>
+        val raw = r.cmpR(j).get
+        var cell = hist.get(cm)
+        if (cell == null) {
+          cell = new HistCell(raw)
+          hist.put(cm, cell)
+          boundDomain(hist.size,
+            s"$cls streaming EMF: comparison-value histogram of slot $slot " +
+              s"exceeds $MaxHistBuckets distinct values — the comparison " +
+              "column is not domain-bounded; state would grow with the " +
+              "stream. Use a batch EMF pass or bucket the comparison column.")
+        } else if (cell.raw != raw &&
+            !(java.lang.Double.isNaN(cell.raw) && java.lang.Double.isNaN(raw)))
+          // a second double below decimal-6 resolution would silently
+          // classify by the first-seen representative; fail loud instead
+          // (the domain-guard convention). The both-NaN escape matters:
+          // x != x is true for every NaN, so bare != would report two
+          // identical NaNs as "distinct" values; IEEE == (not
+          // Double.compare) keeps -0.0 == 0.0 passing
+          throw new IllegalStateException(
+            s"$cls streaming EMF: comparison values ${cell.raw} and $raw of " +
+              s"slot $slot are distinct below the decimal-6 bucket resolution")
+        fold(cell.acc, Some(am), r.aggR(j), slot)
+      case (None, _) if r.cmpR(j).isDefined =>
+        throw new IllegalStateException(
+          s"$cls streaming EMF: comparison value ${r.cmpR(j).get} of slot " +
+            s"$slot exceeds the exact decimal-6 domain (finite, |v| <= 9.2e12)")
+      case (Some(_), None) if r.aggR(j).isDefined =>
+        throw new IllegalStateException(
+          s"$cls streaming EMF: value ${r.aggR(j).get} of slot $slot exceeds " +
+            "the exact decimal-6 domain (finite, |v| <= 9.2e12)")
+      case _ => () // tuple conds failed / null value: no contribution
+    }
+
+  /** Emit one JSON row per slice of the key: its order value (windowed
+    * and chained keys), variable-0/SIMPLE slots from the slice's own
+    * partials, WINDOWED slots as their frame over the key's sorted order
+    * values (prefix/suffix pass ≡ the batch RANGE frames over per-group
+    * partials), and each dependent slot as the histogram buckets passing
+    * the threshold its referenced slot takes AT THAT GROUP. */
+  private def emitKeyed(key: String, st: KeyedState, specs: Array[SlotSpec],
+      depSpecs: Array[SlotSpec], depMeta: Array[DepMeta],
+      orderAttr: Option[String]): Iterator[(String, Long)] = {
+    val ordered = st.slices.keySet().asScala.map(_.longValue()).toArray.sorted
+    val slices = ordered.map(o => st.slices.get(o))
+    val cells = slices.map(_.accs)
+    val frames = specs.indices.filter(specs(_).kind == 1)
+      .map(j => j -> strictPrefixSuffix(cells, j)).toMap
+    def combAt(j: Int, i: Int): SlotAcc = {
+      val own = cells(i)(j)
+      if (specs(j).kind == 0) own
+      else {
+        val (pre, suf) = frames(j)
+        specs(j).frameOp match {
+          case "<"  => pre(i)
+          case "<=" => { val c = pre(i).copy; c.add(own); c }
+          case ">"  => suf(i)
+          case ">=" => { val c = suf(i).copy; c.add(own); c }
+          case _    => { val c = pre(i).copy; c.add(own); c.add(suf(i)); c }
+        }
+      }
+    }
+
+    // key JSON == to_json(struct(key attrs)) — splice its fields into each row
+    val keyInner = key.substring(1, key.length - 1)
+    ordered.indices.map { i =>
+      val sb = new StringBuilder(96).append('{').append(keyInner)
+      def field(name: String, value: String): Unit = {
+        if (sb.length > 1) sb.append(',')
+        sb.append('"').append(name).append("\":").append(value)
+      }
+      orderAttr.foreach(field(_, ordered(i).toString))
+      specs.indices.foreach(j => field(specs(j).name, render(specs(j), combAt(j, i))))
+      depSpecs.indices.foreach { d =>
+        val m = depMeta(d)
+        val comb = new SlotAcc
+        foldQualifying(comb, slices(i).hists(d), combAt(m.refIdx, i), m)
+        field(depSpecs(d).name, render(depSpecs(d), comb))
+      }
+      (sb.append('}').toString, st.ver)
+    }.iterator
+  }
+
+  /** Fold the histogram buckets whose comparison value passes the
+    * threshold derived from `ref` (the referenced aggregate's current
+    * combined partials) into `comb`. A NULL reference aggregate (empty
+    * qualifying set, func != count) compares to nothing — the dependent
+    * set stays empty, as in batch. */
+  private def foldQualifying(comb: SlotAcc,
+      hist: java.util.HashMap[java.lang.Long, HistCell],
+      ref: SlotAcc, m: DepMeta): Unit =
+    if (m.refFunc == "count" || ref.cnt > 0) {
+      if (m.cmpDouble) {
+        def sumD: Double =
+          if (m.refFloating)
+            new java.math.BigDecimal(ref.sumMicro.bigInteger, 6).doubleValue()
+          else (ref.sumMicro / 1000000).toDouble
+        val thr: Double = m.refFunc match {
+          case "count" => ref.cnt.toDouble
+          case "avg" => sumD / ref.cnt
+          case "sum" => sumD
+          case "min" => if (m.refFloating) ref.mn else (ref.mnMic / 1000000).toDouble
+          case "max" => if (m.refFloating) ref.mx else (ref.mxMic / 1000000).toDouble
+        }
+        hist.values().asScala.foreach { cell =>
+          if (cmpD(cell.raw, m.op, thr)) comb.add(cell.acc)
+        }
+      } else {
+        val thr: BigInt = m.refFunc match {
+          case "count" => BigInt(ref.cnt) * 1000000
+          case "sum" => ref.sumMicro
+          case "min" => BigInt(ref.mnMic)
+          case "max" => BigInt(ref.mxMic)
+          case other => throw new IllegalStateException(s"bad ref func $other")
+        }
+        hist.entrySet().asScala.foreach { e =>
+          if (cmpI(BigInt(e.getKey.longValue()), m.op, thr)) comb.add(e.getValue.acc)
+        }
+      }
+    }
 
   // ---- incremental CROSS-GROUP lowering (complement shape, corpus q4) ----
 
@@ -686,8 +698,8 @@ object EmfStreaming {
     * grouping attr, any of sum/count/avg/min/max) with G = E ∪ {anti}.
     *
     * The membership of group (e, a) genuinely spans OTHER groups — the
-    * shape [[planDependent]] rejects — but the span is confined to
-    * groups sharing e, so keying the state by E restores a key-local
+    * shape [[planKeyed]] rejects — but the span is confined to groups
+    * sharing e, so keying the state by E restores a key-local
     * sufficient statistic (E = ∅, the KEYLESS global complement, rides
     * the same machinery under one constant key — see the inline note on
     * why that is not a new scale class): per anti value, ONE accumulator row holding
@@ -712,9 +724,9 @@ object EmfStreaming {
     * 2⁵³); an empty complement renders NULL for sum/avg/min/max and 0
     * for count. Output/emission contract (UPDATE mode, `__ver`,
     * [[snapshot]], HAVING on the snapshot) is identical to
-    * [[planWindowed]]. State per key is O(|anti domain within the
+    * [[planKeyed]]. State per key is O(|anti domain within the
     * key|) — the MF frame's own cardinality for that key — guarded by
-    * the same fail-fast the windowed/dependent paths use. */
+    * the same fail-fast the keyed path uses. */
   def planCrossGroup(q: EmfQuery, stream: DataFrame): DataFrame = {
     installLocalFs(stream)
     val spark = stream.sparkSession
@@ -725,7 +737,7 @@ object EmfStreaming {
     require(winVars.isEmpty,
       "incremental cross-group streaming supports variable-0/SIMPLE + " +
         "complement-decomposable DEPENDENT variables only; use " +
-        "planChained(...) for windowed mixes or microBatch(...) beyond that")
+        "planKeyed(...) for windowed mixes or microBatch(...) beyond that")
     require(depVars.nonEmpty,
       "no DEPENDENT variable; use plan(...) for all-SIMPLE queries")
 
@@ -734,7 +746,7 @@ object EmfStreaming {
       require(i.isDefined,
         s"dependent variable ${v.agg.name} is not complement-shaped " +
           "(equality on a grouping subset + exactly one same-attr !=); " +
-          "use planDependent(...) for own-group aggregate comparisons or " +
+          "use planKeyed(...) for own-group aggregate comparisons or " +
           "microBatch(...) beyond that")
     }
     val (eqAttrs, antiAttr) = infos.head._2.get
@@ -751,7 +763,7 @@ object EmfStreaming {
     // changes, so the sufficient statistic is global by nature and the
     // lowering keys the whole structure under ONE constant state key:
     // the same two-level state, whose bound (one accumulator row per
-    // anti value, boundAntiDomain fail-fast) is EXACTLY the keyed
+    // anti value, the anti-domain fail-fast) is EXACTLY the keyed
     // path's single-hot-key worst case — no new scale class. On a real
     // cluster the constant key serializes input folding; the
     // distributed variant shards per-anti partials as a plain
@@ -765,44 +777,14 @@ object EmfStreaming {
       s"grouping set ${q.groupAttrs} must be exactly equality attrs " +
         s"$eqAttrs plus anti attr $antiAttr; use microBatch(...)")
 
-    def colType(n: String): DataType =
-      schema.find(_.name == n).map(_.dataType).getOrElse(
-        throw new IllegalArgumentException(s"unknown column $n"))
-    def numeric(n: String): Unit = colType(n) match {
-      case ByteType | ShortType | IntegerType | LongType | FloatType |
-           DoubleType => ()
-      case other => throw new IllegalArgumentException(
-        s"cross-group streaming needs numeric aggregate columns; $n: $other")
-    }
-
     // ---- slots: varZero + SIMPLE (kind 0), then complement (kind 2)
-    final case class SlotDef(spec: SlotSpec, srcCol: String, cond: Option[Column])
-    val baseSlots: Seq[SlotDef] =
-      q.varZero.map { a =>
-        numeric(a.column)
-        SlotDef(SlotSpec(a.name, a.func, isFloat(colType(a.column)),
-          isIntegral(colType(a.column)), 0, ""), a.column, None)
-      } ++
-      simpleVars.map { v =>
-        numeric(v.agg.column)
-        SlotDef(SlotSpec(v.agg.name, v.agg.func, isFloat(colType(v.agg.column)),
-          isIntegral(colType(v.agg.column)), 0, ""), v.agg.column,
-          condOf(v, schema))
-      }
-    val compSlots: Seq[SlotDef] = depVars.map { v =>
-      numeric(v.agg.column)
-      SlotDef(SlotSpec(v.agg.name, v.agg.func, isFloat(colType(v.agg.column)),
-        isIntegral(colType(v.agg.column)), 2, ""), v.agg.column,
-        condOf(v, schema))
-    }
-    val slots = baseSlots ++ compSlots
+    val cols = new SlotCols(schema, "cross-group", "aggregate columns")
+    val slots = cols.base(q, simpleVars) ++
+      depVars.map(v => cols.slot(v.agg, condOf(v, schema), 2))
     val specs = slots.map(_.spec).toArray
-    val nBase = baseSlots.length
+    val nBase = specs.count(_.kind == 0)
 
-    // ---- input projection: E-key JSON, anti-value JSON, slot values
-    val base = stream.filter(EmfPlanner.whereColumn(q.where, schema))
-    def guarded(s: SlotDef): Column =
-      s.cond.map(c => when(c, col(s.srcCol))).getOrElse(col(s.srcCol))
+    // ---- input projection: E-key JSON, anti-value JSON, slot values.
     // ignoreNullFields=false: a null key/anti field must keep its slot in
     // the JSON (default to_json DROPS null fields, which would splice a
     // malformed `{...,,...}` row and alias distinct null patterns)
@@ -810,13 +792,11 @@ object EmfStreaming {
     val keyCol =
       if (eqAttrs.isEmpty) lit("{}")
       else to_json(struct(eqAttrs.map(col): _*), keepNulls)
-    val projected = base.select(
+    val projected = stream.filter(EmfPlanner.whereColumn(q.where, schema)).select(
       keyCol.as("k"),
       to_json(struct(col(antiAttr)), keepNulls).as("a"),
-      array(slots.map(s =>
-        (guarded(s).cast("decimal(27,6)") * lit(1000000L)).cast("long")): _*)
-        .as("micro"),
-      array(slots.map(s => guarded(s).cast("double")): _*).as("raw"))
+      arr(slots.map(s => microOf(s.value)), "bigint").as("micro"),
+      arr(slots.map(_.value), "double").as("raw"))
       .as[CrossRow]
 
     // ---- the stateful combine
@@ -832,7 +812,11 @@ object EmfStreaming {
             if (cells == null) {
               cells = Array.fill(specs.length)(new SlotAcc)
               st.groups.put(r.a, cells)
-              boundAntiDomain(st.groups.size)
+              boundDomain(st.groups.size,
+                s"cross-group streaming EMF: more than $MaxHistBuckets distinct " +
+                  "anti-attribute values in one key's state — the anti attribute " +
+                  "is not domain-bounded within its equality key; state would " +
+                  "grow with the stream. Use a batch EMF pass instead.")
             }
             var i = 0
             while (i < specs.length) {
@@ -842,18 +826,11 @@ object EmfStreaming {
           }
           st.ver += 1
           state.update(st)
-          emitCrossKey(key, st, specs, nBase, antiAttr)
+          emitCrossKey(key, st, specs, nBase)
       }
 
-    // ---- typed reconstruction (same shape as planWindowed)
-    val outSchema = StructType(
-      eqAttrs.map(n => StructField(n, colType(n), nullable = true)) ++
-        Seq(StructField(antiAttr, colType(antiAttr), nullable = true)) ++
-        slots.map(s => StructField(s.spec.name,
-          outType(s.spec, colType(s.srcCol)), nullable = true)))
-    emitted.toDF("__json", "__ver")
-      .select(from_json(col("__json"), outSchema).as("r"), col("__ver"))
-      .select(col("r.*"), col("__ver"))
+    fromJson(emitted, eqAttrs.map(cols.field) ++ Seq(cols.field(antiAttr)) ++
+      slots.map(cols.outField))
   }
 
   /** Cluster-scale SHARDED lowering of the KEYLESS (E = ∅) global
@@ -981,402 +958,35 @@ object EmfStreaming {
       .select(q.select.map(col): _*)
   }
 
-  /** Anti-domain analogue of [[boundOrderDomain]]: one accumulator row
-    * per anti value per key — the key's own group count. */
-  private def boundAntiDomain(n: Int): Unit =
-    if (n > MaxHistBuckets)
-      throw new IllegalStateException(
-        s"cross-group streaming EMF: more than $MaxHistBuckets distinct " +
-          "anti-attribute values in one key's state — the anti attribute " +
-          "is not domain-bounded within its equality key; state would " +
-          "grow with the stream. Use a batch EMF pass instead.")
-
   /** Emit one JSON row per (key, anti value): base slots straight from
     * the group's accumulators; complement slots combine ALL-BUT-SELF over
     * the key's per-group partials — `complement(gᵢ) = ⊕_{j≠i} own(gⱼ)`,
     * rendered from a strict-prefix ⊕ strict-suffix pair per slot (the
-    * windowed pass's own recombination trick, O(groups) total). For
+    * windowed frames' own recombination, O(groups) total). For
     * sum/count/avg this equals [[EmfPlanner.complementPass]]'s
     * `total ⊖ own` subtraction over exact partials bit-for-bit; for
     * min/max it is the identity that subtraction CANNOT express (min has
     * no inverse), which is what lets non-subtractable complements stream
     * incrementally — the round-12 residue this closed. */
   private def emitCrossKey(key: String, st: CrossState,
-      specs: Array[SlotSpec], nBase: Int, antiAttr: String)
-      : Iterator[(String, Long)] = {
-    import scala.jdk.CollectionConverters._
-    val nComp = specs.length - nBase
+      specs: Array[SlotSpec], nBase: Int): Iterator[(String, Long)] = {
     val entries = st.groups.entrySet().asScala.toArray
-    val n = entries.length
-    // per complement slot: prefix(i) = ⊕ cells(0..i-1), suffix(i) =
-    // ⊕ cells(i+1..n-1); complement(i) = prefix(i) ⊕ suffix(i)
-    val prefix = Array.tabulate(nComp) { j =>
-      val arr = new Array[Comb](n); val run = new Comb
-      var i = 0
-      while (i < n) {
-        arr(i) = run.copyOf; run.add(entries(i).getValue()(nBase + j)); i += 1
-      }
-      arr
-    }
-    val suffix = Array.tabulate(nComp) { j =>
-      val arr = new Array[Comb](n); val run = new Comb
-      var i = n - 1
-      while (i >= 0) {
-        arr(i) = run.copyOf; run.add(entries(i).getValue()(nBase + j)); i -= 1
-      }
-      arr
-    }
+    val cells = entries.map(_.getValue)
+    val comps = (nBase until specs.length).map(strictPrefixSuffix(cells, _))
     val keyInner = key.substring(1, key.length - 1)
-    val out = (0 until n).iterator.map { i =>
-      val e = entries(i)
-      val antiInner = e.getKey.substring(1, e.getKey.length - 1)
-      val cells = e.getValue
-      val sb = new StringBuilder(96)
-      sb.append('{')
-      if (keyInner.nonEmpty) { sb.append(keyInner); sb.append(',') }
-      sb.append(antiInner)
-      var b = 0
-      while (b < nBase) {
-        val c = new Comb; c.add(cells(b))
-        sb.append(",\"").append(specs(b).name).append("\":")
-          .append(render(specs(b), c))
-        b += 1
+    entries.indices.map { i =>
+      val anti = entries(i).getKey
+      val sb = new StringBuilder(96).append('{')
+      if (keyInner.nonEmpty) sb.append(keyInner).append(',')
+      sb.append(anti.substring(1, anti.length - 1))
+      specs.indices.foreach { j =>
+        val v =
+          if (j < nBase) cells(i)(j)
+          else { val (pre, suf) = comps(j - nBase); val c = pre(i).copy; c.add(suf(i)); c }
+        sb.append(",\"").append(specs(j).name).append("\":").append(render(specs(j), v))
       }
-      var j = 0
-      while (j < nComp) {
-        val comp = prefix(j)(i).copyOf
-        comp.addComb(suffix(j)(i))
-        sb.append(",\"").append(specs(nBase + j).name).append("\":")
-          .append(render(specs(nBase + j), comp))
-        j += 1
-      }
-      sb.append('}')
-      (sb.toString, st.ver)
-    }
-    out.toIndexedSeq.iterator
-  }
-
-  // ---- incremental CHAINED lowering (dependent-on-windowed, corpus q8) ----
-
-  final case class ChainRow(k: String, o: Long,
-      micro: Seq[Option[Long]], raw: Seq[Option[Double]],
-      cmpM: Seq[Option[Long]], cmpR: Seq[Option[Double]],
-      aggM: Seq[Option[Long]], aggR: Seq[Option[Double]])
-
-  /** State for one equality key (e.g. cust): the key's ordered MF
-    * structure — per order value, the base/windowed slot partials AND
-    * each dependent slot's comparison-value histogram. */
-  final class ChainState extends Serializable {
-    var ver: Long = 0L
-    val groups = new java.util.HashMap[java.lang.Long, Array[SlotAcc]]()
-    val hists = new java.util.HashMap[java.lang.Long,
-      Array[java.util.HashMap[java.lang.Long, HistCell]]]()
-  }
-
-  /** Incremental lowering for the dependent-on-windowed CHAIN (corpus
-    * q8): grouping set = {equality attrs E} ∪ {order attr o}, WINDOWED
-    * variables exactly as [[planWindowed]], plus DEPENDENT variables
-    * that pin the full grouping set and compare one tuple column against
-    * ANY earlier aggregate — base/SIMPLE (own group) or WINDOWED (the
-    * chain). The cross-group dependence travels only through the window
-    * frames, which are E-key-local — so keying the state by E restores a
-    * key-local sufficient statistic: per order value, (1) the slot
-    * partials [[planWindowed]] keeps, and (2) per dependent slot the
-    * comparison-value histogram [[planDependent]] keeps. A micro-batch
-    * folds its rows in (O(batch)); emission recombines window frames
-    * over the partials (prefix/suffix pass) and re-classifies each
-    * group's histogram against the threshold derived from THAT group's
-    * frame — a moving window aggregate retroactively flips historical
-    * tuples' membership with no history re-scan. State per key is
-    * O(|order domain| × |comparison-value domain|) — the product of the
-    * two bounds the windowed and dependent paths each already assume.
-    *
-    * Emission/output contract (UPDATE mode, `__ver`, [[snapshot]],
-    * HAVING on the snapshot) is identical to [[planWindowed]]. */
-  def planChained(q: EmfQuery, stream: DataFrame): DataFrame = {
-    installLocalFs(stream)
-    val spark = stream.sparkSession
-    import spark.implicits._
-    val schema = stream.schema
-
-    val (simpleVars, winVars, depVars) = EmfPlanner.classifyVars(q, schema)
-    require(winVars.nonEmpty,
-      "no WINDOWED variable; use planDependent(...) for base-referencing " +
-        "dependent queries or plan(...) for all-SIMPLE queries")
-    require(depVars.nonEmpty,
-      "no DEPENDENT variable; use planWindowed(...) for SIMPLE+WINDOWED " +
-        "queries")
-
-    // ---- windowed-key validation (same contract as planWindowed)
-    def eqAttrsOf(v: GroupingVar): Seq[String] = v.mfConds.collect {
-      case Cond(TupleCol(a), "=" | "==", MfField(b)) if a == b => a
-    }
-    def orderCondOf(v: GroupingVar): Option[Cond] = v.mfConds.collectFirst {
-      case c @ Cond(TupleCol(_), "<" | "<=" | ">" | ">=", MfField(_)) => c
-    }
-    val eqAttrs = eqAttrsOf(winVars.head).distinct
-    val orderAttr = winVars.flatMap(orderCondOf).headOption match {
-      case Some(Cond(TupleCol(a), _, _)) => a
-      case _ => throw new IllegalArgumentException(
-        "chained streaming needs at least one order comparison")
-    }
-    winVars.foreach { v =>
-      require(eqAttrsOf(v).distinct == eqAttrs &&
-        orderCondOf(v).forall { case Cond(TupleCol(a), _, _) => a == orderAttr },
-        s"windowed variable ${v.agg.name} must share equality attrs " +
-          s"$eqAttrs and order attr $orderAttr")
-    }
-    require(eqAttrs.nonEmpty, "chained streaming needs ≥ 1 equality attr")
-    schema.find(_.name == orderAttr).map(_.dataType).foreach {
-      case ByteType | ShortType | IntegerType | LongType => ()
-      case other => throw new IllegalArgumentException(
-        s"chained streaming order attribute '$orderAttr' must be an " +
-          s"integral type, got $other — use microBatch(...) instead")
-    }
-    require(q.groupAttrs.toSet == (eqAttrs :+ orderAttr).toSet &&
-      !eqAttrs.contains(orderAttr),
-      s"grouping set ${q.groupAttrs} must be exactly equality attrs " +
-        s"$eqAttrs plus order attr $orderAttr")
-
-    def colType(n: String): DataType =
-      schema.find(_.name == n).map(_.dataType).getOrElse(
-        throw new IllegalArgumentException(s"unknown column $n"))
-    def numeric(n: String): Unit = colType(n) match {
-      case ByteType | ShortType | IntegerType | LongType | FloatType |
-           DoubleType => ()
-      case other => throw new IllegalArgumentException(
-        s"chained streaming needs numeric columns; $n: $other")
-    }
-
-    // ---- slots: varZero + SIMPLE (kind 0) then WINDOWED (kind 1)
-    final case class SlotDef(spec: SlotSpec, srcCol: String, cond: Option[Column])
-    val slots: Seq[SlotDef] =
-      q.varZero.map { a =>
-        numeric(a.column)
-        SlotDef(SlotSpec(a.name, a.func, isFloat(colType(a.column)),
-          isIntegral(colType(a.column)), 0, ""), a.column, None)
-      } ++
-      simpleVars.map { v =>
-        numeric(v.agg.column)
-        SlotDef(SlotSpec(v.agg.name, v.agg.func, isFloat(colType(v.agg.column)),
-          isIntegral(colType(v.agg.column)), 0, ""), v.agg.column,
-          condOf(v, schema))
-      } ++
-      winVars.map { v =>
-        numeric(v.agg.column)
-        val op = orderCondOf(v).map(_.op).getOrElse("")
-        SlotDef(SlotSpec(v.agg.name, v.agg.func, isFloat(colType(v.agg.column)),
-          isIntegral(colType(v.agg.column)), 1, op), v.agg.column,
-          condOf(v, schema))
-      }
-    val slotIdx = slots.map(_.spec.name).zipWithIndex.toMap
-    val specs = slots.map(_.spec).toArray
-
-    // ---- dependent slots (threshold ref may be kind 0 OR kind 1)
-    def flip(op: String): String = op match {
-      case "<" => ">"; case "<=" => ">="; case ">" => "<"; case ">=" => "<="
-      case other => other
-    }
-    val deps: Seq[(SlotSpec, String, String, Option[Column], DepMeta)] =
-      depVars.map { v =>
-        numeric(v.agg.column)
-        val pins = eqAttrsOf(v).distinct
-        require(pins.toSet == q.groupAttrs.toSet,
-          s"dependent variable ${v.agg.name} must pin the full grouping " +
-            s"set ${q.groupAttrs} (got $pins); unpinned cross-group " +
-            "membership needs microBatch(...)")
-        val depConds = v.mfConds.filterNot {
-          case Cond(TupleCol(a), "=" | "==", MfField(b)) => a == b
-          case _ => false
-        }
-        require(depConds.size == 1,
-          s"dependent variable ${v.agg.name} needs exactly one aggregate " +
-            s"comparison, got ${depConds.size}")
-        val (cmpCol, op, refName) = depConds.head match {
-          case Cond(TupleCol(c), o, MfField(a)) if q.aggNames.contains(a) =>
-            (c, o, a)
-          case Cond(MfField(a), o, TupleCol(c)) if q.aggNames.contains(a) =>
-            (c, flip(o), a)
-          case other => throw new IllegalArgumentException(
-            s"dependent variable ${v.agg.name}: unsupported membership " +
-              s"condition $other")
-        }
-        val refIdx = slotIdx.getOrElse(refName,
-          throw new IllegalArgumentException(
-            s"dependent variable ${v.agg.name} references '$refName', " +
-              "which is not a variable-0/SIMPLE/WINDOWED aggregate — " +
-              "chains onto other dependent aggregates need microBatch(...)"))
-        numeric(cmpCol)
-        val refSpec = specs(refIdx)
-        val refOutDouble = refSpec.func == "avg" ||
-          (refSpec.floating && Set("sum", "min", "max").contains(refSpec.func))
-        val cmpDouble = refOutDouble || isFloat(colType(cmpCol))
-        (SlotSpec(v.agg.name, v.agg.func, isFloat(colType(v.agg.column)),
-          isIntegral(colType(v.agg.column)), 2, ""),
-          v.agg.column, cmpCol, condOf(v, schema),
-          DepMeta(op, refIdx, cmpDouble, refSpec.func, refSpec.floating))
-      }
-
-    // ---- input projection: E-key JSON, order value, slot values,
-    //      per-dep comparison + aggregate values
-    val base = stream.filter(EmfPlanner.whereColumn(q.where, schema))
-    def guarded(src: String, cond: Option[Column]): Column =
-      cond.map(c => when(c, col(src))).getOrElse(col(src))
-    def microOf(c: Column): Column =
-      (c.cast("decimal(27,6)") * lit(1000000L)).cast("long")
-    val orderOrFail = coalesce(col(orderAttr).cast("long"),
-      raise_error(lit(s"chained streaming EMF: null $orderAttr — null " +
-        "order groups need the batch planner (microBatch)")).cast("long"))
-    val projected = base.select(
-      to_json(struct(eqAttrs.map(col): _*)).as("k"),
-      orderOrFail.as("o"),
-      array(slots.map(s => microOf(guarded(s.srcCol, s.cond))): _*).as("micro"),
-      array(slots.map(s => guarded(s.srcCol, s.cond).cast("double")): _*).as("raw"),
-      array(deps.map { case (_, _, cmp, c, _) => microOf(guarded(cmp, c)) }: _*).as("cmpM"),
-      array(deps.map { case (_, _, cmp, c, _) => guarded(cmp, c).cast("double") }: _*).as("cmpR"),
-      array(deps.map { case (_, src, _, c, _) => microOf(guarded(src, c)) }: _*).as("aggM"),
-      array(deps.map { case (_, src, _, c, _) => guarded(src, c).cast("double") }: _*).as("aggR"))
-      .as[ChainRow]
-
-    // ---- the stateful combine
-    val depSpecs = deps.map(_._1).toArray
-    val depMeta = deps.map(_._5).toArray
-    implicit val stateEnc: Encoder[ChainState] = Encoders.kryo[ChainState]
-    val emitted = projected
-      .groupByKey(_.k)
-      .flatMapGroupsWithState[ChainState, (String, Long)](
-        OutputMode.Update, GroupStateTimeout.NoTimeout) {
-        (key: String, rows: Iterator[ChainRow], state: GroupState[ChainState]) =>
-          val st = state.getOption.getOrElse(new ChainState)
-          rows.foreach { r =>
-            var cells = st.groups.get(r.o)
-            if (cells == null) {
-              cells = Array.fill(specs.length)(new SlotAcc)
-              st.groups.put(r.o, cells)
-              st.hists.put(r.o, Array.fill(depSpecs.length)(
-                new java.util.HashMap[java.lang.Long, HistCell]()))
-              boundOrderDomain(st.groups.size, "chained")
-            }
-            var i = 0
-            while (i < specs.length) {
-              fold(cells(i), r.micro(i), r.raw(i), specs(i).name)
-              i += 1
-            }
-            val hs = st.hists.get(r.o)
-            var j = 0
-            while (j < depSpecs.length) {
-              (r.cmpM(j), r.aggM(j)) match {
-                case (Some(cm), Some(am)) =>
-                  var cell = hs(j).get(cm)
-                  if (cell == null) {
-                    cell = new HistCell(r.cmpR(j).get)
-                    hs(j).put(cm, cell)
-                    boundHist(hs(j), depSpecs(j).name, "chained")
-                  } else if (cell.raw != r.cmpR(j).get)
-                    throw new IllegalStateException(
-                      s"chained streaming EMF: comparison values " +
-                        s"${cell.raw} and ${r.cmpR(j).get} of slot " +
-                        s"${depSpecs(j).name} are distinct below the " +
-                        "decimal-6 bucket resolution")
-                  fold(cell.acc, Some(am), r.aggR(j), depSpecs(j).name)
-                case (None, _) if r.cmpR(j).isDefined =>
-                  throw new IllegalStateException(
-                    s"chained streaming EMF: comparison value " +
-                      s"${r.cmpR(j).get} of slot ${depSpecs(j).name} exceeds " +
-                      "the exact decimal-6 domain (finite, |v| <= 9.2e12)")
-                case (Some(_), None) if r.aggR(j).isDefined =>
-                  throw new IllegalStateException(
-                    s"chained streaming EMF: value ${r.aggR(j).get} of " +
-                      s"slot ${depSpecs(j).name} exceeds the exact decimal-6 " +
-                      "domain (finite, |v| <= 9.2e12)")
-                case _ => ()
-              }
-              j += 1
-            }
-          }
-          st.ver += 1
-          state.update(st)
-          emitChainKey(key, st, specs, depSpecs, depMeta, orderAttr)
-      }
-
-    // ---- typed reconstruction (same shape as planWindowed)
-    val outSchema = StructType(
-      eqAttrs.map(n => StructField(n, colType(n), nullable = true)) ++
-        Seq(StructField(orderAttr, colType(orderAttr), nullable = true)) ++
-        slots.map(s => StructField(s.spec.name,
-          outType(s.spec, colType(s.srcCol)), nullable = true)) ++
-        deps.map { case (s, src, _, _, _) =>
-          StructField(s.name, outType(s, colType(src)), nullable = true) })
-    emitted.toDF("__json", "__ver")
-      .select(from_json(col("__json"), outSchema).as("r"), col("__ver"))
-      .select(col("r.*"), col("__ver"))
-  }
-
-  /** Emit one JSON row per order value of the key: base/windowed slots
-    * exactly as [[emitKey]]; each dependent slot re-classifies ITS
-    * group's histogram against the threshold derived from the referenced
-    * slot's value AT THAT GROUP — a frame combine for windowed refs, the
-    * own-group partials for base refs. */
-  private def emitChainKey(key: String, st: ChainState, specs: Array[SlotSpec],
-      depSpecs: Array[SlotSpec], depMeta: Array[DepMeta],
-      orderAttr: String): Iterator[(String, Long)] = {
-    import scala.jdk.CollectionConverters._
-    val ordered = st.groups.keySet().asScala.map(_.longValue()).toArray.sorted
-    val n = ordered.length
-    val cells = ordered.map(o => st.groups.get(o))
-
-    val winIdx = specs.indices.filter(specs(_).kind == 1)
-    val leftStrict = winIdx.map { j =>
-      val arr = new Array[Comb](n); val run = new Comb
-      var i = 0
-      while (i < n) { arr(i) = run.copyOf; run.add(cells(i)(j)); i += 1 }
-      j -> arr
-    }.toMap
-    val rightStrict = winIdx.map { j =>
-      val arr = new Array[Comb](n); val run = new Comb
-      var i = n - 1
-      while (i >= 0) { arr(i) = run.copyOf; run.add(cells(i)(j)); i -= 1 }
-      j -> arr
-    }.toMap
-    val total = winIdx.map { j =>
-      val run = new Comb; cells.foreach(c => run.add(c(j))); j -> run
-    }.toMap
-    def combAt(j: Int, i: Int): Comb =
-      if (specs(j).kind == 0) { val c = new Comb; c.add(cells(i)(j)); c }
-      else specs(j).frameOp match {
-        case "<"  => leftStrict(j)(i)
-        case "<=" => { val c = leftStrict(j)(i).copyOf; c.add(cells(i)(j)); c }
-        case ">"  => rightStrict(j)(i)
-        case ">=" => { val c = rightStrict(j)(i).copyOf; c.add(cells(i)(j)); c }
-        case _    => total(j)
-      }
-
-    val keyInner = key.substring(1, key.length - 1)
-    val out = (0 until n).iterator.map { i =>
-      val sb = new StringBuilder(96)
-      sb.append('{')
-      if (keyInner.nonEmpty) { sb.append(keyInner); sb.append(',') }
-      sb.append('"').append(orderAttr).append("\":").append(ordered(i))
-      var j = 0
-      while (j < specs.length) {
-        sb.append(",\"").append(specs(j).name).append("\":")
-          .append(render(specs(j), combAt(j, i)))
-        j += 1
-      }
-      val hs = st.hists.get(ordered(i))
-      var d = 0
-      while (d < depSpecs.length) {
-        val m = depMeta(d)
-        val comb = new Comb
-        foldQualifying(comb, if (hs == null) null else hs(d), combAt(m.refIdx, i), m)
-        sb.append(",\"").append(depSpecs(d).name).append("\":")
-          .append(render(depSpecs(d), comb))
-        d += 1
-      }
-      sb.append('}')
-      (sb.toString, st.ver)
-    }
-    out.toIndexedSeq.iterator
+      (sb.append('}').toString, st.ver)
+    }.iterator
   }
 
   private def cmpD(l: Double, op: String, r: Double): Boolean = op match {
@@ -1392,87 +1002,8 @@ object EmfStreaming {
     case other => throw new IllegalArgumentException(s"bad op $other")
   }
 
-  /** Emit the group's single row: base slots straight from their
-    * accumulators; each dependent slot combines the histogram buckets
-    * whose comparison value passes the threshold recomputed from the
-    * referenced aggregate's current partials. */
-  private def emitDepKey(key: String, st: DepState, baseSpecs: Array[SlotSpec],
-      depSpecs: Array[SlotSpec], depMeta: Array[DepMeta]): Iterator[(String, Long)] = {
-    import scala.jdk.CollectionConverters._
-    val keyInner = key.substring(1, key.length - 1)
-    val sb = new StringBuilder(96)
-    sb.append('{')
-    var first = true
-    if (keyInner.nonEmpty) { sb.append(keyInner); first = false }
-    def app(name: String, v: String): Unit = {
-      if (!first) sb.append(',')
-      first = false
-      sb.append('"').append(name).append("\":").append(v)
-    }
-    val baseCombs = baseSpecs.indices.map { i =>
-      val c = new Comb; c.add(st.base(i)); c
-    }
-    baseSpecs.indices.foreach(i =>
-      app(baseSpecs(i).name, render(baseSpecs(i), baseCombs(i))))
-    depSpecs.indices.foreach { j =>
-      val m = depMeta(j)
-      val ref = baseCombs(m.refIdx)
-      val comb = new Comb
-      // a NULL reference aggregate (empty qualifying set, func != count)
-      // compares to nothing — the dependent set is empty, as in batch
-      foldQualifying(comb, st.hists(j), ref, m)
-      app(depSpecs(j).name, render(depSpecs(j), comb))
-    }
-    sb.append('}')
-    Iterator.single((sb.toString, st.ver))
-  }
-
-  /** Fold the histogram buckets whose comparison value passes the
-    * threshold derived from `ref` (the referenced aggregate's current
-    * combined partials) into `comb`. A NULL reference aggregate (empty
-    * qualifying set, func != count) compares to nothing — the dependent
-    * set stays empty, as in batch. */
-  private def foldQualifying(comb: Comb,
-      hist: java.util.HashMap[java.lang.Long, HistCell],
-      ref: Comb, m: DepMeta): Unit = {
-    import scala.jdk.CollectionConverters._
-    if (hist == null) return
-    if (m.refFunc == "count" || ref.cnt > 0) {
-      if (m.cmpDouble) {
-        val thr: Double = m.refFunc match {
-          case "count" => ref.cnt.toDouble
-          case "avg" =>
-            val s =
-              if (m.refFloating)
-                new java.math.BigDecimal(ref.sumMicro.bigInteger, 6).doubleValue()
-              else (ref.sumMicro / 1000000).toDouble
-            s / ref.cnt
-          case "sum" =>
-            if (m.refFloating)
-              new java.math.BigDecimal(ref.sumMicro.bigInteger, 6).doubleValue()
-            else (ref.sumMicro / 1000000).toDouble
-          case "min" => if (m.refFloating) ref.mn else (ref.mnMic / 1000000).toDouble
-          case "max" => if (m.refFloating) ref.mx else (ref.mxMic / 1000000).toDouble
-        }
-        hist.values().asScala.foreach { cell =>
-          if (cmpD(cell.raw, m.op, thr)) comb.add(cell.acc)
-        }
-      } else {
-        val thr: BigInt = m.refFunc match {
-          case "count" => BigInt(ref.cnt) * 1000000
-          case "sum" => ref.sumMicro
-          case "min" => BigInt(ref.mnMic)
-          case "max" => BigInt(ref.mxMic)
-          case other => throw new IllegalStateException(s"bad ref func $other")
-        }
-        hist.entrySet().asScala.foreach { e =>
-          if (cmpI(BigInt(e.getKey.longValue()), m.op, thr)) comb.add(e.getValue.acc)
-        }
-      }
-    }
-  }
-
-  /** Current MF structure from a sink table of [[planWindowed]] emissions:
+  /** Current MF structure from a sink table of [[planKeyed]] or
+    * [[planCrossGroup]] emissions:
     * latest `__ver` per group, then HAVING, then the SELECT list. */
   def snapshot(emissions: DataFrame, q: EmfQuery): DataFrame = {
     val w = Window.partitionBy(q.groupAttrs.map(col): _*)
@@ -1506,96 +1037,10 @@ object EmfStreaming {
     case _       => in // min/max
   }
 
-  /** Combined accumulator view used for frame evaluation. */
-  private final class Comb {
-    var sumMicro: BigInt = BigInt(0)
-    var cnt: Long = 0L
-    var mn: Double = Double.PositiveInfinity
-    var mx: Double = Double.NegativeInfinity
-    var mnMic: Long = Long.MaxValue
-    var mxMic: Long = Long.MinValue
-    def add(a: SlotAcc): Unit = {
-      sumMicro += a.sumMicro; cnt += a.cnt
-      if (a.mn < mn) mn = a.mn
-      if (a.mx > mx) mx = a.mx
-      if (a.mnMic < mnMic) mnMic = a.mnMic
-      if (a.mxMic > mxMic) mxMic = a.mxMic
-    }
-    def addComb(c: Comb): Unit = {
-      sumMicro += c.sumMicro; cnt += c.cnt
-      if (c.mn < mn) mn = c.mn
-      if (c.mx > mx) mx = c.mx
-      if (c.mnMic < mnMic) mnMic = c.mnMic
-      if (c.mxMic > mxMic) mxMic = c.mxMic
-    }
-    def copyOf: Comb = {
-      val c = new Comb
-      c.sumMicro = sumMicro; c.cnt = cnt; c.mn = mn; c.mx = mx
-      c.mnMic = mnMic; c.mxMic = mxMic; c
-    }
-  }
-
-  /** Emit one JSON row per group of the key, windowed slots recombined
-    * over the order-sorted groups (prefix/suffix pass ≡ the batch RANGE
-    * frames over per-group partials). */
-  private def emitKey(key: String, st: WinState, specs: Array[SlotSpec],
-      orderAttr: String): Iterator[(String, Long)] = {
-    import scala.jdk.CollectionConverters._
-    val ordered = st.groups.keySet().asScala.map(_.longValue()).toArray.sorted
-    val n = ordered.length
-    val cells = ordered.map(o => st.groups.get(o))
-
-    // per windowed slot: strict-prefix and strict-suffix combines
-    val winIdx = specs.indices.filter(specs(_).kind == 1)
-    val leftStrict = winIdx.map { j =>
-      val arr = new Array[Comb](n); val run = new Comb
-      var i = 0
-      while (i < n) { arr(i) = run.copyOf; run.add(cells(i)(j)); i += 1 }
-      j -> arr
-    }.toMap
-    val rightStrict = winIdx.map { j =>
-      val arr = new Array[Comb](n); val run = new Comb
-      var i = n - 1
-      while (i >= 0) { arr(i) = run.copyOf; run.add(cells(i)(j)); i -= 1 }
-      j -> arr
-    }.toMap
-    val total = winIdx.map { j =>
-      val run = new Comb; cells.foreach(c => run.add(c(j))); j -> run
-    }.toMap
-
-    // key JSON == to_json(struct(E)) — splice its fields into each row
-    val keyInner = key.substring(1, key.length - 1)
-
-    val out = (0 until n).iterator.map { i =>
-      val sb = new StringBuilder(64)
-      sb.append('{')
-      if (keyInner.nonEmpty) { sb.append(keyInner); sb.append(',') }
-      sb.append('"').append(orderAttr).append("\":").append(ordered(i))
-      var j = 0
-      while (j < specs.length) {
-        val s = specs(j)
-        val comb =
-          if (s.kind == 0) { val c = new Comb; c.add(cells(i)(j)); c }
-          else s.frameOp match {
-            case "<"  => leftStrict(j)(i)
-            case "<=" => { val c = leftStrict(j)(i).copyOf; c.add(cells(i)(j)); c }
-            case ">"  => rightStrict(j)(i)
-            case ">=" => { val c = rightStrict(j)(i).copyOf; c.add(cells(i)(j)); c }
-            case _    => total(j)
-          }
-        sb.append(",\"").append(s.name).append("\":").append(render(s, comb))
-        j += 1
-      }
-      sb.append('}')
-      (sb.toString, st.ver)
-    }
-    out.toIndexedSeq.iterator
-  }
-
   /** Render one aggregate value — same null/zero semantics and arithmetic
     * as the batch lowering (sum/min/max over an empty set → null; count →
     * 0; avg guards the zero denominator). */
-  private def render(s: SlotSpec, c: Comb): String = s.func match {
+  private def render(s: SlotSpec, c: SlotAcc): String = s.func match {
     case "count" => c.cnt.toString
     case "sum" =>
       if (c.cnt == 0) "null"

@@ -6,8 +6,10 @@ import org.apache.spark.sql.streaming.OutputMode
 import graft.emf.{EmfPlanner, EmfStreaming, GoldenQueries}
 
 /** Volume rehearsal for the incremental streaming EMF planners: drives
-  * the REAL sf-dir sales_view row stream (not a micro fixture) through
-  * planWindowed / planDependent / planChained in micro-batches,
+  * the REAL sf-dir sales_view row stream (not a micro fixture) in
+  * micro-batches through `EmfStreaming.planAuto` (printing the class it
+  * routed each case to) and, for the sharded keyless complement that
+  * planAuto never picks, `planCrossGroupShardedKeyless` directly;
   * asserts the final snapshot equals the batch planner on the same
   * rows, and reports throughput plus the state-store footprint the
   * domain-bound guards promise stays bounded (state rows ≤ groups ×
@@ -52,7 +54,7 @@ object StreamVolume {
 
     // q4 minus its equality pin: the KEYLESS global complement ("each
     // cust vs every OTHER cust"), measured through BOTH lowerings —
-    // the constant-state-key form (planCrossGroup, E = ∅) and the
+    // the constant-state-key form (planAuto → planCrossGroup, E = ∅) and the
     // cluster-scale sharded form (per-anti partials + render-side
     // all-but-self; its state is ONE row per cust, so stateRows here
     // reads as the anti-domain size, not groups × domain)
@@ -64,24 +66,26 @@ object StreamVolume {
         |{MF.cust.avg_quant_oth}[!=]{cust},{MF.cust.min_quant_oth}[!=]{cust}""".stripMargin,
       graft.Tables.salesView(spark, sfDir).schema.fieldNames.toSet)
 
+    // a lowering: the streaming frame plus the class it was routed as
+    type Lower = (graft.emf.EmfQuery, DataFrame) => (DataFrame, String)
+    val auto: Lower = (q, df) => {
+      val p = EmfStreaming.planAuto(q, df)
+      (p.df, p.lowering)
+    }
+    val sharded: Lower = (q, df) =>
+      (EmfStreaming.planCrossGroupShardedKeyless(q, df), "sharded-keyless")
     val defaultSnap: (DataFrame, graft.emf.EmfQuery) => DataFrame =
       EmfStreaming.snapshot
-    val allCases = Seq[(String, graft.emf.EmfQuery,
-        (graft.emf.EmfQuery, DataFrame) => DataFrame,
+    val allCases = Seq[(String, graft.emf.EmfQuery, Lower,
         (DataFrame, graft.emf.EmfQuery) => DataFrame)](
-      ("q3_windowed", GoldenQueries.parsed(2), EmfStreaming.planWindowed,
-        defaultSnap),
+      ("q3_windowed", GoldenQueries.parsed(2), auto, defaultSnap),
       // q4: cross-group complement membership (!= cust), incremental via
       // the per-prod total ⊖ own subtraction state
-      ("q4_crossgroup", GoldenQueries.parsed(3), EmfStreaming.planCrossGroup,
-        defaultSnap),
-      ("q4k_keyless", keylessQ, EmfStreaming.planCrossGroup, defaultSnap),
-      ("q4k_sharded", keylessQ, EmfStreaming.planCrossGroupShardedKeyless,
-        EmfStreaming.snapshotShardedKeyless),
-      ("q6_dependent", GoldenQueries.parsed(5), EmfStreaming.planDependent,
-        defaultSnap),
-      ("q8_chained", GoldenQueries.parsed(7), EmfStreaming.planChained,
-        defaultSnap))
+      ("q4_crossgroup", GoldenQueries.parsed(3), auto, defaultSnap),
+      ("q4k_keyless", keylessQ, auto, defaultSnap),
+      ("q4k_sharded", keylessQ, sharded, EmfStreaming.snapshotShardedKeyless),
+      ("q6_dependent", GoldenQueries.parsed(5), auto, defaultSnap),
+      ("q8_chained", GoldenQueries.parsed(7), auto, defaultSnap))
     // args(2+): case names to run, in order, repeats allowed — lets a
     // profiling run isolate per-case cost from the JVM/codegen/state-
     // store warmup the FIRST streaming query in the process pays
@@ -115,7 +119,7 @@ object StreamVolume {
     locally {
       val (_, q, planFn, _) = allCases.head
       val warm = MemoryStream[SaleRow](spark)
-      val wq = planFn(q, warm.toDF())
+      val wq = planFn(q, warm.toDF())._1
         .writeStream.format("memory").queryName("sv_warmup")
         .outputMode(OutputMode.Update).start()
       try {
@@ -132,14 +136,15 @@ object StreamVolume {
         .option("maxFilesPerTrigger", "1").parquet(stageDir)
       // runIdx suffix: repeated cases (profiling) get fresh sink dirs
       val sinkDir = s"$workRoot/sv_${name}_$runIdx"
-      val sq = planFn(q, src)
+      val (lowered, lowering) = planFn(q, src)
+      val sq = lowered
         .writeStream
         .foreachBatch { (df: DataFrame, _: Long) =>
           df.write.mode("append").parquet(sinkDir)
         }
         .outputMode(OutputMode.Update).start()
-      // the engine's domain-bound fail-fasts (boundAntiDomain /
-      // boundOrderDomain / boundHist) are DESIGNED refusals: a lowering
+      // the engine's domain-bound fail-fasts (EmfStreaming's
+      // MaxHistBuckets state bound) are DESIGNED refusals: a lowering
       // whose state would grow with the stream names that immediately
       // instead of OOMing hours in. At sf10 the keyed and constant-key
       // cross-group forms refuse (1.5M anti values per key > the 65,536
@@ -197,7 +202,7 @@ object StreamVolume {
         val (nSnap, hSnap) = digest(snapDf)
         val (nBatch, hBatch) = digest(batch)
         val eq = nSnap == nBatch && hSnap == hBatch
-        println(f"[streamvol] $name%-14s rows=$nRows%d " +
+        println(f"[streamvol] $name%-14s lowering=$lowering%s rows=$nRows%d " +
           f"wall=$secs%.1fs thru=${nRows / secs}%.0f rows/s " +
           f"stateRows=$stateRows%d stateMB=${stateBytes / 1048576.0}%.1f " +
           f"commitMs=$commitMs%.0f walMs=$walMs%.0f " +

@@ -8,7 +8,8 @@ import org.scalacheck.{Gen, rng}
 case class SPropRow(g: String, h: String, ord: Int, state: String, x: Int)
 case class SNPropRow(g: String, h: String, ord: Int, state: String, x: Option[Int])
 
-/** Property fuzz for the four INCREMENTAL streaming EMF lowerings —
+/** Property fuzz for the INCREMENTAL streaming EMF classes (all-SIMPLE,
+  * windowed, dependent, cross-group) —
   * the hand-rolled state machinery (exact micro-unit accumulators,
   * window recombination, histogram re-classification, complement
   * subtraction) that the batch planner never executes. For each class,
@@ -82,7 +83,7 @@ class EmfStreamingPropertySpec extends SparkSpec {
   } yield EmfQuery(gAttrs ++ (vz ++ vars.map(_.agg)).map(_.name),
     gAttrs, vz, vars, wh, hav)
 
-  /** SIMPLE + WINDOWED with G = E ∪ {ord} → planWindowed */
+  /** SIMPLE + WINDOWED with G = E ∪ {ord} → planKeyed (windowed) */
   private val genWindowedQ: Gen[EmfQuery] = for {
     eqAttrs <- Gen.oneOf(Seq("g"), Seq("h"), Seq("g", "h"))
     gAttrs = eqAttrs :+ "ord"
@@ -90,7 +91,7 @@ class EmfStreamingPropertySpec extends SparkSpec {
     vars <- Gen.sequence[Seq[GroupingVar], GroupingVar]((1 to nV).map { i =>
       for {
         f <- funcs
-        // var 1 always carries an order comparison (planWindowed needs
+        // var 1 always carries an order comparison (planKeyed needs
         // ≥ 1); later vars draw order / whole-partition / SIMPLE shapes
         shape <- if (i == 1) Gen.const(0) else Gen.choose(0, 2)
         op <- Gen.oneOf("<", "<=", ">", ">=")
@@ -113,7 +114,7 @@ class EmfStreamingPropertySpec extends SparkSpec {
   } yield EmfQuery(gAttrs ++ (vz ++ vars.map(_.agg)).map(_.name),
     gAttrs, vz, vars, wh, hav)
 
-  /** varZero/SIMPLE threshold sources + full-pin dependent → planDependent */
+  /** varZero/SIMPLE threshold sources + full-pin dependent → planKeyed (dependent) */
   private val genDependentQ: Gen[EmfQuery] = for {
     gAttrs <- Gen.oneOf(Seq("g"), Seq("h"), Seq("g", "h"))
     base <- simpleVar(1, gAttrs)
@@ -248,12 +249,12 @@ class EmfStreamingPropertySpec extends SparkSpec {
   }
 
   test("fuzz: WINDOWED streaming == batch at each micro-batch (8 queries)") {
-    fuzzClass("windowed", genWindowedQ, EmfStreaming.planWindowed, 8 * fuzzN, 12000L,
+    fuzzClass("windowed", genWindowedQ, EmfStreaming.planKeyed, 8 * fuzzN, 12000L,
       rowG = rowGen)
   }
 
   test("fuzz: DEPENDENT streaming == batch at each micro-batch (8 queries)") {
-    fuzzClass("dependent", genDependentQ, EmfStreaming.planDependent, 8 * fuzzN, 13000L,
+    fuzzClass("dependent", genDependentQ, EmfStreaming.planKeyed, 8 * fuzzN, 13000L,
       rowG = rowGen)
   }
 
@@ -314,9 +315,9 @@ class EmfStreamingPropertySpec extends SparkSpec {
   test("fuzz with nulls: each streaming class == batch on null-bearing streams (16 queries)") {
     fuzzClass("simple-null", genSimpleQ, EmfStreaming.plan, 4 * fuzzN, 21000L,
       complete = true, rowG = nullRowGen)
-    fuzzClass("windowed-null", genWindowedQ, EmfStreaming.planWindowed, 4 * fuzzN,
+    fuzzClass("windowed-null", genWindowedQ, EmfStreaming.planKeyed, 4 * fuzzN,
       22000L, rowG = nullRowGen)
-    fuzzClass("dependent-null", genDependentQ, EmfStreaming.planDependent, 4 * fuzzN,
+    fuzzClass("dependent-null", genDependentQ, EmfStreaming.planKeyed, 4 * fuzzN,
       23000L, rowG = nullRowGen)
     fuzzClass("crossgroup-null", genCrossQ, EmfStreaming.planCrossGroup, 4 * fuzzN,
       24000L, rowG = nullRowGen)

@@ -85,7 +85,7 @@ class EmfStreamingSpec extends SparkSpec {
 
   test("incremental WINDOWED EMF: snapshot equals batch planner at each step") {
     val stream = MemoryStream[SalesRow](spark)
-    val sq = EmfStreaming.planWindowed(windowedQ, stream.toDF())
+    val sq = EmfStreaming.planKeyed(windowedQ, stream.toDF())
       .writeStream.format("memory").queryName("emf_win")
       .outputMode(OutputMode.Update).start()
     try {
@@ -122,9 +122,9 @@ class EmfStreamingSpec extends SparkSpec {
     val stream = MemoryStream[(String, Double, Int)](spark)
     val df = stream.toDF().toDF("cust", "month", "quant")
     // two layers refuse it: the classifier already demotes a fractional-
-    // order variable to DEPENDENT (→ "use microBatch"), and the explicit
+    // order variable to DEPENDENT (→ "use microBatch"), and planKeyed's
     // order-attr type guard backs that up should classification change
-    val e = intercept[IllegalArgumentException](EmfStreaming.planWindowed(q, df))
+    val e = intercept[IllegalArgumentException](EmfStreaming.planKeyed(q, df))
     assert(e.getMessage.contains("microBatch") || e.getMessage.contains("integral"))
   }
 
@@ -137,7 +137,7 @@ class EmfStreamingSpec extends SparkSpec {
         |{MF.cust.avg_quant_b}[=]{cust}:{MF.month.avg_quant_b}[<]{month}
         |{MF.avg_quant_b,>,5}""".stripMargin, cols)
     val stream = MemoryStream[SalesRow](spark)
-    val sq = EmfStreaming.planWindowed(qHaving, stream.toDF())
+    val sq = EmfStreaming.planKeyed(qHaving, stream.toDF())
       .writeStream.format("memory").queryName("emf_win_having")
       .outputMode(OutputMode.Update).start()
     try {
@@ -151,8 +151,8 @@ class EmfStreamingSpec extends SparkSpec {
     } finally sq.stop()
 
     val e = intercept[IllegalArgumentException](
-      EmfStreaming.planWindowed(simpleQ, MemoryStream[SalesRow](spark).toDF()))
-    assert(e.getMessage.contains("WINDOWED"))
+      EmfStreaming.planKeyed(simpleQ, MemoryStream[SalesRow](spark).toDF()))
+    assert(e.getMessage.contains("WINDOWED") && e.getMessage.contains("DEPENDENT"))
   }
 
   test("windowed streaming over a floating column matches the batch decimal path") {
@@ -170,7 +170,7 @@ class EmfStreamingSpec extends SparkSpec {
         |avg_quant_b,max_quant_a
         |{MF.cust.avg_quant_b}[=]{cust}:{MF.month.avg_quant_b}[<]{month},{MF.cust.max_quant_a}[=]{cust}:{MF.month.max_quant_a}[>]{month}""".stripMargin, cols)
     val stream = MemoryStream[FSalesRow](spark)
-    val sq = EmfStreaming.planWindowed(q, stream.toDF())
+    val sq = EmfStreaming.planKeyed(q, stream.toDF())
       .writeStream.format("memory").queryName("emf_win_float")
       .outputMode(OutputMode.Update).start()
     try {
@@ -194,7 +194,7 @@ class EmfStreamingSpec extends SparkSpec {
         |avg_quant_b
         |{MF.cust.avg_quant_b}[=]{cust}:{MF.state.avg_quant_b}[=]{state}:{MF.month.avg_quant_b}[<]{month}""".stripMargin, cols)
     val stream = MemoryStream[SalesRow](spark)
-    val sq = EmfStreaming.planWindowed(q, stream.toDF())
+    val sq = EmfStreaming.planKeyed(q, stream.toDF())
       .writeStream.format("memory").queryName("emf_win_2key")
       .outputMode(OutputMode.Update).start()
     try {
@@ -218,7 +218,7 @@ class EmfStreamingSpec extends SparkSpec {
         |avg_quant_b,avg_quant_c
         |{MF.cust.avg_quant_b}[=]{cust}:{MF.month.avg_quant_b}[<]{month},{MF.cust.avg_quant_c}[=]{cust}""".stripMargin, cols)
     val stream = MemoryStream[SalesRow](spark)
-    val sq = EmfStreaming.planWindowed(q, stream.toDF())
+    val sq = EmfStreaming.planKeyed(q, stream.toDF())
       .writeStream.format("memory").queryName("emf_win_total")
       .outputMode(OutputMode.Update).start()
     try {
@@ -242,7 +242,7 @@ class EmfStreamingSpec extends SparkSpec {
 
   test("incremental DEPENDENT EMF (q6 shape): snapshot equals batch at each step") {
     val stream = MemoryStream[SalesRow](spark)
-    val sq = EmfStreaming.planDependent(dependentQ, stream.toDF())
+    val sq = EmfStreaming.planKeyed(dependentQ, stream.toDF())
       .writeStream.format("memory").queryName("emf_dep")
       .outputMode(OutputMode.Update).start()
     try {
@@ -277,7 +277,7 @@ class EmfStreamingSpec extends SparkSpec {
         |avg_quant_1,count_quant_2
         |{MF.prod.avg_quant_1}[=]{prod},{MF.prod.count_quant_2}[=]{prod}:{MF.avg_quant_1.count_quant_2}[>]{quant}""".stripMargin, cols)
     val stream = MemoryStream[SalesRow](spark)
-    val sq = EmfStreaming.planDependent(q2, stream.toDF())
+    val sq = EmfStreaming.planKeyed(q2, stream.toDF())
       .writeStream.format("memory").queryName("emf_dep_move")
       .outputMode(OutputMode.Update).start()
     try {
@@ -306,7 +306,7 @@ class EmfStreamingSpec extends SparkSpec {
     EmfStreaming.MaxHistBuckets = 8
     try {
       val stream = MemoryStream[SalesRow](spark)
-      val sq = EmfStreaming.planWindowed(windowedQ, stream.toDF())
+      val sq = EmfStreaming.planKeyed(windowedQ, stream.toDF())
         .writeStream.format("memory").queryName("emf_win_guard")
         .outputMode(OutputMode.Update).start()
       try {
@@ -336,7 +336,7 @@ class EmfStreamingSpec extends SparkSpec {
     EmfStreaming.MaxHistBuckets = 8
     try {
       val stream = MemoryStream[SalesRow](spark)
-      val sq = EmfStreaming.planDependent(q2, stream.toDF())
+      val sq = EmfStreaming.planKeyed(q2, stream.toDF())
         .writeStream.format("memory").queryName("emf_dep_guard")
         .outputMode(OutputMode.Update).start()
       try {
@@ -360,20 +360,9 @@ class EmfStreamingSpec extends SparkSpec {
       |avg_quant_1,count_quant_2
       |{MF.cust.avg_quant_1}[=]{cust}:{MF.month.avg_quant_1}[<]{month},{MF.cust.count_quant_2}[=]{cust}:{MF.month.count_quant_2}[=]{month}:{MF.avg_quant_1.count_quant_2}[>]{quant}""".stripMargin, cols)
 
-  test("dependent streaming rejects windowed mixes loudly, pointing to planChained") {
-    val stream = MemoryStream[SalesRow](spark)
-    val e = intercept[IllegalArgumentException](
-      EmfStreaming.planDependent(q8Q, stream.toDF()))
-    assert(e.getMessage.contains("planChained"))
-    // all-SIMPLE is the wrong entry point too
-    val e2 = intercept[IllegalArgumentException](
-      EmfStreaming.planDependent(simpleQ, MemoryStream[SalesRow](spark).toDF()))
-    assert(e2.getMessage.contains("DEPENDENT"))
-  }
-
   test("incremental CHAINED EMF (q8 shape): snapshot equals batch at each step") {
     val stream = MemoryStream[SalesRow](spark)
-    val sq = EmfStreaming.planChained(q8Q, stream.toDF())
+    val sq = EmfStreaming.planKeyed(q8Q, stream.toDF())
       .writeStream.format("memory").queryName("emf_chain")
       .outputMode(OutputMode.Update).start()
     try {
@@ -404,7 +393,7 @@ class EmfStreamingSpec extends SparkSpec {
     // tuple quant=20 must LEAVE the dependent count (20 > 10 but not
     // > 40) — the retraction microBatch recomputes, the histogram replays
     val stream = MemoryStream[SalesRow](spark)
-    val sq = EmfStreaming.planChained(q8Q, stream.toDF())
+    val sq = EmfStreaming.planKeyed(q8Q, stream.toDF())
       .writeStream.format("memory").queryName("emf_chain_move")
       .outputMode(OutputMode.Update).start()
     try {
@@ -770,6 +759,217 @@ class EmfStreamingSpec extends SparkSpec {
     assert(e.getMessage.contains("microBatch"))
   }
 
+  test("planAuto's rejections on the windowed, dependent and chained routes, verbatim") {
+    def q(spec: String, fact: Set[String] = cols): EmfQuery =
+      EmfParser.parseOne(spec.stripMargin, fact)
+    val sales = MemoryStream[SalesRow](spark).toDF()
+    // the fractional-order shape: the classifier demotes the variable to
+    // DEPENDENT, so the dependent route names the missing threshold source
+    val fractional = MemoryStream[(String, Double, Int)](spark).toDF()
+      .toDF("cust", "month", "quant")
+    // two integral order candidates, so both variables classify WINDOWED
+    val days = MemoryStream[(String, Int, Int, Int)](spark).toDF()
+      .toDF("cust", "month", "day", "quant")
+    val noSource = "requirement failed: dependent streaming needs at least " +
+      "one variable-0/SIMPLE aggregate (the threshold source); shapes " +
+      "without one need microBatch(...)"
+    val planTime: Seq[(String, EmfQuery, DataFrame, String)] = Seq(
+      ("no order comparison (emf_q2)", q(
+        """prod,month,sum_quant_1,sum_quant_tot
+          |2
+          |prod,month
+          |sum_quant_1,sum_quant_tot
+          |{MF.prod.sum_quant_1}[=]{prod}:{MF.month.sum_quant_1}[=]{month},{MF.prod.sum_quant_tot}[=]{prod}"""),
+        sales, "windowed streaming needs at least one order comparison"),
+      ("no order comparison, chained", q(
+        """prod,month,sum_quant_tot,count_quant_2
+          |2
+          |prod,month
+          |sum_quant_tot,count_quant_2
+          |{MF.prod.sum_quant_tot}[=]{prod},{MF.prod.count_quant_2}[=]{prod}:{MF.month.count_quant_2}[=]{month}:{MF.sum_quant_tot.count_quant_2}[>]{quant}"""),
+        sales, "chained streaming needs at least one order comparison"),
+      ("mixed equality attrs", q(
+        """cust,month,avg_quant_b,avg_quant_m
+          |2
+          |cust,month
+          |avg_quant_b,avg_quant_m
+          |{MF.cust.avg_quant_b}[=]{cust}:{MF.month.avg_quant_b}[<]{month},{MF.month.avg_quant_m}[=]{month}"""),
+        sales, "requirement failed: windowed variable avg_quant_m must share " +
+          "equality attrs List(cust) and order attr month"),
+      ("mixed order attrs", q(
+        """cust,month,day,avg_quant_b,avg_quant_d
+          |2
+          |cust,month,day
+          |avg_quant_b,avg_quant_d
+          |{MF.cust.avg_quant_b}[=]{cust}:{MF.month.avg_quant_b}[<]{month},{MF.cust.avg_quant_d}[=]{cust}:{MF.day.avg_quant_d}[<]{day}""",
+        Set("cust", "month", "day", "quant")), days,
+        "requirement failed: windowed variable avg_quant_d must share " +
+          "equality attrs List(cust) and order attr month"),
+      ("empty equality set", q(
+        """month,sum_quant_b
+          |1
+          |month
+          |sum_quant_b
+          |{MF.month.sum_quant_b}[<]{month}"""),
+        sales, "requirement failed: windowed streaming needs ≥ 1 equality attr"),
+      ("empty equality set, chained", q(
+        """month,sum_quant_b,count_quant_2
+          |2
+          |month
+          |sum_quant_b,count_quant_2
+          |{MF.month.sum_quant_b}[<]{month},{MF.month.count_quant_2}[=]{month}:{MF.sum_quant_b.count_quant_2}[>]{quant}"""),
+        sales, "requirement failed: chained streaming needs ≥ 1 equality attr"),
+      ("fractional order attr", q(
+        """cust,month,sum_quant_before
+          |1
+          |cust,month
+          |sum_quant_before
+          |{MF.cust.sum_quant_before}[=]{cust}:{MF.month.sum_quant_before}[<]{month}""",
+        Set("cust", "month", "quant")), fractional, noSource),
+      ("grouping set is not E ∪ {o}", q(
+        """cust,prod,month,avg_quant_b
+          |1
+          |cust,prod,month
+          |avg_quant_b
+          |{MF.cust.avg_quant_b}[=]{cust}:{MF.month.avg_quant_b}[<]{month}"""),
+        sales, "requirement failed: grouping set ArraySeq(cust, prod, month) " +
+          "must be exactly equality attrs List(cust) plus order attr month"),
+      ("grouping set is not E ∪ {o}, chained", q(
+        """cust,prod,month,avg_quant_b,count_quant_2
+          |2
+          |cust,prod,month
+          |avg_quant_b,count_quant_2
+          |{MF.cust.avg_quant_b}[=]{cust}:{MF.month.avg_quant_b}[<]{month},{MF.cust.count_quant_2}[=]{cust}:{MF.prod.count_quant_2}[=]{prod}:{MF.month.count_quant_2}[=]{month}:{MF.avg_quant_b.count_quant_2}[>]{quant}"""),
+        sales, "requirement failed: grouping set ArraySeq(cust, prod, month) " +
+          "must be exactly equality attrs List(cust) plus order attr month"),
+      ("non-numeric aggregate column", q(
+        """cust,month,max_state_b
+          |1
+          |cust,month
+          |max_state_b
+          |{MF.cust.max_state_b}[=]{cust}:{MF.month.max_state_b}[<]{month}"""),
+        sales, "windowed streaming needs numeric aggregate columns; " +
+          "state: StringType"),
+      ("non-numeric aggregate column, dependent", q(
+        """prod,max_state_1,count_quant_2
+          |2
+          |prod
+          |max_state_1,count_quant_2
+          |{MF.prod.max_state_1}[=]{prod},{MF.prod.count_quant_2}[=]{prod}:{MF.max_state_1.count_quant_2}[>]{quant}"""),
+        sales, "dependent streaming needs numeric columns; state: StringType"),
+      ("non-numeric comparison column, dependent", q(
+        """prod,avg_quant_1,count_quant_2
+          |2
+          |prod
+          |avg_quant_1,count_quant_2
+          |{MF.prod.avg_quant_1}[=]{prod},{MF.prod.count_quant_2}[=]{prod}:{MF.avg_quant_1.count_quant_2}[>]{state}"""),
+        sales, "dependent streaming needs numeric columns; state: StringType"),
+      ("non-numeric comparison column, chained", q(
+        """cust,month,avg_quant_1,count_quant_2
+          |2
+          |cust,month
+          |avg_quant_1,count_quant_2
+          |{MF.cust.avg_quant_1}[=]{cust}:{MF.month.avg_quant_1}[<]{month},{MF.cust.count_quant_2}[=]{cust}:{MF.month.count_quant_2}[=]{month}:{MF.avg_quant_1.count_quant_2}[>]{state}"""),
+        sales, "chained streaming needs numeric columns; state: StringType"),
+      ("dependent var does not pin G", q(
+        """prod,month,avg_quant_1,count_quant_2
+          |2
+          |prod,month
+          |avg_quant_1,count_quant_2
+          |{MF.prod.avg_quant_1}[=]{prod}:{MF.month.avg_quant_1}[=]{month},{MF.prod.count_quant_2}[=]{prod}:{MF.avg_quant_1.count_quant_2}[>]{quant}"""),
+        sales, "requirement failed: dependent variable count_quant_2 must pin " +
+          "the full grouping set ArraySeq(prod, month) (got List(prod)); " +
+          "cross-group membership needs microBatch(...)"),
+      ("dependent var does not pin G, chained", q(
+        """cust,month,avg_quant_1,count_quant_2
+          |2
+          |cust,month
+          |avg_quant_1,count_quant_2
+          |{MF.cust.avg_quant_1}[=]{cust}:{MF.month.avg_quant_1}[<]{month},{MF.cust.count_quant_2}[=]{cust}:{MF.avg_quant_1.count_quant_2}[>]{quant}"""),
+        sales, "requirement failed: dependent variable count_quant_2 must pin " +
+          "the full grouping set ArraySeq(cust, month) (got List(cust)); " +
+          "unpinned cross-group membership needs microBatch(...)"),
+      ("two aggregate comparisons", q(
+        """prod,avg_quant_1,max_quant_1,count_quant_2
+          |3
+          |prod
+          |avg_quant_1,max_quant_1,count_quant_2
+          |{MF.prod.avg_quant_1}[=]{prod},{MF.prod.max_quant_1}[=]{prod},{MF.prod.count_quant_2}[=]{prod}:{MF.avg_quant_1.count_quant_2}[>]{quant}:{MF.max_quant_1.count_quant_2}[<]{quant}"""),
+        sales, "requirement failed: dependent variable count_quant_2 needs " +
+          "exactly one aggregate comparison, got 2"),
+      ("two aggregate comparisons, chained", q(
+        """cust,month,avg_quant_1,count_quant_2
+          |2
+          |cust,month
+          |avg_quant_1,count_quant_2
+          |{MF.cust.avg_quant_1}[=]{cust}:{MF.month.avg_quant_1}[<]{month},{MF.cust.count_quant_2}[=]{cust}:{MF.month.count_quant_2}[=]{month}:{MF.avg_quant_1.count_quant_2}[>]{quant}:{MF.avg_quant_1.count_quant_2}[<]{month}"""),
+        sales, "requirement failed: dependent variable count_quant_2 needs " +
+          "exactly one aggregate comparison, got 2"),
+      ("unsupported membership condition", q(
+        """prod,month,avg_quant_1,count_quant_2
+          |2
+          |prod,month
+          |avg_quant_1,count_quant_2
+          |{MF.prod.avg_quant_1}[=]{prod}:{MF.month.avg_quant_1}[=]{month},{MF.prod.count_quant_2}[=]{prod}:{MF.month.count_quant_2}[=]{month}:{MF.month.count_quant_2}[>]{quant}"""),
+        sales, "dependent variable count_quant_2: unsupported membership " +
+          "condition Cond(TupleCol(quant),>,MfField(month))"),
+      ("unsupported membership condition, chained", q(
+        """cust,month,avg_quant_1,count_quant_2
+          |2
+          |cust,month
+          |avg_quant_1,count_quant_2
+          |{MF.cust.avg_quant_1}[=]{cust}:{MF.month.avg_quant_1}[<]{month},{MF.cust.count_quant_2}[=]{cust}:{MF.month.count_quant_2}[=]{month}:{MF.month.count_quant_2}[>]{quant}"""),
+        sales, "dependent variable count_quant_2: unsupported membership " +
+          "condition Cond(TupleCol(quant),>,MfField(month))"),
+      ("dependent-on-dependent reference", q(
+        """prod,avg_quant_1,count_quant_2,sum_quant_3
+          |3
+          |prod
+          |avg_quant_1,count_quant_2,sum_quant_3
+          |{MF.prod.avg_quant_1}[=]{prod},{MF.prod.count_quant_2}[=]{prod}:{MF.avg_quant_1.count_quant_2}[>]{quant},{MF.prod.sum_quant_3}[=]{prod}:{MF.count_quant_2.sum_quant_3}[>]{quant}"""),
+        sales, "dependent variable sum_quant_3 references 'count_quant_2', " +
+          "which is not a variable-0/SIMPLE aggregate — chains onto windowed " +
+          "aggregates run via planKeyed(...); deeper chains need microBatch(...)"),
+      ("dependent-on-dependent reference, chained", q(
+        """cust,month,avg_quant_1,count_quant_2,sum_quant_3
+          |3
+          |cust,month
+          |avg_quant_1,count_quant_2,sum_quant_3
+          |{MF.cust.avg_quant_1}[=]{cust}:{MF.month.avg_quant_1}[<]{month},{MF.cust.count_quant_2}[=]{cust}:{MF.month.count_quant_2}[=]{month}:{MF.avg_quant_1.count_quant_2}[>]{quant},{MF.cust.sum_quant_3}[=]{cust}:{MF.month.sum_quant_3}[=]{month}:{MF.count_quant_2.sum_quant_3}[>]{quant}"""),
+        sales, "dependent variable sum_quant_3 references 'count_quant_2', " +
+          "which is not a variable-0/SIMPLE/WINDOWED aggregate — chains onto " +
+          "other dependent aggregates need microBatch(...)"),
+      ("no variable-0/SIMPLE threshold source", q(
+        """cust,prod,avg_quant_oth,count_quant_2
+          |2
+          |cust,prod
+          |avg_quant_oth,count_quant_2
+          |{MF.prod.avg_quant_oth}[=]{prod}:{MF.cust.avg_quant_oth}[!=]{cust},{MF.cust.count_quant_2}[=]{cust}:{MF.prod.count_quant_2}[=]{prod}:{MF.avg_quant_oth.count_quant_2}[>]{quant}"""),
+        sales, noSource))
+    planTime.foreach { case (label, query, stream, expected) =>
+      val e = intercept[IllegalArgumentException](EmfStreaming.planAuto(query, stream))
+      assert(e.getMessage == expected, s"$label: ${e.getMessage}")
+    }
+
+    // run time: a null order value cannot key the state
+    def causes(t: Throwable): Seq[String] =
+      Option(t).toSeq.flatMap(x => Option(x.getMessage).toSeq ++ causes(x.getCause))
+    Seq(windowedQ -> "windowed", q8Q -> "chained").foreach { case (query, cls) =>
+      val stream = MemoryStream[(String, Option[Int], Int)](spark)
+      val sq = EmfStreaming.planAuto(query, stream.toDF().toDF("cust", "month", "quant"))
+        .df.writeStream.format("memory").queryName(s"emf_null_order_$cls")
+        .outputMode(OutputMode.Update).start()
+      try {
+        stream.addData(("c1", Some(1), 5), ("c1", None, 7))
+        val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException](
+          sq.processAllAvailable())
+        val expected = s"$cls streaming EMF: null month — null order groups " +
+          "need the batch planner (microBatch)"
+        assert(causes(e).exists(_.contains(expected)), s"$cls: ${causes(e)}")
+      } finally sq.stop()
+    }
+  }
+
   test("dependent query rejected by incremental path, works via microBatch") {
     val emfQ = EmfParser.parseOne(
       """prod,avg_quant_1,count_quant_2
@@ -863,12 +1063,13 @@ class EmfStreamingSpec extends SparkSpec {
       forkReport(stockStarts))
   }
 
-  /** `windowedQ` for two triggers with `first` as the session's `file:`
+  /** `q` for two triggers with `first` as the session's `file:`
     * filesystem, stopped, then restarted on the same checkpoint under
     * `second` for one more trigger (None: the key is unset, so `planAuto`
     * installs graft's). Asserts snapshot == batch over all rows; returns
     * the checkpoint's file listing. */
-  private def restartAcross(first: Option[String], second: Option[String]): Seq[String] = {
+  private def restartAcross(q: EmfQuery, first: Option[String],
+      second: Option[String]): Seq[String] = {
     val session = spark.newSession()
     val stream = MemoryStream[SalesRow](session)
     val checkpoint = java.nio.file.Files.createTempDirectory("graft-ckpt").toFile
@@ -876,7 +1077,7 @@ class EmfStreamingSpec extends SparkSpec {
     var schema: StructType = null
     def run(impl: Option[String], chunks: Seq[Seq[SalesRow]]): Unit = {
       impl.fold(session.conf.unset(LocalFs.ImplKey))(session.conf.set(LocalFs.ImplKey, _))
-      val sp = EmfStreaming.planAuto(windowedQ, stream.toDF())
+      val sp = EmfStreaming.planAuto(q, stream.toDF())
       assert(session.conf.get(LocalFs.ImplKey) == impl.getOrElse(classOf[LocalFs].getName))
       schema = sp.df.schema
       val sq = sp.df.writeStream.option("checkpointLocation", checkpoint.toString)
@@ -888,10 +1089,12 @@ class EmfStreamingSpec extends SparkSpec {
     try {
       run(first, Seq(rows.take(2), rows.slice(2, 4)))
       run(second, Seq(rows.drop(4)))
+      val order = q.groupAttrs.map(org.apache.spark.sql.functions.col)
       val snap = EmfStreaming.snapshot(
-        session.createDataFrame(emitted.asJava, schema), windowedQ)
-        .orderBy("cust", "month").collect().toSeq
-      assert(snap == windowedBatch(rows))
+        session.createDataFrame(emitted.asJava, schema), q)
+        .orderBy(order: _*).collect().toSeq
+      assert(snap == EmfPlanner.plan(q, rows.toDF()).orderBy(order: _*).collect().toSeq,
+        q.select)
       val root = checkpoint.toPath
       FileUtils.listFiles(checkpoint, null, true).asScala.toSeq
         .map(f => root.relativize(f.toPath).toString).sorted
@@ -899,10 +1102,14 @@ class EmfStreamingSpec extends SparkSpec {
   }
 
   test("a checkpoint restarts across graft's and Hadoop's local filesystems") {
-    val graftThenStock = restartAcross(None, Some(stockFs))
-    val stockThenGraft = restartAcross(Some(stockFs), None)
-    assert(graftThenStock == stockThenGraft) // one checkpoint layout
-    assert(graftThenStock.exists(_.matches("state/0/\\d+/\\.1\\.delta\\.crc")),
-      graftThenStock)
+    // one query per state shape of planKeyed: windowed, dependent (q6),
+    // chained (q8)
+    Seq(windowedQ, dependentQ, q8Q).foreach { q =>
+      val graftThenStock = restartAcross(q, None, Some(stockFs))
+      val stockThenGraft = restartAcross(q, Some(stockFs), None)
+      assert(graftThenStock == stockThenGraft) // one checkpoint layout
+      assert(graftThenStock.exists(_.matches("state/0/\\d+/\\.1\\.delta\\.crc")),
+        graftThenStock)
+    }
   }
 }
