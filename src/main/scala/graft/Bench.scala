@@ -19,14 +19,22 @@ object Bench {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // Warmup, two layers. (1) session/parquet-footer costs. (2) a full
-    // sweep of every query at sf0.001 (~6k rows — data cost is noise):
-    // whole-stage codegen classes are keyed by plan shape, not data, so
-    // this JIT-compiles each query's generated code BEFORE its timed
-    // sf-target run. Without it every per-query number includes one
-    // first-execution compile (~0.1-0.3 s — comparable to most queries'
-    // actual work), which is JVM accounting, not plan cost; what the
-    // timed loop should measure is the steady-state cost a warmed
-    // executor fleet pays. Methodology recorded in BASELINE.md round 5.
+    // sweep of every query at sf0.001 (~6k rows — data cost is noise)
+    // that compiles each query's generated code BEFORE its timed
+    // sf-target run. Spark caches a generated class by its source text,
+    // in which numeric literals are inlined, and (in local mode) by the
+    // compiling thread's classloader — not by plan shape. A query whose
+    // literals do not depend on the scale factor therefore produces the
+    // same sources at sf0.001 as at the target, and the timed run finds
+    // them compiled (under both the planning thread's and the executor
+    // tasks' classloader, as the warm-up ran them). Without it every
+    // per-query number includes first-execution compiles (~0.1-0.3 s —
+    // comparable to most queries' actual work), which is JVM accounting,
+    // not plan cost; what the timed loop should measure is the
+    // steady-state cost a warmed executor fleet pays. Methodology recorded in BASELINE.md
+    // round 5. The sf0.001 fact is below EmfPlanner's interpreted-form
+    // crossover while the sf0.1 one is above it, so the EMF entries
+    // warm with the compiled form forced — the form they are timed in.
     // SPARK_GRAFT_WARM_DIR overrides the warmup SF: the sf0.001 default
     // is right for the driver's sf0.1 window, but a ×100 (sf10) sweep
     // wants a sf0.1 warmup — tiny-data loops never reach HotSpot's C2
@@ -41,7 +49,9 @@ object Bench {
     val warmDir = sys.env.getOrElse("SPARK_GRAFT_WARM_DIR",
       "/root/testdata/sf0.001")
     if (new java.io.File(warmDir).isDirectory && warmDir != sfDir) {
-      SparkEntry.queries
+      val interpretMax = graft.emf.EmfPlanner.InterpretMaxBytes
+      graft.emf.EmfPlanner.InterpretMaxBytes = 0L
+      try SparkEntry.queries
         .filter { case (n, _) => only.isEmpty || only(n) }
         .foreach { case (name, fn) =>
           // a warmup failure means the timed run below starts COLD (its
@@ -54,6 +64,7 @@ object Bench {
           }
           graft.emf.EmfPlanner.unpersistAll()
         }
+      finally graft.emf.EmfPlanner.InterpretMaxBytes = interpretMax
       graft.dedup.Dedup.clearCache()
       graft.ann.Similarity.clearCache()
       graft.ann.KMeans.clearCache()

@@ -1,6 +1,6 @@
 package graft.emf
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -39,6 +39,36 @@ import org.apache.spark.sql.types._
   * (a persist there only adds a barrier job); above it the frame is
   * persisted and registered for [[unpersistAll]].
   *
+  * '''Execution form.''' Spark compiles generated Java for a plan: one
+  * class per whole-stage-fused pipeline, plus one per projection,
+  * predicate or ordering outside them. Its class cache is keyed by the
+  * generated source, in which numeric literals are inlined, so an
+  * ad-hoc query with new literals misses it; in local mode the key also
+  * holds the compiling thread's classloader, so a planning thread and
+  * an executor task compile the same class twice. On a small input those
+  * compiles are a large share of a query's wall time (a perfbench
+  * adhoc run, seed 905: 357 compiles in 24 timed queries, 5.3 s of
+  * compile time summed over threads against 13.4 s of query wall time;
+  * 5 compiles in 32 queries interpreted). [[plan]] therefore probes the
+  * fact frame's leaf input bytes ([[graft.PlanShare.leafInputBytes]],
+  * the probe of the share and salt gates) and, below
+  * [[InterpretMaxBytes]] (T), returns the same analyzed plan bound to
+  * a copy of the caller's session with
+  * `spark.sql.codegen.wholeStage=false` and
+  * `spark.sql.codegen.factoryMode=NO_CODEGEN` (an internal Spark conf;
+  * EmfPlannerSpec counts compiles, so a Spark that stops honouring it
+  * fails loudly). Both confs are needed: with whole-stage fusion off
+  * alone, each operator still compiles its expressions' classes. Results
+  * are identical in both forms (EmfPropertySpec runs its fuzz in both).
+  * T = 4 MiB is a measured crossover (BASELINE.md, "Interpreted EMF
+  * crossover", golden q1–q8 on a 4-core box): at 1.39 MB and 2.55 MB
+  * of leaves the interpreted form ran in 0.32–0.79× of a cold compiled
+  * run (the ad-hoc case: every query new); at 5.41 MB one query rose to
+  * 0.88× cold and 1.84× warm; at 14.1 MB (sf0.1) three queries ran
+  * slower than cold. The perfbench adhoc fixture has 1.84 MB. This is
+  * the adaptive-execution argument (Kohn, Leis, Neumann, ICDE 2018):
+  * interpret first, compile when the input pays for it.
+  *
   * '''Null contract.''' Groups follow SQL GROUP BY: a null grouping
   * value IS a group. Membership conditions of the form
   * `tuple.a OP MF.a` with `a` a grouping attribute are PARTITION
@@ -59,8 +89,66 @@ import org.apache.spark.sql.types._
   */
 object EmfPlanner {
 
-  /** Plan `q` over the fact table `fact` (e.g. Tables.salesView). */
+  /** Plan `q` over the fact table `fact` (e.g. Tables.salesView), in the
+    * execution form the fact's leaf input bytes call for (see the object
+    * doc): below [[InterpretMaxBytes]] the plan runs interpreted. */
   def plan(q: EmfQuery, fact: DataFrame): DataFrame = {
+    val df = lower(q, fact)
+    if (graft.PlanShare.leafInputBytes(fact) < BigInt(InterpretMaxBytes)) interpreted(df)
+    else df
+  }
+
+  /** Leaf input bytes of the fact frame below which [[plan]] returns the
+    * interpreted form; measured crossover, see the object doc.
+    * Test-tunable: 0 forces the compiled form (EmfPropertySpec runs its
+    * fuzz in both forms; Bench warms the compiled form it times). */
+  @volatile private[graft] var InterpretMaxBytes: Long = 4L << 20
+
+  /** Codegen settings of the interpreted form: no whole-stage fusion,
+    * and every expression (projections, predicates, orderings) through
+    * its interpreted implementation instead of a compiled class. */
+  private val interpretedConfs = Seq(
+    "spark.sql.codegen.wholeStage" -> "false",
+    "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")
+
+  /** `df`'s analyzed plan bound to a copy of its session that carries
+    * [[interpretedConfs]]. The caller's session is untouched, and every
+    * conf it holds at this call carries over. One copy serves each
+    * caller session, re-synced per call, because a new session is a new
+    * artifact-isolation id: Spark gives each id its own executor
+    * classloader, and generated classes are cached per classloader, so
+    * a copy per call recompiled the classes that have no interpreted
+    * implementation (cached-batch column readers, row joiners: 3 per
+    * q6-shaped query) on every query. */
+  private def interpreted(df: DataFrame): DataFrame = {
+    import org.apache.spark.sql.graftbridge.CatalystBridge
+    val caller = df.sparkSession
+    val session = interpretedSessions.synchronized {
+      val s = interpretedSessions.computeIfAbsent(caller, CatalystBridge.cloneSession(_))
+      CatalystBridge.resync(caller, s, interpretedConfs)
+      s
+    }
+    CatalystBridge.ofRows(session, df.queryExecution.analyzed)
+  }
+
+  /** Interpreted-form session per caller session, least recently used
+    * evicted past 4 entries: each entry holds its caller session alive
+    * (the copy references its parent's state), so the bound is what
+    * keeps a process that creates many sessions (one per streaming
+    * query, for [[EmfStreaming.microBatch]]) from holding them all. */
+  private val interpretedSessions =
+    new java.util.LinkedHashMap[SparkSession, SparkSession](8, 0.75f, true) {
+      override def removeEldestEntry(
+          e: java.util.Map.Entry[SparkSession, SparkSession]): Boolean = size > 4
+    }
+
+  /** Is `df` bound to the interpreted form [[plan]] picks for small
+    * inputs? Read from the frame's own session conf. */
+  private[graft] def isInterpreted(df: DataFrame): Boolean =
+    interpretedConfs.forall { case (k, v) => df.sparkSession.conf.getOption(k).contains(v) }
+
+  /** The logical lowering of `q` over `fact`, bound to `fact`'s session. */
+  private def lower(q: EmfQuery, fact: DataFrame): DataFrame = {
     val schema = fact.schema
     val base = q.where.foldLeft(fact)((df, c) => df.filter(tupleCond(c, schema, None)))
 
@@ -465,31 +553,43 @@ object EmfPlanner {
     * Fractional or non-numeric order attrs fall back to the dependent
     * pass (correct for any type). */
   private def isWindowed(v: GroupingVar, q: EmfQuery, aggNames: Set[String],
-      schema: StructType): Boolean = {
-    def integral(n: String): Boolean =
-      schema.find(_.name == n).map(_.dataType).exists {
-        case ByteType | ShortType | IntegerType | LongType => true
-        case _ => false
-      }
-    val orderConds = v.mfConds.filter {
-      case Cond(TupleCol(a), "<" | "<=" | ">" | ">=", MfField(b)) =>
-        a == b && q.groupAttrs.contains(a)
-      case _ => false
+      schema: StructType): Boolean =
+    windowedShape(v, q, aggNames).exists(_.forall(integral(_, schema)))
+
+  /** The WINDOWED shape up to the order attr's type: `Some(order attr, if
+    * any)` when the variable has no EMF dependencies and its MF conditions
+    * are grouping-attr equalities plus at most one order comparison. */
+  private def windowedShape(v: GroupingVar, q: EmfQuery,
+      aggNames: Set[String]): Option[Option[String]] = {
+    val orderAttrs = v.mfConds.collect {
+      case Cond(TupleCol(a), "<" | "<=" | ">" | ">=", MfField(b))
+        if a == b && q.groupAttrs.contains(a) => a
     }
-    val eqConds = v.mfConds.filter {
+    val eqConds = v.mfConds.count {
       case Cond(TupleCol(a), "=" | "==", MfField(b)) =>
         a == b && q.groupAttrs.contains(a)
       case _ => false
     }
-    v.dependsOn(aggNames).isEmpty &&
-      eqConds.size + orderConds.size == v.mfConds.size &&
-      orderConds.size <= 1 &&
-      Set("sum", "count", "avg", "min", "max").contains(v.agg.func) &&
-      orderConds.forall {
-        case Cond(TupleCol(a), _, _) => q.groupAttrs.contains(a) && integral(a)
-        case _ => false
-      }
+    if (v.dependsOn(aggNames).isEmpty &&
+        eqConds + orderAttrs.size == v.mfConds.size &&
+        orderAttrs.size <= 1 &&
+        Set("sum", "count", "avg", "min", "max").contains(v.agg.func))
+      Some(orderAttrs.headOption)
+    else None
   }
+
+  private def integral(n: String, schema: StructType): Boolean =
+    schema.find(_.name == n).map(_.dataType).exists {
+      case ByteType | ShortType | IntegerType | LongType => true
+      case _ => false
+    }
+
+  /** The order attr of a variable that has the WINDOWED shape over a
+    * non-integral order attr — the shape [[classifyVars]] demotes to
+    * DEPENDENT (exposed so streaming can reject it by name). */
+  private[emf] def nonIntegralOrderAttr(v: GroupingVar, q: EmfQuery,
+      schema: StructType): Option[String] =
+    windowedShape(v, q, q.aggNames).flatten.filterNot(integral(_, schema))
 
   /** Combine scan-0 partials over a window frame encoding the variable's
     * membership condition. */

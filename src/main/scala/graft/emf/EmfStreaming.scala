@@ -402,6 +402,15 @@ object EmfStreaming {
     val cls = keyedClass(winVars, depVars)
     val cols = new SlotCols(schema, cls,
       if (depVars.isEmpty) "aggregate columns" else "columns")
+    // the state keys order values as longs: a fractional order attr
+    // would merge values (1.4 and 1.5) the batch planner keeps apart.
+    // The classifier demotes such a variable to DEPENDENT, so it is
+    // looked for there and named before the dependent route's checks.
+    val fractional = depVars.flatMap(EmfPlanner.nonIntegralOrderAttr(_, q, schema))
+    require(fractional.isEmpty,
+      s"windowed streaming order attribute '${fractional.head}' must be an " +
+        s"integral type, got ${cols.tpe(fractional.head)} — fractional order " +
+        "values would be truncated by the state key; use microBatch(...) instead")
 
     // ---- key: the windowed variables' shared equality attrs E, whose
     // shared order attr o completes G = E ∪ {o}; without windowed
@@ -419,12 +428,6 @@ object EmfStreaming {
               s"$eqAttrs and order attr $o")
         }
         require(eqAttrs.nonEmpty, s"$cls streaming needs ≥ 1 equality attr")
-        // the state keys order values as longs: a fractional order attr
-        // would merge values (1.4 and 1.5) the batch planner keeps apart
-        require(isIntegral(cols.tpe(o)),
-          s"$cls streaming order attribute '$o' must be an integral type, " +
-            s"got ${cols.tpe(o)} — fractional order values would be " +
-            "truncated by the state key; use microBatch(...) instead")
         require(q.groupAttrs.toSet == (eqAttrs :+ o).toSet && !eqAttrs.contains(o),
           s"grouping set ${q.groupAttrs} must be exactly equality attrs " +
             s"$eqAttrs plus order attr $o")

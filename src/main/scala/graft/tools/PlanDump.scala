@@ -11,6 +11,14 @@ import org.apache.spark.sql.SparkSession
   * With `--exec` the query is executed first and the FINAL
   * AQE-re-optimized physical plan is printed (runtime join strategy
   * picks, DPP, skew splits) — the pre-execution plan hides those.
+  *
+  * Each entry first prints `form=interpreted|compiled leafBytes=N`: the
+  * execution form read from the returned frame's session conf (an EMF
+  * entry over a fact below `EmfPlanner.InterpretMaxBytes` runs
+  * interpreted) and the leaf input bytes of the entry's frame. That is
+  * the probe the planner's gate reads, but on the whole frame: a frame
+  * whose passes read the fact twice counts its leaves twice, while the
+  * gate counts them once.
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
@@ -29,6 +37,8 @@ object PlanDump {
     for (name <- names) {
       println(s"===== $name =====")
       val df = graft.SparkEntry.queries(name)(spark, sfDir)
+      val form = if (graft.emf.EmfPlanner.isInterpreted(df)) "interpreted" else "compiled"
+      println(s"form=$form leafBytes=${graft.PlanShare.leafInputBytes(df)}")
       if (exec) {
         // drive the plan to completion WITHOUT materializing the result
         // on the driver (a collect() here OOMs the tool on large-output

@@ -26,6 +26,32 @@ object CatalystBridge {
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
 
+  /** A copy of `spark`'s session: same SparkContext, shared state
+    * (cache manager included) and extensions, with its own copy of the
+    * SQL conf, catalog temp views and functions as they stand now. Conf
+    * set on the copy never reaches `spark`. */
+  def cloneSession(spark: SparkSession): SparkSession =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].cloneSession()
+
+  /** Bring a [[cloneSession]] copy up to date with its origin: its SQL
+    * conf becomes `from`'s current settings plus `extra` (keys `from` no
+    * longer sets are unset), and its planner strategies and optimizer
+    * rules become `from`'s. */
+  def resync(from: SparkSession, to: SparkSession, extra: Seq[(String, String)]): Unit = {
+    val (f, t) = (classic(from), classic(to))
+    val want = f.sessionState.conf.getAllConfs ++ extra
+    val conf = t.sessionState.conf
+    conf.getAllConfs.keys.filterNot(want.contains).foreach(conf.unsetConf)
+    want.foreach { case (k, v) =>
+      if (conf.getConfString(k, null) != v) conf.setConfString(k, v)
+    }
+    t.experimental.extraStrategies = f.experimental.extraStrategies
+    t.experimental.extraOptimizations = f.experimental.extraOptimizations
+  }
+
+  private def classic(s: SparkSession) =
+    s.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+
   /** The analyzed logical plan behind a DataFrame. */
   def analyzed(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.catalyst.plans.logical.LogicalPlan =
     df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]].queryExecution.analyzed

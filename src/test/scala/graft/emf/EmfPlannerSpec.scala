@@ -324,6 +324,77 @@ class EmfPlannerSpec extends SparkSpec {
     }
   }
 
+  test("small inputs run interpreted: no whole-stage codegen, no compile for a new literal") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    import org.apache.spark.sql.execution.WholeStageCodegenExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    val aqe = new AdaptiveSparkPlanHelper {}
+    def wholeStage(df: org.apache.spark.sql.DataFrame): Int =
+      aqe.collectWithSubqueries(df.queryExecution.executedPlan) {
+        case w: WholeStageCodegenExec => w
+      }.size
+    def compiles: Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    // the sf0.01 fact (1.39 MB of leaf files) is the size class of the
+    // ad-hoc fixtures the gate exists for
+    val fact = graft.Tables.salesView(spark, sf001).cache()
+    fact.count()
+    val leaf = graft.PlanShare.leafInputBytes(fact)
+    assert(leaf > BigInt(1L << 20) && leaf < BigInt(EmfPlanner.InterpretMaxBytes), leaf)
+    // q6's shape (a dependent pass) with a numeric literal, which
+    // compiled code inlines into its generated source
+    def q(lit: Long) = EmfParser.parseOne(
+      s"""prod,month,avg_quant_1,count_quant_2
+        |2
+        |prod,month
+        |avg_quant_1,count_quant_2
+        |{MF.prod.avg_quant_1}[=]{prod}:{MF.month.avg_quant_1}[=]{month}:{quant}[<]{$lit},{MF.prod.count_quant_2}[=]{prod}:{MF.month.count_quant_2}[=]{month}:{MF.avg_quant_1.count_quant_2}[>]{quant},{year}[==]{1997}""".stripMargin,
+      fact.columns.toSet)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.mkString("|")).sorted.toSeq
+    // literals no earlier query in this JVM has used
+    val fresh = 1000000L + (System.nanoTime() % 1000000L)
+    val tz = "spark.sql.session.timeZone"
+    val callerTz = spark.conf.get(tz)
+    try {
+      rows(EmfPlanner.plan(q(999999L), fact)) // the shape's non-literal classes
+      val before = compiles
+      val small = EmfPlanner.plan(q(fresh), fact)
+      val interpreted = rows(small)
+      assert(compiles == before,
+        "an interpreted query must compile nothing (a Spark that ignores " +
+          "spark.sql.codegen.factoryMode compiles its expressions here)")
+      assert(EmfPlanner.isInterpreted(small))
+      assert(wholeStage(small) == 0, small.queryExecution.executedPlan)
+      assert(interpreted.nonEmpty)
+      // the caller's session never holds the interpreted form's conf
+      Seq("spark.sql.codegen.wholeStage" -> "false",
+          "spark.sql.codegen.factoryMode" -> "NO_CODEGEN").foreach { case (k, v) =>
+        assert(!spark.conf.getOption(k).contains(v), k)
+      }
+      // the compiled form, forced by the test hook: another new literal
+      // (every quant passes both filters, so the rows agree) compiles
+      // its classes and whole stages fuse
+      val old = EmfPlanner.InterpretMaxBytes
+      EmfPlanner.InterpretMaxBytes = 0L
+      val compiled = try EmfPlanner.plan(q(fresh + 1), fact) finally
+        EmfPlanner.InterpretMaxBytes = old
+      val before2 = compiles
+      assert(rows(compiled) == interpreted)
+      assert(compiles > before2, "the compiled form must compile its new literal")
+      assert(!EmfPlanner.isInterpreted(compiled))
+      assert(wholeStage(compiled) > 0, compiled.queryExecution.executedPlan)
+      // a conf the caller sets at runtime reaches the returned frame
+      spark.conf.set(tz, "America/Los_Angeles")
+      val zoned = EmfPlanner.plan(q(fresh), fact)
+        .select(org.apache.spark.sql.functions.current_timezone()).head()
+      assert(zoned.getString(0) == "America/Los_Angeles")
+    } finally {
+      spark.conf.set(tz, callerTz)
+      fact.unpersist()
+      EmfPlanner.unpersistAll()
+    }
+  }
+
   test("malformed salt confs fail at planning, naming key and value") {
     // eq on cust + an aggregate threshold: a dependent pass that reads
     // every salt conf once the gate is forced

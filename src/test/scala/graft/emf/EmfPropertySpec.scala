@@ -297,6 +297,32 @@ class EmfPropertySpec extends SparkSpec {
     }
   }
 
+  /** `plan(q, df)`'s rows in both execution forms: the interpreted form
+    * the size gate picks for these fixtures, then the compiled form
+    * forced through the test hook. The two must hold identical rows (in
+    * any order: hash aggregation emits groups in a form-specific order).
+    * Returns the interpreted form's rows. */
+  private def rowsInBothForms(q: EmfQuery,
+      df: org.apache.spark.sql.DataFrame): Seq[Seq[Any]] = {
+    def rows(p: org.apache.spark.sql.DataFrame): Seq[Seq[Any]] =
+      p.collect().toSeq.map(r => (0 until r.length).map(r.get))
+    val small = EmfPlanner.plan(q, df)
+    assert(EmfPlanner.isInterpreted(small), s"fixture not interpreted\nquery=$q")
+    val interpreted = rows(small)
+    val old = EmfPlanner.InterpretMaxBytes
+    EmfPlanner.InterpretMaxBytes = 0L
+    val compiled =
+      try {
+        val big = EmfPlanner.plan(q, df)
+        assert(!EmfPlanner.isInterpreted(big))
+        rows(big)
+      } finally EmfPlanner.InterpretMaxBytes = old
+    def sorted(rs: Seq[Seq[Any]]) = rs.sortBy(_.map(String.valueOf).mkString("\u0001"))
+    assert(sorted(interpreted) == sorted(compiled),
+      s"execution forms differ\nquery=$q\ninterpreted=$interpreted\ncompiled=$compiled")
+    interpreted
+  }
+
   test("fuzz: 240 random EMF queries match brute-force paper semantics") {
     var checked = 0
     sampleTables(4 * fuzzN).zipWithIndex.foreach { case (rows, ti) =>
@@ -308,8 +334,7 @@ class EmfPropertySpec extends SparkSpec {
         val q = sampleQuery(100000L * (ti + 1) + qi)
         EmfParser.validate(q, cols) // generator must stay inside the grammar
         val got =
-          try EmfPlanner.plan(q, df).collect().toSeq
-            .map(r => (0 until r.length).map(r.get))
+          try rowsInBothForms(q, df)
           catch {
             case e: Throwable =>
               throw new AssertionError(s"planner failed on seed ${100000L * (ti + 1) + qi}\nquery=$q", e)

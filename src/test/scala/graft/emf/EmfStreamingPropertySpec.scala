@@ -9,7 +9,7 @@ case class SPropRow(g: String, h: String, ord: Int, state: String, x: Int)
 case class SNPropRow(g: String, h: String, ord: Int, state: String, x: Option[Int])
 
 /** Property fuzz for the INCREMENTAL streaming EMF classes (all-SIMPLE,
-  * windowed, dependent, cross-group) —
+  * windowed, dependent, chained, cross-group) —
   * the hand-rolled state machinery (exact micro-unit accumulators,
   * window recombination, histogram re-classification, complement
   * subtraction) that the batch planner never executes. For each class,
@@ -129,6 +129,36 @@ class EmfStreamingPropertySpec extends SparkSpec {
     hav <- havingGen(Seq(base.agg, dep.agg))
   } yield EmfQuery(gAttrs ++ Seq(base.agg.name, dep.agg.name),
     gAttrs, Nil, Seq(base, dep), wh, hav)
+
+  /** WINDOWED threshold source + full-pin dependent comparing against it
+    * (the q8 shape) → planKeyed (chained). The dependent variable
+    * references the windowed aggregate 3 times in 4 (a threshold that
+    * moves with the order frame), else a SIMPLE one drawn alongside. */
+  private val genChainedQ: Gen[EmfQuery] = for {
+    eqAttrs <- Gen.oneOf(Seq("g"), Seq("h"), Seq("g", "h"))
+    gAttrs = eqAttrs :+ "ord"
+    wf <- funcs
+    wop <- Gen.oneOf("<", "<=", ">", ">=")
+    nWT <- Gen.choose(0, 1)
+    wts <- Gen.listOfN(nWT, genTupleCond)
+    win = GroupingVar(1, AggSpec(wf, "x", s"${wf}_x_v1"),
+      eqAttrs.map(eq) ++ Seq(Cond(TupleCol("ord"), wop, MfField("ord"))) ++ wts)
+    nS <- Gen.choose(0, 1)
+    simples <- Gen.sequence[Seq[GroupingVar], GroupingVar](
+      (2 to 1 + nS).map(simpleVar(_, gAttrs)))
+    ref <- Gen.frequency(3 -> Gen.const(win.agg),
+      1 -> Gen.oneOf(win.agg +: simples.map(_.agg)))
+    depF <- funcs
+    op <- Gen.oneOf("<", "<=", ">", ">=", "=", "!=")
+    nT <- Gen.choose(0, 1)
+    ts <- Gen.listOfN(nT, genTupleCond)
+    dep = GroupingVar(3, AggSpec(depF, "x", s"${depF}_x_v3"),
+      gAttrs.map(eq) ++ Seq(Cond(TupleCol("x"), op, MfField(ref.name))) ++ ts)
+    nW <- Gen.choose(0, 1)
+    wh <- Gen.listOfN(nW, genTupleCond)
+    vars = (win +: simples) :+ dep
+    hav <- havingGen(vars.map(_.agg))
+  } yield EmfQuery(gAttrs ++ vars.map(_.agg.name), gAttrs, Nil, vars, wh, hav)
 
   /** complement shape (G = E ∪ {anti}) → planCrossGroup; 1-in-4 drops
     * the equality pin entirely — the KEYLESS global complement
@@ -258,6 +288,11 @@ class EmfStreamingPropertySpec extends SparkSpec {
       rowG = rowGen)
   }
 
+  test("fuzz: CHAINED streaming == batch at each micro-batch (8 queries)") {
+    fuzzClass("chained", genChainedQ, EmfStreaming.planKeyed, 8 * fuzzN, 15000L,
+      rowG = rowGen)
+  }
+
   test("fuzz: CROSS-GROUP streaming == batch at each micro-batch (8 queries)") {
     fuzzClass("crossgroup", genCrossQ, EmfStreaming.planCrossGroup, 8 * fuzzN, 14000L,
       rowG = rowGen)
@@ -321,5 +356,10 @@ class EmfStreamingPropertySpec extends SparkSpec {
       23000L, rowG = nullRowGen)
     fuzzClass("crossgroup-null", genCrossQ, EmfStreaming.planCrossGroup, 4 * fuzzN,
       24000L, rowG = nullRowGen)
+  }
+
+  test("fuzz with nulls: CHAINED streaming == batch on null-bearing streams (4 queries)") {
+    fuzzClass("chained-null", genChainedQ, EmfStreaming.planKeyed, 4 * fuzzN,
+      27000L, rowG = nullRowGen)
   }
 }

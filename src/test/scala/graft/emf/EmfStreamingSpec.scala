@@ -121,11 +121,11 @@ class EmfStreamingSpec extends SparkSpec {
         |{MF.cust.sum_quant_before}[=]{cust}:{MF.month.sum_quant_before}[<]{month}""".stripMargin, fCols)
     val stream = MemoryStream[(String, Double, Int)](spark)
     val df = stream.toDF().toDF("cust", "month", "quant")
-    // two layers refuse it: the classifier already demotes a fractional-
-    // order variable to DEPENDENT (→ "use microBatch"), and planKeyed's
-    // order-attr type guard backs that up should classification change
+    // the classifier demotes a fractional-order variable to DEPENDENT;
+    // planKeyed finds it there and names the attribute
     val e = intercept[IllegalArgumentException](EmfStreaming.planKeyed(q, df))
-    assert(e.getMessage.contains("microBatch") || e.getMessage.contains("integral"))
+    assert(e.getMessage.contains("order attribute 'month' must be an integral type"))
+    assert(e.getMessage.contains("microBatch(...)"))
   }
 
   test("windowed streaming: HAVING applies on the snapshot; all-SIMPLE rejected") {
@@ -764,7 +764,7 @@ class EmfStreamingSpec extends SparkSpec {
       EmfParser.parseOne(spec.stripMargin, fact)
     val sales = MemoryStream[SalesRow](spark).toDF()
     // the fractional-order shape: the classifier demotes the variable to
-    // DEPENDENT, so the dependent route names the missing threshold source
+    // DEPENDENT, and the keyed lowering names its order attribute
     val fractional = MemoryStream[(String, Double, Int)](spark).toDF()
       .toDF("cust", "month", "quant")
     // two integral order candidates, so both variables classify WINDOWED
@@ -825,7 +825,10 @@ class EmfStreamingSpec extends SparkSpec {
           |cust,month
           |sum_quant_before
           |{MF.cust.sum_quant_before}[=]{cust}:{MF.month.sum_quant_before}[<]{month}""",
-        Set("cust", "month", "quant")), fractional, noSource),
+        Set("cust", "month", "quant")), fractional,
+        "requirement failed: windowed streaming order attribute 'month' must " +
+          "be an integral type, got DoubleType — fractional order values " +
+          "would be truncated by the state key; use microBatch(...) instead"),
       ("grouping set is not E ∪ {o}", q(
         """cust,prod,month,avg_quant_b
           |1
