@@ -49,8 +49,9 @@ object Bench {
     val warmDir = sys.env.getOrElse("SPARK_GRAFT_WARM_DIR",
       "/root/testdata/sf0.001")
     if (new java.io.File(warmDir).isDirectory && warmDir != sfDir) {
-      val interpretMax = graft.emf.EmfPlanner.InterpretMaxBytes
-      graft.emf.EmfPlanner.InterpretMaxBytes = 0L
+      val interpretKey = "spark.graft.emf.interpret.maxBytes"
+      val interpretMax = spark.conf.getOption(interpretKey)
+      spark.conf.set(interpretKey, "0")
       try SparkEntry.queries
         .filter { case (n, _) => only.isEmpty || only(n) }
         .foreach { case (name, fn) =>
@@ -64,7 +65,7 @@ object Bench {
           }
           graft.emf.EmfPlanner.unpersistAll()
         }
-      finally graft.emf.EmfPlanner.InterpretMaxBytes = interpretMax
+      finally interpretMax.fold(spark.conf.unset(interpretKey))(spark.conf.set(interpretKey, _))
       graft.dedup.Dedup.clearCache()
       graft.ann.Similarity.clearCache()
       graft.ann.KMeans.clearCache()

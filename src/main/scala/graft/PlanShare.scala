@@ -21,78 +21,23 @@ import org.apache.spark.storage.StorageLevel
   *    scan + parse (the 100 TB killer — e.g. langid_nb's model side
   *    re-tokenized the whole corpus 3× before r17).
   *
-  * So the decision is gated on the subtree's LEAF input bytes (the
-  * recompute cost proxy — join/aggregate output estimates inflate
-  * under non-CBO stats, leaf sizes don't), against
-  * `spark.graft.share.minBytes`. Default 2 GiB, MEASURED (r18): at
-  * sf10, heavy_hitters' sketch/candidate pins on a 1.1 GB lineitem
-  * were 25% SLOWER gate-open than gate-off (min-of-4, two alternating
-  * JVM pairs: 4.95/5.14 s vs 3.92/4.03 s), and force-opening the
-  * 58 MB documents-rooted shares slowed 2 of 3 text queries — on an
-  * under-utilized local[32], duplicate subtrees run as CONCURRENT
-  * stages of one job, so redundant-but-parallel beats
-  * dedup-but-barrier-serialized until the subtree is multi-GiB. On a
-  * saturated cluster duplicated passes cost real wall again, which is
-  * why the threshold is a conf, not a constant; at the 100 TB design
-  * point every shared input is TB-scale and crosses any sane setting.
-  * The same stats-gated-choice pattern as `q21Core`'s skew alternative.
-  * Values are identical in both regimes — materialization never
-  * changes results, only the execution DAG.
+  * So the decision is the share gate ([[Gates.share]]): the subtree's
+  * LEAF input bytes (the recompute cost proxy — join/aggregate output
+  * estimates inflate under non-CBO stats, leaf sizes don't) against
+  * `spark.graft.share.minBytes`, default 2 GiB (measured; see
+  * [[Gates.ShareMinBytes]]). The same stats-gated-choice pattern as
+  * `q21Core`'s skew alternative. Values are identical in both regimes —
+  * materialization never changes results, only the execution DAG.
   */
 object PlanShare {
 
-  /** Sum of leaf-relation size estimates in the frame's ANALYZED plan
-    * — the bytes a full re-execution of the subtree would re-scan.
-    * Analyzed (not optimized) deliberately: analysis already ran when
-    * the Dataset was built, so the probe costs nothing, while forcing
-    * the optimizer here would pay an extra full optimization pass per
-    * probe on the exact deep trees this helper exists to tame
-    * (measured +0.4 s on mmr_select's 183 KB tree). Leaf stats are
-    * identical in both plans (file sizes / cached-relation sizes). */
-  private[graft] def leafInputBytes(df: DataFrame): BigInt =
-    df.queryExecution.analyzed.collectLeaves()
-      .map(_.stats.sizeInBytes).sum
-
-  private def minBytes(df: DataFrame): Long =
-    df.sparkSession.conf
-      .getOption("spark.graft.share.minBytes")
-      // env fallback so plan tooling (PlanDump) can exhibit the
-      // above-gate plan shape without a code change
-      .orElse(sys.env.get("SPARK_GRAFT_SHARE_MIN"))
-      .map { raw =>
-        // fail with the offending key+value, not a bare
-        // NumberFormatException mid-query-construction (r17 advice)
-        try raw.trim.toLong catch { case _: NumberFormatException =>
-          throw new IllegalArgumentException(
-            "spark.graft.share.minBytes / SPARK_GRAFT_SHARE_MIN must be " +
-              s"a byte count, got '$raw'")
-        }
-      }
-      .getOrElse(2048L << 20)
-
   /** Storage level for [[shared]] — above the gate the persisted frames
     * have multi-GiB inputs and can be corpus-scale (langid_nb's exploded
-    * (doc,lang,w,c) frame, text_bigram_lm's bigram explode), so the
-    * default is SERIALIZED memory+disk: ~2-5× denser than the
-    * deserialized default, trading decode CPU for not pressuring
-    * executor memory with corpus-sized caches at the 100 TB design
-    * point (r17 advice). Overridable for measurement
-    * (`spark.graft.share.storageLevel` / SPARK_GRAFT_SHARE_LEVEL). */
-  private def level(df: DataFrame): StorageLevel = {
-    val raw = df.sparkSession.conf
-      .getOption("spark.graft.share.storageLevel")
-      .orElse(sys.env.get("SPARK_GRAFT_SHARE_LEVEL"))
-      .getOrElse("MEMORY_AND_DISK_SER")
-    try StorageLevel.fromString(raw.trim) catch {
-      case _: IllegalArgumentException =>
-        throw new IllegalArgumentException(
-          "spark.graft.share.storageLevel / SPARK_GRAFT_SHARE_LEVEL must " +
-            s"name a StorageLevel (e.g. MEMORY_AND_DISK_SER), got '$raw'")
-    }
-  }
-
-  private def big(df: DataFrame): Boolean =
-    leafInputBytes(df) >= minBytes(df)
+    * (doc,lang,w,c) frame, text_bigram_lm's bigram explode), so they are
+    * SERIALIZED memory+disk: ~2-5× denser than the deserialized default,
+    * trading decode CPU for not pressuring executor memory with
+    * corpus-sized caches at the 100 TB design point (r17 advice). */
+  private val Level = StorageLevel.MEMORY_AND_DISK_SER
 
   /** Would [[shared]]/[[pinned]] materialize this frame? Exposed so a
     * query can choose between two EXACTLY-equivalent derivations whose
@@ -100,15 +45,15 @@ object PlanShare {
     * n_tot is Σ row-0 sketch counters (cheap off the pinned sketch,
     * a full re-sketch when the gate is closed) ≡ count(keys) (one cheap
     * column scan). Same stats-gated-alternative pattern as q21Core. */
-  def crossesGate(df: DataFrame): Boolean = big(df)
+  def crossesGate(df: DataFrame): Boolean = Gates.share(df)
 
   /** Persist `df` for its multiple consumers when its inputs are big
     * enough that recompute dominates; no-op below the threshold.
     * Registered with [[graft.emf.EmfPlanner.registerPersisted]] so the
     * entrypoints' per-query cleanup reclaims it. */
   def shared(df: DataFrame): DataFrame =
-    if (big(df)) {
-      graft.emf.EmfPlanner.registerPersisted(df.persist(level(df)))
+    if (Gates.share(df)) {
+      graft.emf.EmfPlanner.registerPersisted(df.persist(Level))
       df
     } else df
 
@@ -120,5 +65,5 @@ object PlanShare {
     * tolerance caveat applies and is acceptable for these KB-sized
     * frames. */
   def pinned(df: DataFrame): DataFrame =
-    if (big(df)) df.localCheckpoint() else df
+    if (Gates.share(df)) df.localCheckpoint() else df
 }

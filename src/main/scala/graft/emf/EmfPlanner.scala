@@ -50,24 +50,19 @@ import org.apache.spark.sql.types._
   * adhoc run, seed 905: 357 compiles in 24 timed queries, 5.3 s of
   * compile time summed over threads against 13.4 s of query wall time;
   * 5 compiles in 32 queries interpreted). [[plan]] therefore probes the
-  * fact frame's leaf input bytes ([[graft.PlanShare.leafInputBytes]],
-  * the probe of the share and salt gates) and, below
-  * [[InterpretMaxBytes]] (T), returns the same analyzed plan bound to
-  * a copy of the caller's session with
+  * fact frame's leaf input bytes (the interpret gate,
+  * [[graft.Gates.interpret]]) and, below `spark.graft.emf.interpret.maxBytes`
+  * (T), returns the same analyzed plan bound to a copy of the caller's
+  * session with
   * `spark.sql.codegen.wholeStage=false` and
   * `spark.sql.codegen.factoryMode=NO_CODEGEN` (an internal Spark conf;
   * EmfPlannerSpec counts compiles, so a Spark that stops honouring it
   * fails loudly). Both confs are needed: with whole-stage fusion off
   * alone, each operator still compiles its expressions' classes. Results
   * are identical in both forms (EmfPropertySpec runs its fuzz in both).
-  * T = 4 MiB is a measured crossover (BASELINE.md, "Interpreted EMF
-  * crossover", golden q1–q8 on a 4-core box): at 1.39 MB and 2.55 MB
-  * of leaves the interpreted form ran in 0.32–0.79× of a cold compiled
-  * run (the ad-hoc case: every query new); at 5.41 MB one query rose to
-  * 0.88× cold and 1.84× warm; at 14.1 MB (sf0.1) three queries ran
-  * slower than cold. The perfbench adhoc fixture has 1.84 MB. This is
-  * the adaptive-execution argument (Kohn, Leis, Neumann, ICDE 2018):
-  * interpret first, compile when the input pays for it.
+  * T defaults to 4 MiB, a measured crossover ([[graft.Gates.InterpretMaxBytes]]).
+  * This is the adaptive-execution argument (Kohn, Leis, Neumann, ICDE
+  * 2018): interpret first, compile when the input pays for it.
   *
   * '''Null contract.''' Groups follow SQL GROUP BY: a null grouping
   * value IS a group. Membership conditions of the form
@@ -91,18 +86,12 @@ object EmfPlanner {
 
   /** Plan `q` over the fact table `fact` (e.g. Tables.salesView), in the
     * execution form the fact's leaf input bytes call for (see the object
-    * doc): below [[InterpretMaxBytes]] the plan runs interpreted. */
+    * doc): below `spark.graft.emf.interpret.maxBytes` the plan runs
+    * interpreted; 0 forces the compiled form. */
   def plan(q: EmfQuery, fact: DataFrame): DataFrame = {
     val df = lower(q, fact)
-    if (graft.PlanShare.leafInputBytes(fact) < BigInt(InterpretMaxBytes)) interpreted(df)
-    else df
+    if (graft.Gates.interpret(fact)) interpreted(df) else df
   }
-
-  /** Leaf input bytes of the fact frame below which [[plan]] returns the
-    * interpreted form; measured crossover, see the object doc.
-    * Test-tunable: 0 forces the compiled form (EmfPropertySpec runs its
-    * fuzz in both forms; Bench warms the compiled form it times). */
-  @volatile private[graft] var InterpretMaxBytes: Long = 4L << 20
 
   /** Codegen settings of the interpreted form: no whole-stage fusion,
     * and every expression (projections, predicates, orderings) through
@@ -367,62 +356,6 @@ object EmfPlanner {
       .drop(top, second)
   }
 
-  /** Rows-per-equality-key ceiling above which [[dependentPass]] salts
-    * the groups × tuples join (conf `spark.graft.emf.salt.maxPerKey`;
-    * ≤ 0 forces the salted form, Long.MaxValue forces the plain form —
-    * both short-circuit the sampling scan, the q21Core contract). */
-  private[emf] val SaltMaxPerKey = 100000L
-
-  /** Plan-stats floor under which the hot-key stat is skipped and the
-    * plain join taken unconditionally (conf
-    * `spark.graft.emf.salt.statMinBytes`): below ~1 GiB the guaranteed
-    * sampling job costs a visible fraction of the query it protects —
-    * the same cost-of-deciding reasoning as q21Core / ProfileExactMaxBytes. */
-  private[emf] val SaltStatMinBytes = 1L << 30
-
-  /** Session memo for the sampled hot-key estimate, keyed by the fact
-    * frame's analyzed-plan semantic hash + the equality attrs — the
-    * distribution is a property of the (filtered) table, not of the
-    * variable, so one measurement serves every dependent pass over it. */
-  private val saltStatCache =
-    new java.util.concurrent.ConcurrentHashMap[(Int, Seq[String]), java.lang.Long]()
-
-  /** Order-of-magnitude estimate of the hottest equality-key's row count
-    * from a 0.1% Bernoulli sample (fixed seed — deterministic on a fixed
-    * layout); the q21Core technique. At warehouse scale this is a table-
-    * statistics read, not a job. */
-  private def estMaxRowsPerKey(df: DataFrame, keys: Seq[String]): Long = {
-    val id = (df.queryExecution.analyzed.semanticHash(), keys)
-    val cached = saltStatCache.get(id)
-    if (cached != null) return cached.longValue
-    val p = 0.001
-    val m = df.sample(p, seed = 42L).groupBy(keys.map(col): _*)
-      .agg(count(lit(1)).as("c")).agg(max(col("c"))).collect()(0)
-    val est = if (m.isNullAt(0)) 0L else (m.getLong(0) / p).toLong
-    saltStatCache.put(id, java.lang.Long.valueOf(est))
-    est
-  }
-
-  /** Conf with an env fallback (`spark.graft.emf.salt.maxPerKey` →
-    * `SPARK_GRAFT_EMF_SALT_MAXPERKEY`) so plan tooling can exhibit the
-    * salted shape without a code change — the SPARK_GRAFT_SHARE_MIN
-    * precedent. */
-  private def confLong(df: DataFrame, key: String, dflt: Long): Long = {
-    val env = "SPARK_GRAFT_" +
-      key.stripPrefix("spark.graft.").replace('.', '_').toUpperCase
-    df.sparkSession.conf.getOption(key)
-      .orElse(sys.env.get(env))
-      .map { raw =>
-        // name the key and value, not a bare NumberFormatException
-        // mid-planning (PlanShare.minBytes' contract)
-        try raw.trim.toLong catch { case _: NumberFormatException =>
-          throw new IllegalArgumentException(
-            s"$key / $env must be an integer, got '$raw'")
-        }
-      }
-      .getOrElse(dflt)
-  }
-
   /** One dependent-variable pass: join the MF frame with the fact table
     * on the variable's defining predicates, aggregate per group, and
     * return the MF frame with the variable's aggregate column added.
@@ -445,9 +378,9 @@ object EmfPlanner {
     * equality-key value is |tuples with it| × |groups with it| — all in
     * ONE sort-merge partition when a key is pathologically hot, and AQE's
     * skew split does not rescue a join dominated by θ-residual work on a
-    * single key. When the fact side is big enough to matter
-    * ([[SaltStatMinBytes]]) and a sampled hot-key estimate exceeds
-    * [[SaltMaxPerKey]], the pass salts: the fact side gets a
+    * single key. When the salt gate ([[graft.Gates.salt]]) finds the fact
+    * side big enough to matter and a sampled hot-key estimate above its
+    * ceiling, the pass salts: the fact side gets a
     * deterministic in-row salt (xxhash64 of its non-map columns — never
     * rand(), which re-draws under task retry, SPARK-38388), the MF side
     * explodes ×k, and the join keys on (equality attrs, salt), splitting
@@ -501,23 +434,13 @@ object EmfPlanner {
       return if (v.agg.func != "count") back
         else back.withColumn(v.agg.name, coalesce(col(v.agg.name), lit(0L)))
     }
-    val maxPerKey = confLong(t0, "spark.graft.emf.salt.maxPerKey", SaltMaxPerKey)
-    val statMin = confLong(t0, "spark.graft.emf.salt.statMinBytes", SaltStatMinBytes)
-    // size floor probes analyzed-plan LEAF bytes (PlanShare's probe:
-    // file sizes, never join-output estimates — the fact frame is often
-    // a cached multi-way join whose un-materialized InMemoryRelation
-    // reports the join ESTIMATE, which inflates past any floor even on
-    // MB-sized inputs and would fire a spurious sampling job per pass)
-    val skewed = maxPerKey <= 0L ||
-      (maxPerKey != Long.MaxValue &&
-        graft.PlanShare.leafInputBytes(t0) > BigInt(statMin) &&
-        estMaxRowsPerKey(t0, eqFactAttrs) > maxPerKey)
+    val skewed = graft.Gates.salt(t0, eqFactAttrs)
     val m = groupSide.fold(mf)(mf.withColumn("__mf_ok", _))
     val cond = groupSide.fold(joinCond)(_ => joinCond && col("mf.__mf_ok"))
     val joined =
       if (!skewed) m.alias("mf").join(t, cond, "left")
       else {
-        val kRaw = confLong(t0, "spark.graft.emf.salt.buckets",
+        val kRaw = graft.Gates.long(t0.sparkSession, "spark.graft.emf.salt.buckets",
           math.max(4L * t0.sparkSession.sparkContext.defaultParallelism, 64L))
         // fail at planning, not as pmod(…, 0)'s unnamed divide-by-zero
         if (kRaw <= 0L || kRaw > Int.MaxValue)

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Gates, Tables}
 
 /** Relational operator surface (SURVEY.md §2.2): joins in every shape,
   * window functions, sorts/top-k, set operations, grouping analytics.
@@ -38,20 +38,13 @@ object RelationalQueries {
   private[graft] val ProfileCols =
     Seq("o_orderkey", "o_custkey", "o_orderstatus", "o_orderpriority")
 
-  /** Input-size gate for [[profileColumns]]'s exact↔approx switch: 1 GiB
-    * of scan input (parquet file bytes). Under it the exact multi-distinct
-    * Expand costs ~|rows|·|cols| extra aggregation input — fine at
-    * fixture scale (orders at sf10 is 267 MB and profiles exactly);
-    * above it the Expand is the profiler's scale killer (measured 211×
-    * wall at ×1000 data, BASELINE.md sf100 probe) and the distinct
-    * counts switch to approx_count_distinct in one scan-shaped pass. */
-  private[graft] val ProfileExactMaxBytes = 1L << 30
-
   /** Per-column profile: non-null/null counts, min/max (as strings),
     * and distinct counts — EXACT below `exactMaxBytes` of scan input,
-    * APPROX (HLL++, rsd 0.05) above it. The gate reads the logical
-    * plan's size statistics (parquet footer/file metadata — no job runs
-    * to decide), so the plan genuinely switches on data scale:
+    * APPROX (HLL++, rsd 0.05) above it (the profile gate, default
+    * [[graft.Gates.ProfileExactMaxBytes]]). The gate reads the frame's
+    * leaf input bytes ([[graft.Gates.leafBytes]]: file sizes — no job and
+    * no optimizer pass runs to decide), so the plan genuinely switches on
+    * data scale:
     *
     *  - exact regime: TWO single-row aggregates, crossed. Mixing the
     *    multi-distinct rewrite (Expand ×|cols|) with min/max(string) in
@@ -70,9 +63,8 @@ object RelationalQueries {
     * regime's 3·rsd accuracy; the `profile_columns` oracle replays the
     * exact regime bit-for-bit at every gate SF. */
   def profileColumns(df: DataFrame, cols: Seq[String],
-      exactMaxBytes: Long = ProfileExactMaxBytes): DataFrame = {
-    val exact =
-      df.queryExecution.optimizedPlan.stats.sizeInBytes <= BigInt(exactMaxBytes)
+      exactMaxBytes: Long = Gates.ProfileExactMaxBytes): DataFrame = {
+    val exact = Gates.leafBytes(df) <= BigInt(exactMaxBytes)
     val bAggs = cols.flatMap { c =>
       Seq(
         count(col(c)).as(s"${c}__n"),
@@ -99,68 +91,6 @@ object RelationalQueries {
     profiled.selectExpr(stacked).orderBy(col("col_name"))
   }
 
-  /** Rows-per-key ceiling above which [[q21Core]] abandons the lineitem
-    * self-joins for the single-shuffle distinct-count form. TPC-H-shaped
-    * data has ≤ 7 lines per order — orders of magnitude under this. */
-  private[graft] val Q21SkewMaxPerKey = 10000L
-
-  /** Scan-size floor under which [[q21Core]] skips the hot-key stat and
-    * takes the self-join form unconditionally. The stat protects
-    * CLUSTER-scale runs from a quadratic key; under ~1 GiB of plan-stats
-    * input the guaranteed sampling job (a full, if column-pruned, pass —
-    * Bernoulli sampling still reads every row group) costs a visible
-    * fraction of the very query it protects, so the planner accepts the
-    * self-join form's documented worst case instead of paying a certain
-    * stat scan on every small run — the same cost-of-deciding reasoning
-    * as [[ProfileExactMaxBytes]], read from the same job-free logical
-    * plan statistics. Above the floor the stat runs AT MOST ONCE per
-    * (frame, key) per JVM ([[hotKeyStatCache]]). */
-  private[graft] val Q21StatMinBytes = 1L << 30
-
-  /** Session-scoped memo for [[estMaxRowsPerKey]]: the hot-key ceiling
-    * is a property of the source table, not of the query run, so one
-    * measurement per (frame identity, key) serves every later q21 build
-    * in the JVM — the lazily-materialized stand-in for the warehouse
-    * table-statistics read described on [[estMaxRowsPerKey]]. Keyed by
-    * the frame's file-source root paths plus its analyzed-plan semantic
-    * hash (identical rebuilds of the same query share the entry;
-    * differently-filtered frames never do), bounded by the number of
-    * distinct query shapes built in the session. */
-  private[operators] val hotKeyStatCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), java.lang.Long]()
-
-  /** Cache identity for a frame: file-source root paths + analyzed-plan
-    * semantic hash (the hash alone for non-file frames). */
-  private def frameIdentity(df: DataFrame): String = {
-    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
-    val paths = df.queryExecution.analyzed.collect {
-      case lr: LogicalRelation => lr.relation match {
-        case fs: HadoopFsRelation => fs.location.rootPaths.mkString(",")
-        case _ => ""
-      }
-    }.filter(_.nonEmpty)
-    paths.sorted.mkString(";") + "#" + df.queryExecution.analyzed.semanticHash()
-  }
-
-  /** Order-of-magnitude estimate of the hottest key's row count from a
-    * 0.1% Bernoulli sample (fixed seed → deterministic on a fixed
-    * layout): a key with f rows lands ~f/1000 sampled rows, so
-    * max(sampleCount)·1000 resolves "7 rows" vs "10 million rows" —
-    * the only distinction the [[q21Core]] gate needs. Computed at most
-    * once per (frame, key) per JVM; at warehouse scale you'd read this
-    * from table statistics instead and pass the threshold accordingly. */
-  private def estMaxRowsPerKey(df: DataFrame, key: String): Long = {
-    val id = (frameIdentity(df), key)
-    val cached = hotKeyStatCache.get(id)
-    if (cached != null) return cached.longValue
-    val p = 0.001
-    val m = df.sample(p, seed = 42L).groupBy(col(key))
-      .agg(count(lit(1)).as("c")).agg(max(col("c"))).collect()(0)
-    val est = if (m.isNullAt(0)) 0L else (m.getLong(0) / p).toLong
-    hotKeyStatCache.put(id, java.lang.Long.valueOf(est))
-    est
-  }
-
   /** Q21's join pipeline with the self-correlation strategy chosen by a
     * hot-key stat. `l` carries (l_orderkey, l_suppkey, l_returnflag);
     * `o` the qualifying order keys; `suN` the (s_suppkey, s_name)
@@ -185,22 +115,28 @@ object RelationalQueries {
     *    handled by AQE like any aggregation.
     *
     * Both forms are the same function of the data (Q21SkewSpec pins
-    * result equality on a skewed fixture and the plan shape of each);
-    * `skewMaxPerKey ≤ 0` forces the count form, `Long.MaxValue` forces
-    * the self-join form — both short-circuit the sampling scan, as does
-    * any frame under [[Q21StatMinBytes]] of plan-stats scan input (so
-    * building this query at bench/fixture scale runs NO job at all, and
-    * above the floor the stat is paid once per session, not per run). */
+    * result equality on a skewed fixture and the plan shape of each).
+    * The choice is the q21 gate, [[graft.Gates.skewed]] on `l` keyed on
+    * l_orderkey: `skewMaxPerKey ≤ 0` forces the count form,
+    * `Long.MaxValue` forces the self-join form — both short-circuit the
+    * sampling scan, as does any `l` with at most `statMinBytes` of leaf
+    * input (so building this query at bench/fixture scale runs NO job at
+    * all, and above the floor the stat is paid once per session, not per
+    * run). Defaults: [[graft.Gates.Q21SkewMaxPerKey]],
+    * [[graft.Gates.Q21StatMinBytes]].
+    *
+    * The leaf probe counts the whole lineitem file under `l`'s
+    * projection; an optimizer estimate would scale it down by row width.
+    * At sf10 the projected lineitem has about 1.08 GB of leaves, just
+    * over the 1 GiB floor, while its column-pruned estimate is under it:
+    * q21 pays one memoized sampling job per session there, and
+    * TPC-H-shaped keys (≤ 7 lines per order) keep the self-join form. */
   private[graft] def q21Core(suN: DataFrame, o: DataFrame, l: DataFrame,
-      skewMaxPerKey: Long = Q21SkewMaxPerKey,
-      statMinBytes: Long = Q21StatMinBytes): DataFrame = {
+      skewMaxPerKey: Long = Gates.Q21SkewMaxPerKey,
+      statMinBytes: Long = Gates.Q21StatMinBytes): DataFrame = {
     val l1 = l.filter(col("l_returnflag") === "R")
       .select(col("l_orderkey"), col("l_suppkey"))
-    val skewed = skewMaxPerKey <= 0L ||
-      (skewMaxPerKey != Long.MaxValue &&
-        l.queryExecution.optimizedPlan.stats.sizeInBytes >
-          BigInt(statMinBytes) &&
-        estMaxRowsPerKey(l, "l_orderkey") > skewMaxPerKey)
+    val skewed = Gates.skewed(l, Seq("l_orderkey"), skewMaxPerKey, statMinBytes)
     val waiting =
       if (!skewed) {
         val l2 = l.select(col("l_orderkey").as("x_orderkey"),

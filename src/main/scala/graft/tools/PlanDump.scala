@@ -14,11 +14,15 @@ import org.apache.spark.sql.SparkSession
   *
   * Each entry first prints `form=interpreted|compiled leafBytes=N`: the
   * execution form read from the returned frame's session conf (an EMF
-  * entry over a fact below `EmfPlanner.InterpretMaxBytes` runs
+  * entry over a fact below `spark.graft.emf.interpret.maxBytes` runs
   * interpreted) and the leaf input bytes of the entry's frame. That is
   * the probe the planner's gate reads, but on the whole frame: a frame
   * whose passes read the fact twice counts its leaves twice, while the
   * gate counts them once.
+  *
+  * Gate confs come from system properties, which `SparkConf` loads:
+  * `-Dspark.graft.share.minBytes=0` prints every share gate's
+  * above-gate shape (see `graft.Gates` for the keys).
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
@@ -38,7 +42,7 @@ object PlanDump {
       println(s"===== $name =====")
       val df = graft.SparkEntry.queries(name)(spark, sfDir)
       val form = if (graft.emf.EmfPlanner.isInterpreted(df)) "interpreted" else "compiled"
-      println(s"form=$form leafBytes=${graft.PlanShare.leafInputBytes(df)}")
+      println(s"form=$form leafBytes=${graft.Gates.leafBytes(df)}")
       if (exec) {
         // drive the plan to completion WITHOUT materializing the result
         // on the driver (a collect() here OOMs the tool on large-output

@@ -338,8 +338,8 @@ class EmfPlannerSpec extends SparkSpec {
     // ad-hoc fixtures the gate exists for
     val fact = graft.Tables.salesView(spark, sf001).cache()
     fact.count()
-    val leaf = graft.PlanShare.leafInputBytes(fact)
-    assert(leaf > BigInt(1L << 20) && leaf < BigInt(EmfPlanner.InterpretMaxBytes), leaf)
+    val leaf = graft.Gates.leafBytes(fact)
+    assert(leaf > BigInt(1L << 20) && leaf < BigInt(graft.Gates.InterpretMaxBytes), leaf)
     // q6's shape (a dependent pass) with a numeric literal, which
     // compiled code inlines into its generated source
     def q(lit: Long) = EmfParser.parseOne(
@@ -371,13 +371,12 @@ class EmfPlannerSpec extends SparkSpec {
           "spark.sql.codegen.factoryMode" -> "NO_CODEGEN").foreach { case (k, v) =>
         assert(!spark.conf.getOption(k).contains(v), k)
       }
-      // the compiled form, forced by the test hook: another new literal
-      // (every quant passes both filters, so the rows agree) compiles
-      // its classes and whole stages fuse
-      val old = EmfPlanner.InterpretMaxBytes
-      EmfPlanner.InterpretMaxBytes = 0L
+      // the compiled form, forced by the session conf: another new
+      // literal (every quant passes both filters, so the rows agree)
+      // compiles its classes and whole stages fuse
+      spark.conf.set("spark.graft.emf.interpret.maxBytes", "0")
       val compiled = try EmfPlanner.plan(q(fresh + 1), fact) finally
-        EmfPlanner.InterpretMaxBytes = old
+        spark.conf.unset("spark.graft.emf.interpret.maxBytes")
       val before2 = compiles
       assert(rows(compiled) == interpreted)
       assert(compiles > before2, "the compiled form must compile its new literal")
@@ -395,25 +394,40 @@ class EmfPlannerSpec extends SparkSpec {
     }
   }
 
+  /** eq on cust + an aggregate threshold: one equality-keyed dependent
+    * pass, which reads every salt conf once the gate is forced */
+  private val eqDependent = """cust,avg_quant_a,count_quant_b
+    |2
+    |cust
+    |avg_quant_a,count_quant_b
+    |{MF.cust.avg_quant_a}[=]{cust},{MF.cust.count_quant_b}[=]{cust}:{MF.avg_quant_a.count_quant_b}[>]{quant}""".stripMargin
+
   test("malformed salt confs fail at planning, naming key and value") {
-    // eq on cust + an aggregate threshold: a dependent pass that reads
-    // every salt conf once the gate is forced
-    val q = EmfParser.parseOne(
-      """cust,avg_quant_a,count_quant_b
-        |2
+    val q = EmfParser.parseOne(eqDependent, cols)
+    // θ-only membership: the pass whose MF frame goes through the share gate
+    val theta = EmfParser.parseOne(
+      """cust,avg_quant,count_quant_big
+        |1
         |cust
-        |avg_quant_a,count_quant_b
-        |{MF.cust.avg_quant_a}[=]{cust},{MF.cust.count_quant_b}[=]{cust}:{MF.avg_quant_a.count_quant_b}[>]{quant}""".stripMargin, cols)
-    def rejects(confs: (String, String)*)(key: String, value: String): Unit = {
+        |count_quant_big
+        |{MF.avg_quant.count_quant_big}[<]{quant}""".stripMargin, cols)
+    def rejects(confs: (String, String)*)(key: String, value: String,
+        query: EmfQuery = q): Unit = {
       confs.foreach { case (k, v) => spark.conf.set(k, v) }
       try {
-        val e = intercept[IllegalArgumentException](EmfPlanner.plan(q, sales))
+        val e = intercept[IllegalArgumentException](EmfPlanner.plan(query, sales))
         assert(e.getMessage.contains(key) && e.getMessage.contains(s"'$value'"),
           e.getMessage)
       } finally confs.foreach { case (k, _) => spark.conf.unset(k) }
     }
+    // every gate key graft reads (graft.Gates' table), plus the salt's
+    // bucket count
+    val share = "spark.graft.share.minBytes"
+    val interpret = "spark.graft.emf.interpret.maxBytes"
     val maxPerKey = "spark.graft.emf.salt.maxPerKey"
     val buckets = "spark.graft.emf.salt.buckets"
+    rejects(share -> "2GiB")(share, "2GiB", theta)
+    rejects(interpret -> "4 MiB")(interpret, "4 MiB")
     rejects(maxPerKey -> "lots")(maxPerKey, "lots")
     rejects("spark.graft.emf.salt.statMinBytes" -> "1GiB")(
       "spark.graft.emf.salt.statMinBytes", "1GiB")
@@ -422,6 +436,42 @@ class EmfPlannerSpec extends SparkSpec {
     rejects(maxPerKey -> "0", buckets -> "-3")(buckets, "-3")
     val tooMany = (Int.MaxValue.toLong + 1).toString
     rejects(maxPerKey -> "0", buckets -> tooMany)(buckets, tooMany)
+  }
+
+  test("the salt gate's hot-key stat: none below its floor, one memo entry above it") {
+    val fact = graft.Tables.salesView(spark, sf001)
+    val q = EmfParser.parseOne(eqDependent, fact.columns.toSet)
+    val memo = graft.Gates.hotKeyMemo
+    val sc = spark.sparkContext
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.mkString("|")).sorted.toSeq
+    /** jobs `body` starts before any action on what it returns */
+    def jobsOf[T](body: => T): (T, Int) = {
+      val group = s"salt-stat-${System.nanoTime()}"
+      sc.setJobGroup(group, group)
+      try { val r = body; (r, sc.statusTracker.getJobIdsForGroup(group).length) }
+      finally sc.clearJobGroup()
+    }
+    memo.clear()
+    try {
+      // default confs: the sf0.01 fact is far below the 1 GiB floor
+      val (gated, gatedJobs) = jobsOf(EmfPlanner.plan(q, fact))
+      assert(gatedJobs == 0 && memo.isEmpty, "below-floor plan ran the sampling stat")
+      spark.conf.set("spark.graft.emf.salt.statMinBytes", "0")
+      val (sampled, sampledJobs) = jobsOf(EmfPlanner.plan(q, fact))
+      assert(sampledJobs > 0 && memo.size == 1, s"$sampledJobs jobs, memo $memo")
+      val est = memo.values.iterator.next()
+      // a rebuild reuses the entry: same value, no sampling job
+      val (_, rebuildJobs) = jobsOf(EmfPlanner.plan(q, fact))
+      assert(rebuildJobs == 0 && memo.size == 1 && memo.values.iterator.next() == est)
+      // TPC-H-shaped customers are nowhere near 100k rows: the plain join
+      assert(!sampled.queryExecution.optimizedPlan.toString.contains("__gsalt"))
+      assert(rows(sampled) == rows(gated))
+    } finally {
+      spark.conf.unset("spark.graft.emf.salt.statMinBytes")
+      memo.clear()
+      EmfPlanner.unpersistAll()
+    }
   }
 
   test("windowed lowering: subset-equality and order variables use Window, not join") {

@@ -299,7 +299,7 @@ class EmfPropertySpec extends SparkSpec {
 
   /** `plan(q, df)`'s rows in both execution forms: the interpreted form
     * the size gate picks for these fixtures, then the compiled form
-    * forced through the test hook. The two must hold identical rows (in
+    * forced through `spark.graft.emf.interpret.maxBytes = 0`. The two must hold identical rows (in
     * any order: hash aggregation emits groups in a form-specific order).
     * Returns the interpreted form's rows. */
   private def rowsInBothForms(q: EmfQuery,
@@ -309,14 +309,13 @@ class EmfPropertySpec extends SparkSpec {
     val small = EmfPlanner.plan(q, df)
     assert(EmfPlanner.isInterpreted(small), s"fixture not interpreted\nquery=$q")
     val interpreted = rows(small)
-    val old = EmfPlanner.InterpretMaxBytes
-    EmfPlanner.InterpretMaxBytes = 0L
+    spark.conf.set("spark.graft.emf.interpret.maxBytes", "0")
     val compiled =
       try {
         val big = EmfPlanner.plan(q, df)
         assert(!EmfPlanner.isInterpreted(big))
         rows(big)
-      } finally EmfPlanner.InterpretMaxBytes = old
+      } finally spark.conf.unset("spark.graft.emf.interpret.maxBytes")
     def sorted(rs: Seq[Seq[Any]]) = rs.sortBy(_.map(String.valueOf).mkString("\u0001"))
     assert(sorted(interpreted) == sorted(compiled),
       s"execution forms differ\nquery=$q\ninterpreted=$interpreted\ncompiled=$compiled")

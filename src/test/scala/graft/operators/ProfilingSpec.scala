@@ -59,7 +59,8 @@ class ProfilingSpec extends SparkSpec {
 
   test("the gate itself switches on the plan-stats input size") {
     val o = Tables.orders(spark, sf0001)
-    val bytes = o.queryExecution.optimizedPlan.stats.sizeInBytes
+    // the gate's probe: the frame's leaf input bytes
+    val bytes = graft.Gates.leafBytes(o)
     assert(bytes > 0, "size stats must be available for the gate to bind")
     // a gate just under the input size → approx; just over → exact
     val under = RelationalQueries.profileColumns(

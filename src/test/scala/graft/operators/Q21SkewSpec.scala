@@ -87,21 +87,22 @@ class Q21SkewSpec extends SparkSpec {
 
   test("the stat floor skips sampling on small frames; above it the stat is memoized") {
     val (suN, o, l) = frames()
-    RelationalQueries.hotKeyStatCache.clear()
-    // below the floor (a 305-row fixture is nowhere near 1 GiB of plan
-    // stats): building q21 must not touch the stat machinery at all —
+    val hotKeyMemo = graft.Gates.hotKeyMemo
+    hotKeyMemo.clear()
+    // below the floor (a 305-row fixture is nowhere near 1 GiB of leaf
+    // input): building q21 must not touch the stat machinery at all —
     // this is what keeps PlanDump/bench-scale construction job-free
     RelationalQueries.q21Core(suN, o, l)
-    assert(RelationalQueries.hotKeyStatCache.isEmpty,
+    assert(hotKeyMemo.isEmpty,
       "below-floor build ran the sampling stat")
     // force the stat path: one sample populates the (frame, key) memo…
     RelationalQueries.q21Core(suN, o, l, statMinBytes = 0L)
-    assert(RelationalQueries.hotKeyStatCache.size == 1)
-    val memo = RelationalQueries.hotKeyStatCache.values.iterator.next()
+    assert(hotKeyMemo.size == 1)
+    val memo = hotKeyMemo.values.iterator.next()
     // …and an identical rebuild reuses it (same entry, same value — the
     // per-run Bernoulli scan the round-13 bench paid is gone)
     RelationalQueries.q21Core(suN, o, l, statMinBytes = 0L)
-    assert(RelationalQueries.hotKeyStatCache.size == 1)
-    assert(RelationalQueries.hotKeyStatCache.values.iterator.next() == memo)
+    assert(hotKeyMemo.size == 1)
+    assert(hotKeyMemo.values.iterator.next() == memo)
   }
 }
