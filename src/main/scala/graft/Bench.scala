@@ -33,8 +33,9 @@ object Bench {
     // not plan cost; what the timed loop should measure is the
     // steady-state cost a warmed executor fleet pays. Methodology recorded in BASELINE.md
     // round 5. The sf0.001 fact is below EmfPlanner's interpreted-form
-    // crossover while the sf0.1 one is above it, so the EMF entries
-    // warm with the compiled form forced — the form they are timed in.
+    // crossover, but a timed EMF entry may run in either form (at sf0.1
+    // emf_events' 2.05 MB fact is below it, the sales view above), so the
+    // EMF entries warm in both forms, each forced through the gate's conf.
     // SPARK_GRAFT_WARM_DIR overrides the warmup SF: the sf0.001 default
     // is right for the driver's sf0.1 window, but a ×100 (sf10) sweep
     // wants a sf0.1 warmup — tiny-data loops never reach HotSpot's C2
@@ -51,19 +52,22 @@ object Bench {
     if (new java.io.File(warmDir).isDirectory && warmDir != sfDir) {
       val interpretKey = "spark.graft.emf.interpret.maxBytes"
       val interpretMax = spark.conf.getOption(interpretKey)
-      spark.conf.set(interpretKey, "0")
       try SparkEntry.queries
         .filter { case (n, _) => only.isEmpty || only(n) }
         .foreach { case (name, fn) =>
-          // a warmup failure means the timed run below starts COLD (its
-          // number then includes the JIT compile this sweep exists to
-          // absorb) — make that visible instead of swallowing it
-          try fn(spark, warmDir).count() catch { case e: Throwable =>
-            System.err.println(
-              s"[bench] warmup $name FAILED (timed run will be cold): " +
-                s"${e.getMessage}")
+          val forms = if (name.startsWith("emf_")) Seq("0", Long.MaxValue.toString) else Seq("0")
+          forms.foreach { t =>
+            spark.conf.set(interpretKey, t)
+            // a warmup failure means the timed run below starts COLD (its
+            // number then includes the JIT compile this sweep exists to
+            // absorb) — make that visible instead of swallowing it
+            try fn(spark, warmDir).count() catch { case e: Throwable =>
+              System.err.println(
+                s"[bench] warmup $name FAILED (timed run will be cold): " +
+                  s"${e.getMessage}")
+            }
+            graft.emf.EmfPlanner.unpersistAll()
           }
-          graft.emf.EmfPlanner.unpersistAll()
         }
       finally interpretMax.fold(spark.conf.unset(interpretKey))(spark.conf.set(interpretKey, _))
       graft.dedup.Dedup.clearCache()

@@ -14,7 +14,7 @@ import org.apache.spark.sql.functions._
   * | gate | picks | probe | default | conf key | default measured in (BASELINE.md) |
   * |---|---|---|---|---|---|
   * | share | `PlanShare` materializes a shared frame | [[leafBytes]] ≥ T | 2 GiB | `spark.graft.share.minBytes` | "Round 18 — the share gate measured where it opens naturally (sf10)" |
-  * | interpret | `EmfPlanner.plan` runs interpreted | fact [[leafBytes]] < T | 4 MiB | `spark.graft.emf.interpret.maxBytes` | "Interpreted EMF crossover" |
+  * | interpret | `EmfPlanner.plan` and every `EmfStreaming` lowering run interpreted | [[sourceBytes]] < T: a batch fact's leaf bytes; a stream's file-source bytes at plan time, any other stream source unbounded; 0 forces compiled, `Long.MaxValue` interpreted | 4 MiB | `spark.graft.emf.interpret.maxBytes` | "Interpreted EMF crossover" |
   * | salt | the EMF dependent pass salts its join | [[skewed]] on (fact, equality attrs) | 100,000 rows/key above 1 GiB of leaves | `spark.graft.emf.salt.maxPerKey`, `spark.graft.emf.salt.statMinBytes` | "Round 18 — the share gate measured …", its EmfSkewDemo receipt |
   * | profile | `profileColumns` counts exact distincts | [[leafBytes]] ≤ T | 1 GiB | none: parameter `exactMaxBytes` | "Round 12 — the ×1000 probe (sf100, 22 GB, 600M-row fact)" |
   * | q21 | `q21Core` takes the distinct-count form | [[skewed]] on (lineitem, l_orderkey) | 10,000 rows/key above 1 GiB of leaves | none: parameters `skewMaxPerKey`, `statMinBytes` | "Round 14 — the +18% bench … adjudicated", q21 after the stat fix |
@@ -50,8 +50,10 @@ object Gates {
     * ran in 0.32–0.79× of a cold compiled run (the ad-hoc case: every
     * query new); at 5.41 MB one query rose to 0.88× cold and 1.84× warm;
     * at 14.1 MB (sf0.1) three queries ran slower than cold. The perfbench
-    * adhoc fixture has 1.84 MB. 0 forces the compiled form (EmfPropertySpec
-    * runs its fuzz in both forms; Bench warms the compiled form it times). */
+    * adhoc fixture has 1.84 MB. 0 forces the compiled form and
+    * Long.MaxValue the interpreted one (EmfPropertySpec and
+    * EmfStreamingPropertySpec run their fuzzes in both forms; Bench warms
+    * both). */
   val InterpretMaxBytes: Long = 4L << 20
 
   /** Rows-per-equality-key ceiling above which the EMF dependent pass
@@ -109,6 +111,28 @@ object Gates {
   def leafBytes(df: DataFrame): BigInt =
     df.queryExecution.analyzed.collectLeaves().map(_.stats.sizeInBytes).sum
 
+  /** The bytes `df`'s sources hold at this call, None when a source's size
+    * is unknown. A batch frame's are its [[leafBytes]]. A streaming
+    * frame's file-source leaf counts the [[leafBytes]] of a batch frame
+    * over the same path, format and options (a file listing, no job); any
+    * other streaming leaf (memory, rate, Kafka) has no size, so the frame
+    * counts as unbounded, as does a file source whose path cannot be
+    * listed. */
+  def sourceBytes(df: DataFrame): Option[BigInt] = {
+    import org.apache.spark.sql.execution.datasources.FileFormat
+    import org.apache.spark.sql.execution.streaming.runtime.StreamingRelation
+    val sizes = df.queryExecution.analyzed.collectLeaves().map {
+      case StreamingRelation(ds, _, _) if classOf[FileFormat].isAssignableFrom(ds.providingClass) =>
+        scala.util.Try {
+          val reader = df.sparkSession.read.format(ds.className).options(ds.options)
+          leafBytes(ds.userSpecifiedSchema.fold(reader)(reader.schema).load(ds.paths: _*))
+        }.toOption
+      case leaf if leaf.isStreaming => None
+      case leaf => Some(leaf.stats.sizeInBytes)
+    }
+    if (sizes.forall(_.isDefined)) Some(sizes.flatten.sum) else None
+  }
+
   /** `key` from `spark`'s conf as a Long, `default` when unset. A value
     * that is not an integer fails here, naming the key and the value,
     * instead of as a bare NumberFormatException mid-planning. */
@@ -123,11 +147,17 @@ object Gates {
   def share(df: DataFrame): Boolean =
     leafBytes(df) >= long(df.sparkSession, "spark.graft.share.minBytes", ShareMinBytes)
 
-  /** The interpret gate: does `EmfPlanner.plan` run a plan over `fact`
-    * interpreted? */
-  def interpret(fact: DataFrame): Boolean =
-    leafBytes(fact) <
-      long(fact.sparkSession, "spark.graft.emf.interpret.maxBytes", InterpretMaxBytes)
+  /** The interpret gate: does a plan over `fact` (a batch fact or a
+    * stream) run interpreted? */
+  def interpret(fact: DataFrame): Boolean = interpret(fact.sparkSession, sourceBytes(fact))
+
+  /** The interpret gate on probed `bytes` (None: unbounded), read only
+    * when the conf does not decide: T ≤ 0 forces the compiled form and
+    * T = Long.MaxValue the interpreted one (the [[skewed]] convention). */
+  def interpret(spark: SparkSession, bytes: => Option[BigInt]): Boolean = {
+    val t = long(spark, "spark.graft.emf.interpret.maxBytes", InterpretMaxBytes)
+    t == Long.MaxValue || (t > 0 && bytes.exists(_ < t))
+  }
 
   /** The salt gate: is the EMF dependent pass over `t`, joined on the
     * equality attrs `keys`, skewed enough to salt? Both confs are read

@@ -108,23 +108,28 @@ object EmfPlanner {
     * classloader, and generated classes are cached per classloader, so
     * a copy per call recompiled the classes that have no interpreted
     * implementation (cached-batch column readers, row joiners: 3 per
-    * q6-shaped query) on every query. */
-  private def interpreted(df: DataFrame): DataFrame = {
-    import org.apache.spark.sql.graftbridge.CatalystBridge
-    val caller = df.sparkSession
-    val session = interpretedSessions.synchronized {
-      val s = interpretedSessions.computeIfAbsent(caller, CatalystBridge.cloneSession(_))
-      CatalystBridge.resync(caller, s, interpretedConfs)
-      s
+    * q6-shaped query) on every query. A frame whose session already
+    * carries those confs (a micro-batch of an interpreted stream) is
+    * returned as it is. */
+  private[emf] def interpreted(df: DataFrame): DataFrame =
+    if (isInterpreted(df)) df
+    else {
+      import org.apache.spark.sql.graftbridge.CatalystBridge
+      val caller = df.sparkSession
+      val session = interpretedSessions.synchronized {
+        val s = interpretedSessions.computeIfAbsent(caller, CatalystBridge.cloneSession(_))
+        CatalystBridge.resync(caller, s, interpretedConfs)
+        s
+      }
+      CatalystBridge.ofRows(session, df.queryExecution.analyzed)
     }
-    CatalystBridge.ofRows(session, df.queryExecution.analyzed)
-  }
 
   /** Interpreted-form session per caller session, least recently used
     * evicted past 4 entries: each entry holds its caller session alive
     * (the copy references its parent's state), so the bound is what
-    * keeps a process that creates many sessions (one per streaming
-    * query, for [[EmfStreaming.microBatch]]) from holding them all. */
+    * keeps a process that creates many sessions (one per compiled-form
+    * streaming query, for [[EmfStreaming.microBatch]]) from holding them
+    * all. */
   private val interpretedSessions =
     new java.util.LinkedHashMap[SparkSession, SparkSession](8, 0.75f, true) {
       override def removeEldestEntry(

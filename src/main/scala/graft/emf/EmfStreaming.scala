@@ -2,7 +2,8 @@ package graft.emf
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders}
+import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders, KeyValueGroupedDataset}
+import org.apache.spark.sql.catalyst.expressions.GenericRow
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode}
@@ -78,6 +79,35 @@ import org.apache.spark.sql.Row
   * filesystem restarts under the other). A user-set
   * `fs.AbstractFileSystem.file.impl` wins; HDFS and S3 checkpoints are
   * untouched.
+  *
+  * Execution form. A stream's session conf is fixed when it starts (Spark
+  * clones the session its frame is bound to), so the compiled or
+  * interpreted form [[EmfPlanner]] picks per batch query is picked here
+  * before the stream starts, by the same interpret gate
+  * ([[graft.Gates.interpret]], `spark.graft.emf.interpret.maxBytes`,
+  * T = 4 MiB). A file-source stream is probed by the bytes its path holds
+  * at plan time ([[graft.Gates.sourceBytes]]); any other source (memory,
+  * rate, Kafka) counts as unbounded. 0 forces the compiled form and
+  * Long.MaxValue the interpreted one. Below T every public lowering
+  * returns its frame bound to [[EmfPlanner]]'s interpreted session copy,
+  * so the stream's own session, and the micro-batches a `foreachBatch`
+  * sink receives, run with codegen off from the first trigger. In the
+  * compiled form each stream recompiles its plan on its first trigger:
+  * its cloned session has its own classloader and misses Spark's codegen
+  * cache (perfbench `stream`: 11–21 compiles and 270–600 ms per case).
+  * Results are the same in both forms (EmfStreamingPropertySpec runs its
+  * fuzzes in both). The binding has two visible costs: a started query
+  * belongs to the copy's `StreamingQueryManager`
+  * (`sp.df.sparkSession.streams`), not the caller's, and a memory sink
+  * registers its table in the copy (`sp.df.sparkSession.table(name)`).
+  * The form is fixed for the life of the query: a source that grows past
+  * T after the start keeps the interpreted form until the stream
+  * restarts.
+  *
+  * State keys are typed: the keyed and cross-group lowerings group by
+  * the key columns themselves and emit typed rows, so a key is an
+  * `UnsafeRow` of its attributes in the shuffle, the sort and the state
+  * store. Checkpoints written when keys were JSON strings do not restart.
   */
 object EmfStreaming {
 
@@ -88,13 +118,24 @@ object EmfStreaming {
     * otherwise the frame is a plain streaming aggregation whose
     * complete-mode sink IS the result (HAVING already applied).
     * `lowering` names the class the query was routed as: "simple",
-    * "windowed", "dependent", "chained" or "cross-group". */
-  final case class StreamingPlan(df: DataFrame, usesSnapshot: Boolean, lowering: String)
+    * "windowed", "dependent", "chained" or "cross-group". `form` is the
+    * execution form the interpret gate chose ("interpreted" or
+    * "compiled"), `sourceBytes` the bytes it probed (None: a source of
+    * unknown size). */
+  final case class StreamingPlan(df: DataFrame, usesSnapshot: Boolean, lowering: String,
+      form: String, sourceBytes: Option[BigInt])
 
   /** Entry of every public lowering: the stream's session commits its
     * checkpoints through [[graft.io.LocalFs]] (see the object doc). */
   private def installLocalFs(stream: DataFrame): Unit =
     graft.io.LocalFs.install(stream.sparkSession)
+
+  /** Exit of every public lowering: `lowered` in the execution form the
+    * interpret gate chose (see the object doc). The interpreted copy is
+    * re-synced from the stream's session after [[installLocalFs]], so it
+    * carries the checkpoint filesystem too. */
+  private def inForm(lowered: DataFrame, interpret: Boolean): DataFrame =
+    if (interpret) EmfPlanner.interpreted(lowered) else lowered
 
   /** Route a query to its cheapest incremental lowering — the same
     * classification the batch planner uses, so callers never pick a
@@ -108,15 +149,19 @@ object EmfStreaming {
     * Shapes outside every incremental class (genuinely unpinned
     * cross-group membership, non-subtractable complements, fractional
     * order attrs) propagate the specific lowering's rejection, which
-    * names `microBatch(...)` — the full-expressiveness fallback. */
+    * names `microBatch(...)` — the full-expressiveness fallback. The
+    * source is probed once, and the probe is reported in the plan. */
   def planAuto(q: EmfQuery, stream: DataFrame): StreamingPlan = {
     val (_, winVars, depVars) = EmfPlanner.classifyVars(q, stream.schema)
-    if (winVars.isEmpty && depVars.isEmpty)
-      StreamingPlan(plan(q, stream), usesSnapshot = false, "simple")
-    else if (winVars.isEmpty && depVars.forall(EmfPlanner.complementShape(_, q).isDefined))
-      StreamingPlan(planCrossGroup(q, stream), usesSnapshot = true, "cross-group")
-    else
-      StreamingPlan(planKeyed(q, stream), usesSnapshot = true, keyedClass(winVars, depVars))
+    val (lowered, usesSnapshot, lowering) =
+      if (winVars.isEmpty && depVars.isEmpty) (simpleFrame(q, stream), false, "simple")
+      else if (winVars.isEmpty && depVars.forall(EmfPlanner.complementShape(_, q).isDefined))
+        (crossGroupFrame(q, stream), true, "cross-group")
+      else (keyedFrame(q, stream), true, keyedClass(winVars, depVars))
+    val bytes = graft.Gates.sourceBytes(stream)
+    val interpret = graft.Gates.interpret(stream.sparkSession, bytes)
+    StreamingPlan(inForm(lowered, interpret), usesSnapshot, lowering,
+      if (interpret) "interpreted" else "compiled", bytes)
   }
 
   /** The class a [[planKeyed]] query belongs to, as its rejections name it. */
@@ -125,7 +170,10 @@ object EmfStreaming {
 
   /** Incremental lowering for all-SIMPLE queries. The returned streaming
     * DataFrame must be started in complete (or update) output mode. */
-  def plan(q: EmfQuery, stream: DataFrame): DataFrame = {
+  def plan(q: EmfQuery, stream: DataFrame): DataFrame =
+    inForm(simpleFrame(q, stream), graft.Gates.interpret(stream))
+
+  private def simpleFrame(q: EmfQuery, stream: DataFrame): DataFrame = {
     installLocalFs(stream)
     require(q.vars.forall(EmfPlanner.isSimplePublic(_, q)),
       "streaming EMF supports SIMPLE variables only (equality on the full " +
@@ -144,8 +192,8 @@ object EmfStreaming {
   def microBatch(q: EmfQuery, stream: DataFrame)(
       sink: (DataFrame, Long) => Unit): DataStreamWriter[Row] = {
     installLocalFs(stream)
-    stream.writeStream.foreachBatch { (batch: DataFrame, id: Long) =>
-      sink(EmfPlanner.plan(q, batch), id)
+    inForm(stream, graft.Gates.interpret(stream)).writeStream.foreachBatch {
+      (batch: DataFrame, id: Long) => sink(EmfPlanner.plan(q, batch), id)
     }
   }
 
@@ -282,18 +330,30 @@ object EmfStreaming {
   private def arr(cs: Seq[Column], t: String): Column =
     array(cs.map(_.cast(t)): _*).cast(s"array<$t>")
 
-  /** Typed rows from an emitter's `(json, ver)` stream: parse the JSON
-    * with the output schema (stateless past the stateful op, allowed in
-    * update mode). */
-  private def fromJson(emitted: Dataset[(String, Long)],
-      fields: Seq[StructField]): DataFrame =
-    emitted.toDF("__json", "__ver")
-      .select(from_json(col("__json"), StructType(fields)).as("r"), col("__ver"))
-      .select(col("r.*"), col("__ver"))
+  /** The state key columns of a stateful lowering: `attrs` projected as
+    * `__k0`, `__k1`, … (names no fact column or projected slot array
+    * takes), or one constant column for a keyless query. */
+  private def keyCols(attrs: Seq[String]): Seq[Column] =
+    if (attrs.isEmpty) Seq(lit(0).as("__k0"))
+    else attrs.zipWithIndex.map { case (a, i) => col(a).as(s"__k$i") }
+
+  /** `projected` grouped by its first `nKeys` columns, the key decoded as
+    * a typed `Row`: the key is an `UnsafeRow` of the key attributes in
+    * the shuffle, the sort and the state store. */
+  private def groupByKeyCols[V](projected: DataFrame, nKeys: Int,
+      values: Encoder[V]): KeyValueGroupedDataset[Row, V] = {
+    val keySchema = StructType(projected.schema.take(nKeys))
+    projected.groupBy(keySchema.map(f => col(f.name)): _*)
+      .as[Row, V](Encoders.row(keySchema), values)
+  }
+
+  /** An emitter's output schema: `fields`, then `__ver`. */
+  private def emitted(fields: Seq[StructField]): StructType =
+    StructType(fields :+ StructField("__ver", LongType, nullable = false))
 
   // ---- incremental KEYED lowering (windowed, dependent, chained) ---------
 
-  final case class KeyedRow(k: String, o: Long,
+  final case class KeyedRow(o: Long,
       micro: Seq[Option[Long]], raw: Seq[Option[Double]],
       cmpM: Seq[Option[Long]], cmpR: Seq[Option[Double]],
       aggM: Seq[Option[Long]], aggR: Seq[Option[Double]])
@@ -390,10 +450,11 @@ object EmfStreaming {
     * (latest `__ver` per group, then HAVING + SELECT). HAVING cannot be
     * applied pre-sink in update mode: a group leaving the HAVING set
     * emits no retraction, so the filter belongs on the snapshot. */
-  def planKeyed(q: EmfQuery, stream: DataFrame): DataFrame = {
+  def planKeyed(q: EmfQuery, stream: DataFrame): DataFrame =
+    inForm(keyedFrame(q, stream), graft.Gates.interpret(stream))
+
+  private def keyedFrame(q: EmfQuery, stream: DataFrame): DataFrame = {
     installLocalFs(stream)
-    val spark = stream.sparkSession
-    import spark.implicits._
     val schema = stream.schema
 
     val (simpleVars, winVars, depVars) = EmfPlanner.classifyVars(q, schema)
@@ -487,7 +548,7 @@ object EmfStreaming {
       DepDef(slot, slot.guarded(cmpCol), DepMeta(op, refIdx, cmpDouble, ref.func, ref.floating))
     }
 
-    // ---- input projection: key JSON, order value, slot values, per
+    // ---- input projection: key columns, order value, slot values, per
     // dependent slot its comparison and aggregate values. A null order
     // value cannot key the state (batch treats it as a normal group): the
     // incremental path rejects it rather than dropping the row
@@ -496,26 +557,26 @@ object EmfStreaming {
         raise_error(lit(s"$cls streaming EMF: null $o — null order groups " +
           "need the batch planner (microBatch)")).cast("long"))
     }
-    val projected = stream.filter(EmfPlanner.whereColumn(q.where, schema)).select(
-      to_json(struct(keyAttrs.map(col): _*)).as("k"),
+    val keys = keyCols(keyAttrs)
+    val projected = stream.filter(EmfPlanner.whereColumn(q.where, schema)).select(keys ++ Seq(
       order.as("o"),
       arr(slots.map(s => microOf(s.value)), "bigint").as("micro"),
       arr(slots.map(_.value), "double").as("raw"),
       arr(deps.map(d => microOf(d.cmp)), "bigint").as("cmpM"),
       arr(deps.map(_.cmp), "double").as("cmpR"),
       arr(deps.map(d => microOf(d.slot.value)), "bigint").as("aggM"),
-      arr(deps.map(_.slot.value), "double").as("aggR"))
-      .as[KeyedRow]
+      arr(deps.map(_.slot.value), "double").as("aggR")): _*)
 
     // ---- the stateful combine
     val depSpecs = deps.map(_.slot.spec).toArray
     val depMeta = deps.map(_.meta).toArray
-    implicit val stateEnc: Encoder[KeyedState] = Encoders.kryo[KeyedState]
-    val emitted = projected
-      .groupByKey(_.k)
-      .flatMapGroupsWithState[KeyedState, (String, Long)](
+    val out = emitted(keyAttrs.map(cols.field) ++ orderAttr.map(cols.field) ++
+      (slots ++ deps.map(_.slot)).map(cols.outField))
+    val outTypes = out.fields.map(_.dataType)
+    groupByKeyCols(projected, keys.size, Encoders.product[KeyedRow])
+      .flatMapGroupsWithState[KeyedState, Row](
         OutputMode.Update, GroupStateTimeout.NoTimeout) {
-        (key: String, rows: Iterator[KeyedRow], state: GroupState[KeyedState]) =>
+        (key: Row, rows: Iterator[KeyedRow], state: GroupState[KeyedState]) =>
           val st = state.getOption.getOrElse(new KeyedState)
           rows.foreach { r =>
             var slice = st.slices.get(r.o)
@@ -543,11 +604,8 @@ object EmfStreaming {
           }
           st.ver += 1
           state.update(st)
-          emitKeyed(key, st, specs, depSpecs, depMeta, orderAttr)
-      }
-
-    fromJson(emitted, keyAttrs.map(cols.field) ++ orderAttr.map(cols.field) ++
-      (slots ++ deps.map(_.slot)).map(cols.outField))
+          emitKeyed(key, st, specs, depSpecs, depMeta, orderAttr.isDefined, outTypes)
+      }(Encoders.kryo[KeyedState], Encoders.row(out))
   }
 
   /** Fold dependent slot `j` of row `r` into that slot's
@@ -589,15 +647,15 @@ object EmfStreaming {
       case _ => () // tuple conds failed / null value: no contribution
     }
 
-  /** Emit one JSON row per slice of the key: its order value (windowed
-    * and chained keys), variable-0/SIMPLE slots from the slice's own
+  /** Emit one row per slice of the key: its key fields, its order value
+    * (windowed and chained keys), variable-0/SIMPLE slots from the slice's own
     * partials, WINDOWED slots as their frame over the key's sorted order
     * values (prefix/suffix pass ≡ the batch RANGE frames over per-group
     * partials), and each dependent slot as the histogram buckets passing
     * the threshold its referenced slot takes AT THAT GROUP. */
-  private def emitKeyed(key: String, st: KeyedState, specs: Array[SlotSpec],
-      depSpecs: Array[SlotSpec], depMeta: Array[DepMeta],
-      orderAttr: Option[String]): Iterator[(String, Long)] = {
+  private def emitKeyed(key: Row, st: KeyedState, specs: Array[SlotSpec],
+      depSpecs: Array[SlotSpec], depMeta: Array[DepMeta], hasOrder: Boolean,
+      outTypes: Array[DataType]): Iterator[Row] = {
     val ordered = st.slices.keySet().asScala.map(_.longValue()).toArray.sorted
     val slices = ordered.map(o => st.slices.get(o))
     val cells = slices.map(_.accs)
@@ -618,23 +676,21 @@ object EmfStreaming {
       }
     }
 
-    // key JSON == to_json(struct(key attrs)) — splice its fields into each row
-    val keyInner = key.substring(1, key.length - 1)
     ordered.indices.map { i =>
-      val sb = new StringBuilder(96).append('{').append(keyInner)
-      def field(name: String, value: String): Unit = {
-        if (sb.length > 1) sb.append(',')
-        sb.append('"').append(name).append("\":").append(value)
-      }
-      orderAttr.foreach(field(_, ordered(i).toString))
-      specs.indices.foreach(j => field(specs(j).name, render(specs(j), combAt(j, i))))
+      val row = new Array[Any](outTypes.length)
+      var c = 0
+      def put(v: Any): Unit = { row(c) = v; c += 1 }
+      (0 until key.length).foreach(k => put(key.get(k)))
+      if (hasOrder) put(narrow(ordered(i), outTypes(c)))
+      specs.indices.foreach(j => put(render(specs(j), combAt(j, i), outTypes(c))))
       depSpecs.indices.foreach { d =>
         val m = depMeta(d)
         val comb = new SlotAcc
         foldQualifying(comb, slices(i).hists(d), combAt(m.refIdx, i), m)
-        field(depSpecs(d).name, render(depSpecs(d), comb))
+        put(render(depSpecs(d), comb, outTypes(c)))
       }
-      (sb.append('}').toString, st.ver)
+      put(st.ver)
+      new GenericRow(row): Row
     }.iterator
   }
 
@@ -649,8 +705,7 @@ object EmfStreaming {
     if (m.refFunc == "count" || ref.cnt > 0) {
       if (m.cmpDouble) {
         def sumD: Double =
-          if (m.refFloating)
-            new java.math.BigDecimal(ref.sumMicro.bigInteger, 6).doubleValue()
+          if (m.refFloating) decimalDouble(ref.sumMicro)
           else (ref.sumMicro / 1000000).toDouble
         val thr: Double = m.refFunc match {
           case "count" => ref.cnt.toDouble
@@ -678,9 +733,6 @@ object EmfStreaming {
 
   // ---- incremental CROSS-GROUP lowering (complement shape, corpus q4) ----
 
-  final case class CrossRow(k: String, a: String,
-      micro: Seq[Option[Long]], raw: Seq[Option[Double]])
-
   /** State for one equality key E (e.g. prod): one accumulator row per
     * anti-attribute value (e.g. cust) — the key's slice of the MF
     * structure. Base slots accumulate the group's own aggregates;
@@ -690,7 +742,7 @@ object EmfStreaming {
     * inverse needed (which is what admits min/max). */
   final class CrossState extends Serializable {
     var ver: Long = 0L
-    val groups = new java.util.HashMap[String, Array[SlotAcc]]()
+    val groups = new java.util.HashMap[Any, Array[SlotAcc]]()
   }
 
   /** Incremental lowering for the cross-group COMPLEMENT shape (corpus
@@ -730,10 +782,11 @@ object EmfStreaming {
     * [[planKeyed]]. State per key is O(|anti domain within the
     * key|) — the MF frame's own cardinality for that key — guarded by
     * the same fail-fast the keyed path uses. */
-  def planCrossGroup(q: EmfQuery, stream: DataFrame): DataFrame = {
+  def planCrossGroup(q: EmfQuery, stream: DataFrame): DataFrame =
+    inForm(crossGroupFrame(q, stream), graft.Gates.interpret(stream))
+
+  private def crossGroupFrame(q: EmfQuery, stream: DataFrame): DataFrame = {
     installLocalFs(stream)
-    val spark = stream.sparkSession
-    import spark.implicits._
     val schema = stream.schema
 
     val (simpleVars, winVars, depVars) = EmfPlanner.classifyVars(q, schema)
@@ -787,53 +840,48 @@ object EmfStreaming {
     val specs = slots.map(_.spec).toArray
     val nBase = specs.count(_.kind == 0)
 
-    // ---- input projection: E-key JSON, anti-value JSON, slot values.
-    // ignoreNullFields=false: a null key/anti field must keep its slot in
-    // the JSON (default to_json DROPS null fields, which would splice a
-    // malformed `{...,,...}` row and alias distinct null patterns)
-    val keepNulls = Map("ignoreNullFields" -> "false")
-    val keyCol =
-      if (eqAttrs.isEmpty) lit("{}")
-      else to_json(struct(eqAttrs.map(col): _*), keepNulls)
-    val projected = stream.filter(EmfPlanner.whereColumn(q.where, schema)).select(
-      keyCol.as("k"),
-      to_json(struct(col(antiAttr)), keepNulls).as("a"),
+    // ---- input projection: E-key columns, anti value, slot values
+    val keys = keyCols(eqAttrs)
+    val nKeys = keys.size
+    val projected = stream.filter(EmfPlanner.whereColumn(q.where, schema)).select(keys ++ Seq(
+      col(antiAttr).as("__a"),
       arr(slots.map(s => microOf(s.value)), "bigint").as("micro"),
-      arr(slots.map(_.value), "double").as("raw"))
-      .as[CrossRow]
+      arr(slots.map(_.value), "double").as("raw")): _*)
 
     // ---- the stateful combine
-    implicit val stateEnc: Encoder[CrossState] = Encoders.kryo[CrossState]
-    val emitted = projected
-      .groupByKey(_.k)
-      .flatMapGroupsWithState[CrossState, (String, Long)](
+    val out = emitted(eqAttrs.map(cols.field) ++ Seq(cols.field(antiAttr)) ++
+      slots.map(cols.outField))
+    val outTypes = out.fields.map(_.dataType)
+    groupByKeyCols(projected, nKeys, Encoders.row(projected.schema))
+      .flatMapGroupsWithState[CrossState, Row](
         OutputMode.Update, GroupStateTimeout.NoTimeout) {
-        (key: String, rows: Iterator[CrossRow], state: GroupState[CrossState]) =>
+        (key: Row, rows: Iterator[Row], state: GroupState[CrossState]) =>
           val st = state.getOption.getOrElse(new CrossState)
           rows.foreach { r =>
-            var cells = st.groups.get(r.a)
+            val anti = r.get(nKeys)
+            var cells = st.groups.get(anti)
             if (cells == null) {
               cells = Array.fill(specs.length)(new SlotAcc)
-              st.groups.put(r.a, cells)
+              st.groups.put(anti, cells)
               boundDomain(st.groups.size,
                 s"cross-group streaming EMF: more than $MaxHistBuckets distinct " +
                   "anti-attribute values in one key's state — the anti attribute " +
                   "is not domain-bounded within its equality key; state would " +
                   "grow with the stream. Use a batch EMF pass instead.")
             }
+            val micro = r.getSeq[Any](nKeys + 1)
+            val raw = r.getSeq[Any](nKeys + 2)
             var i = 0
             while (i < specs.length) {
-              fold(cells(i), r.micro(i), r.raw(i), specs(i).name)
+              fold(cells(i), Option(micro(i)).map(_.asInstanceOf[Long]),
+                Option(raw(i)).map(_.asInstanceOf[Double]), specs(i).name)
               i += 1
             }
           }
           st.ver += 1
           state.update(st)
-          emitCrossKey(key, st, specs, nBase)
-      }
-
-    fromJson(emitted, eqAttrs.map(cols.field) ++ Seq(cols.field(antiAttr)) ++
-      slots.map(cols.outField))
+          emitCrossKey(key, eqAttrs.size, st, specs, nBase, outTypes)
+      }(Encoders.kryo[CrossState], Encoders.row(out))
   }
 
   /** Cluster-scale SHARDED lowering of the KEYLESS (E = ∅) global
@@ -858,7 +906,10 @@ object EmfStreaming {
     * EmfStreamingSpec. Emits one `__nrows` column (the key's running
     * row count, strictly increasing per emission) as the snapshot's
     * latest-version marker. */
-  def planCrossGroupShardedKeyless(q: EmfQuery, stream: DataFrame): DataFrame = {
+  def planCrossGroupShardedKeyless(q: EmfQuery, stream: DataFrame): DataFrame =
+    inForm(shardedKeylessFrame(q, stream), graft.Gates.interpret(stream))
+
+  private def shardedKeylessFrame(q: EmfQuery, stream: DataFrame): DataFrame = {
     installLocalFs(stream)
     val schema = stream.schema
     val (simpleVars, winVars, depVars) = EmfPlanner.classifyVars(q, schema)
@@ -961,7 +1012,8 @@ object EmfStreaming {
       .select(q.select.map(col): _*)
   }
 
-  /** Emit one JSON row per (key, anti value): base slots straight from
+  /** Emit one row per (key, anti value), led by the key's first `nKey`
+    * fields and the anti value: base slots straight from
     * the group's accumulators; complement slots combine ALL-BUT-SELF over
     * the key's per-group partials — `complement(gᵢ) = ⊕_{j≠i} own(gⱼ)`,
     * rendered from a strict-prefix ⊕ strict-suffix pair per slot (the
@@ -971,24 +1023,23 @@ object EmfStreaming {
     * min/max it is the identity that subtraction CANNOT express (min has
     * no inverse), which is what lets non-subtractable complements stream
     * incrementally — the round-12 residue this closed. */
-  private def emitCrossKey(key: String, st: CrossState,
-      specs: Array[SlotSpec], nBase: Int): Iterator[(String, Long)] = {
+  private def emitCrossKey(key: Row, nKey: Int, st: CrossState,
+      specs: Array[SlotSpec], nBase: Int, outTypes: Array[DataType]): Iterator[Row] = {
     val entries = st.groups.entrySet().asScala.toArray
     val cells = entries.map(_.getValue)
     val comps = (nBase until specs.length).map(strictPrefixSuffix(cells, _))
-    val keyInner = key.substring(1, key.length - 1)
     entries.indices.map { i =>
-      val anti = entries(i).getKey
-      val sb = new StringBuilder(96).append('{')
-      if (keyInner.nonEmpty) sb.append(keyInner).append(',')
-      sb.append(anti.substring(1, anti.length - 1))
+      val row = new Array[Any](outTypes.length)
+      (0 until nKey).foreach(k => row(k) = key.get(k))
+      row(nKey) = entries(i).getKey
       specs.indices.foreach { j =>
         val v =
           if (j < nBase) cells(i)(j)
           else { val (pre, suf) = comps(j - nBase); val c = pre(i).copy; c.add(suf(i)); c }
-        sb.append(",\"").append(specs(j).name).append("\":").append(render(specs(j), v))
+        row(nKey + 1 + j) = render(specs(j), v, outTypes(nKey + 1 + j))
       }
-      (sb.append('}').toString, st.ver)
+      row(row.length - 1) = st.ver
+      new GenericRow(row): Row
     }.iterator
   }
 
@@ -1040,33 +1091,40 @@ object EmfStreaming {
     case _       => in // min/max
   }
 
-  /** Render one aggregate value — same null/zero semantics and arithmetic
-    * as the batch lowering (sum/min/max over an empty set → null; count →
-    * 0; avg guards the zero denominator). */
-  private def render(s: SlotSpec, c: SlotAcc): String = s.func match {
-    case "count" => c.cnt.toString
+  /** One aggregate value, typed as its output field `out` — same
+    * null/zero semantics and arithmetic as the batch lowering
+    * (sum/min/max over an empty set → null; count → 0; avg guards the
+    * zero denominator). */
+  private def render(s: SlotSpec, c: SlotAcc, out: DataType): Any = s.func match {
+    case "count" => c.cnt
+    case _ if c.cnt == 0 => null
     case "sum" =>
-      if (c.cnt == 0) "null"
-      else if (s.floating)
-        java.lang.Double.toString(
-          new java.math.BigDecimal(c.sumMicro.bigInteger, 6).doubleValue())
-      else (c.sumMicro / 1000000).toString
-    case "avg" =>
-      if (c.cnt == 0) "null"
+      if (s.floating) decimalDouble(c.sumMicro)
       else {
-        val sum =
-          if (s.floating)
-            new java.math.BigDecimal(c.sumMicro.bigInteger, 6).doubleValue()
-          else (c.sumMicro / 1000000).toDouble
-        java.lang.Double.toString(sum / c.cnt)
+        val v = c.sumMicro / 1000000
+        if (!v.isValidLong) throw new IllegalStateException(
+          s"streaming EMF: sum $v of slot ${s.name} exceeds bigint")
+        v.toLong
       }
-    case "min" =>
-      if (c.cnt == 0) "null"
-      else if (s.integral) (c.mnMic / 1000000).toString // exact above 2^53
-      else java.lang.Double.toString(c.mn)
-    case "max" =>
-      if (c.cnt == 0) "null"
-      else if (s.integral) (c.mxMic / 1000000).toString
-      else java.lang.Double.toString(c.mx)
+    case "avg" =>
+      (if (s.floating) decimalDouble(c.sumMicro) else (c.sumMicro / 1000000).toDouble) / c.cnt
+    // min/max: integral slots exact above 2^53, in their input type
+    case "min" => if (s.integral) narrow(c.mnMic / 1000000, out) else real(c.mn, out)
+    case "max" => if (s.integral) narrow(c.mxMic / 1000000, out) else real(c.mx, out)
   }
+
+  /** An exact decimal-6 micro-unit sum as a double. */
+  private def decimalDouble(micro: BigInt): Double =
+    new java.math.BigDecimal(micro.bigInteger, 6).doubleValue()
+
+  /** A long as a value of the integral type `t`. */
+  private def narrow(v: Long, t: DataType): Any = t match {
+    case ByteType => v.toByte
+    case ShortType => v.toShort
+    case IntegerType => v.toInt
+    case _ => v
+  }
+
+  /** A double as a value of the floating type `t`. */
+  private def real(v: Double, t: DataType): Any = if (t == FloatType) v.toFloat else v
 }

@@ -15,7 +15,10 @@ import graft.emf.{EmfPlanner, EmfStreaming, GoldenQueries}
   * domain-bound guards promise stays bounded (state rows ≤ groups ×
   * value-domain, independent of stream length — the claim this run
   * certifies on real volume), next to the checkpoint write path's median
-  * per-trigger state-store commit and WAL commit ms. Usage:
+  * per-trigger state-store commit and WAL commit ms. Each case first
+  * prints `form=interpreted|compiled sourceBytes=N`: the execution form
+  * the interpret gate chose for the stream and the source bytes it
+  * probed. Usage:
   *   runMain graft.tools.StreamVolume <sfDir> [nChunks]
   */
 object StreamVolume {
@@ -66,14 +69,16 @@ object StreamVolume {
         |{MF.cust.avg_quant_oth}[!=]{cust},{MF.cust.min_quant_oth}[!=]{cust}""".stripMargin,
       graft.Tables.salesView(spark, sfDir).schema.fieldNames.toSet)
 
-    // a lowering: the streaming frame plus the class it was routed as
-    type Lower = (graft.emf.EmfQuery, DataFrame) => (DataFrame, String)
-    val auto: Lower = (q, df) => {
-      val p = EmfStreaming.planAuto(q, df)
-      (p.df, p.lowering)
+    // a lowering: the streaming frame, the class it was routed as, the
+    // execution form and the probed source bytes
+    type Lower = (graft.emf.EmfQuery, DataFrame) => EmfStreaming.StreamingPlan
+    val auto: Lower = EmfStreaming.planAuto
+    val sharded: Lower = (q, df) => {
+      val lowered = EmfStreaming.planCrossGroupShardedKeyless(q, df)
+      EmfStreaming.StreamingPlan(lowered, usesSnapshot = false, "sharded-keyless",
+        if (EmfPlanner.isInterpreted(lowered)) "interpreted" else "compiled",
+        graft.Gates.sourceBytes(df))
     }
-    val sharded: Lower = (q, df) =>
-      (EmfStreaming.planCrossGroupShardedKeyless(q, df), "sharded-keyless")
     val defaultSnap: (DataFrame, graft.emf.EmfQuery) => DataFrame =
       EmfStreaming.snapshot
     val allCases = Seq[(String, graft.emf.EmfQuery, Lower,
@@ -119,7 +124,7 @@ object StreamVolume {
     locally {
       val (_, q, planFn, _) = allCases.head
       val warm = MemoryStream[SaleRow](spark)
-      val wq = planFn(q, warm.toDF())._1
+      val wq = planFn(q, warm.toDF()).df
         .writeStream.format("memory").queryName("sv_warmup")
         .outputMode(OutputMode.Update).start()
       try {
@@ -136,8 +141,11 @@ object StreamVolume {
         .option("maxFilesPerTrigger", "1").parquet(stageDir)
       // runIdx suffix: repeated cases (profiling) get fresh sink dirs
       val sinkDir = s"$workRoot/sv_${name}_$runIdx"
-      val (lowered, lowering) = planFn(q, src)
-      val sq = lowered
+      val plan = planFn(q, src)
+      val lowering = plan.lowering
+      println(s"[streamvol] $name form=${plan.form} " +
+        s"sourceBytes=${plan.sourceBytes.getOrElse("unbounded")}")
+      val sq = plan.df
         .writeStream
         .foreachBatch { (df: DataFrame, _: Long) =>
           df.write.mode("append").parquet(sinkDir)

@@ -436,6 +436,25 @@ class EmfPlannerSpec extends SparkSpec {
     rejects(maxPerKey -> "0", buckets -> "-3")(buckets, "-3")
     val tooMany = (Int.MaxValue.toLong + 1).toString
     rejects(maxPerKey -> "0", buckets -> tooMany)(buckets, tooMany)
+    val pastLong = (BigInt(Long.MaxValue) + 1).toString
+    rejects(interpret -> pastLong)(interpret, pastLong)
+    // the two interpret values that decide without a probe: 0 forces the
+    // compiled form and Long.MaxValue the interpreted one, also over a
+    // fact whose leaves report no size (an RDD-backed frame reports
+    // spark.sql.defaultSizeInBytes, Long.MaxValue); at the default T that
+    // fact counts as too big
+    val unsized = spark.createDataFrame(sales.rdd, sales.schema)
+    assert(graft.Gates.leafBytes(unsized) >= BigInt(Long.MaxValue))
+    def form(t: Option[String], fact: org.apache.spark.sql.DataFrame): Boolean = {
+      t.foreach(spark.conf.set(interpret, _))
+      try EmfPlanner.isInterpreted(EmfPlanner.plan(q, fact))
+      finally spark.conf.unset(interpret)
+    }
+    assert(form(Some(Long.MaxValue.toString), unsized))
+    assert(form(Some(Long.MaxValue.toString), sales))
+    assert(!form(None, unsized))
+    assert(form(None, sales))
+    assert(!form(Some("0"), sales))
   }
 
   test("the salt gate's hot-key stat: none below its floor, one memo entry above it") {

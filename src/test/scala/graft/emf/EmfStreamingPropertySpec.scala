@@ -18,7 +18,8 @@ case class SNPropRow(g: String, h: String, ord: Int, state: String, x: Option[In
   * equal the batch planner on the rows seen so far — the strongest form
   * of the incremental contract (revisions and retractions included),
   * checked against an independently fuzzed planner (EmfPropertySpec
-  * pins the planner itself against BruteEmf).
+  * pins the planner itself against BruteEmf). Every query runs in both
+  * execution forms, forced through the interpret gate's conf.
   */
 class EmfStreamingPropertySpec extends SparkSpec {
   import spark.implicits._
@@ -205,15 +206,20 @@ class EmfStreamingPropertySpec extends SparkSpec {
   /** Depth multiplier, same convention as EmfPropertySpec. */
   private val fuzzN = sys.env.get("GRAFT_FUZZ_N").map(_.toInt).getOrElse(1)
 
+  /** The interpret gate's conf value forcing each execution form. */
+  private val forms = Seq("compiled" -> "0", "interpreted" -> Long.MaxValue.toString)
+
   private def check[T <: Product : org.apache.spark.sql.Encoder](q: EmfQuery,
       planFn: (EmfQuery, org.apache.spark.sql.DataFrame) =>
         org.apache.spark.sql.DataFrame,
-      rows: Seq[T], complete: Boolean): Unit = {
+      rows: Seq[T], complete: Boolean, form: String): Unit = {
     EmfParser.validate(q, factCols)
     qId += 1
     val name = s"emf_sprop_$qId"
     val stream = MemoryStream[T](spark)
-    val sq = planFn(q, stream.toDF())
+    val lowered = planFn(q, stream.toDF())
+    assert(EmfPlanner.isInterpreted(lowered) == (form == "interpreted"), form)
+    val sq = lowered
       .writeStream.format("memory").queryName(name)
       .outputMode(if (complete) OutputMode.Complete else OutputMode.Update)
       .start()
@@ -230,13 +236,15 @@ class EmfStreamingPropertySpec extends SparkSpec {
             .orderBy(cols.map(org.apache.spark.sql.functions.col): _*)
             .collect().toSeq
           // complete mode: the memory table IS the current result;
-          // update mode: per-group latest emission via snapshot(__ver)
+          // update mode: per-group latest emission via snapshot(__ver).
+          // The table lives in the session that started the query.
+          val sink = sq.sparkSession.table(name)
           val snap =
-            if (complete) ordered(spark.table(name))
-            else ordered(EmfStreaming.snapshot(spark.table(name), q))
+            if (complete) ordered(sink)
+            else ordered(EmfStreaming.snapshot(sink, q))
           val batchR = ordered(EmfPlanner.plan(q, spark.createDataset(all).toDF()))
           assert(snap == batchR,
-            s"batch $bi diverged\nquery=$q\nsnap=$snap\nbatch=$batchR")
+            s"$form batch $bi diverged\nquery=$q\nsnap=$snap\nbatch=$batchR")
           all
         }
     } finally sq.stop()
@@ -252,17 +260,20 @@ class EmfStreamingPropertySpec extends SparkSpec {
     (0 until n).foreach { i =>
       val rows = sample(Gen.listOfN(36, rowG), seed0 + 31 * i)
       val q = sample(gen, seed0 + 1000 + i)
-      try check(q, planFn, rows, complete)
-      catch {
-        case e: AssertionError => throw e
-        case e: Throwable =>
-          throw new AssertionError(s"$label query $i failed\nquery=$q", e)
+      forms.foreach { case (form, maxBytes) =>
+        spark.conf.set("spark.graft.emf.interpret.maxBytes", maxBytes)
+        try check(q, planFn, rows, complete, form)
+        catch {
+          case e: AssertionError => throw e
+          case e: Throwable =>
+            throw new AssertionError(s"$label query $i ($form) failed\nquery=$q", e)
+        } finally spark.conf.unset("spark.graft.emf.interpret.maxBytes")
       }
     }
 
   /** Null-bearing row stream: nulls in the grouping/filter columns and
     * the aggregate column (ord stays non-null — the windowed boundary).
-    * Exercises the streaming null machinery: JSON state keys over null
+    * Exercises the streaming null machinery: typed state keys over null
     * key fields, guarded projections folding null aggregates, and the
     * batch planner's null-safe lowerings on the comparison side. */
   private val nullRowGen: Gen[SNPropRow] = for {

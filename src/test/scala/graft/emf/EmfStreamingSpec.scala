@@ -710,6 +710,9 @@ class EmfStreamingSpec extends SparkSpec {
     def route(q: EmfQuery): (Boolean, String) = {
       val stream = MemoryStream[SalesRow](spark)
       val p = EmfStreaming.planAuto(q, stream.toDF())
+      // state keys and emitted rows are typed: no JSON round trip
+      val analyzed = p.df.queryExecution.analyzed.toString
+      assert(!analyzed.contains("to_json") && !analyzed.contains("from_json"), analyzed)
       // identify the lowering by its output shape: plain aggregations
       // carry no __ver; emission streams do
       (p.usesSnapshot, if (p.df.columns.contains("__ver")) "ver" else "agg")
@@ -998,6 +1001,107 @@ class EmfStreamingSpec extends SparkSpec {
     assert(last == batch)
   }
 
+  // ---- execution form (the interpret gate at stream start) ----------------
+
+  private val interpretKey = "spark.graft.emf.interpret.maxBytes"
+
+  /** The interpret gate's conf value forcing each execution form. */
+  private val forms = Seq("compiled" -> "0", "interpreted" -> Long.MaxValue.toString)
+
+  private val codegenOff = Map(
+    "spark.sql.codegen.wholeStage" -> "false",
+    "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")
+
+  /** What one file-source run of [[fileSourceRun]] observed. */
+  private final class FileRun(val plan: EmfStreaming.StreamingPlan, val snapshot: Seq[Row],
+      val compiles: Long, val batchConfs: Map[String, Option[String]],
+      val listedByCaller: Boolean, val listedByFrame: Boolean)
+
+  /** `q` through `planAuto` over the parquet dir `dir`, one file per
+    * trigger, into a `foreachBatch` sink: the plan, the snapshot of its
+    * emissions, the codegen compiles the run added, the codegen confs
+    * of the micro-batches' session, and which `StreamingQueryManager`s
+    * listed the running query. */
+  private def fileSourceRun(q: EmfQuery, dir: String, schema: StructType): FileRun = {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    val src = spark.readStream.schema(schema).option("maxFilesPerTrigger", "1").parquet(dir)
+    val sp = EmfStreaming.planAuto(q, src)
+    val emitted = ListBuffer[Row]()
+    var confs = Map.empty[String, Option[String]]
+    val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val sq = sp.df.writeStream.foreachBatch { (df: DataFrame, _: Long) =>
+      confs = codegenOff.keys.map(k => k -> df.sparkSession.conf.getOption(k)).toMap
+      emitted ++= df.collect(); ()
+    }.outputMode(OutputMode.Update).start()
+    val listed = (spark.streams.active.exists(_.id == sq.id),
+      sp.df.sparkSession.streams.active.exists(_.id == sq.id))
+    try sq.processAllAvailable() finally sq.stop()
+    val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+    val order = q.groupAttrs.map(org.apache.spark.sql.functions.col)
+    val snap = EmfStreaming.snapshot(spark.createDataFrame(emitted.asJava, sp.df.schema), q)
+      .orderBy(order: _*).collect().toSeq
+    new FileRun(sp, snap, compiles, confs, listed._1, listed._2)
+  }
+
+  test("a below-T parquet-dir stream runs interpreted from its first trigger") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-src").toFile
+    try {
+      // one file: the first trigger is the whole run
+      rows.toDF().coalesce(1).write.mode("overwrite").parquet(dir.toString)
+      val schema = spark.read.parquet(dir.toString).schema
+      val probe = graft.Gates.leafBytes(spark.read.schema(schema).parquet(dir.toString))
+      assert(probe > 0 && probe < BigInt(graft.Gates.InterpretMaxBytes), probe)
+      val batch = EmfPlanner.plan(q8Q, rows.toDF())
+        .orderBy("cust", "month").collect().toSeq
+
+      val interp = fileSourceRun(q8Q, dir.toString, schema)
+      assert(interp.plan.form == "interpreted" && interp.plan.sourceBytes.contains(probe))
+      assert(EmfPlanner.isInterpreted(interp.plan.df))
+      // the stream's own session, which runs the micro-batches a
+      // foreachBatch sink receives, holds both codegen keys
+      assert(interp.batchConfs == codegenOff.map { case (k, v) => k -> Some(v) })
+      // the query belongs to the session copy's StreamingQueryManager
+      assert(interp.listedByFrame && !interp.listedByCaller)
+      assert(interp.snapshot == batch && batch.nonEmpty)
+
+      spark.conf.set(interpretKey, "0")
+      val compiled = try fileSourceRun(q8Q, dir.toString, schema)
+        finally spark.conf.unset(interpretKey)
+      assert(compiled.plan.form == "compiled" && compiled.plan.sourceBytes.contains(probe))
+      assert(compiled.plan.df.sparkSession eq spark)
+      assert(compiled.batchConfs.values.forall(v => !codegenOff.values.exists(v.contains)))
+      assert(compiled.listedByCaller && compiled.listedByFrame)
+      assert(compiled.snapshot == batch)
+      assert(interp.compiles < compiled.compiles,
+        s"interpreted ${interp.compiles} vs compiled ${compiled.compiles} compiles")
+    } finally FileUtils.deleteQuietly(dir)
+  }
+
+  test("a stream of unknown size stays compiled; the conf forces either form") {
+    val unsized = MemoryStream[SalesRow](spark).toDF()
+    val sp = EmfStreaming.planAuto(windowedQ, unsized)
+    assert(sp.form == "compiled" && sp.sourceBytes.isEmpty)
+    assert(!EmfPlanner.isInterpreted(sp.df) && (sp.df.sparkSession eq spark))
+    // every public lowering passes through the gate
+    def lowerings(): Seq[DataFrame] = Seq(
+      EmfStreaming.planAuto(windowedQ, unsized).df,
+      EmfStreaming.plan(simpleQ, unsized),
+      EmfStreaming.planKeyed(dependentQ, unsized),
+      EmfStreaming.planCrossGroup(crossQ, unsized),
+      EmfStreaming.planCrossGroupShardedKeyless(EmfParser.parseOne(
+        """cust,min_quant_oth
+          |1
+          |cust
+          |min_quant_oth
+          |{MF.cust.min_quant_oth}[!=]{cust}""".stripMargin, cols), unsized))
+    assert(lowerings().forall(!EmfPlanner.isInterpreted(_)))
+    spark.conf.set(interpretKey, Long.MaxValue.toString)
+    try {
+      assert(lowerings().forall(EmfPlanner.isInterpreted))
+      assert(EmfStreaming.planAuto(windowedQ, unsized).form == "interpreted")
+    } finally spark.conf.unset(interpretKey)
+  }
+
   // ---- checkpoint write path (graft.io.LocalFs) ---------------------------
 
   private val stockFs = classOf[org.apache.hadoop.fs.local.LocalFs].getName
@@ -1032,48 +1136,57 @@ class EmfStreamingSpec extends SparkSpec {
     }.mkString(s"${starts.size} process starts, e.g.:\n", "\n", "")
 
   /** `windowedQ` through `planAuto` on `session`: three triggers into a
-    * memory sink on the default temporary checkpoint; the snapshot. */
+    * memory sink on the default temporary checkpoint; the snapshot. The
+    * frame's session, the interpreted copy included, carries the
+    * caller's checkpoint filesystem. */
   private def threeTriggers(session: SparkSession, name: String): Seq[Row] = {
     val stream = MemoryStream[SalesRow](session)
     val sp = EmfStreaming.planAuto(windowedQ, stream.toDF())
+    assert(sp.df.sparkSession.conf.get(LocalFs.ImplKey) == session.conf.get(LocalFs.ImplKey))
     val sq = sp.df.writeStream.format("memory").queryName(name)
       .outputMode(OutputMode.Update).start()
     try rows.grouped(2).foreach { c => stream.addData(c); sq.processAllAvailable() }
     finally sq.stop()
-    EmfStreaming.snapshot(session.table(name), windowedQ)
+    EmfStreaming.snapshot(sq.sparkSession.table(name), windowedQ)
       .orderBy("cust", "month").collect().toSeq
   }
 
   test("streaming EMF commits state and WAL without forking a process") {
     val batch = windowedBatch(rows)
-    val graftSession = spark.newSession()
-    // unrecorded: JVM one-offs (Hadoop's Shell class init probes setsid)
-    assert(threeTriggers(graftSession, "emf_fork_warm") == batch)
-    assert(graftSession.conf.get(LocalFs.ImplKey) == classOf[LocalFs].getName)
-    val graftStarts = processStarts {
-      assert(threeTriggers(graftSession, "emf_fork_graft") == batch)
+    forms.foreach { case (form, maxBytes) =>
+      val graftSession = spark.newSession()
+      graftSession.conf.set(interpretKey, maxBytes)
+      // unrecorded: JVM one-offs (Hadoop's Shell class init probes setsid)
+      assert(threeTriggers(graftSession, s"emf_fork_warm_$form") == batch)
+      assert(graftSession.conf.get(LocalFs.ImplKey) == classOf[LocalFs].getName)
+      val graftStarts = processStarts {
+        assert(threeTriggers(graftSession, s"emf_fork_graft_$form") == batch)
+      }
+      assert(graftStarts.isEmpty, s"$form: ${forkReport(graftStarts)}")
+      // the same query on Hadoop's own LocalFs forks: the guard above is
+      // not vacuous, and a user's setting is respected
+      val stockSession = spark.newSession()
+      stockSession.conf.set(interpretKey, maxBytes)
+      stockSession.conf.set(LocalFs.ImplKey, stockFs)
+      val stockStarts = processStarts {
+        assert(threeTriggers(stockSession, s"emf_fork_stock_$form") == batch)
+      }
+      assert(stockSession.conf.get(LocalFs.ImplKey) == stockFs)
+      assert(stockStarts.exists(frames(_).contains("org.apache.hadoop.util.Shell.runCommand")),
+        s"$form: ${forkReport(stockStarts)}")
     }
-    assert(graftStarts.isEmpty, forkReport(graftStarts))
-    // the same query on Hadoop's own LocalFs forks: the guard above is not
-    // vacuous, and a user's setting is respected
-    val stockSession = spark.newSession()
-    stockSession.conf.set(LocalFs.ImplKey, stockFs)
-    val stockStarts = processStarts {
-      assert(threeTriggers(stockSession, "emf_fork_stock") == batch)
-    }
-    assert(stockSession.conf.get(LocalFs.ImplKey) == stockFs)
-    assert(stockStarts.exists(frames(_).contains("org.apache.hadoop.util.Shell.runCommand")),
-      forkReport(stockStarts))
   }
 
   /** `q` for two triggers with `first` as the session's `file:`
     * filesystem, stopped, then restarted on the same checkpoint under
     * `second` for one more trigger (None: the key is unset, so `planAuto`
-    * installs graft's). Asserts snapshot == batch over all rows; returns
-    * the checkpoint's file listing. */
+    * installs graft's), in the execution form `maxBytes` forces. Asserts
+    * snapshot == batch over all rows; returns the checkpoint's file
+    * listing. */
   private def restartAcross(q: EmfQuery, first: Option[String],
-      second: Option[String]): Seq[String] = {
+      second: Option[String], maxBytes: String): Seq[String] = {
     val session = spark.newSession()
+    session.conf.set(interpretKey, maxBytes)
     val stream = MemoryStream[SalesRow](session)
     val checkpoint = java.nio.file.Files.createTempDirectory("graft-ckpt").toFile
     val emitted = ListBuffer[Row]()
@@ -1081,7 +1194,9 @@ class EmfStreamingSpec extends SparkSpec {
     def run(impl: Option[String], chunks: Seq[Seq[SalesRow]]): Unit = {
       impl.fold(session.conf.unset(LocalFs.ImplKey))(session.conf.set(LocalFs.ImplKey, _))
       val sp = EmfStreaming.planAuto(q, stream.toDF())
-      assert(session.conf.get(LocalFs.ImplKey) == impl.getOrElse(classOf[LocalFs].getName))
+      Seq(session, sp.df.sparkSession).foreach { s =>
+        assert(s.conf.get(LocalFs.ImplKey) == impl.getOrElse(classOf[LocalFs].getName))
+      }
       schema = sp.df.schema
       val sq = sp.df.writeStream.option("checkpointLocation", checkpoint.toString)
         .foreachBatch { (df: DataFrame, _: Long) => emitted ++= df.collect(); () }
@@ -1106,10 +1221,10 @@ class EmfStreamingSpec extends SparkSpec {
 
   test("a checkpoint restarts across graft's and Hadoop's local filesystems") {
     // one query per state shape of planKeyed: windowed, dependent (q6),
-    // chained (q8)
-    Seq(windowedQ, dependentQ, q8Q).foreach { q =>
-      val graftThenStock = restartAcross(q, None, Some(stockFs))
-      val stockThenGraft = restartAcross(q, Some(stockFs), None)
+    // chained (q8), in both execution forms
+    for (q <- Seq(windowedQ, dependentQ, q8Q); (_, maxBytes) <- forms) {
+      val graftThenStock = restartAcross(q, None, Some(stockFs), maxBytes)
+      val stockThenGraft = restartAcross(q, Some(stockFs), None, maxBytes)
       assert(graftThenStock == stockThenGraft) // one checkpoint layout
       assert(graftThenStock.exists(_.matches("state/0/\\d+/\\.1\\.delta\\.crc")),
         graftThenStock)
