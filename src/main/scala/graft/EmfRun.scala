@@ -39,16 +39,7 @@ object EmfRun {
       .filterNot(factPath.contains).filterNot(saveDir.contains).headOption
       .getOrElse("/root/testdata/sf0.001")
     val explain = args.contains("--explain")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-emf")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession(Seq("spark.app.name" -> "graft-emf"))
     val text = new String(java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get(specFile)), "UTF-8")
     val fact = factPath match {

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** CLI: print the formatted physical plan of any SparkEntry query —
   * `runMain graft.Explain q1_pricing emf_q6 [sfDir] [--executed]`. Used
   * to audit that plans have the shape the scale design claims: filters
@@ -18,15 +16,7 @@ object Explain {
     val (names, dirs) = args.filterNot(_ == "--executed")
       .partition(!_.startsWith("/"))
     val sfDir = dirs.headOption.getOrElse("/root/testdata/sf0.001")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession(logLevel = "ERROR")
     val targets = if (names.isEmpty) SparkEntry.queries.keys.toSeq.sorted else names.toSeq
     targets.foreach { n =>
       SparkEntry.queries.get(n) match {

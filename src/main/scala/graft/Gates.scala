@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
   * choice lives here; the two plans live with their operators.
   *
   * One probe ([[leafBytes]]), one hot-key estimator ([[maxRowsPerKey]])
-  * behind one memo ([[hotKeyMemo]]), one skew decision ([[skewed]]) and
+  * behind one memo ([[Memo.hotKeys]]), one skew decision ([[skewed]]) and
   * one conf reader ([[long]]) serve the five gates:
   *
   * | gate | picks | probe | default | conf key | default measured in (BASELINE.md) |
@@ -95,7 +95,7 @@ object Gates {
     * documented worst case instead of paying a certain stat scan on every
     * small run (round 14: q21 at sf0.1 back from 1.48 s with a per-run
     * sample to 0.88 s). Above the floor the stat runs at most once per
-    * (session, frame, key) ([[hotKeyMemo]]). */
+    * (session, frame, key) ([[Memo.hotKeys]]). */
   val Q21StatMinBytes: Long = 1L << 30
 
   /** Sum of leaf-relation size estimates in the frame's ANALYZED plan —
@@ -184,35 +184,24 @@ object Gates {
         leafBytes(df) > BigInt(statMinBytes) &&
         maxRowsPerKey(df, keys) > maxPerKey)
 
-  /** Memo for [[maxRowsPerKey]], keyed by (session UUID, frame identity,
-    * keys). The hot-key ceiling is a property of the (filtered) source
-    * table, not of the query, so one measurement serves every later build
-    * over the same frame — identical rebuilds share the entry,
-    * differently-filtered frames never do — and the session UUID keeps an
-    * estimate from outliving its session. Bounded by the distinct frames
-    * sampled, and only frames above a stat floor are sampled. */
-  private[graft] val hotKeyMemo =
-    new java.util.concurrent.ConcurrentHashMap[(String, String, Seq[String]), java.lang.Long]()
-
   /** Order-of-magnitude estimate of the hottest `keys` value's row count
     * from a 0.1% Bernoulli sample (fixed seed → deterministic on a fixed
     * layout): a key with f rows lands ~f/1000 sampled rows, so
     * max(sampleCount)·1000 resolves "7 rows" vs "10 million rows" — the
     * only distinction a skew gate needs. One driver-side job per
-    * (session, frame, keys) ([[hotKeyMemo]]); at warehouse scale this
-    * would be a table-statistics read. */
-  def maxRowsPerKey(df: DataFrame, keys: Seq[String]): Long = {
-    val id = (org.apache.spark.sql.graftbridge.CatalystBridge.sessionId(df.sparkSession),
-      frameIdentity(df), keys)
-    val cached = hotKeyMemo.get(id)
-    if (cached != null) return cached.longValue
-    val p = 0.001
-    val m = df.sample(p, seed = 42L).groupBy(keys.map(col): _*)
-      .agg(count(lit(1)).as("c")).agg(max(col("c"))).collect()(0)
-    val est = if (m.isNullAt(0)) 0L else (m.getLong(0) / p).toLong
-    hotKeyMemo.put(id, java.lang.Long.valueOf(est))
-    est
-  }
+    * (session, frame, keys): the estimate is memoized in [[Memo.hotKeys]].
+    * The hot-key ceiling is a property of the (filtered) source table, not
+    * of the query, so one measurement serves every later build over the
+    * same frame — identical rebuilds share the entry, differently-filtered
+    * frames never do. Only frames above a stat floor are sampled. At
+    * warehouse scale this would be a table-statistics read. */
+  def maxRowsPerKey(df: DataFrame, keys: Seq[String]): Long =
+    Memo.hotKeys(df.sparkSession, (frameIdentity(df), keys)) {
+      val p = 0.001
+      val m = df.sample(p, seed = 42L).groupBy(keys.map(col): _*)
+        .agg(count(lit(1)).as("c")).agg(max(col("c"))).collect()(0)
+      if (m.isNullAt(0)) 0L else (m.getLong(0) / p).toLong
+    }
 
   /** A frame's file-source root paths plus its analyzed-plan semantic
     * hash (the hash alone for non-file frames). */

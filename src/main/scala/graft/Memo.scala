@@ -1,0 +1,179 @@
+package graft
+
+import scala.collection.concurrent.TrieMap
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.ann.{FixedPointAnn, KMeans}
+import graft.dedup.Dedup
+import graft.emf.GoldenQueries
+import graft.operators.{Layout, Mining}
+
+/** One value per (session, key), built on first use and kept until it is
+  * evicted. Every memo graft keeps across queries is declared in the
+  * [[Memo$ Memo]] object; the build stays with the module that owns it and
+  * is passed at the call site.
+  *
+  * @param family the memos evicted together: the owning module's name
+  * @param consumers the `SparkEntry.queries` entries that read this memo
+  * @param shared the `_shared_*` bench line that builds it, if any
+  * @param release how a value gives its storage back; None for a value
+  *   that holds none (a table name, a count)
+  */
+final class Memo[K, V] private (val family: String, val consumers: Seq[String],
+    val shared: Option[Memo.Shared], release: Option[V => Unit]) {
+
+  private val bySession = TrieMap[SparkSession, TrieMap[K, V]]()
+
+  /** The value for (`s`, `k`), built by `build` on the first call. */
+  def apply(s: SparkSession, k: K)(build: => V): V =
+    bySession.getOrElseUpdate(s, TrieMap.empty[K, V]).getOrElseUpdate(k, build)
+
+  def holdsFrames: Boolean = release.isDefined
+  def values: Iterable[V] = bySession.values.flatMap(_.values)
+  def size: Int = bySession.values.map(_.size).sum
+  def isEmpty: Boolean = size == 0
+
+  /** Release every value and forget it; the next call rebuilds. */
+  def evict(): Unit = {
+    release.foreach(r => values.foreach(r))
+    bySession.clear()
+  }
+}
+
+/** The memo registry: which values outlive a query, who consumes them and
+  * when they die.
+  *
+  * Lifetime policy: a bench sweep runs its entries in name order, so each
+  * shared frame is built right BEFORE its first consumer and each family
+  * is evicted right AFTER its last consumer ([[schedule]]) — instead of
+  * building everything upfront and holding every cache to the end, which
+  * put the whole cached working set's memory pressure (eviction churn +
+  * GC) on every mid-sweep query at sf10 (dedup_embcos read 3× its
+  * standalone time under r9's build-all-then-sweep policy).
+  *
+  * The build/evict POINTS are DERIVED from each memo's declared consumer
+  * list (first/last consumer in sweep order) — hardcoding the points
+  * themselves silently shifted shared-build billing when a consumer
+  * landed earlier/later in the alphabet (round-11 advice). The consumer
+  * lists are the single source of truth; Bench validates every name
+  * against the query surface so a renamed or removed consumer fails the
+  * sweep loudly instead of mis-deriving billing. A query newly consuming
+  * a family without being added to its list only costs a visible
+  * rebuild, never a wrong result (the memos rebuild on demand).
+  *
+  * A family is evicted after the last consumer of any of its memos, and
+  * only if it holds frames: dropping a table name (Layout) or an estimate
+  * (Gates) frees nothing, so those wait for [[evictAll]]. Every memo is
+  * declared below, in this object, so listing [[all]] never depends on
+  * which modules happen to be initialized.
+  */
+object Memo {
+
+  /** A `_shared_*` bench line: `run` builds its memo for one data dir and
+    * counts what it built, so the build is billed to this line rather than
+    * to whichever consumer the name sort runs first. */
+  final case class Shared(name: String, run: (SparkSession, String) => Long)
+
+  private def ofFrames[K](family: String, consumers: Seq[String] = Nil,
+      shared: Shared = null): Memo[K, DataFrame] =
+    new Memo(family, consumers, Option(shared), Some(_.unpersist(blocking = false)))
+
+  private def ofValues[K, V](family: String, consumers: Seq[String] = Nil,
+      shared: Shared = null): Memo[K, V] =
+    new Memo(family, consumers, Option(shared), None)
+
+  val ngramPairs: Memo[String, DataFrame] = ofFrames("Dedup",
+    Seq("dedup_clusters", "dedup_containment", "dedup_ngram", "dedup_pipeline",
+      "dedup_recall", "split_leakage_safe"),
+    Shared("_shared_ngram_build", Dedup.queriesNgramPairs(_, _).count()))
+  val ccLabels: Memo[String, DataFrame] = ofFrames("Dedup",
+    Seq("dedup_clusters", "split_leakage_safe"),
+    Shared("_shared_cc_labels", Dedup.ccLabelsCached(_, _).count()))
+  /** Frames Dedup caches inside a build or a query, keyed by identity. */
+  val dedupCaches: Memo[DataFrame, DataFrame] = ofFrames("Dedup")
+
+  val embeddings: Memo[String, DataFrame] = ofFrames("Similarity",
+    Seq("dedup_embcos", "dedup_semantic", "emb_hard_negatives", "knn_brute"))
+  val embeddingCount: Memo[String, Long] = ofValues("Similarity")
+
+  val kmeansAssign: Memo[String, DataFrame] = ofFrames("KMeans",
+    Seq("cluster_purity", "cluster_sample", "emb_kmeans", "emb_prototypes"),
+    Shared("_shared_kmeans_assign", KMeans.assignmentCached(_, _).count()))
+
+  val baskets: Memo[String, DataFrame] = ofFrames("Mining")
+  val basketPairs: Memo[String, DataFrame] = ofFrames("Mining",
+    Seq("assoc_rules", "basket_pairs", "graph_pagerank", "graph_pagerank_converged",
+      "graph_triangles"),
+    Shared("_shared_basket_pairs", Mining.pairsCached(_, _).count()))
+
+  val salesView: Memo[String, DataFrame] = ofFrames("GoldenQueries",
+    Seq("emf_batch", "emf_q1", "emf_q2", "emf_q3", "emf_q4", "emf_q5", "emf_q6",
+      "emf_q7", "emf_q8"),
+    Shared("_shared_sales_view", GoldenQueries.salesViewCached(_, _).count()))
+
+  /** (codes, centroids) per (dir, subspaces, k). */
+  val annModels: Memo[(String, Int, Int), (DataFrame, DataFrame)] = new Memo(
+    "FixedPointAnn", Seq("ann_recall", "knn_ivf", "knn_ivfpq", "knn_pq"),
+    Some(Shared("_shared_ann_models", FixedPointAnn.trainModels)),
+    Some { case (codes, cent) =>
+      codes.unpersist(blocking = false); cent.unpersist(blocking = false) })
+
+  val bpeMerges: Memo[String, DataFrame] = ofFrames("Bpe",
+    Seq("bpe_apply", "bpe_fertility", "bpe_train", "tokenize_ids"))
+
+  // One-time partitioned/bucketed ingest writes (round-10 verdict item 4),
+  // memoized as table names: the _shared_ lines bill the writes as the
+  // one-time layout costs they are, so the query lines time only the reads
+  // the layouts exist to serve.
+  val monthPartitioned: Memo[String, String] = ofValues("Layout",
+    Seq("join_dpp", "layout_compact"),
+    Shared("_shared_layout_ingest", (s, d) => { Layout.monthPartitionedLineitem(s, d); 0L }))
+  val compacted: Memo[String, String] = ofValues("Layout", Seq("layout_compact"),
+    Shared("_shared_layout_compact", (s, d) => { Layout.compactedLineitem(s, d); 0L }))
+  val bucketed: Memo[String, (String, String)] = ofValues("Layout", Seq("join_bucketed"),
+    Shared("_shared_bucketed_tables", (s, d) => { Layout.bucketedOrdersCustomer(s, d); 0L }))
+
+  /** Hot-key estimates ([[Gates.maxRowsPerKey]]) per (frame identity, keys). */
+  val hotKeys: Memo[(String, Seq[String]), Long] = ofValues("Gates")
+
+  val all: Seq[Memo[_, _]] = Seq(ngramPairs, ccLabels, dedupCaches, embeddings,
+    embeddingCount, kmeansAssign, baskets, basketPairs, salesView, annModels,
+    bpeMerges, monthPartitioned, compacted, bucketed, hotKeys)
+
+  /** Every `_shared_*` line, in declaration order. */
+  def builds: Seq[Shared] = all.flatMap(_.shared).distinct
+
+  /** Run the `_shared_*` line `name` for `dir`; the rows it counted. */
+  def build(name: String, s: SparkSession, dir: String): Long =
+    builds.find(_.name == name)
+      .getOrElse(throw new NoSuchElementException(s"no shared build $name"))
+      .run(s, dir)
+
+  /** One entry of a sweep: the `_shared_*` lines to run before it and the
+    * families to evict after it. */
+  final case class Step(entry: String, builds: Seq[String], evicts: Seq[String])
+
+  /** The sweep over `entries` in their order: each `_shared_*` line before
+    * the first of its memo's consumers, each family that holds frames
+    * evicted after the last consumer of any of its memos. */
+  def schedule(entries: Seq[String]): Seq[Step] = {
+    val before = all.flatMap(m => m.shared.flatMap(sh =>
+      entries.find(m.consumers.contains).map(_ -> sh.name))).distinct
+      .groupMap(_._1)(_._2)
+    val families = all.groupBy(_.family)
+    val after = all.map(_.family).distinct.filter(families(_).exists(_.holdsFrames))
+      .flatMap(f => entries.findLast(e => families(f).exists(_.consumers.contains(e)))
+        .map(_ -> f))
+      .groupMap(_._1)(_._2)
+    entries.map(e => Step(e, before.getOrElse(e, Nil), after.getOrElse(e, Nil)))
+  }
+
+  /** Evict every memo of `family`. */
+  def evict(family: String): Unit = {
+    val ms = all.filter(_.family == family)
+    require(ms.nonEmpty, s"no memo family $family")
+    ms.foreach(_.evict())
+  }
+
+  /** Evict every memo. */
+  def evictAll(): Unit = all.foreach(_.evict())
+}

@@ -59,16 +59,7 @@ object PipelineRun {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val outDir = args.drop(1).headOption
       .getOrElse(java.nio.file.Files.createTempDirectory("graft_pipeline").toString)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-pipeline")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession(Seq("spark.app.name" -> "graft-pipeline"))
     val out = run(spark, sfDir)
     graft.sources.Sources.writePartitioned(out, outDir, "shard")
     val n = spark.read.parquet(outDir).count()

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -9,22 +8,11 @@ object Verify {
     // dev convenience: extra args restrict the run to the named queries
     // (the driver always runs the full set)
     val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // MB-sized testdata files bin-pack into one scan split at the
-      // 128 MB default, serializing CPU-bound per-row work (see Bench)
-      .config("spark.sql.files.maxPartitionBytes", "4m")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries
-      .filter { case (name, _) => only.isEmpty || only(name) }
-      .foreach { case (name, fn) =>
+    val names = SparkEntry.queries.keys.toSeq.filter(n => only.isEmpty || only(n))
+    Memo.schedule(names).foreach { step =>
+      val name = step.entry
       // progress marker BEFORE the action: a stalled run then names its
       // culprit in the log instead of requiring a thread-dump autopsy
       System.err.println(s"[verify] running $name")
@@ -33,7 +21,7 @@ object Verify {
       // sf10+ dump through coalesce(1) serializes every final stage —
       // the comparator reads <name>/*.parquet either way)
       try {
-        val out0 = fn(spark, sfDir)
+        val out0 = SparkEntry.queries(name)(spark, sfDir)
         val out =
           if (sys.env.get("GRAFT_VERIFY_COALESCE").contains("0")) out0
           else out0.coalesce(1)
@@ -42,17 +30,12 @@ object Verify {
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
-      // EMF frames are per-plan; drop them once the action is done. The
-      // dedup pair memo stays (shared across dedup_* queries) until the end.
+      // EMF frames are per-plan; drop them once the action is done. A
+      // memo family dies after its last consumer in this order.
       graft.emf.EmfPlanner.unpersistAll()
+      step.evicts.foreach(Memo.evict)
     }
-    graft.dedup.Dedup.clearCache()
-    graft.ann.Similarity.clearCache()
-    graft.ann.KMeans.clearCache()
-    graft.operators.Mining.clearCache()
-    graft.text.Bpe.clearCache()
-    graft.emf.GoldenQueries.clearCache()
-    graft.ann.FixedPointAnn.clearCache()
+    Memo.evictAll()
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.

@@ -144,22 +144,21 @@ object FixedPointAnn {
     * model once and serves every index build and query from it, so
     * retraining per consumer is the dishonest shape (the
     * `assignmentCached` convention). Bench charges the build to its own
-    * `_shared_ann_models` line; [[clearCache]] evicts. */
+    * `_shared_ann_models` line ([[trainModels]]); [[graft.Memo]] evicts. */
   def modelCached(s: SparkSession, d: String, mCount: Int, k: Int): (DataFrame, DataFrame) =
-    modelMemo.getOrElseUpdate((s, d, mCount, k), {
+    graft.Memo.annModels(s, (d, mCount, k)) {
       val (codes, cent) = lloydSub(KMeans.quantized(s, d), mCount, k)
       (codes.cache(), cent.cache())
-    })
-
-  private val modelMemo = scala.collection.concurrent.TrieMap[
-    (SparkSession, String, Int, Int), (DataFrame, DataFrame)]()
-
-  /** Evict the memoized models; the next call retrains. */
-  def clearCache(): Unit = {
-    modelMemo.values.foreach { case (a, b) =>
-      a.unpersist(blocking = false); b.unpersist(blocking = false)
     }
-    modelMemo.clear()
+
+  /** The `_shared_ann_models` line: train both models and count them,
+    * centroids FIRST — the k-row training frames materialize cheaply, then
+    * each full-corpus code frame rewrites its centroid subtree to the
+    * cached InMemoryRelation instead of re-running the Lloyd fit. */
+  private[graft] def trainModels(s: SparkSession, d: String): Long = {
+    val (c1, g1) = modelCached(s, d, 1, Nlist)
+    val (c2, g2) = modelCached(s, d, M, Kpq)
+    Seq(g1, g2, c1, c2).map(_.count()).sum
   }
 
   /** The NQueries probe vectors: (qid, qq). */

@@ -131,18 +131,9 @@ object KMeans {
     * ONCE and feeds every downstream diagnostic from it — re-running
     * two Lloyd iterations per consumer is the dishonest shape. Bench
     * charges the build to its own `_shared_kmeans_assign` line (the
-    * Dedup ngram-pair convention); [[clearCache]] evicts. */
+    * Dedup ngram-pair convention); [[graft.Memo]] evicts. */
   def assignmentCached(s: SparkSession, d: String): DataFrame =
-    assignMemo.getOrElseUpdate((s, d), iterate(quantized(s, d)).cache())
-
-  private val assignMemo =
-    scala.collection.concurrent.TrieMap[(SparkSession, String), DataFrame]()
-
-  /** Evict the memoized assignment frames; the next call rebuilds. */
-  def clearCache(): Unit = {
-    assignMemo.values.foreach(_.unpersist(blocking = false))
-    assignMemo.clear()
-  }
+    graft.Memo.kmeansAssign(s, d)(iterate(quantized(s, d)).cache())
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "emb_kmeans" -> ((s, d) => {

@@ -293,52 +293,34 @@ object Dedup {
     * candidate-count shuffle runs once per corpus, not per threshold
     * family. */
   def sizedPairsCached(s: SparkSession, d: String): DataFrame =
-    pairsMemo.getOrElseUpdate((s, d), buildNgramPairs(s, d).cache())
+    graft.Memo.ngramPairs(s, d)(buildNgramPairs(s, d).cache())
 
   /** Connected-component labels over the near-dup graph, memoized per
     * (session, dir): `dedup_clusters` and `split_leakage_safe` both
     * consume them, and the CC loop (the expensive part — O(diameter)
     * shuffles) should run once per corpus, not once per consumer. Bench
-    * charges the build to `_shared_cc_labels`; [[clearCache]] evicts. */
+    * charges the build to `_shared_cc_labels`; [[graft.Memo]] evicts. */
   def ccLabelsCached(s: SparkSession, d: String): DataFrame =
-    ccMemo.getOrElseUpdate((s, d), {
+    graft.Memo.ccLabels(s, d) {
       val pairs = queriesNgramPairs(s, d).select(col("id_a"), col("id_b"))
       val nodes = docsWithNearDups(s, d).select(col("doc_id"))
       connectedComponents(nodes, pairs).cache()
-    })
-
-  private val pairsMemo =
-    scala.collection.concurrent.TrieMap[(SparkSession, String), DataFrame]()
-  private val ccMemo =
-    scala.collection.concurrent.TrieMap[(SparkSession, String), DataFrame]()
-  private val innerCaches =
-    scala.collection.concurrent.TrieMap[DataFrame, Unit]()
+    }
 
   /** Cache `df` unless a canonical-plan twin is already cached.
     * `dedup_recall` re-runs [[minhashPairs]] over the exact frame
     * `dedup_minhash` cached moments earlier — CacheManager serves the
     * twin either way, but a second `.cache()` call logs
     * "Asked to cache already cached data"; this guard keeps the bench
-    * log warning-clean. Registered in [[innerCaches]] regardless so
-    * [[clearCache]] evicts whichever instance owns the cache entry. */
-  private def cacheOnce(df: DataFrame): DataFrame = {
-    if (df.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
-      df.cache()
-    innerCaches.put(df, ())
-    df
-  }
-
-  /** Evict the memoized pair frames (and their cached subtrees). Call in
-    * long-lived sessions once the dependent queries have run; the next
-    * `queriesNgramPairs` call simply rebuilds. */
-  def clearCache(): Unit = {
-    pairsMemo.values.foreach(_.unpersist(blocking = false))
-    pairsMemo.clear()
-    ccMemo.values.foreach(_.unpersist(blocking = false))
-    ccMemo.clear()
-    innerCaches.keys.foreach(_.unpersist(blocking = false))
-    innerCaches.clear()
-  }
+    * log warning-clean. Registered in [[graft.Memo.dedupCaches]] regardless
+    * so the Dedup family's eviction releases whichever instance owns the
+    * cache entry. */
+  private def cacheOnce(df: DataFrame): DataFrame =
+    graft.Memo.dedupCaches(df.sparkSession, df) {
+      if (df.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
+        df.cache()
+      df
+    }
 
   /** Hot-shingle document-frequency cap: a shingle present in B docs
     * contributes B²/2 rows to the self-join, so one boilerplate shingle in
@@ -381,14 +363,12 @@ object Dedup {
     // The cached frame is one compact row per distinct shingle (ids
     // array ≤ maxDf longs) — far smaller than the E-row posting list
     // the previous formulation pinned in memory.
-    val posts = docsWithNearDups(s, d)
+    val posts = cacheOnce(docsWithNearDups(s, d)
       .select(col("doc_id"),
         explode(SignatureExprs.shingleHashes(col("text"), 3)).as("sh"))
       .groupBy(col("sh"))
       .agg(sort_array(collect_list(col("doc_id"))).as("ids"))
-      .filter(size(col("ids")) <= maxShingleDf)
-      .cache()
-    innerCaches.put(posts, ())
+      .filter(size(col("ids")) <= maxShingleDf))
     val sizes = posts.select(explode(col("ids")).as("doc_id"))
       .groupBy(col("doc_id")).agg(count(lit(1)).as("n_sh"))
     // Pair generation: the codegen'd [[PackedPairsExpr]] emits every
@@ -453,10 +433,9 @@ object Dedup {
     if (reliableCheckpointEvery > 0)
       require(nodes.sparkSession.sparkContext.getCheckpointDir.isDefined,
         "reliable connectedComponents needs SparkContext.setCheckpointDir")
-    val edges = pairs.select(col("id_a"), col("id_b"))
+    val edges = cacheOnce(pairs.select(col("id_a"), col("id_b"))
       .union(pairs.select(col("id_b"), col("id_a")))
-      .toDF("src", "dst").cache()
-    innerCaches.put(edges, ())
+      .toDF("src", "dst"))
     var labels = nodes.select(col("doc_id")).withColumn("cluster", col("doc_id"))
     var changed = 1L
     var rounds = 0

@@ -109,16 +109,10 @@ object GoldenQueries {
     * table; each EMF query would scan it, not re-join it). Bench charges
     * the build to `_shared_sales_view`; [[clearCache]] evicts. */
   def salesViewCached(s: SparkSession, dir: String): DataFrame =
-    factMemo.getOrElseUpdate((s, dir), Tables.salesView(s, dir).cache())
-
-  private val factMemo =
-    scala.collection.concurrent.TrieMap[(SparkSession, String), DataFrame]()
+    graft.Memo.salesView(s, dir)(Tables.salesView(s, dir).cache())
 
   /** Evict the memoized fact frames; the next call rebuilds. */
-  def clearCache(): Unit = {
-    factMemo.values.foreach(_.unpersist(blocking = false))
-    factMemo.clear()
-  }
+  def clearCache(): Unit = graft.Memo.evict("GoldenQueries")
 
   /** Run golden query i (1-based) end-to-end: parse → plan → order. */
   def run(i: Int)(s: SparkSession, dir: String): DataFrame = {

@@ -89,7 +89,7 @@ object Layout {
     * guarantee for merge joins. Registered as external tables under the
     * JVM tmpdir; overwritten on rebuild. */
   def bucketedOrdersCustomer(s: SparkSession, d: String): (String, String) =
-    bucketMemo.getOrElseUpdate((s, d), {
+    graft.Memo.bucketed(s, d) {
       val tag = dirTag(d)
       val base = s"${System.getProperty("java.io.tmpdir")}/graft_bucketed/$tag"
       val ordT = s"graft_orders_b_$tag"
@@ -107,10 +107,7 @@ object Layout {
         .option("path", s"$base/customer")
         .saveAsTable(custT)
       (ordT, custT)
-    })
-
-  private val bucketMemo =
-    scala.collection.concurrent.TrieMap[(SparkSession, String), (String, String)]()
+    }
 
   /** One-time-per-(session, dir) month-partitioned copy of lineitem —
     * the date-partitioned fact layout every warehouse keeps. Pays the
@@ -122,7 +119,7 @@ object Layout {
     * At 100 TB this is the difference between reading 3 months and
     * reading 7 years. */
   def monthPartitionedLineitem(s: SparkSession, d: String): String =
-    dppMemo.getOrElseUpdate((s, d), {
+    graft.Memo.monthPartitioned(s, d) {
       val tag = dirTag(d)
       val base = s"${System.getProperty("java.io.tmpdir")}/graft_dpp/$tag"
       val t = s"graft_lineitem_ym_$tag"
@@ -147,10 +144,7 @@ object Layout {
         .option("path", base)
         .saveAsTable(t)
       t
-    })
-
-  private val dppMemo =
-    scala.collection.concurrent.TrieMap[(SparkSession, String), String]()
+    }
 
   /** One-time-per-(session, dir) COMPACTED copy of
     * [[monthPartitionedLineitem]] — the small-file maintenance pass
@@ -164,7 +158,7 @@ object Layout {
     * DPP-prunable directory layout. LayoutSpec asserts the 8→1
     * file-count collapse AND byte-identical data. */
   def compactedLineitem(s: SparkSession, d: String): String =
-    compactMemo.getOrElseUpdate((s, d), {
+    graft.Memo.compacted(s, d) {
       val src = monthPartitionedLineitem(s, d)
       val tag = dirTag(d)
       val base = s"${System.getProperty("java.io.tmpdir")}/graft_compact/$tag"
@@ -176,10 +170,7 @@ object Layout {
         .option("path", base)
         .saveAsTable(t)
       t
-    })
-
-  private val compactMemo =
-    scala.collection.concurrent.TrieMap[(SparkSession, String), String]()
+    }
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 

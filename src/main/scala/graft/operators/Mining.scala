@@ -47,23 +47,20 @@ object Mining {
     * it. Built inside the `_shared_basket_pairs` bench line via
     * [[pairsCached]]. */
   private def baskets(s: SparkSession, d: String): DataFrame =
-    basketMemo.getOrElseUpdate((s, d), {
+    graft.Memo.baskets(s, d) {
       Tables.lineitem(s, d)
         .select(col("l_orderkey"), col("l_partkey"))
         .groupBy(col("l_orderkey"))
         .agg(slice(sort_array(collect_set(col("l_partkey"))), 1, MaxBasket)
           .as("parts"))
         .cache()
-    })
+    }
 
   /** Capped (basket, item) memberships — the exploded view of
     * [[baskets]] (identical to the old distinct+rank-cap frame). */
   private def cappedItems(s: SparkSession, d: String): DataFrame =
     baskets(s, d)
       .select(col("l_orderkey"), explode(col("parts")).as("l_partkey"))
-
-  private val basketMemo =
-    scala.collection.concurrent.TrieMap[(SparkSession, String), DataFrame]()
 
   /** Support-filtered co-occurrence pair counts (part_a < part_b,
     * n_orders ≥ MinSupport). The full capped-basket pipeline described
@@ -91,17 +88,10 @@ object Mining {
     * from it. Bench charges the build to `_shared_basket_pairs` (the
     * Dedup/KMeans convention); [[clearCache]] evicts. */
   def pairsCached(s: SparkSession, d: String): DataFrame =
-    pairMemo.getOrElseUpdate((s, d), pairCounts(s, d).cache())
+    graft.Memo.basketPairs(s, d)(pairCounts(s, d).cache())
 
-  private val pairMemo =
-    scala.collection.concurrent.TrieMap[(SparkSession, String), DataFrame]()
-
-  def clearCache(): Unit = {
-    pairMemo.values.foreach(_.unpersist(blocking = false))
-    pairMemo.clear()
-    basketMemo.values.foreach(_.unpersist(blocking = false))
-    basketMemo.clear()
-  }
+  /** Evict the memoized basket and pair frames; the next call rebuilds. */
+  def clearCache(): Unit = graft.Memo.evict("Mining")
 
   /** PageRank iterated to CONVERGENCE — the production path behind the
     * `graph_pagerank` query's fixed two-round unroll (kept there because

@@ -1,8 +1,6 @@
 package graft.text
 
-import scala.collection.concurrent.TrieMap
 import scala.collection.mutable
-import scala.collection.mutable.ListBuffer
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -172,25 +170,15 @@ object Bpe {
       .limit(cap)
       .as[(String, Long)]
     val rounds = Rounds
-    val res = wc.repartition(1)
+    wc.repartition(1)
       .mapPartitions(it => mergeRounds(it, rounds))
       .toDF()
       .orderBy(col("merge_round"))
-      .cache()
-    cached += res
-    res
   }
 
-  private val memo =
-    TrieMap[(SparkSession, String), DataFrame]()
-  private val cached = ListBuffer[DataFrame]()
-
-  /** Evict the cached merge table; the next call retrains. */
-  def clearCache(): Unit = synchronized {
-    cached.foreach(_.unpersist(blocking = false))
-    cached.clear()
-    memo.clear()
-  }
+  /** The trained merge table, cached once per (session, dir). */
+  private def trained(s: SparkSession, d: String): DataFrame =
+    graft.Memo.bpeMerges(s, d)(train(s, d).cache())
 
   /** Corpus encoded with the trained merge table — the tokenizer APPLY
     * pass that follows training in a real pipeline. Output is the
@@ -213,8 +201,7 @@ object Bpe {
     * Java regex and RE2 both treat `.` as one code point, so Spark and
     * DuckDB space identically. */
   private def encode(s: SparkSession, d: String): DataFrame = {
-    val trained = memo.getOrElseUpdate((s, d), train(s, d))
-    val ms = trained.agg(array_sort(collect_list(struct(
+    val ms = trained(s, d).agg(array_sort(collect_list(struct(
       col("merge_round"), col("lhs"), col("rhs"), col("merged")))).as("ms"))
     val wc = Tables.documents(s, d)
       .select(explode(split(col("text"), " ")).as("w"))
@@ -243,8 +230,7 @@ object Bpe {
     * `size(split(...))` in-row — no token explode at all — then a
     * lang-bounded aggregation of word/token masses. */
   private def fertility(s: SparkSession, d: String): DataFrame = {
-    val trained = memo.getOrElseUpdate((s, d), train(s, d))
-    val ms = trained.agg(array_sort(collect_list(struct(
+    val ms = trained(s, d).agg(array_sort(collect_list(struct(
       col("merge_round"), col("lhs"), col("rhs"), col("merged")))).as("ms"))
     val wc = Tables.documents(s, d)
       .select(col("lang"), explode(split(col("text"), " ")).as("w"))
@@ -268,8 +254,7 @@ object Bpe {
   }
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "bpe_train" -> ((s, d) =>
-      memo.getOrElseUpdate((s, d), train(s, d))),
+    "bpe_train" -> trained,
     "bpe_apply" -> encode,
     "bpe_fertility" -> fertility)
 

@@ -1,7 +1,6 @@
 package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.emf.{EmfParser, EmfPlanner}
 
@@ -51,21 +50,12 @@ object EmfSkewDemo {
 
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // mirror SkewDemo: with only ~130 groups the MF side would
-      // broadcast and no shuffle partition could hot-spot — force the
-      // sort-merge path so the pathology (and the salt's fix) is visible
-      .config("spark.sql.autoBroadcastJoinThreshold", "-1")
-      // heap comes from the fork's -Xmx (SPARK_DRIVER_MEM, build.sbt) —
-      // spark.driver.memory is a no-op after the JVM is up
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // mirror SkewDemo: with only ~130 groups the MF side would
+    // broadcast and no shuffle partition could hot-spot — force the
+    // sort-merge path so the pathology (and the salt's fix) is visible.
+    // Heap comes from the fork's -Xmx (SPARK_DRIVER_MEM, build.sbt) —
+    // spark.driver.memory is a no-op after the JVM is up.
+    val spark = graft.GraftSession(Seq("spark.sql.autoBroadcastJoinThreshold" -> "-1"))
     val stats = new TaskStats
     spark.sparkContext.addSparkListener(stats)
 

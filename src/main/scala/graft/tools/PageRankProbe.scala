@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev tool: time [[graft.operators.Mining.pageRankConverged]] on the
@@ -15,17 +14,7 @@ object PageRankProbe {
     val sfDir = args(0)
     val eps = if (args.length > 1) args(1).toLong else 1000L
     val maxIters = if (args.length > 2) args(2).toInt else 20
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.files.maxPartitionBytes",
-        sys.env.getOrElse("SPARK_GRAFT_MAXPART", "4m"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession()
     val t0 = System.nanoTime()
     val pairs = graft.operators.Mining.pairsCached(spark, sfDir)
     val e = pairs.select(col("part_a").as("src"), col("part_b").as("dst"))

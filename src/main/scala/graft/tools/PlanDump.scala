@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: print the formatted physical plan of named SparkEntry
   * queries on a given sf dir — the source for PLANS.md plan audits.
   * Not part of the shipped surface.
@@ -29,15 +27,7 @@ object PlanDump {
     val sfDir = args(0)
     val exec = args.contains("--exec")
     val names = args.drop(1).filterNot(_ == "--exec")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession()
     for (name <- names) {
       println(s"===== $name =====")
       val df = graft.SparkEntry.queries(name)(spark, sfDir)

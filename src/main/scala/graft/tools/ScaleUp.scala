@@ -176,14 +176,7 @@ object ScaleUp {
 
   def main(args: Array[String]): Unit = {
     require(args.length >= 3, "usage: ScaleUp <srcDir> <outDir> <factor>")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession(Seq("spark.sql.shuffle.partitions" -> "32"))
     run(spark, args(0), args(1), args(2).toInt)
     spark.stop()
   }

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev tool: demonstrate AQE's OptimizeSkewedJoin at a real data scale —
@@ -16,25 +15,16 @@ import org.apache.spark.sql.functions._
 object SkewDemo {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.files.maxPartitionBytes", "4m")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
+    val spark = graft.GraftSession(Seq(
+      "spark.sql.adaptive.skewJoin.enabled" -> "true",
       // deployment-tuning knobs: the skew threshold must sit below the
       // hot partition's bytes for the optimization to engage; at sf10
       // the hot partition is ~54M rows × ~16 B ≈ 860 MB, so even the
       // 256 MB default fires — set explicitly for reproducibility
-      .config("spark.sql.adaptive.skewJoin.skewedPartitionFactor", "2")
-      .config("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "64m")
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "32m")
-      .config("spark.sql.autoBroadcastJoinThreshold", "-1")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+      "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "2",
+      "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "64m",
+      "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "32m",
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1"))
     val fact = graft.Tables.lineitem(spark, sfDir).select(
       when(col("l_orderkey") % 10 < 9, lit(0L)).otherwise(col("l_orderkey"))
         .as("k"),

@@ -1,10 +1,10 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
-/** Dev tool: time named SparkEntry queries (plus the shared ngram build
-  * as `_shared_ngram_build`) on a given sf dir, printing seconds per
-  * query per iteration. Not part of the shipped surface.
+/** Dev tool: time named SparkEntry queries (and `_shared_*` lines such as
+  * `_shared_ngram_build`) on a given sf dir, printing seconds per query
+  * per iteration. Not part of the shipped surface. Spark confs come from
+  * [[graft.GraftSession]]; a `-Dspark.*` system property overrides any of
+  * them (tools/README.md).
   *
   * Usage: `runMain graft.tools.TimeQuery <sfDir> <iters> <name> [name ...]`
   */
@@ -13,70 +13,21 @@ object TimeQuery {
     val sfDir = args(0)
     val iters = args(1).toInt
     val names = args.drop(2)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // sf100 probes want more shuffle partitions than cores: 600M-row
-    // shuffles at 32 partitions put ~19M rows in one sort task; AQE
-    // coalesces small partitions back, so oversizing is cheap
-    val shuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffle)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // 4m keeps file-per-split on the MB-sized sf0.1/sf10 tables; a
-      // sf100 probe (22 GB) wants the 128m default back or scans pay
-      // ~5000 task launches each
-      .config("spark.sql.files.maxPartitionBytes",
-        sys.env.getOrElse("SPARK_GRAFT_MAXPART", "4m"))
-      // r18 measurement knobs (defaults = Spark defaults, so unset envs
-      // change nothing): shuffle codec for the §2.3 lz4-vs-zstd A/B,
-      // event log for job-overlap receipts (emf_batch §2.6)
-      .config("spark.io.compression.codec",
-        sys.env.getOrElse("SPARK_GRAFT_CODEC", "lz4"))
-      .config("spark.eventLog.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_EVENTLOG", "false"))
-      .config("spark.eventLog.dir",
-        sys.env.getOrElse("SPARK_GRAFT_EVENTLOG_DIR", "/tmp/spark-events"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession()
     graft.Tables.lineitem(spark, sfDir).count() // warmup
+    val shared = graft.Memo.builds.map(_.name).toSet
     for (it <- 1 to iters; name <- names) {
       val t0 = System.nanoTime()
-      val n = name match {
-        case "_shared_ngram_build" =>
-          graft.dedup.Dedup.queriesNgramPairs(spark, sfDir).count()
-        case "_shared_cc_labels" =>
-          graft.dedup.Dedup.ccLabelsCached(spark, sfDir).count()
-        case "_shared_kmeans_assign" =>
-          graft.ann.KMeans.assignmentCached(spark, sfDir).count()
-        case "_shared_basket_pairs" =>
-          graft.operators.Mining.pairsCached(spark, sfDir).count()
-        case "_shared_sales_view" =>
-          graft.emf.GoldenQueries.salesViewCached(spark, sfDir).count()
-        case "_shared_ann_models" =>
-          import graft.ann.FixedPointAnn
-          val (c1, g1) = FixedPointAnn.modelCached(spark, sfDir, 1, FixedPointAnn.Nlist)
-          val (c2, g2) = FixedPointAnn.modelCached(spark, sfDir,
-            FixedPointAnn.M, FixedPointAnn.Kpq)
-          Seq(g1, g2, c1, c2).map(_.count()).sum
-        case _ => graft.SparkEntry.queries(name)(spark, sfDir).count()
-      }
+      val n =
+        if (shared(name)) graft.Memo.build(name, spark, sfDir)
+        else graft.SparkEntry.queries(name)(spark, sfDir).count()
       val dt = (System.nanoTime() - t0) / 1e9
       println(f"[time] iter=$it $name%-24s ${dt}%8.3f s  ($n rows)")
       graft.emf.EmfPlanner.unpersistAll()
       // fresh rebuild per ITERATION (clearing inside the name loop would
       // also wipe the shared caches between queries of the same pass,
       // which is not how Bench runs them)
-      if (it < iters && name == names.last) {
-        graft.dedup.Dedup.clearCache()
-        graft.ann.Similarity.clearCache()
-        graft.ann.KMeans.clearCache()
-        graft.operators.Mining.clearCache()
-        graft.emf.GoldenQueries.clearCache()
-        graft.text.Bpe.clearCache()
-        graft.ann.FixedPointAnn.clearCache()
-      }
+      if (it < iters && name == names.last) graft.Memo.evictAll()
     }
     spark.stop()
   }

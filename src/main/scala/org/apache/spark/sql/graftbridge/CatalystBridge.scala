@@ -49,9 +49,6 @@ object CatalystBridge {
     t.experimental.extraOptimizations = f.experimental.extraOptimizations
   }
 
-  /** The session's UUID: a new session, a clone included, gets a new one. */
-  def sessionId(spark: SparkSession): String = classic(spark).sessionUUID
-
   private def classic(s: SparkSession) =
     s.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
 

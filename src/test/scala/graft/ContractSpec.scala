@@ -113,7 +113,7 @@ class ContractSpec extends AnyFunSuite {
     // shingle strings at all
     assert(ngram.contains("shingle_hashes("),
       "dedup_ngram self-join key is no longer the 8-byte shingle hash")
-    graft.dedup.Dedup.clearCache()
+    graft.Memo.evict("Dedup")
     // round 10b: bag-of-words consumers are born collapsed at the scan;
     // a revert silently reintroduces a corpus-token exchange per query
     Seq("text_top_terms", "text_surprisal", "langid_nb").foreach { q =>

@@ -60,9 +60,6 @@ class GlobalWindowSpec extends SparkSpec {
     // stale whitelist entries fail too, so the list tracks reality
     val stale = whitelist.keySet -- SparkEntry.queries.keySet
     assert(stale.isEmpty, s"whitelist names unknown queries: $stale")
-    graft.dedup.Dedup.clearCache()
-    graft.ann.Similarity.clearCache()
-    graft.ann.KMeans.clearCache()
-    graft.operators.Mining.clearCache()
+    graft.Memo.evictAll()
   }
 }

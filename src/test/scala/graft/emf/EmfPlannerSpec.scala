@@ -460,7 +460,7 @@ class EmfPlannerSpec extends SparkSpec {
   test("the salt gate's hot-key stat: none below its floor, one memo entry above it") {
     val fact = graft.Tables.salesView(spark, sf001)
     val q = EmfParser.parseOne(eqDependent, fact.columns.toSet)
-    val memo = graft.Gates.hotKeyMemo
+    val memo = graft.Memo.hotKeys
     val sc = spark.sparkContext
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(_.mkString("|")).sorted.toSeq
@@ -471,7 +471,7 @@ class EmfPlannerSpec extends SparkSpec {
       try { val r = body; (r, sc.statusTracker.getJobIdsForGroup(group).length) }
       finally sc.clearJobGroup()
     }
-    memo.clear()
+    memo.evict()
     try {
       // default confs: the sf0.01 fact is far below the 1 GiB floor
       val (gated, gatedJobs) = jobsOf(EmfPlanner.plan(q, fact))
@@ -488,7 +488,7 @@ class EmfPlannerSpec extends SparkSpec {
       assert(rows(sampled) == rows(gated))
     } finally {
       spark.conf.unset("spark.graft.emf.salt.statMinBytes")
-      memo.clear()
+      memo.evict()
       EmfPlanner.unpersistAll()
     }
   }

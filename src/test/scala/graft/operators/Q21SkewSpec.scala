@@ -87,8 +87,8 @@ class Q21SkewSpec extends SparkSpec {
 
   test("the stat floor skips sampling on small frames; above it the stat is memoized") {
     val (suN, o, l) = frames()
-    val hotKeyMemo = graft.Gates.hotKeyMemo
-    hotKeyMemo.clear()
+    val hotKeyMemo = graft.Memo.hotKeys
+    hotKeyMemo.evict()
     // below the floor (a 305-row fixture is nowhere near 1 GiB of leaf
     // input): building q21 must not touch the stat machinery at all —
     // this is what keeps PlanDump/bench-scale construction job-free

@@ -52,7 +52,7 @@ class BpeSpec extends SparkSpec {
     // inherit at most the merged pair's occurrence count)
     val ns = got.map(_._4)
     assert(ns.zip(ns.drop(1)).forall { case (a, b) => b <= a }, ns.toSeq)
-    Bpe.clearCache()
+    graft.Memo.evict("Bpe")
   }
 
   test("vocab cap bounds the merge task and keeps reference semantics on the kept top-N") {
@@ -77,7 +77,7 @@ class BpeSpec extends SparkSpec {
       .queryExecution.executedPlan.toString
     assert(plan.contains("TakeOrderedAndProject"),
       s"vocab cap is not a bounded top-N:\n${plan.take(2000)}")
-    Bpe.clearCache()
+    graft.Memo.evict("Bpe")
   }
 
   test("merge fold is greedy left-to-right: 'a a a' + (a,a) -> [aa, a]") {
@@ -96,7 +96,7 @@ class BpeSpec extends SparkSpec {
     rows.zip(expect).foreach { case (r, (el, er, en)) =>
       assert((r.getString(1), r.getString(2), r.getLong(3)) == (el, er, en))
     }
-    Bpe.clearCache()
+    graft.Memo.evict("Bpe")
   }
 
   /** Plain-Scala greedy encoder: apply the trained merges in rank order
@@ -130,7 +130,7 @@ class BpeSpec extends SparkSpec {
         a._2 > b._2 || (a._2 == b._2 && Bpe.u8Less(a._1, b._1))
       }.take(100)
     assert(got.toSeq == expect)
-    Bpe.clearCache()
+    graft.Memo.evict("Bpe")
   }
 
   test("bpe_fertility matches the per-word encoder masses; every word emits >= 1 token") {
@@ -154,6 +154,6 @@ class BpeSpec extends SparkSpec {
     got.foreach { case (lang, _, _, f) =>
       assert(f >= 1000000L, s"$lang fertility < 1 token/word")
     }
-    Bpe.clearCache()
+    graft.Memo.evict("Bpe")
   }
 }
