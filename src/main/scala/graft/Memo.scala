@@ -92,7 +92,7 @@ object Memo {
   val dedupCaches: Memo[DataFrame, DataFrame] = ofFrames("Dedup")
 
   val embeddings: Memo[String, DataFrame] = ofFrames("Similarity",
-    Seq("dedup_embcos", "dedup_semantic", "emb_hard_negatives", "knn_brute"))
+    Seq("dedup_embcos", "dedup_semantic"))
   val embeddingCount: Memo[String, Long] = ofValues("Similarity")
 
   val kmeansAssign: Memo[String, DataFrame] = ofFrames("KMeans",

@@ -237,8 +237,10 @@ object EmfPlanner {
     *  - batch: sum/count/avg by [[complementPass]]'s subtraction
     *    `f(E-slice) ⊖ f(own slice)`, min/max by [[complementMinMaxPass]]'s
     *    best / runner-up slice per E;
-    *  - streaming ([[EmfStreaming.planCrossGroup]]) keys its state by E
-    *    and combines all-but-self over the key's per-group partials. */
+    *  - streaming ([[EmfStreaming.planKeyed]]) keys its state by E
+    *    and combines all-but-self over the key's per-group partials;
+    *    with E = ∅ ([[EmfStreaming.planAuto]]) it shards per-anti
+    *    partials and combines at [[EmfStreaming.snapshot]]. */
   private[emf] def complementShape(v: GroupingVar, q: EmfQuery)
       : Option[(Seq[String], String)] = {
     if (v.dependsOn(q.aggNames).nonEmpty) return None

@@ -2,7 +2,7 @@ package graft.emf
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders, KeyValueGroupedDataset}
+import org.apache.spark.sql.{Column, DataFrame, Encoders}
 import org.apache.spark.sql.catalyst.expressions.GenericRow
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -19,41 +19,39 @@ import org.apache.spark.sql.Row
   *    `groupBy(G).agg(f(when(...)))` — [[plan]]. The MF structure lives
   *    in the state store, updated incrementally per micro-batch; HAVING
   *    applies per emitted result (complete/update mode).
-  *  - WINDOWED variables and DEPENDENT variables that pin the full
-  *    grouping set (corpus q2/q3 windows, q6's `quant > MF.avg_quant_1`
-  *    within the group, q8's dependent-on-windowed chain) lower to
-  *    `flatMapGroupsWithState` over ONE keyed, ordered state model —
-  *    [[planKeyed]]: key → order value → (slot partials, comparison-value
-  *    histograms). The key is the windowed variables' shared equality
-  *    attrs E, the order value their shared order attr o (G = E ∪ {o});
-  *    a query without windowed variables is keyed by G with one constant
-  *    slice. Per order value the state holds the exact partials of every
-  *    variable-0/SIMPLE/WINDOWED aggregate and, per dependent variable, a
-  *    histogram from comparison value to the aggregate partials of the
-  *    tuples holding it — the minimal sufficient statistic, because a
-  *    moving threshold re-classifies EVERY historical tuple. A
-  *    micro-batch folds its rows in (O(batch), no history re-scan);
-  *    emission recombines window frames by a prefix/suffix pass over the
-  *    key's sorted order values and folds each group's histogram range
-  *    that passes the threshold its referenced aggregate takes AT THAT
-  *    GROUP. State is bounded by the order domain × the comparison-value
-  *    domain per key: a windowed query keeps no histograms, a dependent
-  *    one a single slice.
-  *  - DEPENDENT variables with cross-group COMPLEMENT membership
-  *    (corpus q4: equality on a grouping subset E plus one same-attr
-  *    `!=`, ANY of the five aggregates) run incrementally via
-  *    [[planCrossGroup]]: the cross-group span is confined to groups
-  *    sharing E, so keying the state by E restores a key-local
-  *    sufficient statistic — per anti value one accumulator row,
-  *    emission combines ALL-BUT-SELF over the key's per-group partials
-  *    (a prefix/suffix pass; ≡ the batch planner's `total ⊖ own`
-  *    subtraction for sum/count/avg, and the only formulation that
-  *    works for min/max, which have no inverse) and re-emits every
-  *    group of a touched key (the revision other groups' arrivals
-  *    force). Since round 14 this includes the KEYLESS complement
-  *    (E = ∅ — "each group vs every other group"): the statistic is
-  *    global by nature, so the structure rides one constant state key
-  *    whose bound equals the keyed path's single-hot-key worst case.
+  *  - Every other incremental class lowers to `flatMapGroupsWithState`
+  *    over ONE keyed, sliced state model — [[planKeyed]]: key → slice
+  *    value → (slot partials, comparison-value histograms). WINDOWED
+  *    variables and DEPENDENT variables that pin the full grouping set
+  *    (corpus q2/q3 windows, q6's `quant > MF.avg_quant_1` within the
+  *    group, q8's dependent-on-windowed chain) key the state by the
+  *    windowed variables' shared equality attrs E and slice it by their
+  *    shared order attr o (G = E ∪ {o}); a query without windowed
+  *    variables is keyed by G with one constant slice. Cross-group
+  *    COMPLEMENT variables (corpus q4: equality on a grouping subset E
+  *    plus one same-attr `!=`, ANY of the five aggregates) key it by E
+  *    and slice it by the anti attr: the cross-group span is confined to
+  *    groups sharing E, so the key holds a key-local sufficient
+  *    statistic. Per slice the state holds the exact partials of every
+  *    variable-0/SIMPLE/WINDOWED/complement aggregate and, per
+  *    dependent variable, a histogram from comparison value to the
+  *    aggregate partials of the tuples holding it — the minimal
+  *    sufficient statistic, because a moving threshold re-classifies
+  *    EVERY historical tuple. A micro-batch folds its rows in (O(batch),
+  *    no history re-scan); emission re-emits every group of a touched
+  *    key, recombining window frames and complements (all-but-self) by
+  *    one prefix/suffix pass over the key's slices and folding each
+  *    group's histogram range that passes the threshold its referenced
+  *    aggregate takes AT THAT GROUP. State is bounded by the slice
+  *    domain × the comparison-value domain per key.
+  *
+  *    The KEYLESS complement (E = ∅ — "each group vs every other
+  *    group") has no key to confine it: every group's answer moves when
+  *    ANY group changes. [[planAuto]] lowers it to a plain streaming
+  *    aggregation of per-anti-value partials, which shards across
+  *    executors like any streaming groupBy, and [[snapshot]] pays the
+  *    forced global reduction at render, as an all-but-self combine over
+  *    at most |anti domain| partial rows.
   *  - DEPENDENT shapes beyond every incremental class — NON-complement
   *    cross-group membership (cross-attribute predicates like
   *    `x.a = g.b`, several `!=` legs, order predicates against another
@@ -104,24 +102,25 @@ import org.apache.spark.sql.Row
   * T after the start keeps the interpreted form until the stream
   * restarts.
   *
-  * State keys are typed: the keyed and cross-group lowerings group by
-  * the key columns themselves and emit typed rows, so a key is an
-  * `UnsafeRow` of its attributes in the shuffle, the sort and the state
-  * store. Checkpoints written when keys were JSON strings do not restart.
+  * State keys are typed: [[planKeyed]] groups by the key columns
+  * themselves and emits typed rows, so a key is an `UnsafeRow` of its
+  * attributes in the shuffle, the sort and the state store. A checkpoint
+  * restarts only under the state layout that wrote it.
   */
 object EmfStreaming {
 
   /** What [[planAuto]] returns: the lowered streaming frame plus its
-    * consumption contract. `usesSnapshot` = the frame carries `__ver`
-    * emissions and the current MF structure is reconstructed with
-    * [[snapshot]] from an update-mode sink (HAVING applies there);
-    * otherwise the frame is a plain streaming aggregation whose
-    * complete-mode sink IS the result (HAVING already applied).
-    * `lowering` names the class the query was routed as: "simple",
-    * "windowed", "dependent", "chained" or "cross-group". `form` is the
-    * execution form the interpret gate chose ("interpreted" or
-    * "compiled"), `sourceBytes` the bytes it probed (None: a source of
-    * unknown size). */
+    * consumption contract. `usesSnapshot` = an update-mode sink holds
+    * the frame's rows — `__ver` emissions of the [[planKeyed]] classes,
+    * or the keyless class's per-anti-value partial rows — and
+    * [[snapshot]] renders the current MF structure from them (HAVING
+    * applies there); otherwise the frame is a plain streaming
+    * aggregation whose complete-mode sink IS the result (HAVING already
+    * applied). `lowering` names the class the query was routed as:
+    * "simple", "windowed", "dependent", "chained", "cross-group" or
+    * "keyless". `form` is the execution form the interpret gate chose
+    * ("interpreted" or "compiled"), `sourceBytes` the bytes it probed
+    * (None: a source of unknown size). */
   final case class StreamingPlan(df: DataFrame, usesSnapshot: Boolean, lowering: String,
       form: String, sourceBytes: Option[BigInt])
 
@@ -139,34 +138,47 @@ object EmfStreaming {
 
   /** Route a query to its cheapest incremental lowering — the same
     * classification the batch planner uses, so callers never pick a
-    * lowering by hand:
+    * lowering by hand ([[keyedClass]]):
     *
     *  - all SIMPLE → [[plan]] (plain stateful aggregation)
-    *  - + DEPENDENT, all complement-decomposable, no WINDOWED →
-    *    [[planCrossGroup]]
+    *  - keyless complement → per-anti-value partials, rendered by
+    *    [[snapshot]] (see the object doc)
     *  - any other WINDOWED / DEPENDENT mix → [[planKeyed]]
     *
     * Shapes outside every incremental class (genuinely unpinned
-    * cross-group membership, non-subtractable complements, fractional
-    * order attrs) propagate the specific lowering's rejection, which
-    * names `microBatch(...)` — the full-expressiveness fallback. The
-    * source is probed once, and the probe is reported in the plan. */
+    * cross-group membership, fractional order attrs) propagate the
+    * lowering's rejection, which names `microBatch(...)` — the
+    * full-expressiveness fallback. The source is probed once, and the
+    * probe is reported in the plan. */
   def planAuto(q: EmfQuery, stream: DataFrame): StreamingPlan = {
-    val (_, winVars, depVars) = EmfPlanner.classifyVars(q, stream.schema)
-    val (lowered, usesSnapshot, lowering) =
-      if (winVars.isEmpty && depVars.isEmpty) (simpleFrame(q, stream), false, "simple")
-      else if (winVars.isEmpty && depVars.forall(EmfPlanner.complementShape(_, q).isDefined))
-        (crossGroupFrame(q, stream), true, "cross-group")
-      else (keyedFrame(q, stream), true, keyedClass(winVars, depVars))
+    val cls = keyedClass(q, stream.schema)
+    val lowered = cls match {
+      case "simple" => simpleFrame(q, stream)
+      case "keyless" => keylessFrame(q, stream)
+      case _ => keyedFrame(q, stream)
+    }
     val bytes = graft.Gates.sourceBytes(stream)
     val interpret = graft.Gates.interpret(stream.sparkSession, bytes)
-    StreamingPlan(inForm(lowered, interpret), usesSnapshot, lowering,
+    StreamingPlan(inForm(lowered, interpret), cls != "simple", cls,
       if (interpret) "interpreted" else "compiled", bytes)
   }
 
-  /** The class a [[planKeyed]] query belongs to, as its rejections name it. */
-  private def keyedClass(winVars: Seq[GroupingVar], depVars: Seq[GroupingVar]): String =
-    if (depVars.isEmpty) "windowed" else if (winVars.isEmpty) "dependent" else "chained"
+  /** The class a query streams as, named as its rejections name it:
+    * "simple", the [[planKeyed]] classes "windowed", "dependent",
+    * "chained" and "cross-group" (every dependent variable
+    * complement-shaped, [[EmfPlanner.complementShape]]), or "keyless"
+    * (complement variables without an equality attr). `schema` is the
+    * stream's or a sink's: they agree on the grouping attrs, the only
+    * columns the classification reads types of. */
+  private def keyedClass(q: EmfQuery, schema: StructType): String = {
+    val (_, winVars, depVars) = EmfPlanner.classifyVars(q, schema)
+    val complements = depVars.map(EmfPlanner.complementShape(_, q))
+    if (depVars.isEmpty) (if (winVars.isEmpty) "simple" else "windowed")
+    else if (winVars.nonEmpty) "chained"
+    else if (complements.contains(None)) "dependent"
+    else if (complements.forall(_.get._1.isEmpty)) "keyless"
+    else "cross-group"
+  }
 
   /** Incremental lowering for all-SIMPLE queries. The returned streaming
     * DataFrame must be started in complete (or update) output mode. */
@@ -197,7 +209,7 @@ object EmfStreaming {
     }
   }
 
-  // ---- state pieces shared by the incremental lowerings -------------------
+  // ---- state pieces ---------------------------------------------------------
 
   /** Exact partials of one aggregate slot: sum at scale 6 (BigInt
     * micro-units), non-null count, raw double min/max (floating slots)
@@ -220,25 +232,24 @@ object EmfStreaming {
     def copy: SlotAcc = { val c = new SlotAcc; c.add(this); c }
   }
 
-  /** Fold one exact (micro, raw) value into an accumulator. A defined
-    * raw with an undefined micro means the decimal-6 projection nulled a
+  /** Fold one exact value — its micro-units and raw double, each null
+    * where the row contributes nothing — into an accumulator. A raw
+    * value without micro-units means the decimal-6 projection nulled a
     * real value (NaN, Infinity, or |v| > ~9.2e12) — fail fast instead of
     * silently diverging from the batch planner. */
-  private def fold(a: SlotAcc, micro: Option[Long], raw: Option[Double],
-      slotName: String): Unit =
-    (micro, raw) match {
-      case (Some(m), Some(d)) =>
-        a.sumMicro += m
-        a.cnt += 1
-        if (d < a.mn) a.mn = d
-        if (d > a.mx) a.mx = d
-        if (m < a.mnMic) a.mnMic = m
-        if (m > a.mxMic) a.mxMic = m
-      case (None, Some(d)) =>
-        throw new IllegalStateException(
-          s"streaming EMF: value $d of slot $slotName exceeds the exact " +
-            "decimal-6 domain (finite, |v| <= 9.2e12)")
-      case _ => ()
+  private def fold(a: SlotAcc, micro: Any, raw: Any, slotName: String): Unit =
+    if (raw != null) {
+      if (micro == null) throw new IllegalStateException(
+        s"streaming EMF: value $raw of slot $slotName exceeds the exact " +
+          "decimal-6 domain (finite, |v| <= 9.2e12)")
+      val m = micro.asInstanceOf[Long]
+      val d = raw.asInstanceOf[Double]
+      a.sumMicro += m
+      a.cnt += 1
+      if (d < a.mn) a.mn = d
+      if (d > a.mx) a.mx = d
+      if (m < a.mnMic) a.mnMic = m
+      if (m > a.mxMic) a.mxMic = m
     }
 
   /** Strict-prefix and strict-suffix combines of slot `j` over `cells` in
@@ -260,17 +271,16 @@ object EmfStreaming {
   }
 
   /** Hard cap on the entries of any one map in streaming EMF state:
-    * distinct order values per key, distinct comparison values per
-    * (slice, dependent slot), distinct anti values per complement key.
-    * Each is bounded by a column's value DOMAIN (months, `quant`-like
-    * columns — the corpus shapes), but nothing about the query form
-    * itself enforces that. A near-unique column (a timestamp, an id)
-    * would grow state without bound and surface as an executor OOM
-    * hours in; failing fast at a width no domain-bounded column reaches
-    * turns that into an immediate, named error (the broadcast-guard
-    * convention, [[graft.ann.VectorKernels]]). Test-tunable so the
-    * fail-fast is exercisable without 65k-row fixtures
-    * (EmfStreamingSpec). */
+    * distinct slice values (order or anti values) per key, distinct
+    * comparison values per (slice, dependent slot). Each is bounded by a
+    * column's value DOMAIN (months, `quant`-like columns — the corpus
+    * shapes), but nothing about the query form itself enforces that. A
+    * near-unique column (a timestamp, an id) would grow state without
+    * bound and surface as an executor OOM hours in; failing fast at a
+    * width no domain-bounded column reaches turns that into an
+    * immediate, named error (the broadcast-guard convention,
+    * [[graft.ann.VectorKernels]]). Test-tunable so the fail-fast is
+    * exercisable without 65k-row fixtures (EmfStreamingSpec). */
   @volatile private[emf] var MaxHistBuckets = 65536
 
   /** The one state bound: fail fast with `msg`, which names the
@@ -280,10 +290,11 @@ object EmfStreaming {
     if (size > MaxHistBuckets) throw new IllegalStateException(msg)
 
   /** One aggregate slot's metadata, closed over by the state function.
-    * kind: 0 = varZero/SIMPLE (own-group value), 1 = WINDOWED,
-    * 2 = DEPENDENT or complement. frameOp: the order comparison for
-    * windowed slots ("<", "<=", ">", ">=", or "" for whole-partition
-    * frames). */
+    * kind: 0 = varZero/SIMPLE (own-group value), 1 = a frame over the
+    * key's slices (WINDOWED or complement), 2 = DEPENDENT. frameOp: the
+    * frame of a kind-1 slot — an order comparison ("<", "<=", ">", ">="),
+    * "" for a whole-partition frame, or "!=" for all-but-self (the
+    * complement). */
   final case class SlotSpec(name: String, func: String,
       floating: Boolean, integral: Boolean, kind: Int, frameOp: String)
 
@@ -326,37 +337,7 @@ object EmfStreaming {
   private def microOf(c: Column): Column =
     (c.cast("decimal(27,6)") * lit(1000000L)).cast("long")
 
-  /** `cs` as one `array<t>` column, typed even when `cs` is empty. */
-  private def arr(cs: Seq[Column], t: String): Column =
-    array(cs.map(_.cast(t)): _*).cast(s"array<$t>")
-
-  /** The state key columns of a stateful lowering: `attrs` projected as
-    * `__k0`, `__k1`, … (names no fact column or projected slot array
-    * takes), or one constant column for a keyless query. */
-  private def keyCols(attrs: Seq[String]): Seq[Column] =
-    if (attrs.isEmpty) Seq(lit(0).as("__k0"))
-    else attrs.zipWithIndex.map { case (a, i) => col(a).as(s"__k$i") }
-
-  /** `projected` grouped by its first `nKeys` columns, the key decoded as
-    * a typed `Row`: the key is an `UnsafeRow` of the key attributes in
-    * the shuffle, the sort and the state store. */
-  private def groupByKeyCols[V](projected: DataFrame, nKeys: Int,
-      values: Encoder[V]): KeyValueGroupedDataset[Row, V] = {
-    val keySchema = StructType(projected.schema.take(nKeys))
-    projected.groupBy(keySchema.map(f => col(f.name)): _*)
-      .as[Row, V](Encoders.row(keySchema), values)
-  }
-
-  /** An emitter's output schema: `fields`, then `__ver`. */
-  private def emitted(fields: Seq[StructField]): StructType =
-    StructType(fields :+ StructField("__ver", LongType, nullable = false))
-
-  // ---- incremental KEYED lowering (windowed, dependent, chained) ---------
-
-  final case class KeyedRow(o: Long,
-      micro: Seq[Option[Long]], raw: Seq[Option[Double]],
-      cmpM: Seq[Option[Long]], cmpR: Seq[Option[Double]],
-      aggM: Seq[Option[Long]], aggR: Seq[Option[Double]])
+  // ---- incremental KEYED lowering --------------------------------------------
 
   /** One histogram bucket: the comparison value's raw double (for
     * double-typed predicates) plus the aggregate partials of the tuples
@@ -365,19 +346,20 @@ object EmfStreaming {
     val acc = new SlotAcc
   }
 
-  /** One order value's slice of a key's MF structure: the partials of
-    * every variable-0/SIMPLE/WINDOWED slot, plus per dependent slot the
-    * comparison-value histogram (keyed by exact micro-units). */
+  /** One slice value's share of a key's MF structure: the partials of
+    * every variable-0/SIMPLE/frame slot, plus per dependent slot the
+    * comparison-value histogram (keyed by exact micro-units); `hists` is
+    * null in a class without dependent slots. */
   final class Slice(val accs: Array[SlotAcc],
       val hists: Array[java.util.HashMap[java.lang.Long, HistCell]])
       extends Serializable
 
-  /** State for one key: its slices by order value (a single constant
-    * slice when the query has no windowed variable), plus an emission
-    * version counter. */
+  /** State for one key: its slices by slice value — an order value, an
+    * anti value (null included) or the one constant slice of the
+    * dependent class — plus an emission version counter. */
   final class KeyedState extends Serializable {
     var ver: Long = 0L
-    val slices = new java.util.HashMap[java.lang.Long, Slice]()
+    val slices = new java.util.HashMap[Any, Slice]()
   }
 
   /** Metadata of one dependent slot: the comparison `tuple.cmp OP ref`,
@@ -405,43 +387,79 @@ object EmfStreaming {
     case other => other
   }
 
-  /** Incremental lowering for WINDOWED variables and DEPENDENT variables
-    * that pin the full grouping set, over the keyed, ordered state model
-    * of the object doc. Three classes share it, named by
-    * [[EmfPlanner.classifyVars]]' partition:
+  /** The equality attrs E and anti attr of a query whose dependent
+    * variables are all complement-shaped: every variable shares them,
+    * and G = E ∪ {anti}. */
+  private def complementKey(q: EmfQuery, depVars: Seq[GroupingVar])
+      : (Seq[String], String) = {
+    val shapes = depVars.map(v => v -> EmfPlanner.complementShape(v, q).get)
+    val (eqAttrs, antiAttr) = shapes.head._2
+    shapes.foreach { case (v, (e, a)) =>
+      require(e.toSet == eqAttrs.toSet && a == antiAttr,
+        s"complement variable ${v.agg.name} must share equality attrs " +
+          s"$eqAttrs and anti attr $antiAttr; mixed complement keys need " +
+          "microBatch(...)")
+    }
+    require(!eqAttrs.contains(antiAttr),
+      s"anti attr $antiAttr also appears in the equality set — the " +
+        "membership is contradictory (always empty); use microBatch(...)")
+    require(q.groupAttrs.toSet == (eqAttrs :+ antiAttr).toSet,
+      s"grouping set ${q.groupAttrs} must be exactly equality attrs " +
+        s"$eqAttrs plus anti attr $antiAttr; use microBatch(...)")
+    (eqAttrs, antiAttr)
+  }
+
+  /** Incremental lowering for WINDOWED, DEPENDENT and cross-group
+    * COMPLEMENT variables over the keyed, sliced state model of the
+    * object doc. Four classes share it, named by [[keyedClass]]:
     *
     *  - windowed (SIMPLE + WINDOWED; corpus q2/q3 — "months before/after
     *    this one"): the windowed variables share equality attrs E and
-    *    order attr o with G = E ∪ {o}. The key is E; its slices hold no
-    *    histograms.
+    *    order attr o with G = E ∪ {o}. The key is E, sliced by o; its
+    *    slices hold no histograms.
     *  - dependent (varZero/SIMPLE + DEPENDENT; corpus q6 —
     *    `count_quant_2` counts the group's tuples with
     *    `quant > MF.avg_quant_1`): the key is G, with one constant slice
-    *    and no order field in the rows.
+    *    and no slice field in the rows.
     *  - chained (both; corpus q8 — `quant > MF.avg_quant_1` where
     *    avg_quant_1 itself windows over earlier months): keyed as
     *    windowed. The cross-group dependence travels only through the
     *    window frames, which are E-key-local.
+    *  - cross-group (varZero/SIMPLE + complement-shaped DEPENDENT; corpus
+    *    q4 — `avg(quant)` over tuples with the same prod but a DIFFERENT
+    *    cust): the key is E, sliced by the anti attr, and each complement
+    *    variable is a frame slot whose frame is all-but-self:
+    *    `complement(g) = ⊕_{g'≠g} own(g')`. For sum/count/avg this is
+    *    exactly the batch planner's `total ⊖ own` subtraction; min/max
+    *    have no inverse, and the all-but-self combine is what makes them
+    *    streamable (the batch planner reads them off the best /
+    *    runner-up slice per key). One new (c₃, p) tuple moves the
+    *    complement of every (cᵢ, p) group, and re-emitting every group
+    *    of the touched key carries those revisions to the sink without
+    *    any cᵢ row arriving. The keyless complement (E = ∅) is not a
+    *    keyed shape: [[planAuto]] lowers it.
     *
     * Each dependent variable compares one tuple column against ONE
     * earlier aggregate — variable-0/SIMPLE (its own group) or WINDOWED
     * (the chain). A micro-batch folds its rows into the key's slices
-    * (O(batch)); emission re-emits every group of the key with window
-    * frames recombined by one ascending/descending pass over the key's
-    * sorted order values (the RANGE frames of the batch lowering,
+    * (O(batch)); emission re-emits every group of the key with frames
+    * recombined by one ascending/descending pass over the key's slices
+    * (sorted by order value; the RANGE frames of the batch lowering,
     * evaluated over partials) and each dependent slot re-classified
     * against the threshold its referenced slot takes at that group — a
     * moved threshold flips historical tuples' membership with no history
-    * re-scan. State per key is O(|order domain| × |comparison-value
+    * re-scan. State per key is O(|slice domain| × |comparison-value
     * domain|), each guarded by [[MaxHistBuckets]].
     *
     * Arithmetic matches [[EmfPlanner]]'s batch semantics bit-for-bit for
     * inputs with ≤ 6 decimal digits (the planner's decimal-exact
     * contract): sums/averages accumulate exactly and surface as
-    * double/long exactly like the batch plan's decimal path. A comparison
-    * runs in IEEE double if either side surfaces as double (avg;
-    * sum/min/max of floating input; floating comparison column), as
-    * Spark's numeric promotion does, and in exact integer micro-units
+    * double/long exactly like the batch plan's decimal path; min/max
+    * over integral slots stay in exact micro-units; an empty frame or
+    * complement renders NULL for sum/avg/min/max and 0 for count. A
+    * comparison runs in IEEE double if either side surfaces as double
+    * (avg; sum/min/max of floating input; floating comparison column),
+    * as Spark's numeric promotion does, and in exact integer micro-units
     * otherwise.
     *
     * Output: one row per (group, emission) in UPDATE mode with a
@@ -460,24 +478,32 @@ object EmfStreaming {
     val (simpleVars, winVars, depVars) = EmfPlanner.classifyVars(q, schema)
     require(winVars.nonEmpty || depVars.nonEmpty,
       "no WINDOWED or DEPENDENT variable; use plan(...) for all-SIMPLE queries")
-    val cls = keyedClass(winVars, depVars)
+    val cls = keyedClass(q, schema)
+    require(cls != "keyless",
+      "a keyless complement (no equality attr) has no state key; planAuto(...) " +
+        "lowers it to per-anti-value partials")
+    // complement variables are frames over the key's anti values; the
+    // other dependent variables compare against a threshold
+    val complement = cls == "cross-group"
+    val (frameVars, cmpVars) = if (complement) (depVars, Nil) else (winVars, depVars)
     val cols = new SlotCols(schema, cls,
-      if (depVars.isEmpty) "aggregate columns" else "columns")
-    // the state keys order values as longs: a fractional order attr
+      if (cmpVars.isEmpty) "aggregate columns" else "columns")
+    // the state slices order values exactly: a fractional order attr
     // would merge values (1.4 and 1.5) the batch planner keeps apart.
     // The classifier demotes such a variable to DEPENDENT, so it is
     // looked for there and named before the dependent route's checks.
-    val fractional = depVars.flatMap(EmfPlanner.nonIntegralOrderAttr(_, q, schema))
+    val fractional = cmpVars.flatMap(EmfPlanner.nonIntegralOrderAttr(_, q, schema))
     require(fractional.isEmpty,
       s"windowed streaming order attribute '${fractional.head}' must be an " +
         s"integral type, got ${cols.tpe(fractional.head)} — fractional order " +
         "values would be truncated by the state key; use microBatch(...) instead")
 
-    // ---- key: the windowed variables' shared equality attrs E, whose
-    // shared order attr o completes G = E ∪ {o}; without windowed
-    // variables, G itself
-    val (keyAttrs, orderAttr) =
-      if (winVars.isEmpty) (q.groupAttrs, None)
+    // ---- key and slice attr: a complement's E and anti attr; the
+    // windowed variables' shared equality attrs E and order attr o
+    // (G = E ∪ {o}); without either, G itself and one constant slice
+    val (keyAttrs, sliceAttr) =
+      if (complement) { val (e, a) = complementKey(q, depVars); (e, Some(a)) }
+      else if (winVars.isEmpty) (q.groupAttrs, None)
       else {
         val eqAttrs = eqAttrsOf(winVars.head)
         val o = winVars.flatMap(orderOf).headOption.map(_._1).getOrElse(
@@ -494,11 +520,13 @@ object EmfStreaming {
             s"$eqAttrs plus order attr $o")
         (eqAttrs, Some(o))
       }
+    val ordered = sliceAttr.isDefined && !complement
 
-    // ---- slots: varZero + SIMPLE (kind 0), WINDOWED (kind 1); only a
-    // query without windowed variables can have none
-    val slots = cols.base(q, simpleVars) ++ winVars.map(v =>
-      cols.slot(v.agg, condOf(v, schema), 1, orderOf(v).fold("")(_._2)))
+    // ---- slots: varZero + SIMPLE (kind 0), frames (kind 1); only a
+    // query without frame variables can have none
+    val slots = cols.base(q, simpleVars) ++ frameVars.map(v =>
+      cols.slot(v.agg, condOf(v, schema), 1,
+        if (complement) "!=" else orderOf(v).fold("")(_._2)))
     require(slots.nonEmpty,
       "dependent streaming needs at least one variable-0/SIMPLE aggregate " +
         "(the threshold source); shapes without one need microBatch(...)")
@@ -506,7 +534,7 @@ object EmfStreaming {
     val slotIdx = specs.map(_.name).zipWithIndex.toMap
 
     // ---- dependent slots (kind 2)
-    val deps = depVars.map { v =>
+    val deps = cmpVars.map { v =>
       val slot = cols.slot(v.agg, condOf(v, schema), 2)
       val pins = eqAttrsOf(v)
       require(pins.toSet == q.groupAttrs.toSet,
@@ -548,116 +576,151 @@ object EmfStreaming {
       DepDef(slot, slot.guarded(cmpCol), DepMeta(op, refIdx, cmpDouble, ref.func, ref.floating))
     }
 
-    // ---- input projection: key columns, order value, slot values, per
-    // dependent slot its comparison and aggregate values. A null order
-    // value cannot key the state (batch treats it as a normal group): the
-    // incremental path rejects it rather than dropping the row
-    val order = orderAttr.fold(lit(0L)) { o =>
-      coalesce(col(o).cast("long"),
-        raise_error(lit(s"$cls streaming EMF: null $o — null order groups " +
-          "need the batch planner (microBatch)")).cast("long"))
+    // ---- input row: key columns `__k0…`, the slice value, then one
+    // nullable column per value the state function folds — per slot its
+    // micro-units and raw double, per dependent slot its comparison's and
+    // aggregate's. A null order value cannot slice the state (batch
+    // treats it as a normal group): the incremental path rejects it
+    // rather than dropping the row; a null anti value is a slice like
+    // any other
+    val slice = sliceAttr.fold(lit(0)) { a =>
+      if (complement) col(a)
+      else coalesce(col(a), raise_error(lit(s"$cls streaming EMF: null $a — null " +
+        "order groups need the batch planner (microBatch)")).cast(cols.tpe(a)))
     }
-    val keys = keyCols(keyAttrs)
-    val projected = stream.filter(EmfPlanner.whereColumn(q.where, schema)).select(keys ++ Seq(
-      order.as("o"),
-      arr(slots.map(s => microOf(s.value)), "bigint").as("micro"),
-      arr(slots.map(_.value), "double").as("raw"),
-      arr(deps.map(d => microOf(d.cmp)), "bigint").as("cmpM"),
-      arr(deps.map(_.cmp), "double").as("cmpR"),
-      arr(deps.map(d => microOf(d.slot.value)), "bigint").as("aggM"),
-      arr(deps.map(_.slot.value), "double").as("aggR")): _*)
+    val values = slots.map(s => microOf(s.value)) ++ slots.map(_.value.cast("double")) ++
+      deps.map(d => microOf(d.cmp)) ++ deps.map(_.cmp.cast("double")) ++
+      deps.map(d => microOf(d.slot.value)) ++ deps.map(_.slot.value.cast("double"))
+    val keys = keyAttrs.zipWithIndex.map { case (a, i) => col(a).as(s"__k$i") }
+    val projected = stream.filter(EmfPlanner.whereColumn(q.where, schema)).select(
+      keys ++ (slice +: values).zipWithIndex.map { case (c, i) => c.as(s"__v$i") }: _*)
+    val nKeys = keys.size
+    val at = new InputRow(nKeys + 1, specs.length, deps.length)
 
-    // ---- the stateful combine
+    // ---- the stateful combine: the key decoded as a typed `Row`, so it
+    // is an `UnsafeRow` of the key attributes in the shuffle, the sort
+    // and the state store
     val depSpecs = deps.map(_.slot.spec).toArray
     val depMeta = deps.map(_.meta).toArray
-    val out = emitted(keyAttrs.map(cols.field) ++ orderAttr.map(cols.field) ++
-      (slots ++ deps.map(_.slot)).map(cols.outField))
+    val out = StructType((keyAttrs ++ sliceAttr).map(cols.field) ++
+      (slots ++ deps.map(_.slot)).map(cols.outField) :+
+      StructField("__ver", LongType, nullable = false))
     val outTypes = out.fields.map(_.dataType)
-    groupByKeyCols(projected, keys.size, Encoders.product[KeyedRow])
+    val keySchema = StructType(projected.schema.take(nKeys))
+    projected.groupBy(keySchema.map(f => col(f.name)): _*)
+      .as[Row, Row](Encoders.row(keySchema), Encoders.row(projected.schema))
       .flatMapGroupsWithState[KeyedState, Row](
         OutputMode.Update, GroupStateTimeout.NoTimeout) {
-        (key: Row, rows: Iterator[KeyedRow], state: GroupState[KeyedState]) =>
+        (key: Row, rows: Iterator[Row], state: GroupState[KeyedState]) =>
           val st = state.getOption.getOrElse(new KeyedState)
           rows.foreach { r =>
-            var slice = st.slices.get(r.o)
+            val v = r.get(nKeys)
+            var slice = st.slices.get(v)
             if (slice == null) {
               slice = new Slice(Array.fill(specs.length)(new SlotAcc),
-                Array.fill(depSpecs.length)(
+                if (depSpecs.isEmpty) null
+                else Array.fill(depSpecs.length)(
                   new java.util.HashMap[java.lang.Long, HistCell]()))
-              st.slices.put(r.o, slice)
+              st.slices.put(v, slice)
               boundDomain(st.slices.size,
-                s"$cls streaming EMF: more than $MaxHistBuckets distinct order " +
-                  "values in one group's state — the order attribute is not " +
-                  "domain-bounded; state would grow with the stream. Use a batch " +
-                  "EMF pass or bucket the order column.")
+                s"$cls streaming EMF: more than $MaxHistBuckets distinct " +
+                  (if (complement)
+                    "anti-attribute values in one key's state — the anti " +
+                      "attribute is not domain-bounded within its equality key; " +
+                      "state would grow with the stream. Use a batch EMF pass instead."
+                  else
+                    "order values in one group's state — the order attribute is " +
+                      "not domain-bounded; state would grow with the stream. Use a " +
+                      "batch EMF pass or bucket the order column."))
             }
             var i = 0
             while (i < specs.length) {
-              fold(slice.accs(i), r.micro(i), r.raw(i), specs(i).name)
+              fold(slice.accs(i), r.get(at.micro(i)), r.get(at.raw(i)), specs(i).name)
               i += 1
             }
             var j = 0
             while (j < depSpecs.length) {
-              foldHist(slice.hists(j), r, j, depSpecs(j).name, cls)
+              foldHist(slice.hists(j), r, at, j, depSpecs(j).name, cls)
               j += 1
             }
           }
           st.ver += 1
           state.update(st)
-          emitKeyed(key, st, specs, depSpecs, depMeta, orderAttr.isDefined, outTypes)
+          emitKeyed(key, st, specs, depSpecs, depMeta, sliceAttr.isDefined, ordered,
+            outTypes)
       }(Encoders.kryo[KeyedState], Encoders.row(out))
+  }
+
+  /** Column positions of the values in a [[keyedFrame]] input row, whose
+    * first `from` columns are the key and the slice value. */
+  private final class InputRow(from: Int, nSlots: Int, nDeps: Int) extends Serializable {
+    def micro(i: Int): Int = from + i
+    def raw(i: Int): Int = from + nSlots + i
+    def cmpMicro(j: Int): Int = from + 2 * nSlots + j
+    def cmpRaw(j: Int): Int = cmpMicro(nDeps + j)
+    def aggMicro(j: Int): Int = cmpMicro(2 * nDeps + j)
+    def aggRaw(j: Int): Int = cmpMicro(3 * nDeps + j)
   }
 
   /** Fold dependent slot `j` of row `r` into that slot's
     * comparison-value histogram. */
   private def foldHist(hist: java.util.HashMap[java.lang.Long, HistCell],
-      r: KeyedRow, j: Int, slot: String, cls: String): Unit =
-    (r.cmpM(j), r.aggM(j)) match {
-      case (Some(cm), Some(am)) =>
-        val raw = r.cmpR(j).get
-        var cell = hist.get(cm)
-        if (cell == null) {
-          cell = new HistCell(raw)
-          hist.put(cm, cell)
-          boundDomain(hist.size,
-            s"$cls streaming EMF: comparison-value histogram of slot $slot " +
-              s"exceeds $MaxHistBuckets distinct values — the comparison " +
-              "column is not domain-bounded; state would grow with the " +
-              "stream. Use a batch EMF pass or bucket the comparison column.")
-        } else if (cell.raw != raw &&
-            !(java.lang.Double.isNaN(cell.raw) && java.lang.Double.isNaN(raw)))
-          // a second double below decimal-6 resolution would silently
-          // classify by the first-seen representative; fail loud instead
-          // (the domain-guard convention). The both-NaN escape matters:
-          // x != x is true for every NaN, so bare != would report two
-          // identical NaNs as "distinct" values; IEEE == (not
-          // Double.compare) keeps -0.0 == 0.0 passing
-          throw new IllegalStateException(
-            s"$cls streaming EMF: comparison values ${cell.raw} and $raw of " +
-              s"slot $slot are distinct below the decimal-6 bucket resolution")
-        fold(cell.acc, Some(am), r.aggR(j), slot)
-      case (None, _) if r.cmpR(j).isDefined =>
+      r: Row, at: InputRow, j: Int, slot: String, cls: String): Unit = {
+    val cm = r.get(at.cmpMicro(j))
+    val cr = r.get(at.cmpRaw(j))
+    val am = r.get(at.aggMicro(j))
+    val ar = r.get(at.aggRaw(j))
+    if (cm == null) {
+      if (cr != null) throw new IllegalStateException(
+        s"$cls streaming EMF: comparison value $cr of slot " +
+          s"$slot exceeds the exact decimal-6 domain (finite, |v| <= 9.2e12)")
+    } else if (am == null) {
+      if (ar != null) throw new IllegalStateException(
+        s"$cls streaming EMF: value $ar of slot $slot exceeds " +
+          "the exact decimal-6 domain (finite, |v| <= 9.2e12)")
+    } else { // a null on either side: tuple conds failed / null value
+      val raw = cr.asInstanceOf[Double]
+      val bucket = cm.asInstanceOf[java.lang.Long]
+      var cell = hist.get(bucket)
+      if (cell == null) {
+        cell = new HistCell(raw)
+        hist.put(bucket, cell)
+        boundDomain(hist.size,
+          s"$cls streaming EMF: comparison-value histogram of slot $slot " +
+            s"exceeds $MaxHistBuckets distinct values — the comparison " +
+            "column is not domain-bounded; state would grow with the " +
+            "stream. Use a batch EMF pass or bucket the comparison column.")
+      } else if (cell.raw != raw &&
+          !(java.lang.Double.isNaN(cell.raw) && java.lang.Double.isNaN(raw)))
+        // a second double below decimal-6 resolution would silently
+        // classify by the first-seen representative; fail loud instead
+        // (the domain-guard convention). The both-NaN escape matters:
+        // x != x is true for every NaN, so bare != would report two
+        // identical NaNs as "distinct" values; IEEE == (not
+        // Double.compare) keeps -0.0 == 0.0 passing
         throw new IllegalStateException(
-          s"$cls streaming EMF: comparison value ${r.cmpR(j).get} of slot " +
-            s"$slot exceeds the exact decimal-6 domain (finite, |v| <= 9.2e12)")
-      case (Some(_), None) if r.aggR(j).isDefined =>
-        throw new IllegalStateException(
-          s"$cls streaming EMF: value ${r.aggR(j).get} of slot $slot exceeds " +
-            "the exact decimal-6 domain (finite, |v| <= 9.2e12)")
-      case _ => () // tuple conds failed / null value: no contribution
+          s"$cls streaming EMF: comparison values ${cell.raw} and $raw of " +
+            s"slot $slot are distinct below the decimal-6 bucket resolution")
+      fold(cell.acc, am, ar, slot)
     }
+  }
 
-  /** Emit one row per slice of the key: its key fields, its order value
-    * (windowed and chained keys), variable-0/SIMPLE slots from the slice's own
-    * partials, WINDOWED slots as their frame over the key's sorted order
-    * values (prefix/suffix pass ≡ the batch RANGE frames over per-group
-    * partials), and each dependent slot as the histogram buckets passing
-    * the threshold its referenced slot takes AT THAT GROUP. */
+  /** Emit one row per slice of the key: its key fields, its slice value
+    * (`emitsSlice`: the order value of a windowed or chained key, the
+    * anti value of a complement key), variable-0/SIMPLE slots from the
+    * slice's own partials, frame slots combined over the key's slices
+    * (sorted by order value when `ordered`) by a prefix/suffix pass — the
+    * batch RANGE frames over per-group partials, or all-but-self for a
+    * complement — and each dependent slot as the histogram buckets
+    * passing the threshold its referenced slot takes AT THAT GROUP. */
   private def emitKeyed(key: Row, st: KeyedState, specs: Array[SlotSpec],
-      depSpecs: Array[SlotSpec], depMeta: Array[DepMeta], hasOrder: Boolean,
-      outTypes: Array[DataType]): Iterator[Row] = {
-    val ordered = st.slices.keySet().asScala.map(_.longValue()).toArray.sorted
-    val slices = ordered.map(o => st.slices.get(o))
+      depSpecs: Array[SlotSpec], depMeta: Array[DepMeta], emitsSlice: Boolean,
+      ordered: Boolean, outTypes: Array[DataType]): Iterator[Row] = {
+    val entries = {
+      val es = st.slices.entrySet().asScala.toArray
+      if (ordered) es.sortBy(_.getKey.asInstanceOf[Number].longValue) else es
+    }
+    val slices = entries.map(_.getValue)
     val cells = slices.map(_.accs)
     val frames = specs.indices.filter(specs(_).kind == 1)
       .map(j => j -> strictPrefixSuffix(cells, j)).toMap
@@ -671,17 +734,18 @@ object EmfStreaming {
           case "<=" => { val c = pre(i).copy; c.add(own); c }
           case ">"  => suf(i)
           case ">=" => { val c = suf(i).copy; c.add(own); c }
+          case "!=" => { val c = pre(i).copy; c.add(suf(i)); c }
           case _    => { val c = pre(i).copy; c.add(own); c.add(suf(i)); c }
         }
       }
     }
 
-    ordered.indices.map { i =>
+    entries.indices.map { i =>
       val row = new Array[Any](outTypes.length)
       var c = 0
       def put(v: Any): Unit = { row(c) = v; c += 1 }
       (0 until key.length).foreach(k => put(key.get(k)))
-      if (hasOrder) put(narrow(ordered(i), outTypes(c)))
+      if (emitsSlice) put(entries(i).getKey)
       specs.indices.foreach(j => put(render(specs(j), combAt(j, i), outTypes(c))))
       depSpecs.indices.foreach { d =>
         val m = depMeta(d)
@@ -731,209 +795,45 @@ object EmfStreaming {
       }
     }
 
-  // ---- incremental CROSS-GROUP lowering (complement shape, corpus q4) ----
-
-  /** State for one equality key E (e.g. prod): one accumulator row per
-    * anti-attribute value (e.g. cust) — the key's slice of the MF
-    * structure. Base slots accumulate the group's own aggregates;
-    * complement slots accumulate the group's OWN contribution, and
-    * `complement(g) = ⊕_{g'≠g} own(g')` is computable at emission as an
-    * all-but-self fold of the key's rows — no cross-key traffic, no
-    * inverse needed (which is what admits min/max). */
-  final class CrossState extends Serializable {
-    var ver: Long = 0L
-    val groups = new java.util.HashMap[Any, Array[SlotAcc]]()
+  private def cmpD(l: Double, op: String, r: Double): Boolean = op match {
+    case "<" => l < r; case "<=" => l <= r
+    case ">" => l > r; case ">=" => l >= r
+    case "=" | "==" => l == r; case "<>" | "!=" => l != r
+    case other => throw new IllegalArgumentException(s"bad op $other")
+  }
+  private def cmpI(l: BigInt, op: String, r: BigInt): Boolean = op match {
+    case "<" => l < r; case "<=" => l <= r
+    case ">" => l > r; case ">=" => l >= r
+    case "=" | "==" => l == r; case "<>" | "!=" => l != r
+    case other => throw new IllegalArgumentException(s"bad op $other")
   }
 
-  /** Incremental lowering for the cross-group COMPLEMENT shape (corpus
-    * q4: `avg(quant) over tuples with the same prod but a DIFFERENT
-    * cust`): varZero/SIMPLE variables plus DEPENDENT variables that are
-    * complement-SHAPED ([[EmfPlanner.complementShape]] — equality on a
-    * grouping subset E, exactly one same-attr `!=` on the remaining
-    * grouping attr, any of sum/count/avg/min/max) with G = E ∪ {anti}.
-    *
-    * The membership of group (e, a) genuinely spans OTHER groups — the
-    * shape [[planKeyed]] rejects — but the span is confined to groups
-    * sharing e, so keying the state by E restores a key-local
-    * sufficient statistic (E = ∅, the KEYLESS global complement, rides
-    * the same machinery under one constant key — see the inline note on
-    * why that is not a new scale class): per anti value, ONE accumulator row holding
-    * the group's base aggregates and its own complement-slot
-    * contribution; emission combines `complement(g) = ⊕_{g'≠g} own(g')`
-    * all-but-self over the key's groups (prefix/suffix pass, see
-    * [[emitCrossKey]]) — two-level state, O(groups-per-key), no history
-    * re-scan. For sum/count/avg this is exactly the batch planner's
-    * `total ⊖ own` subtraction; min/max have no inverse, and the
-    * all-but-self combine is what makes them streamable here (the batch
-    * planner reads them off the best / runner-up slice per key —
-    * [[EmfPlanner.complementShape]]). Each
-    * micro-batch touching a key re-emits ALL the key's groups: one new
-    * (c₃, p) tuple moves the complement of every (cᵢ, p) group, and
-    * those groups' revisions must reach the sink without any cᵢ row
-    * arriving (the retraction the batch planner gets for free by
-    * recomputing).
-    *
-    * Arithmetic matches the batch pass bit-for-bit within the decimal-6
-    * exactness contract: exact micro-unit sums and counts; min/max over
-    * integral slots in exact micro-units (doubles would round past
-    * 2⁵³); an empty complement renders NULL for sum/avg/min/max and 0
-    * for count. Output/emission contract (UPDATE mode, `__ver`,
-    * [[snapshot]], HAVING on the snapshot) is identical to
-    * [[planKeyed]]. State per key is O(|anti domain within the
-    * key|) — the MF frame's own cardinality for that key — guarded by
-    * the same fail-fast the keyed path uses. */
-  def planCrossGroup(q: EmfQuery, stream: DataFrame): DataFrame =
-    inForm(crossGroupFrame(q, stream), graft.Gates.interpret(stream))
+  // ---- the KEYLESS complement (E = ∅) ----------------------------------------
 
-  private def crossGroupFrame(q: EmfQuery, stream: DataFrame): DataFrame = {
+  /** The keyless complement's streaming frame: a PLAIN aggregation keyed
+    * by the anti attribute, so its state shards across executors like
+    * any streaming groupBy and nothing quadratic or global lives in
+    * state. Per anti value it carries the own scan-0 slots plus, per
+    * complement variable, exact sum/count partials on the batch
+    * planner's DECIMAL path and min/max partials, and one `__nrows`
+    * column (the value's running row count, strictly increasing per
+    * emission) that marks its latest row for [[snapshot]]. */
+  private def keylessFrame(q: EmfQuery, stream: DataFrame): DataFrame = {
     installLocalFs(stream)
     val schema = stream.schema
-
-    val (simpleVars, winVars, depVars) = EmfPlanner.classifyVars(q, schema)
-    require(winVars.isEmpty,
-      "incremental cross-group streaming supports variable-0/SIMPLE + " +
-        "complement-decomposable DEPENDENT variables only; use " +
-        "planKeyed(...) for windowed mixes or microBatch(...) beyond that")
-    require(depVars.nonEmpty,
-      "no DEPENDENT variable; use plan(...) for all-SIMPLE queries")
-
-    val infos = depVars.map(v => v -> EmfPlanner.complementShape(v, q))
-    infos.foreach { case (v, i) =>
-      require(i.isDefined,
-        s"dependent variable ${v.agg.name} is not complement-shaped " +
-          "(equality on a grouping subset + exactly one same-attr !=); " +
-          "use planKeyed(...) for own-group aggregate comparisons or " +
-          "microBatch(...) beyond that")
-    }
-    val (eqAttrs, antiAttr) = infos.head._2.get
-    infos.foreach { case (v, Some((e, a))) =>
-      require(e.toSet == eqAttrs.toSet && a == antiAttr,
-        s"complement variable ${v.agg.name} must share equality attrs " +
-          s"$eqAttrs and anti attr $antiAttr; mixed complement keys need " +
-          "microBatch(...)")
-      case _ => ()
-    }
-    // eqAttrs MAY be empty — the KEYLESS global complement ("for each
-    // cust: agg over every OTHER cust's tuples", corpus q4 minus its
-    // equality pin). Every group's answer then moves when ANY group
-    // changes, so the sufficient statistic is global by nature and the
-    // lowering keys the whole structure under ONE constant state key:
-    // the same two-level state, whose bound (one accumulator row per
-    // anti value, the anti-domain fail-fast) is EXACTLY the keyed
-    // path's single-hot-key worst case — no new scale class. On a real
-    // cluster the constant key serializes input folding; the
-    // distributed variant shards per-anti partials as a plain
-    // streaming aggregation and pushes the all-but-self combine to the
-    // snapshot side (PLANS.md §streaming) — same arithmetic, chosen
-    // here for state-machinery reuse at the fixture's scale.
-    require(!eqAttrs.contains(antiAttr),
-      s"anti attr $antiAttr also appears in the equality set — the " +
-        "membership is contradictory (always empty); use microBatch(...)")
-    require(q.groupAttrs.toSet == (eqAttrs :+ antiAttr).toSet,
-      s"grouping set ${q.groupAttrs} must be exactly equality attrs " +
-        s"$eqAttrs plus anti attr $antiAttr; use microBatch(...)")
-
-    // ---- slots: varZero + SIMPLE (kind 0), then complement (kind 2)
-    val cols = new SlotCols(schema, "cross-group", "aggregate columns")
-    val slots = cols.base(q, simpleVars) ++
-      depVars.map(v => cols.slot(v.agg, condOf(v, schema), 2))
-    val specs = slots.map(_.spec).toArray
-    val nBase = specs.count(_.kind == 0)
-
-    // ---- input projection: E-key columns, anti value, slot values
-    val keys = keyCols(eqAttrs)
-    val nKeys = keys.size
-    val projected = stream.filter(EmfPlanner.whereColumn(q.where, schema)).select(keys ++ Seq(
-      col(antiAttr).as("__a"),
-      arr(slots.map(s => microOf(s.value)), "bigint").as("micro"),
-      arr(slots.map(_.value), "double").as("raw")): _*)
-
-    // ---- the stateful combine
-    val out = emitted(eqAttrs.map(cols.field) ++ Seq(cols.field(antiAttr)) ++
-      slots.map(cols.outField))
-    val outTypes = out.fields.map(_.dataType)
-    groupByKeyCols(projected, nKeys, Encoders.row(projected.schema))
-      .flatMapGroupsWithState[CrossState, Row](
-        OutputMode.Update, GroupStateTimeout.NoTimeout) {
-        (key: Row, rows: Iterator[Row], state: GroupState[CrossState]) =>
-          val st = state.getOption.getOrElse(new CrossState)
-          rows.foreach { r =>
-            val anti = r.get(nKeys)
-            var cells = st.groups.get(anti)
-            if (cells == null) {
-              cells = Array.fill(specs.length)(new SlotAcc)
-              st.groups.put(anti, cells)
-              boundDomain(st.groups.size,
-                s"cross-group streaming EMF: more than $MaxHistBuckets distinct " +
-                  "anti-attribute values in one key's state — the anti attribute " +
-                  "is not domain-bounded within its equality key; state would " +
-                  "grow with the stream. Use a batch EMF pass instead.")
-            }
-            val micro = r.getSeq[Any](nKeys + 1)
-            val raw = r.getSeq[Any](nKeys + 2)
-            var i = 0
-            while (i < specs.length) {
-              fold(cells(i), Option(micro(i)).map(_.asInstanceOf[Long]),
-                Option(raw(i)).map(_.asInstanceOf[Double]), specs(i).name)
-              i += 1
-            }
-          }
-          st.ver += 1
-          state.update(st)
-          emitCrossKey(key, eqAttrs.size, st, specs, nBase, outTypes)
-      }(Encoders.kryo[CrossState], Encoders.row(out))
-  }
-
-  /** Cluster-scale SHARDED lowering of the KEYLESS (E = ∅) global
-    * complement — the PLANS.md §planCrossGroup distributed variant,
-    * here as tested code. [[planCrossGroup]] runs the keyless shape
-    * under ONE constant state key, which is correct but serializes
-    * input folding at one reduction point; this form keeps folding
-    * horizontal: the streaming plan is a PLAIN aggregation keyed by
-    * the anti attribute (per-anti-value partials — own scan-0 slots
-    * plus, per complement variable, exact sum/count partials on the
-    * batch planner's DECIMAL path and min/max partials), so state
-    * shards across executors like any streaming groupBy and nothing
-    * quadratic or global ever lives in state. The forced single
-    * reduction point (the statistic is global by nature — every
-    * group's answer moves when any group changes) is paid at RENDER:
-    * [[snapshotShardedKeyless]] combines all-but-self over the ≤
-    * |anti domain| latest partial rows — `total ⊖ own` for
-    * sum/count/avg on the same exact arithmetic as
-    * [[EmfPlanner.complementPass]], an anti-ordered strict-prefix ⊕
-    * strict-suffix window pair for the non-subtractable min/max.
-    * Sharded ≡ constant-key ≡ batch is pinned per emission step by
-    * EmfStreamingSpec. Emits one `__nrows` column (the key's running
-    * row count, strictly increasing per emission) as the snapshot's
-    * latest-version marker. */
-  def planCrossGroupShardedKeyless(q: EmfQuery, stream: DataFrame): DataFrame =
-    inForm(shardedKeylessFrame(q, stream), graft.Gates.interpret(stream))
-
-  private def shardedKeylessFrame(q: EmfQuery, stream: DataFrame): DataFrame = {
-    installLocalFs(stream)
-    val schema = stream.schema
-    val (simpleVars, winVars, depVars) = EmfPlanner.classifyVars(q, schema)
-    require(winVars.isEmpty, "sharded keyless lowering: no WINDOWED mix")
-    require(depVars.nonEmpty, "no DEPENDENT variable; use plan(...)")
-    val infos = depVars.map(v => EmfPlanner.complementShape(v, q))
-    require(infos.forall(_.isDefined),
-      "sharded keyless lowering needs complement-shaped variables only")
-    val antiAttr = infos.head.get._2
-    require(infos.forall(i => i.get._1.isEmpty && i.get._2 == antiAttr),
-      s"sharded lowering is the KEYLESS (E = ∅) form on one anti attr; " +
-        s"got ${infos.map(_.get)}")
-    require(q.groupAttrs == Seq(antiAttr),
-      s"keyless complement groups by exactly the anti attr $antiAttr")
+    val (simpleVars, _, depVars) = EmfPlanner.classifyVars(q, schema)
+    val antiAttr = complementKey(q, depVars)._2
+    val cols = new SlotCols(schema, "keyless", "aggregate columns")
+    (q.varZero ++ (simpleVars ++ depVars).map(_.agg)).foreach(a => cols.numeric(a.column))
     val base = stream.filter(EmfPlanner.whereColumn(q.where, schema))
     val ownAggs = EmfPlanner.varZeroAndSimpleAggs(q.varZero, simpleVars, schema)
     val partialAggs = depVars.zipWithIndex.flatMap { case (v, i) =>
-      val c0 = col(v.agg.column)
-      val guarded = condOf(v, schema).map(c => when(c, c0)).getOrElse(c0)
+      val guarded = condOf(v, schema).fold(col(v.agg.column))(when(_, col(v.agg.column)))
       val floating = EmfPlanner.isFloating(v.agg.column, schema)
       val sumIn = if (floating) guarded.cast(EmfPlanner.exactDec) else guarded
       // the partial's NAME records the isFloating decision (`__sf_` =
       // floating source riding the exact-DECIMAL surrogate, `__s_` =
-      // native type): the snapshot must not infer it from the sink's
+      // native type): the render must not infer it from the sink's
       // DecimalType, or a natively-DECIMAL source would be misread as
       // floating and its sum cast to double at render, diverging from
       // EmfPlanner.complementPass which keeps native decimals un-cast
@@ -945,29 +845,28 @@ object EmfStreaming {
     base.groupBy(col(antiAttr)).agg(aggs.head, aggs.tail: _*)
   }
 
-  /** Render the current MF structure from a sink table of
-    * [[planCrossGroupShardedKeyless]] partial rows: latest partials per
-    * anti value (max `__nrows`), then the all-but-self combine per
-    * complement variable, HAVING, and the SELECT list — the batch
-    * planner's output, recomputed from sharded state. The combine is a
-    * single pass over ≤ |anti domain| rows: exactly the O(|MF|) render
-    * cost the PLANS.md design prices in. */
-  def snapshotShardedKeyless(partials: DataFrame, q: EmfQuery): DataFrame = {
+  /** The keyless MF structure from a sink of [[keylessFrame]] partial
+    * rows: the latest partials per anti value (max `__nrows`), then per
+    * complement variable the all-but-self combine — `total ⊖ own` for
+    * sum/count/avg on the same exact arithmetic as
+    * [[EmfPlanner.complementPass]], an anti-ordered strict-prefix ⊕
+    * strict-suffix window pair for the non-subtractable min/max. One
+    * pass over ≤ |anti domain| rows: the forced global reduction (every
+    * group's answer moves when any group changes), paid at render. */
+  private def keylessCombine(partials: DataFrame, q: EmfQuery): DataFrame = {
     val antiAttr = q.groupAttrs.head
     val wLatest = Window.partitionBy(col(antiAttr)).orderBy(col("__nrows").desc)
     var latest = partials.withColumn("__rn", row_number().over(wLatest))
       .filter(col("__rn") === 1).drop("__rn", "__nrows")
     // same order as classifyVars' partition — q.vars order preserved
-    val depVars = q.vars.filter(v =>
-      !EmfPlanner.isSimplePublic(v, q) &&
-        EmfPlanner.complementShape(v, q).isDefined)
+    val depVars = q.vars.filterNot(EmfPlanner.isSimplePublic(_, q))
     // both combines are STRICT-PREFIX frames: the suffix side runs as a
     // prefix under DESCENDING order — same row set as
     // `rowsBetween(1, unboundedFollowing)` ascending, but Spark's
     // UnboundedPreceding frame accumulates incrementally (O(n)) where
     // UnboundedFollowing RECOMPUTES the frame per row (O(n²): measured
     // as a 55-minute hang in UnboundedFollowingWindowFunctionFrame at
-    // sf10's 1.5M-customer anti domain; the spec's 15k domain hid it)
+    // sf10's 1.5M-customer anti domain; a 15k domain hid it)
     val wPre = Window.orderBy(col(antiAttr))
       .rowsBetween(Window.unboundedPreceding, -1)
     val wPost = Window.orderBy(col(antiAttr).desc)
@@ -984,11 +883,6 @@ object EmfStreaming {
           // the whole latest frame instead of a cross join
           val wAll = Window.rowsBetween(
             Window.unboundedPreceding, Window.unboundedFollowing)
-          // the planner's isFloating decision rides the partial's NAME
-          // (`__sf_` = floating via the exact-DECIMAL surrogate, cast
-          // back to double at render; `__s_` = native type, un-cast) —
-          // inferring it from the sink's DecimalType would misread a
-          // natively-DECIMAL source column as floating
           val floating = partials.columns.contains(s"__sf_$i")
           val sName = if (floating) s"__sf_$i" else s"__s_$i"
           val sumDiff = coalesce(sum(col(sName)).over(wAll), lit(0)) -
@@ -1005,66 +899,25 @@ object EmfStreaming {
       }
       latest = latest.withColumn(v.agg.name, value)
     }
-    val dropped = depVars.indices.flatMap(i =>
-      Seq(s"__s_$i", s"__sf_$i", s"__c_$i", s"__mn_$i", s"__mx_$i"))
-    val cleaned = latest.drop(dropped: _*)
-    q.having.fold(cleaned)(h => cleaned.filter(EmfPlanner.havingColumn(h)))
-      .select(q.select.map(col): _*)
+    latest.drop(depVars.indices.flatMap(i =>
+      Seq(s"__s_$i", s"__sf_$i", s"__c_$i", s"__mn_$i", s"__mx_$i")): _*)
   }
 
-  /** Emit one row per (key, anti value), led by the key's first `nKey`
-    * fields and the anti value: base slots straight from
-    * the group's accumulators; complement slots combine ALL-BUT-SELF over
-    * the key's per-group partials — `complement(gᵢ) = ⊕_{j≠i} own(gⱼ)`,
-    * rendered from a strict-prefix ⊕ strict-suffix pair per slot (the
-    * windowed frames' own recombination, O(groups) total). For
-    * sum/count/avg this equals [[EmfPlanner.complementPass]]'s
-    * `total ⊖ own` subtraction over exact partials bit-for-bit; for
-    * min/max it is the identity that subtraction CANNOT express (min has
-    * no inverse), which is what lets non-subtractable complements stream
-    * incrementally — the round-12 residue this closed. */
-  private def emitCrossKey(key: Row, nKey: Int, st: CrossState,
-      specs: Array[SlotSpec], nBase: Int, outTypes: Array[DataType]): Iterator[Row] = {
-    val entries = st.groups.entrySet().asScala.toArray
-    val cells = entries.map(_.getValue)
-    val comps = (nBase until specs.length).map(strictPrefixSuffix(cells, _))
-    entries.indices.map { i =>
-      val row = new Array[Any](outTypes.length)
-      (0 until nKey).foreach(k => row(k) = key.get(k))
-      row(nKey) = entries(i).getKey
-      specs.indices.foreach { j =>
-        val v =
-          if (j < nBase) cells(i)(j)
-          else { val (pre, suf) = comps(j - nBase); val c = pre(i).copy; c.add(suf(i)); c }
-        row(nKey + 1 + j) = render(specs(j), v, outTypes(nKey + 1 + j))
+  /** Current MF structure from an update-mode sink of a [[planAuto]]
+    * frame with `usesSnapshot` (or of [[planKeyed]]): the keyless class's
+    * latest partials combined all-but-self, every other class's latest
+    * `__ver` emission per group; then HAVING, then the SELECT list. The
+    * class is read off `q` by the classifier [[planAuto]] routes by. */
+  def snapshot(sink: DataFrame, q: EmfQuery): DataFrame = {
+    val current =
+      if (keyedClass(q, sink.schema) == "keyless") keylessCombine(sink, q)
+      else {
+        val w = Window.partitionBy(q.groupAttrs.map(col): _*)
+          .orderBy(col("__ver").desc)
+        sink.withColumn("__rn", row_number().over(w))
+          .filter(col("__rn") === 1).drop("__rn", "__ver")
       }
-      row(row.length - 1) = st.ver
-      new GenericRow(row): Row
-    }.iterator
-  }
-
-  private def cmpD(l: Double, op: String, r: Double): Boolean = op match {
-    case "<" => l < r; case "<=" => l <= r
-    case ">" => l > r; case ">=" => l >= r
-    case "=" | "==" => l == r; case "<>" | "!=" => l != r
-    case other => throw new IllegalArgumentException(s"bad op $other")
-  }
-  private def cmpI(l: BigInt, op: String, r: BigInt): Boolean = op match {
-    case "<" => l < r; case "<=" => l <= r
-    case ">" => l > r; case ">=" => l >= r
-    case "=" | "==" => l == r; case "<>" | "!=" => l != r
-    case other => throw new IllegalArgumentException(s"bad op $other")
-  }
-
-  /** Current MF structure from a sink table of [[planKeyed]] or
-    * [[planCrossGroup]] emissions:
-    * latest `__ver` per group, then HAVING, then the SELECT list. */
-  def snapshot(emissions: DataFrame, q: EmfQuery): DataFrame = {
-    val w = Window.partitionBy(q.groupAttrs.map(col): _*)
-      .orderBy(col("__ver").desc)
-    val latest = emissions.withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1).drop("__rn", "__ver")
-    q.having.fold(latest)(h => latest.filter(EmfPlanner.havingColumn(h)))
+    q.having.fold(current)(h => current.filter(EmfPlanner.havingColumn(h)))
       .select(q.select.map(col): _*)
   }
 

@@ -8,13 +8,11 @@ import graft.emf.{EmfPlanner, EmfStreaming, GoldenQueries}
 /** Volume rehearsal for the incremental streaming EMF planners: drives
   * the REAL sf-dir sales_view row stream (not a micro fixture) in
   * micro-batches through `EmfStreaming.planAuto` (printing the class it
-  * routed each case to) and, for the sharded keyless complement that
-  * planAuto never picks, `planCrossGroupShardedKeyless` directly;
-  * asserts the final snapshot equals the batch planner on the same
-  * rows, and reports throughput plus the state-store footprint the
-  * domain-bound guards promise stays bounded (state rows ≤ groups ×
-  * value-domain, independent of stream length — the claim this run
-  * certifies on real volume), next to the checkpoint write path's median
+  * routed each case to); asserts the final snapshot equals the batch
+  * planner on the same rows, and reports throughput plus the state-store
+  * footprint the domain-bound guards promise stays bounded (state rows ≤
+  * groups × value-domain, independent of stream length — the claim this
+  * run certifies on real volume), next to the checkpoint write path's median
   * per-trigger state-store commit and WAL commit ms. Each case first
   * prints `form=interpreted|compiled sourceBytes=N`: the execution form
   * the interpret gate chose for the stream and the source bytes it
@@ -48,11 +46,10 @@ object StreamVolume {
       s"$nChunks file-source micro-batches")
 
     // q4 minus its equality pin: the KEYLESS global complement ("each
-    // cust vs every OTHER cust"), measured through BOTH lowerings —
-    // the constant-state-key form (planAuto → planCrossGroup, E = ∅) and the
-    // cluster-scale sharded form (per-anti partials + render-side
-    // all-but-self; its state is ONE row per cust, so stateRows here
-    // reads as the anti-domain size, not groups × domain)
+    // cust vs every OTHER cust"), which planAuto lowers to per-anti
+    // partials with a render-side all-but-self combine; its state is ONE
+    // row per cust, so stateRows here reads as the anti-domain size, not
+    // groups × domain
     val keylessQ = graft.emf.EmfParser.parseOne(
       """cust,avg_quant_oth,min_quant_oth
         |2
@@ -61,28 +58,14 @@ object StreamVolume {
         |{MF.cust.avg_quant_oth}[!=]{cust},{MF.cust.min_quant_oth}[!=]{cust}""".stripMargin,
       graft.Tables.salesView(spark, sfDir).schema.fieldNames.toSet)
 
-    // a lowering: the streaming frame, the class it was routed as, the
-    // execution form and the probed source bytes
-    type Lower = (graft.emf.EmfQuery, DataFrame) => EmfStreaming.StreamingPlan
-    val auto: Lower = EmfStreaming.planAuto
-    val sharded: Lower = (q, df) => {
-      val lowered = EmfStreaming.planCrossGroupShardedKeyless(q, df)
-      EmfStreaming.StreamingPlan(lowered, usesSnapshot = false, "sharded-keyless",
-        if (EmfPlanner.isInterpreted(lowered)) "interpreted" else "compiled",
-        graft.Gates.sourceBytes(df))
-    }
-    val defaultSnap: (DataFrame, graft.emf.EmfQuery) => DataFrame =
-      EmfStreaming.snapshot
-    val allCases = Seq[(String, graft.emf.EmfQuery, Lower,
-        (DataFrame, graft.emf.EmfQuery) => DataFrame)](
-      ("q3_windowed", GoldenQueries.parsed(2), auto, defaultSnap),
+    val allCases = Seq[(String, graft.emf.EmfQuery)](
+      ("q3_windowed", GoldenQueries.parsed(2)),
       // q4: cross-group complement membership (!= cust), incremental via
-      // the per-prod total ⊖ own subtraction state
-      ("q4_crossgroup", GoldenQueries.parsed(3), auto, defaultSnap),
-      ("q4k_keyless", keylessQ, auto, defaultSnap),
-      ("q4k_sharded", keylessQ, sharded, EmfStreaming.snapshotShardedKeyless),
-      ("q6_dependent", GoldenQueries.parsed(5), auto, defaultSnap),
-      ("q8_chained", GoldenQueries.parsed(7), auto, defaultSnap))
+      // the per-prod all-but-self combine over per-cust partials
+      ("q4_crossgroup", GoldenQueries.parsed(3)),
+      ("q4k_keyless", keylessQ),
+      ("q6_dependent", GoldenQueries.parsed(5)),
+      ("q8_chained", GoldenQueries.parsed(7)))
     // args(2+): case names to run, in order, repeats allowed — lets a
     // profiling run isolate per-case cost from the JVM/codegen/state-
     // store warmup the FIRST streaming query in the process pays
@@ -98,8 +81,9 @@ object StreamVolume {
     // hundreds of millions of emitted versions, which a driver-resident
     // memory sink cannot hold (the sf0.1 runs fit; this tool is FOR the
     // bigger rehearsals). foreachBatch appends each micro-batch's
-    // updates (they carry the planner's __ver column, which snapshot()
-    // keys on), so the driver holds one input chunk and nothing else.
+    // updates (the keyed classes' __ver emissions or the keyless
+    // class's partial rows, which snapshot() renders), so the driver
+    // holds one input chunk and nothing else.
     val workRoot = java.nio.file.Files
       .createTempDirectory("streamvol").toString
     println(s"[streamvol] emissions under $workRoot")
@@ -114,9 +98,9 @@ object StreamVolume {
     // artifact landing on whichever case ran first (re-ordered runs put
     // q3_windowed FASTER than q8_chained, as the per-row work predicts)
     locally {
-      val (_, q, planFn, _) = allCases.head
+      val (_, q) = allCases.head
       val warm = MemoryStream[SaleRow](spark)
-      val wq = planFn(q, warm.toDF()).df
+      val wq = EmfStreaming.planAuto(q, warm.toDF()).df
         .writeStream.format("memory").queryName("sv_warmup")
         .outputMode(OutputMode.Update).start()
       try {
@@ -127,13 +111,13 @@ object StreamVolume {
     }
 
     var runIdx = 0
-    for ((name, q, planFn, snapFn) <- cases) {
+    for ((name, q) <- cases) {
       runIdx += 1
       val src = spark.readStream.schema(stageSchema)
         .option("maxFilesPerTrigger", "1").parquet(stageDir)
       // runIdx suffix: repeated cases (profiling) get fresh sink dirs
       val sinkDir = s"$workRoot/sv_${name}_$runIdx"
-      val plan = planFn(q, src)
+      val plan = EmfStreaming.planAuto(q, src)
       val lowering = plan.lowering
       println(s"[streamvol] $name form=${plan.form} " +
         s"sourceBytes=${plan.sourceBytes.getOrElse("unbounded")}")
@@ -146,10 +130,11 @@ object StreamVolume {
       // the engine's domain-bound fail-fasts (EmfStreaming's
       // MaxHistBuckets state bound) are DESIGNED refusals: a lowering
       // whose state would grow with the stream names that immediately
-      // instead of OOMing hours in. At sf10 the keyed and constant-key
-      // cross-group forms refuse (1.5M anti values per key > the 65,536
-      // cap) and the sharded form is the documented scale path — record
-      // the refusal as that case's result and keep rehearsing.
+      // instead of OOMing hours in. A keyed case whose key holds more
+      // values than the 65,536 cap refuses; the keyless complement, whose
+      // 1.5M anti values at sf10 no key could hold, is routed to its
+      // sharded per-anti partials — record a refusal as that case's
+      // result and keep rehearsing.
       def guardRefusal(e: Throwable): Option[String] =
         Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
           .map(c => Option(c.getMessage).getOrElse(""))
@@ -177,7 +162,7 @@ object StreamVolume {
         val commitMs = median(triggers.toSeq.map(_.stateOperators.map(_.commitTimeMs).sum.toDouble))
         val walMs = median(triggers.toSeq.flatMap(p =>
           Option(p.durationMs.get("walCommit")).map(_.doubleValue)))
-        // snapshot() keeps the latest __ver per key over the appended
+        // snapshot() keeps the latest row per group over the appended
         // emissions; the equality check is a DISTRIBUTED order-
         // independent digest — (count, sum of per-row xxhash64 over
         // name-sorted columns), one aggregation pass per side, nothing
@@ -196,7 +181,7 @@ object StreamVolume {
             sum(xxhash64(cols: _*).cast("decimal(38,0)")).as("h")).head()
           (r.getLong(0), String.valueOf(r.get(1)))
         }
-        val snapDf = snapFn(spark.read.parquet(sinkDir), q)
+        val snapDf = EmfStreaming.snapshot(spark.read.parquet(sinkDir), q)
         val batch = EmfPlanner.plan(q, view.toDF())
           .select(snapDf.columns.map(org.apache.spark.sql.functions.col): _*)
         val (nSnap, hSnap) = digest(snapDf)

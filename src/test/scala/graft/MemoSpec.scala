@@ -5,21 +5,21 @@ import graft.emf.GoldenQueries
 class MemoSpec extends SparkSpec {
 
   test("the registry's schedule is the full sweep's shared-build billing and eviction table") {
-    // The full-sweep schedule Bench ran before the registry existed: for
-    // each entry in name order, the `_shared_*` lines built before it and
-    // the memo families evicted after it (entries with neither omitted).
+    // The full-sweep schedule: for each entry in name order, the
+    // `_shared_*` lines built before it and the memo families evicted
+    // after it (entries with neither omitted).
     val pinned = Seq(
       ("ann_recall", Seq("_shared_ann_models"), Nil),
       ("assoc_rules", Seq("_shared_basket_pairs"), Nil),
       ("cluster_purity", Seq("_shared_kmeans_assign"), Nil),
       ("dedup_clusters", Seq("_shared_ngram_build", "_shared_cc_labels"), Nil),
+      ("dedup_semantic", Nil, Seq("Similarity")),
       ("emb_prototypes", Nil, Seq("KMeans")),
       ("emf_batch", Seq("_shared_sales_view"), Nil),
       ("emf_q8", Nil, Seq("GoldenQueries")),
       ("graph_triangles", Nil, Seq("Mining")),
       ("join_bucketed", Seq("_shared_bucketed_tables"), Nil),
       ("join_dpp", Seq("_shared_layout_ingest"), Nil),
-      ("knn_brute", Nil, Seq("Similarity")),
       ("knn_pq", Nil, Seq("FixedPointAnn")),
       ("layout_compact", Seq("_shared_layout_compact"), Nil),
       ("split_leakage_safe", Nil, Seq("Dedup")),

@@ -161,10 +161,10 @@ class EmfStreamingPropertySpec extends SparkSpec {
     hav <- havingGen(vars.map(_.agg))
   } yield EmfQuery(gAttrs ++ vars.map(_.agg.name), gAttrs, Nil, vars, wh, hav)
 
-  /** complement shape (G = E ∪ {anti}) → planCrossGroup; 1-in-4 drops
-    * the equality pin entirely — the KEYLESS global complement
-    * (E = ∅, G = {anti}, the whole structure under one constant state
-    * key — the round-14 closure) */
+  /** complement shape (G = E ∪ {anti}) → planAuto's cross-group class
+    * (planKeyed); 1-in-4 drops the equality pin entirely — the KEYLESS
+    * global complement (E = ∅, G = {anti}), which planAuto lowers to
+    * per-anti partials combined by snapshot */
   private val genCrossQ: Gen[EmfQuery] = for {
     pair <- Gen.oneOf(("g", "h"), ("h", "g"), ("g", "state"), ("state", "g"))
     (eqA, anti) = pair
@@ -305,7 +305,7 @@ class EmfStreamingPropertySpec extends SparkSpec {
   }
 
   test("fuzz: CROSS-GROUP streaming == batch at each micro-batch (8 queries)") {
-    fuzzClass("crossgroup", genCrossQ, EmfStreaming.planCrossGroup, 8 * fuzzN, 14000L,
+    fuzzClass("crossgroup", genCrossQ, EmfStreaming.planAuto(_, _).df, 8 * fuzzN, 14000L,
       rowG = rowGen)
   }
 
@@ -365,7 +365,7 @@ class EmfStreamingPropertySpec extends SparkSpec {
       22000L, rowG = nullRowGen)
     fuzzClass("dependent-null", genDependentQ, EmfStreaming.planKeyed, 4 * fuzzN,
       23000L, rowG = nullRowGen)
-    fuzzClass("crossgroup-null", genCrossQ, EmfStreaming.planCrossGroup, 4 * fuzzN,
+    fuzzClass("crossgroup-null", genCrossQ, EmfStreaming.planAuto(_, _).df, 4 * fuzzN,
       24000L, rowG = nullRowGen)
   }
 

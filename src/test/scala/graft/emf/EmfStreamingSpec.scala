@@ -7,6 +7,7 @@ import graft.SparkSpec
 import graft.io.LocalFs
 import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.OutputMode
 import org.apache.spark.sql.types.StructType
@@ -426,7 +427,7 @@ class EmfStreamingSpec extends SparkSpec {
 
   test("incremental CROSS-GROUP EMF (q4 shape): snapshot equals batch at each step") {
     val stream = MemoryStream[SalesRow](spark)
-    val sq = EmfStreaming.planCrossGroup(crossQ, stream.toDF())
+    val sq = EmfStreaming.planKeyed(crossQ, stream.toDF())
       .writeStream.format("memory").queryName("emf_cross")
       .outputMode(OutputMode.Update).start()
     try {
@@ -463,7 +464,7 @@ class EmfStreamingSpec extends SparkSpec {
         |avg_quant_oth
         |{MF.prod.avg_quant_oth}[=]{prod}:{MF.cust.avg_quant_oth}[!=]{cust}""".stripMargin, cols)
     val stream = MemoryStream[SalesRow](spark)
-    val sq = EmfStreaming.planCrossGroup(q, stream.toDF())
+    val sq = EmfStreaming.planKeyed(q, stream.toDF())
       .writeStream.format("memory").queryName("emf_cross_rev")
       .outputMode(OutputMode.Update).start()
     try {
@@ -489,8 +490,8 @@ class EmfStreamingSpec extends SparkSpec {
   test("KEYLESS cross-group streaming (round-14): E = ∅ global complement") {
     // "for each cust: agg over every OTHER cust's tuples" — no equality
     // pin at all, so every group's answer moves when ANY group changes.
-    // planAuto must route it to the incremental lowering (one constant
-    // state key), and snapshot == batch at each step, including min/max.
+    // planAuto must route it to the keyless lowering, and snapshot ==
+    // batch at each step, including min/max.
     val q = EmfParser.parseOne(
       """cust,avg_quant_oth,max_quant_oth
         |2
@@ -499,7 +500,7 @@ class EmfStreamingSpec extends SparkSpec {
         |{MF.cust.avg_quant_oth}[!=]{cust},{MF.cust.max_quant_oth}[!=]{cust}""".stripMargin, cols)
     val stream = MemoryStream[SalesRow](spark)
     val routed = EmfStreaming.planAuto(q, stream.toDF())
-    assert(routed.usesSnapshot)
+    assert(routed.usesSnapshot && routed.lowering == "keyless")
     val sq = routed.df
       .writeStream.format("memory").queryName("emf_cross_keyless")
       .outputMode(OutputMode.Update).start()
@@ -525,73 +526,67 @@ class EmfStreamingSpec extends SparkSpec {
 
   test("SHARDED keyless complement (round-15): per-anti partials + " +
       "render-side all-but-self == constant-key == batch") {
-    // The PLANS.md cluster-scale variant of the keyless lowering as
-    // tested code: the streaming plan is a PLAIN aggregation keyed by
-    // the anti attr (shards like any streaming groupBy — no constant
-    // key, no flatMapGroupsWithState), and the forced global reduction
-    // happens at render. All five aggregates, incl. the
-    // non-subtractable min/max via the prefix/suffix combine.
-    val q = EmfParser.parseOne(
-      """cust,avg_quant_oth,max_quant_oth,min_quant_oth,sum_quant_oth,count_quant_oth
+    // planAuto's keyless lowering is a PLAIN aggregation keyed by the
+    // anti attr (shards like any streaming groupBy — no state key, no
+    // flatMapGroupsWithState), and the global all-but-self reduction
+    // happens at render. All five aggregates, incl. the non-subtractable
+    // min/max. The constant-key formulation is the same query with a
+    // constant equality attr (state pinned to one value) run through the
+    // keyed cross-group lowering: two independent routes meeting batch.
+    val aggs = Seq("avg", "max", "min", "sum", "count").map(a => s"${a}_quant_oth")
+    def query(groupBy: String, eq: String => String) = EmfParser.parseOne(
+      s"""$groupBy,${aggs.mkString(",")}
         |5
-        |cust
-        |avg_quant_oth,max_quant_oth,min_quant_oth,sum_quant_oth,count_quant_oth
-        |{MF.cust.avg_quant_oth}[!=]{cust},{MF.cust.max_quant_oth}[!=]{cust},{MF.cust.min_quant_oth}[!=]{cust},{MF.cust.sum_quant_oth}[!=]{cust},{MF.cust.count_quant_oth}[!=]{cust}""".stripMargin,
-      cols)
-    val sharded = MemoryStream[SalesRow](spark)
-    val constant = MemoryStream[SalesRow](spark)
-    val sqS = EmfStreaming.planCrossGroupShardedKeyless(q, sharded.toDF())
-      .writeStream.format("memory").queryName("emf_cross_sharded")
-      .outputMode(OutputMode.Update).start()
-    val sqC = EmfStreaming.planCrossGroup(q, constant.toDF())
-      .writeStream.format("memory").queryName("emf_cross_sharded_ck")
-      .outputMode(OutputMode.Update).start()
-    try {
-      def snapS() = EmfStreaming
-        .snapshotShardedKeyless(spark.table("emf_cross_sharded"), q)
-        .orderBy("cust").collect().toSeq
-      def snapC() = EmfStreaming
-        .snapshot(spark.table("emf_cross_sharded_ck"), q)
-        .orderBy("cust").collect().toSeq
-      // the sharded sink holds PARTIALS, not rendered emissions — the
-      // state-shape claim the design makes
-      val b1 = Seq(SalesRow("c1", "p1", 1, "NY", 10),
-        SalesRow("c2", "p2", 1, "CT", 20), SalesRow("c2", "p2", 2, "CT", 4))
-      sharded.addData(b1); constant.addData(b1)
-      sqS.processAllAvailable(); sqC.processAllAvailable()
-      assert(spark.table("emf_cross_sharded").columns.count(
-        _.startsWith("__s_")) == 5, "sink must carry per-variable partials")
-      val batch1 = EmfPlanner.plan(q, b1.toDF()).orderBy("cust").collect().toSeq
-      assert(snapS() == batch1, "sharded != batch after batch 1")
-      assert(snapC() == batch1, "constant-key != batch after batch 1")
-      // one new group's single row revises EVERY other group's
-      // complement — in the sharded form no existing key's state is
-      // touched; the revision is render-side
-      val r3 = SalesRow("c3", "p3", 2, "NJ", 5)
-      sharded.addData(r3); constant.addData(r3)
-      sqS.processAllAvailable(); sqC.processAllAvailable()
-      val all = b1 :+ r3
-      val batch2 = EmfPlanner.plan(q, all.toDF()).orderBy("cust").collect().toSeq
-      assert(snapS() == batch2, "sharded != batch after batch 2")
-      assert(snapC() == batch2, "constant-key != batch after batch 2")
-      // single-group complement degenerates to NULL/0 identically:
-      // replay just one group on fresh streams
-      val solo = MemoryStream[SalesRow](spark)
-      val sqSolo = EmfStreaming.planCrossGroupShardedKeyless(q, solo.toDF())
-        .writeStream.format("memory").queryName("emf_cross_sharded_solo")
+        |$groupBy
+        |${aggs.mkString(",")}
+        |${aggs.map(a => s"${eq(a)}{MF.cust.$a}[!=]{cust}").mkString(",")}""".stripMargin, cols)
+    val q = query("cust", _ => "")
+    val qConst = query("cust,state", a => s"{MF.state.$a}[=]{state}:")
+    def run(name: String, chunks: Seq[Seq[SalesRow]]): Seq[Seq[Row]] = {
+      val stream = MemoryStream[SalesRow](spark)
+      val routed = EmfStreaming.planAuto(q, stream.toDF())
+      assert(routed.usesSnapshot && routed.lowering == "keyless")
+      val sq = routed.df.writeStream.format("memory").queryName(name)
         .outputMode(OutputMode.Update).start()
-      try {
-        solo.addData(Seq(SalesRow("c9", "p1", 1, "NY", 7)))
-        sqSolo.processAllAvailable()
-        val s = EmfStreaming.snapshotShardedKeyless(
-          spark.table("emf_cross_sharded_solo"), q).collect()
-        assert(s.length == 1)
-        val r = s.head
-        assert(r.isNullAt(1) && r.isNullAt(2) && r.isNullAt(3) &&
-          r.isNullAt(4), "empty complement renders NULL")
-        assert(r.getLong(5) == 0L, "empty complement count renders 0")
-      } finally sqSolo.stop()
-    } finally { sqS.stop(); sqC.stop() }
+      try chunks.map { c =>
+        stream.addData(c)
+        sq.processAllAvailable()
+        // the sink holds per-variable PARTIALS, not rendered emissions
+        assert(spark.table(name).columns.count(_.startsWith("__s_")) == 5 &&
+          !spark.table(name).columns.contains("__ver"),
+          "sink must carry per-variable partials")
+        EmfStreaming.snapshot(spark.table(name), q).orderBy("cust").collect().toSeq
+      } finally sq.stop()
+    }
+    def runConstantKey(chunks: Seq[Seq[SalesRow]]): Seq[Seq[Row]] = {
+      val stream = MemoryStream[SalesRow](spark)
+      val sq = EmfStreaming.planKeyed(qConst, stream.toDF().withColumn("state", lit("X")))
+        .writeStream.format("memory").queryName("emf_cross_sharded_ck")
+        .outputMode(OutputMode.Update).start()
+      try chunks.map { c =>
+        stream.addData(c)
+        sq.processAllAvailable()
+        EmfStreaming.snapshot(spark.table("emf_cross_sharded_ck"), qConst)
+          .drop("state").orderBy("cust").collect().toSeq
+      } finally sq.stop()
+    }
+    val b1 = Seq(SalesRow("c1", "p1", 1, "NY", 10),
+      SalesRow("c2", "p2", 1, "CT", 20), SalesRow("c2", "p2", 2, "CT", 4))
+    // one new group's single row revises EVERY other group's complement —
+    // in the sharded form no existing key's partial is touched; the
+    // revision is render-side
+    val all = b1 :+ SalesRow("c3", "p3", 2, "NJ", 5)
+    val chunks = Seq(b1, all.drop(b1.size))
+    val sharded = run("emf_cross_sharded", chunks)
+    val constant = runConstantKey(chunks)
+    val batch = Seq(b1, all).map(rs => EmfPlanner.plan(q, rs.toDF()).orderBy("cust").collect().toSeq)
+    assert(sharded == batch, "sharded != batch")
+    assert(constant == batch, "constant-key != batch")
+    // a single group's complement is empty: NULL, count 0
+    val Seq(Seq(solo)) = run("emf_cross_sharded_solo", Seq(Seq(SalesRow("c9", "p1", 1, "NY", 7))))
+    assert(solo.isNullAt(1) && solo.isNullAt(2) && solo.isNullAt(3) &&
+      solo.isNullAt(4), "empty complement renders NULL")
+    assert(solo.getLong(5) == 0L, "empty complement count renders 0")
   }
 
   test("cross-group streaming: min/max complements (round-13) — retraction proven") {
@@ -607,7 +602,7 @@ class EmfStreamingSpec extends SparkSpec {
         |min_quant_oth,max_quant_oth
         |{MF.prod.min_quant_oth}[=]{prod}:{MF.cust.min_quant_oth}[!=]{cust},{MF.prod.max_quant_oth}[=]{prod}:{MF.cust.max_quant_oth}[!=]{cust}""".stripMargin, cols)
     val stream = MemoryStream[SalesRow](spark)
-    val sq = EmfStreaming.planCrossGroup(q, stream.toDF())
+    val sq = EmfStreaming.planKeyed(q, stream.toDF())
       .writeStream.format("memory").queryName("emf_cross_minmax")
       .outputMode(OutputMode.Update).start()
     try {
@@ -643,6 +638,16 @@ class EmfStreamingSpec extends SparkSpec {
     } finally sq.stop()
   }
 
+  test("one stateful lowering: one flatMapGroupsWithState call site and no CrossState") {
+    val src = scala.io.Source.fromFile("src/main/scala/graft/emf/EmfStreaming.scala", "UTF-8")
+    val code = try src.getLines().map(_.trim).filterNot { t =>
+      // scaladoc and line comments may name them
+      t.startsWith("*") || t.startsWith("//") || t.startsWith("/*")
+    }.toList finally src.close()
+    assert(code.map(_.split("flatMapGroupsWithState", -1).length - 1).sum == 1)
+    assert(!code.exists(_.contains("CrossState")))
+  }
+
   test("planAuto routes a min/max complement to planCrossGroup (round-13)") {
     val q = EmfParser.parseOne(
       """cust,prod,max_quant_oth
@@ -659,10 +664,16 @@ class EmfStreamingSpec extends SparkSpec {
 
   test("cross-group streaming rejects non-complement and mis-keyed shapes loudly") {
     val stream = MemoryStream[SalesRow](spark)
-    // own-group aggregate comparison: dependent but NOT complement
+    // complement variables keyed by different equality attrs
+    val qMixed = EmfParser.parseOne(
+      """cust,prod,sum_quant_oth,sum_quant_all
+        |2
+        |cust,prod
+        |sum_quant_oth,sum_quant_all
+        |{MF.prod.sum_quant_oth}[=]{prod}:{MF.cust.sum_quant_oth}[!=]{cust},{MF.cust.sum_quant_all}[!=]{cust}""".stripMargin, cols)
     val e1 = intercept[IllegalArgumentException](
-      EmfStreaming.planCrossGroup(dependentQ, stream.toDF()))
-    assert(e1.getMessage.contains("complement-shaped"))
+      EmfStreaming.planKeyed(qMixed, stream.toDF()))
+    assert(e1.getMessage.contains("mixed complement keys"))
     // G larger than E ∪ {anti}: month is unconstrained
     val qWide = EmfParser.parseOne(
       """cust,prod,month,sum_quant_oth
@@ -671,11 +682,11 @@ class EmfStreamingSpec extends SparkSpec {
         |sum_quant_oth
         |{MF.prod.sum_quant_oth}[=]{prod}:{MF.cust.sum_quant_oth}[!=]{cust}""".stripMargin, cols)
     val e2 = intercept[IllegalArgumentException](
-      EmfStreaming.planCrossGroup(qWide, stream.toDF()))
+      EmfStreaming.planKeyed(qWide, stream.toDF()))
     assert(e2.getMessage.contains("grouping set"))
     // all-SIMPLE is the wrong entry point
     val e3 = intercept[IllegalArgumentException](
-      EmfStreaming.planCrossGroup(simpleQ, stream.toDF()))
+      EmfStreaming.planKeyed(simpleQ, stream.toDF()))
     assert(e3.getMessage.contains("DEPENDENT"))
   }
 
@@ -690,7 +701,7 @@ class EmfStreamingSpec extends SparkSpec {
     EmfStreaming.MaxHistBuckets = 8
     try {
       val stream = MemoryStream[SalesRow](spark)
-      val sq = EmfStreaming.planCrossGroup(q, stream.toDF())
+      val sq = EmfStreaming.planKeyed(q, stream.toDF())
         .writeStream.format("memory").queryName("emf_cross_guard")
         .outputMode(OutputMode.Update).start()
       try {
@@ -740,9 +751,9 @@ class EmfStreamingSpec extends SparkSpec {
       assert(snap == batch && snap.nonEmpty)
     } finally sq.stop()
 
-    // the KEYLESS global complement routes incrementally since round 14
-    // (one constant state key — see planCrossGroup); the residual
-    // microBatch class is NON-complement membership, e.g. cross-attr
+    // the KEYLESS global complement routes incrementally, to per-anti
+    // partials; the residual microBatch class is NON-complement
+    // membership, e.g. cross-attr
     val qKeyless = EmfParser.parseOne(
       """cust,min_quant_oth
         |1
@@ -750,7 +761,7 @@ class EmfStreamingSpec extends SparkSpec {
         |min_quant_oth
         |{MF.cust.min_quant_oth}[!=]{cust}""".stripMargin, cols)
     val pk = EmfStreaming.planAuto(qKeyless, MemoryStream[SalesRow](spark).toDF())
-    assert(pk.usesSnapshot)
+    assert(pk.usesSnapshot && pk.lowering == "keyless")
     val qCrossAttr = EmfParser.parseOne(
       """cust,min_quant_oth
         |1
@@ -1087,13 +1098,13 @@ class EmfStreamingSpec extends SparkSpec {
       EmfStreaming.planAuto(windowedQ, unsized).df,
       EmfStreaming.plan(simpleQ, unsized),
       EmfStreaming.planKeyed(dependentQ, unsized),
-      EmfStreaming.planCrossGroup(crossQ, unsized),
-      EmfStreaming.planCrossGroupShardedKeyless(EmfParser.parseOne(
+      EmfStreaming.planKeyed(crossQ, unsized),
+      EmfStreaming.planAuto(EmfParser.parseOne(
         """cust,min_quant_oth
           |1
           |cust
           |min_quant_oth
-          |{MF.cust.min_quant_oth}[!=]{cust}""".stripMargin, cols), unsized))
+          |{MF.cust.min_quant_oth}[!=]{cust}""".stripMargin, cols), unsized).df)
     assert(lowerings().forall(!EmfPlanner.isInterpreted(_)))
     spark.conf.set(interpretKey, Long.MaxValue.toString)
     try {
